@@ -9,6 +9,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
+import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -132,8 +133,9 @@ object FileStats {
                 // this reader never consults) — so a harvested string range
                 // can never understate the file and cause a false prune.
                 if (st != null && st.hasNonNullValue) {
-                  val tpe = chunk.getPrimitiveType.getPrimitiveTypeName
-                  rangeOf(tpe, st.genericGetMin, st.genericGetMax).foreach { r =>
+                  val pt = chunk.getPrimitiveType
+                  rangeOf(pt.getPrimitiveTypeName, st.genericGetMin, st.genericGetMax)
+                    .map(inMicros(pt, _)).foreach { r =>
                     ranges(name) = ranges.get(name).fold(r)(merge(_, r))
                   }
                 }
@@ -163,6 +165,20 @@ object FileStats {
       }
     case _ => None // INT96 / FIXED / BOOLEAN: no pruning support
   }
+
+  /** A timestamp chunk's range in epoch MICROS whatever unit its writer
+    * chose (a session may write `TIMESTAMP_MILLIS`): micros are Spark's
+    * internal timestamp value, the unit the connector converts pushed
+    * timestamp literals to, so every timestamp sidecar must hold them.
+    * MILLIS scale up exactly; every other column passes through. */
+  private def inMicros(pt: PrimitiveType, r: ColRange): ColRange =
+    pt.getLogicalTypeAnnotation match {
+      case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
+          if t.getUnit == LogicalTypeAnnotation.TimeUnit.MILLIS =>
+        r.copy(min = (r.min.toLong * 1000L).toString,
+          max = (r.max.toLong * 1000L).toString)
+      case _ => r
+    }
 
   /** Numeric compare of two harvested bound strings WITHOUT a lossy
     * Double round-trip: BigDecimal on the original strings, so an INT64

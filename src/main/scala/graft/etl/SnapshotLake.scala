@@ -480,16 +480,42 @@ object SnapshotLake extends LakeCheckpoints {
   private def nullableized(s: StructType): StructType =
     StructType(s.fields.map(_.copy(nullable = true)))
 
-  /** The LOGICAL schema of version `v` without opening every file: the
-    * declared schema when an evolve commit set one (ZERO file opens —
-    * names/types/metadata stripped to the read shape), else the footer
-    * schema of ONE representative file per leaf directory (files of one
-    * commit directory share a write, hence a schema; every partition
-    * path is still represented). At a million files this is what keeps
-    * connector planning O(directories), not O(files): `spark.read
-    * .format("graftlake")` calls this once per load, and the full-file
-    * DataFrame construction it replaces was ~95% of the planning wall
-    * in the ManifestCeiling measurement. */
+  /** The LOGICAL schema of version `v` without opening every file — the
+    * one schema rule behind the connector's `load` and its append check,
+    * and the columns and types [[read]] infers:
+    *
+    *   - a DECLARED schema (an evolve or auto-merging commit at-or-below
+    *     `v`) answers with ZERO file opens — names/types/metadata
+    *     stripped to the read shape;
+    *   - an undeclared version gets exactly [[read]]'s inference, which is
+    *     Spark's parquet inference over the listing SORTED BY PATH:
+    *     without `mergeSchema` the footer of the smallest plain path (and,
+    *     on a hive-partitioned listing, of the smallest partitioned path,
+    *     with the partition columns every leaf dir encodes); with
+    *     `mergeSchema` the union of the footers in path order, one per
+    *     leaf dir (files of one commit directory share a write, hence a
+    *     schema). On a lake whose commits wrote different column sets the
+    *     non-merging schema is therefore that of the commit whose data
+    *     dir sorts first — declare a schema, or read with `mergeSchema`,
+    *     to fix it.
+    *
+    * The inference is INCREMENTAL: an undeclared version whose record
+    * only adds plain files inherits version v−1's cached inference when
+    * the grown listing provably infers the same — without `mergeSchema`,
+    * when no added path sorts before the footer v−1 was read from (zero
+    * footer opens); with it, when the additions are one leaf dir whose
+    * footer equals v−1's schema (one footer open). A commit-by-commit
+    * writer or reader then pays O(change), never O(history). It falls
+    * back to the footers of the whole listing on a cold cache (first call
+    * in this JVM, or a soft reference the GC cleared), when that proof
+    * fails (an added path sorts first, or the additions bring other
+    * columns), and on a record that removes files, adds hive-partitioned
+    * files (a new partition value can change a partition column's
+    * inferred type) or is a legacy full-state record. (A record that
+    * declares a schema makes its version declared: no inference at all.)
+    * At a million files the full-listing DataFrame construction this
+    * replaces was ~95% of the planning wall in the ManifestCeiling
+    * measurement. */
   def schemaOf(spark: SparkSession, root: String,
                version: Option[Long] = None,
                mergeSchema: Boolean = false): StructType = {
@@ -518,27 +544,72 @@ object SnapshotLake extends LakeCheckpoints {
           throw new IllegalStateException(
             s"version $v of $root lists no files and no ancestor does")
         }
-        // one representative footer per leaf dir — correct under
-        // schema-on-read evolution, but O(dirs) footer opens, and table
-        // construction runs per QUERY: at the 10,000-commit-dir ceiling
-        // this was ~15 s of every "warm" plan. A version's schema is
-        // immutable, so the inference caches under the same version-file
-        // fingerprint every other (root, version) cache validates with.
-        val key = (root, v, mergeSchema)
-        val fp = versionFingerprint(root, v)
-        val ref = schemaOfCache.get(key)
-        if (ref != null && ref.get() == null) sweepCleared(schemaOfCache)
-        Option(ref).flatMap(r => Option(r.get())) match {
-          case Some((f, s)) if fp.contains(f) => s
-          case _ =>
-            val reps = st.files.groupBy(f => f.substring(0, f.lastIndexOf('/')))
-              .map(_._2.head).toSeq.sorted
-            val s = readListing(spark, root, reps, mergeSchema).schema
-            fp.foreach(f => schemaOfCache.put(key,
-              new java.lang.ref.SoftReference((f, s))))
-            s
-        }
+        // A version's schema is immutable, so the inference caches under
+        // the same version-file fingerprint every other (root, version)
+        // cache validates with.
+        cachedInference(root, v, mergeSchema).getOrElse {
+          val inf = inheritedInference(spark, root, v, mergeSchema)
+            .getOrElse(footerInference(spark, root, st.files, mergeSchema))
+          versionFingerprint(root, v).foreach(f => schemaOfCache.put(
+            (root, v, mergeSchema), new java.lang.ref.SoftReference((f, inf))))
+          inf
+        }.schema
     }
+  }
+
+  /** An undeclared version's inferred schema, plus what inheritance needs
+    * of the listing it came from: its smallest plain (non-partitioned)
+    * path, the footer the non-merging inference read. */
+  private final case class Inferred(schema: StructType, firstPlain: Option[String])
+
+  private def isPartitioned(rel: String): Boolean = rel.startsWith("data/commit=")
+
+  private def dirOf(rel: String): String = rel.substring(0, rel.lastIndexOf('/'))
+
+  /** Column names and types in order — what a schema check compares. */
+  private[graft] def shape(s: StructType) = s.fields.toSeq.map(f => (f.name, f.dataType))
+
+  private def cachedInference(root: String, v: Long,
+                              mergeSchema: Boolean): Option[Inferred] = {
+    val ref = schemaOfCache.get((root, v, mergeSchema))
+    if (ref != null && ref.get() == null) sweepCleared(schemaOfCache)
+    Option(ref).flatMap(r => Option(r.get())).collect {
+      case (f, inf) if versionFingerprint(root, v).contains(f) => inf
+    }
+  }
+
+  /** Version `v`'s inference from v−1's cached one, when `v`'s record
+    * only adds plain files (or only tombstones) and the grown listing
+    * provably infers the same; None ⇒ infer from the footers. */
+  private def inheritedInference(spark: SparkSession, root: String, v: Long,
+                                 mergeSchema: Boolean): Option[Inferred] =
+    for {
+      prev <- if (v > 1L) cachedInference(root, v - 1, mergeSchema) else None
+      r <- try Some(readRecord(root, v))
+           catch { case _: java.io.IOException => None }
+      if r.remove.isEmpty && r.legacyFull.isEmpty && !r.add.exists(isPartitioned)
+      first = r.add.minOption
+      firstPlain = (prev.firstPlain ++ first).minOption
+      if first.forall { f =>
+        if (!mergeSchema) prev.firstPlain.exists(_ < f)
+        else r.add.forall(dirOf(_) == dirOf(f)) &&
+          shape(readListing(spark, root, Seq(f), mergeSchema = true).schema) ==
+            shape(prev.schema)
+      }
+    } yield prev.copy(firstPlain = firstPlain)
+
+  /** [[read]]'s inference over `files` from the fewest footers that
+    * determine it: the smallest file per leaf dir — every partition path
+    * stays represented — and, without `mergeSchema`, only the smallest
+    * plain file, the one footer Spark's non-merging inference opens. */
+  private def footerInference(spark: SparkSession, root: String,
+                              files: Seq[String],
+                              mergeSchema: Boolean): Inferred = {
+    val reps = files.groupBy(dirOf).values.map(_.min).toSeq.sorted
+    val (part, plain) = reps.partition(isPartitioned)
+    Inferred(readListing(spark, root,
+      part ++ (if (mergeSchema) plain else plain.take(1)), mergeSchema).schema,
+      plain.headOption)
   }
 
   // inferred-schema memo for undeclared lakes: fingerprint-validated per
@@ -549,7 +620,7 @@ object SnapshotLake extends LakeCheckpoints {
   // ever queried, unbounded.
   private val schemaOfCache = new java.util.concurrent.ConcurrentHashMap[
     (String, Long, Boolean),
-    java.lang.ref.SoftReference[(VersionFp, StructType)]]()
+    java.lang.ref.SoftReference[(VersionFp, Inferred)]]()
 
   /** Project `df` onto a declared schema: matching columns cast to the
     * declared type (identity for unevolved columns, a widening cast

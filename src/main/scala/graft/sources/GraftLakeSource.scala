@@ -404,13 +404,17 @@ final class GraftLakeWriteBuilder(root: String,
           // carrying both schemaB64 and the files), so a crash can
           // never leave the lake evolved with no data landed and no
           // reader can observe the schema without its commit.
+          // The lake's schema comes from metadata, the same
+          // SnapshotLake.schemaOf a `load` resolves: the declared schema,
+          // or the footer inference version v−1 cached, extended by this
+          // head's own commit — never a DataFrame over every live file,
+          // so the check costs O(change), not O(history).
           var payload = data
           var declare: Option[StructType] = None
           if (!replacing)
             SnapshotLake.currentVersion(root).foreach { v =>
-              val lake = SnapshotLake
-                .read(data.sparkSession, root, Some(v)).schema
-              def shape(s: StructType) = s.fields.toSeq.map(f => (f.name, f.dataType))
+              val lake = SnapshotLake.schemaOf(data.sparkSession, root, Some(v))
+              import SnapshotLake.shape
               if (shape(data.schema) != shape(lake)) {
                 require(autoMerge,
                   s"append schema ${data.schema.simpleString} does not match " +
@@ -501,9 +505,30 @@ final class GraftLakeScanBuilder(root: String, version: Option[Long],
     }
   }
 
+  /** Physical columns that some file of the scanned version carries as a
+    * hive path tuple: their ranges are the encoded path strings, not
+    * sidecar numbers. Resolved only when a temporal literal is pushed. */
+  private lazy val pathCols: Set[String] =
+    version.orElse(SnapshotLake.currentVersion(root)).fold(Set.empty[String]) { v =>
+      GraftLakeSidecarIndex.of(root, v, SnapshotLake.files(root, v)).pathCols
+    }
+
   /** Convert prunable conjuncts to index ranges. GreaterThan/LessThan
     * prune as their inclusive forms — a SUPERSET range, conservative by
-    * construction. By default everything is returned as residual: Spark
+    * construction. Literals that prune: integral, floating and string
+    * values as their string form, and — since the stats sidecars hold a
+    * temporal column's parquet INT64/INT32 value — `Timestamp`/`Instant`/
+    * `LocalDateTime` literals as epoch micros and `Date`/`LocalDate`
+    * literals as epoch days, so a `ts >= a AND ts < b` day window prunes
+    * by the files' `statsCols` ranges. The temporal conversion applies
+    * only where the column's range comes from a sidecar: a path-tuple
+    * column (a lake partitioned by a date or timestamp) ranges over the
+    * encoded path strings, so a temporal literal there prunes nothing,
+    * as before. Bloom probes keep the string form their sidecars were
+    * built from (a temporal literal probes no bloom), and the catalog
+    * DELETE's `rangesOf` keeps its own conversion — `deleteMatching`
+    * re-applies those ranges row by row, where micros would not compare.
+    * By default everything is returned as residual: Spark
     * re-applies every filter row-level, so a range the index can't serve
     * (or a filter shape this never inspects) costs only unpruned files.
     * With `.option("exactPushdown", "true")` the exactly-evaluable
@@ -518,12 +543,17 @@ final class GraftLakeScanBuilder(root: String, version: Option[Long],
            _: String => Some(v.toString)
       case _ => None
     }
+    def bound(a: String, v: Any): Option[String] =
+      GraftLakeScan.temporalStat(v) match {
+        case Some(n) => if (pathCols(phys(a))) None else Some(n.toString)
+        case None => s(v)
+      }
     ranges = filters.toSeq.flatMap {
-      case EqualTo(a, v) => s(v).map(x => FileStats.Range(phys(a), Some(x), Some(x)))
-      case GreaterThanOrEqual(a, v) => s(v).map(x => FileStats.Range(phys(a), Some(x), None))
-      case GreaterThan(a, v) => s(v).map(x => FileStats.Range(phys(a), Some(x), None))
-      case LessThanOrEqual(a, v) => s(v).map(x => FileStats.Range(phys(a), None, Some(x)))
-      case LessThan(a, v) => s(v).map(x => FileStats.Range(phys(a), None, Some(x)))
+      case EqualTo(a, v) => bound(a, v).map(x => FileStats.Range(phys(a), Some(x), Some(x)))
+      case GreaterThanOrEqual(a, v) => bound(a, v).map(x => FileStats.Range(phys(a), Some(x), None))
+      case GreaterThan(a, v) => bound(a, v).map(x => FileStats.Range(phys(a), Some(x), None))
+      case LessThanOrEqual(a, v) => bound(a, v).map(x => FileStats.Range(phys(a), None, Some(x)))
+      case LessThan(a, v) => bound(a, v).map(x => FileStats.Range(phys(a), None, Some(x)))
       case _ => None
     }
     // POINT predicates additionally consult the per-file bloom sidecars
@@ -804,8 +834,6 @@ final class GraftLakeScan(root: String, rootAbs: String,
     with SupportsReportStatistics {
   /** Files still scheduled after static AND runtime pruning. */
   @volatile private var liveFiles: Seq[String] = kept
-  /** Whether a runtime (join/group) filter narrowed this scan. */
-  @volatile private var filtered = false
   /** Whether the `In("_file", …)` GROUP filter specifically arrived —
     * only the row-level rewrite's MAIN scan ever receives it (the
     * condition subquery's scan gets at most join-key DPP filters), so
@@ -819,7 +847,6 @@ final class GraftLakeScan(root: String, rootAbs: String,
     * filtering), the version it read, and the columns whose sidecar
     * stats a rewrite commit should re-harvest. */
   private[sources] def currentFiles: Seq[String] = liveFiles
-  private[sources] def wasRuntimeFiltered: Boolean = filtered
   private[sources] def wasFileGroupFiltered: Boolean = fileFiltered
   private[sources] def version: Long = resolvedVersion
   /** The scanned version's column-mapping helpers: files/sidecars speak
@@ -1037,7 +1064,6 @@ final class GraftLakeScan(root: String, rootAbs: String,
       case _ => (_: String) => true // unknown runtime-filter shape prunes nothing
     }
     liveFiles = liveFiles.filter(f => checks.forall(_(f)))
-    filtered = true
     if (filters.exists {
       case org.apache.spark.sql.sources.In("_file", _) => true
       case _ => false
@@ -1131,19 +1157,20 @@ private[sources] object GraftLakeConf {
 
 /** The flattened sidecar index of one lake VERSION — stats ranges
   * (composed with path-encoded partition tuples), row counts, byte
-  * sizes, NDVs, and the set of stats-indexed columns — memoized per
-  * (root, version) under soft references: a version's file list and its
-  * commit dirs' sidecars are immutable once visible, and rebuilding
-  * these maps dominated the residual per-plan driver time at a million
-  * files (ManifestCeiling). The first scan of a version pays the build;
-  * every later scan of it plans from the cached maps. */
+  * sizes, NDVs, and the sets of stats-indexed and path-tuple columns —
+  * memoized per (root, version) under soft references: a version's file
+  * list and its commit dirs' sidecars are immutable once visible, and
+  * rebuilding these maps dominated the residual per-plan driver time at
+  * a million files (ManifestCeiling). The first scan of a version pays
+  * the build; every later scan of it plans from the cached maps. */
 private[sources] final case class GraftLakeSidecarIndex(
     stats: Map[String, Map[String, FileStats.ColRange]],
     composed: Map[String, Map[String, FileStats.ColRange]],
     rows: Map[String, Long],
     bytes: Map[String, Long],
     ndv: Map[String, Map[String, Long]],
-    statCols: Set[String])
+    statCols: Set[String],
+    pathCols: Set[String])
 
 private[sources] object GraftLakeSidecarIndex {
   private val cache = new java.util.concurrent.ConcurrentHashMap[
@@ -1207,7 +1234,8 @@ private[sources] object GraftLakeSidecarIndex {
           dirs.flatMap(d => FileStats.readRowsSidecar(root, d)).toMap,
           dirs.flatMap(d => FileStats.readBytesSidecar(root, d)).toMap,
           dirs.flatMap(d => FileStats.readNdvSidecar(root, d)).toMap,
-          sidecars.valuesIterator.flatMap(_.keysIterator).toSet)
+          sidecars.valuesIterator.flatMap(_.keysIterator).toSet,
+          pathIdx.valuesIterator.flatMap(_.keysIterator).toSet)
         fp.foreach { f =>
           cache.put(k, new java.lang.ref.SoftReference((f, idx)))
           strongMru.merge(root, (v, f, idx),
@@ -1220,6 +1248,21 @@ private[sources] object GraftLakeSidecarIndex {
 
 object GraftLakeScan {
   private val NullPart = "__HIVE_DEFAULT_PARTITION__"
+
+  /** A pushed date/time literal in the unit the stats sidecar holds for
+    * its column — the parquet INT64 `TIMESTAMP(MICROS)` value (epoch
+    * micros, for both `TimestampType` and `TimestampNTZType`) or the
+    * INT32 `DATE` value (epoch days) — the inverse of the conversion
+    * Spark applied when it translated the Catalyst literal into the
+    * filter. None for any other literal. */
+  private[sources] def temporalStat(v: Any): Option[Long] = v match {
+    case t: java.sql.Timestamp => Some(DateTimeUtils.fromJavaTimestamp(t))
+    case i: java.time.Instant => Some(DateTimeUtils.instantToMicros(i))
+    case t: java.time.LocalDateTime => Some(DateTimeUtils.localDateTimeToMicros(t))
+    case d: java.sql.Date => Some(DateTimeUtils.fromJavaDate(d).toLong)
+    case d: java.time.LocalDate => Some(DateTimeUtils.localDateToDays(d).toLong)
+    case _ => None
+  }
 
   /** A sidecar bound (its decimal string form — possibly a double-form
     * string like "5.0" after a cross-row-group merge) as the CATALYST

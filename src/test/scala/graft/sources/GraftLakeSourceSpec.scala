@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -537,5 +537,288 @@ class GraftLakeSourceSpec extends AnyFunSuite {
     val newFile = (f5.toSet -- f4.toSet).head
     assert(idx5.composed(newFile).get("x").exists(_.min == "100"),
       "the replacing index carries the new commit's sidecar ranges")
+  }
+
+  // ── per-cycle commit cost and temporal pruning ───────────────────────
+
+  /** (jobs, tasks) the body's actions launch. The listener counts only
+    * jobs of a job group of this call's own — suites share the session
+    * and run concurrently — and a marker job in a second group drains
+    * the listener bus: events arrive in order, so once the marker's
+    * start is seen every job of the body has been counted. */
+  private def jobsAndTasks(body: => Unit): (Int, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"cost-${java.util.UUID.randomUUID()}"
+    val marker = s"$group-drained"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val tasks = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) =>
+            jobs.incrementAndGet()
+            tasks.addAndGet(e.stageInfos.map(_.numTasks).sum)
+            ()
+          case Some(`marker`) => drained.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "measured")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "listener drain")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the listener bus never delivered the marker job")
+    } finally sc.removeSparkListener(listener)
+    (jobs.get, tasks.get)
+  }
+
+  /** Rows (k, ts) of one 3-hourly batch, `ts` one second apart. */
+  private def tsBatch(i: Int): DataFrame =
+    spark.range(i * 100L, i * 100L + 100).select(col("id").as("k"),
+      org.apache.spark.sql.functions.timestamp_seconds(
+        lit(1704067200L) + col("id")).as("ts")).coalesce(1)
+
+  /** `df` written as one parquet file; returns the file. */
+  private def parquetFile(df: DataFrame): java.nio.file.Path = {
+    val dir = Files.createTempDirectory("graft-parquet").resolve("b")
+    df.coalesce(1).write.parquet(dir.toString)
+    Files.list(dir).filter(_.toString.endsWith(".parquet")).findFirst().get()
+  }
+
+  /** Commit a copy of the parquet file `part` as the one file of commit
+    * dir `data/<dir>`: no Spark write per commit, and a chosen dir name,
+    * so a spec controls where the commit sorts in the listing. */
+  private def commitFile(part: java.nio.file.Path, root: String,
+                         dir: String, rows: Long): Long = {
+    val rel = s"data/$dir/part-0.parquet"
+    Files.createDirectories(java.nio.file.Paths.get(root, rel).getParent)
+    Files.copy(part, java.nio.file.Paths.get(root, rel))
+    SnapshotLake.commitSynthetic(root, Seq(rel), rows)
+  }
+
+  /** A lake of `n` one-file append versions, all copies of one batch. */
+  private def deepLake(n: Int): String = {
+    val root = newRoot()
+    val part = parquetFile(tsBatch(0))
+    (1 to n).foreach(_ =>
+      commitFile(part, root, java.util.UUID.randomUUID().toString, 100L))
+    root
+  }
+
+  private def connectorAppend(df: DataFrame, root: String,
+                              opts: (String, String)*): Unit =
+    df.write.format("graftlake").mode("append").option("statsCols", "ts")
+      .options(opts.toMap).save(root)
+
+  test("a connector append costs the same jobs and tasks at 5 and 60 versions of history") {
+    val costs = Seq(5, 60).map { depth =>
+      val root = deepLake(depth)
+      // cold: this JVM never inferred the lake's schema; warm: the
+      // previous append left version v−1's inference cached
+      val cold = jobsAndTasks(connectorAppend(tsBatch(1), root))
+      val warm = jobsAndTasks(connectorAppend(tsBatch(2), root))
+      assert(SnapshotLake.currentVersion(root).contains(depth + 2L))
+      depth -> (cold, warm, root)
+    }.toMap
+    info(s"(jobs, tasks) per append, cold and warm, by depth: " +
+      costs.view.mapValues(c => (c._1, c._2)).toMap)
+    val (cold5, warm5, _) = costs(5)
+    val (cold60, warm60, root) = costs(60)
+    assert(cold5._1 == cold60._1 && warm5._1 == warm60._1,
+      s"jobs per append must not depend on history: $costs")
+    assert(cold60._2 <= cold5._2 && warm60._2 <= warm5._2,
+      s"tasks per append must not grow with live files: $costs")
+
+    // the check the cheap path replaced still holds: a mismatched append
+    // refuses without touching the lake…
+    val wide = tsBatch(3).withColumn("tag", lit("t"))
+    intercept[Exception](connectorAppend(wide, root))
+    assert(SnapshotLake.currentVersion(root).contains(62L))
+    // …and mergeSchema=true evolves the lake in ONE commit, visible to a
+    // load at the new head
+    connectorAppend(wide, root, "mergeSchema" -> "true")
+    assert(SnapshotLake.currentVersion(root).contains(63L))
+    assert(SnapshotLake.declaredSchema(root, Some(63L)).isDefined)
+    val evolved = Seq("k" -> "bigint", "ts" -> "timestamp", "tag" -> "string")
+    assert(spark.read.format("graftlake").load(root).schema.fields
+      .map(f => f.name -> f.dataType.simpleString).toSeq == evolved)
+    assert(spark.read.format("graftlake").load(root)
+      .filter(col("tag") === "t").count() == 100L)
+  }
+
+  test("read, load and the append check agree on an undeclared mixed-schema lake") {
+    def shape(s: org.apache.spark.sql.types.StructType) =
+      s.fields.map(f => f.name -> f.dataType.simpleString).toSeq
+    val ab = spark.range(0, 2).select(col("id").as("a"), col("id").cast("string").as("b"))
+    val ac = spark.range(10, 12).select(col("id").as("a"), col("id").cast("double").as("c"))
+    val merged = Seq("a" -> "bigint", "b" -> "string", "c" -> "double")
+    /** Version 2 adds `ac` to a lake of `ab`: in a random commit dir
+      * (two raw appends), or one sorting first or last; `warm` infers
+      * version 1 before version 2 lands, so version 2 inherits. */
+    def check(dir: Option[String], warm: Boolean): Unit = {
+      val root = newRoot()
+      SnapshotLake.append(ab, root)
+      if (warm) {
+        spark.read.format("graftlake").load(root).schema
+        spark.read.format("graftlake").option("mergeSchema", "true").load(root).schema
+      }
+      dir.fold(SnapshotLake.append(ac, root))(commitFile(parquetFile(ac), root, _, 2L))
+      // the one rule: Spark's, over the listing sorted by path — the
+      // commit whose file sorts first names the non-merging schema
+      val firstIsAb = SnapshotLake.files(root, 1L).contains(SnapshotLake.files(root, 2L).min)
+      val (want, other) = if (firstIsAb) (ab, ac) else (ac, ab)
+      val ctx = s"dir=$dir warm=$warm"
+      val read = shape(SnapshotLake.read(spark, root).schema)
+      assert(read == shape(want.schema), ctx)
+      assert(shape(spark.read.format("graftlake").load(root).schema) == read, ctx)
+      // the append check: the agreed shape appends, the other refuses
+      intercept[Exception](other.write.format("graftlake").mode("append").save(root))
+      want.write.format("graftlake").mode("append").save(root)
+      assert(SnapshotLake.currentVersion(root).contains(3L), ctx)
+      // mergeSchema unions the footers in path order
+      val m = shape(SnapshotLake.read(spark, root, mergeSchema = true).schema)
+      assert(m.toSet == merged.toSet, ctx)
+      assert(shape(spark.read.format("graftlake").option("mergeSchema", "true")
+        .load(root).schema) == m, ctx)
+    }
+    check(None, warm = false)
+    check(None, warm = true)
+    Seq("00000000-0000-0000-0000-000000000000",
+        "ffffffff-ffff-ffff-ffff-ffffffffffff").foreach { d =>
+      check(Some(d), warm = false)
+      check(Some(d), warm = true)
+    }
+  }
+
+  /** A UTC wall-clock time as the `Timestamp` literal of that instant,
+    * whatever the JVM's default zone (the sessions run in UTC). */
+  private def utc(t: java.time.LocalDateTime): java.sql.Timestamp =
+    java.sql.Timestamp.from(t.toInstant(java.time.ZoneOffset.UTC))
+
+  /** Four one-file commits, file i holding day i of January 2024 at
+    * hours 0..23 plus 7 µs, as TIMESTAMP, TIMESTAMP_NTZ and DATE, all
+    * three stats-indexed (and `ts` bloom-indexed). */
+  private def temporalLake(): String = {
+    val root = newRoot()
+    val idx = SnapshotLake.IndexSpec(Seq("ts", "tsn", "d"), Some("ts"))
+    (0 until 4).foreach { i =>
+      SnapshotLake.append(spark.range(0, 24).select(
+        (lit(i) * 24 + col("id")).as("h"),
+        org.apache.spark.sql.functions.timestamp_micros(
+          lit(1704067200000000L) + (lit(i) * 24 + col("id")) * 3600000000L + 7L)
+          .as("ts")).select(col("h"), col("ts"),
+        col("ts").cast("timestamp_ntz").as("tsn"),
+        col("ts").cast("date").as("d")).coalesce(1), root, idx)
+    }
+    root
+  }
+
+  test("timestamp, timestamp_ntz and date literals prune files at exact boundaries, answers unchanged") {
+    import java.time.{LocalDate, LocalDateTime}
+    val root = temporalLake()
+    // day 1's first and last rows: 2024-01-02 00:00:00.000007 and 23:00:00.000007
+    val lo = LocalDateTime.of(2024, 1, 2, 0, 0, 0, 7000)
+    val hi = LocalDateTime.of(2024, 1, 2, 23, 0, 0, 7000)
+    val micro = java.time.Duration.ofNanos(1000)
+    def ts(t: LocalDateTime) = lit(utc(t))
+    def day(d: LocalDate) = lit(java.sql.Date.valueOf(d))
+    val d1 = LocalDate.of(2024, 1, 2)
+    val cases: Seq[(String, org.apache.spark.sql.Column, Int)] = Seq(
+      ("ts >= min", col("ts") >= ts(lo), 3),
+      ("ts >= min + 1µs", col("ts") >= ts(lo.plus(micro)), 3),
+      ("ts > max", col("ts") > ts(hi), 3), // inclusive superset keeps file 1
+      ("ts >= max + 1µs", col("ts") >= ts(hi.plus(micro)), 2),
+      ("ts < min", col("ts") < ts(lo), 2), // inclusive superset keeps file 1
+      ("ts <= min - 1µs", col("ts") <= ts(lo.minus(micro)), 1),
+      ("ts = max", col("ts") === ts(hi), 1),
+      ("ts = max + 1µs", col("ts") === ts(hi.plus(micro)), 0),
+      ("day window", col("ts") >= ts(d1.atStartOfDay) &&
+        col("ts") < ts(d1.plusDays(1).atStartOfDay), 1), // day 2 starts 7 µs late
+      ("tsn >= max + 1µs", col("tsn") >= lit(hi.plus(micro)), 2),
+      ("tsn <= min - 1µs", col("tsn") <= lit(lo.minus(micro)), 1),
+      ("tsn = min", col("tsn") === lit(lo), 1),
+      ("d >= day 1", col("d") >= day(d1), 3),
+      ("d > day 1", col("d") > day(d1), 3),
+      ("d < day 1", col("d") < day(d1), 2),
+      ("d <= day 0", col("d") <= day(d1.minusDays(1)), 1),
+      ("d = day 2", col("d") === day(d1.plusDays(1)), 1))
+    cases.foreach { case (name, pred, kept) =>
+      val df = spark.read.format("graftlake").load(root).filter(pred)
+      assert(lakeScanOf(df).keptFiles == kept,
+        s"$name: ${lakeScanOf(df).description()}")
+      assert(df.collect().map(_.toSeq).toSet ==
+        SnapshotLake.read(spark, root).filter(pred).collect().map(_.toSeq).toSet,
+        name)
+    }
+    // the java.time forms Spark hands over under the java8 datetime API
+    // convert to the same units as their java.sql twins
+    val t = utc(hi)
+    assert(GraftLakeScan.temporalStat(t.toInstant) == GraftLakeScan.temporalStat(t))
+    assert(GraftLakeScan.temporalStat(d1) ==
+      GraftLakeScan.temporalStat(java.sql.Date.valueOf(d1)))
+    assert(GraftLakeScan.temporalStat(hi).contains(1704236400000007L))
+    assert(GraftLakeScan.temporalStat(d1).contains(19724L))
+  }
+
+  test("temporal pruning leaves date/timestamp partition columns and blooms in their string form") {
+    import java.time.{LocalDate, LocalDateTime}
+    val src = temporalLake()
+    val rows = SnapshotLake.read(spark, src)
+    val hi = LocalDateTime.of(2024, 1, 2, 23, 0, 0, 7000)
+    // `=` on the bloom-indexed ts: the probe keeps its string form (a
+    // temporal literal probes no bloom), so the file holding the value
+    // stays and the range alone narrows to it
+    val pt = spark.read.format("graftlake").load(src)
+      .filter(col("ts") === lit(utc(hi)))
+    assert(lakeScanOf(pt).keptFiles == 1, lakeScanOf(pt).description())
+    assert(pt.select("h").collect().map(_.getLong(0)).toSeq == Seq(47L))
+
+    // partitioned by the DATE and by a TIMESTAMP (the day's midnight):
+    // their ranges are path strings, so temporal literals on them prune
+    // nothing, while the sidecar-indexed ts still prunes in the same lake
+    Seq("d" -> "d", "day" -> "date_trunc('DAY', ts)").foreach { case (p, e) =>
+      val root = newRoot()
+      (0 until 4).foreach { i =>
+        SnapshotLake.appendPartitioned(
+          rows.filter(col("h").between(i * 24, i * 24 + 23))
+            .withColumn(p, org.apache.spark.sql.functions.expr(e)).coalesce(1),
+          root, Seq(p), SnapshotLake.IndexSpec(Seq("ts"), None))
+      }
+      val lake = spark.read.format("graftlake").load(root)
+      val onPath =
+        if (p == "d") col("d") >= lit(java.sql.Date.valueOf(LocalDate.of(2024, 1, 3)))
+        else col("day") < lit(utc(LocalDateTime.of(2024, 1, 2, 0, 0)))
+      val onStats = col("ts") >= lit(utc(hi.plusNanos(1000)))
+      assert(lakeScanOf(lake).totalFiles == 4)
+      Seq(onPath -> 4, onStats -> 2).foreach { case (pred, kept) =>
+        val df = lake.filter(pred)
+        assert(lakeScanOf(df).keptFiles == kept, s"$p: ${lakeScanOf(df).description()}")
+        assert(df.collect().map(_.toSeq).toSet ==
+          SnapshotLake.read(spark, root).filter(pred).collect().map(_.toSeq).toSet, p)
+      }
+    }
+  }
+
+  test("a lake written as TIMESTAMP_MILLIS harvests micros, so timestamp literals prune it correctly") {
+    // a session of its own: the output type is a session conf, and the
+    // suites share one session
+    val millis = spark.newSession()
+    millis.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MILLIS")
+    val root = newRoot()
+    (0 until 2).foreach { i =>
+      SnapshotLake.append(millis.range(0, 10).select(col("id").as("k"),
+        org.apache.spark.sql.functions.timestamp_seconds(
+          lit(1704067200L + i * 86400L) + col("id")).as("ts")).coalesce(1),
+        root, SnapshotLake.IndexSpec(Seq("ts"), None))
+    }
+    val day1 = lit(utc(java.time.LocalDateTime.of(2024, 1, 2, 0, 0)))
+    val df = spark.read.format("graftlake").load(root).filter(col("ts") >= day1)
+    assert(lakeScanOf(df).keptFiles == 1, lakeScanOf(df).description())
+    assert(df.select("k").collect().map(_.getLong(0)).toSet == (0L until 10L).toSet)
   }
 }
