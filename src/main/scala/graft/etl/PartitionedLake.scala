@@ -2,8 +2,10 @@ package graft.etl
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 /** The partitioned parquet lake — the reference's whole output side
   * (ref: pipeline/ETL/load.py:50-56 `wr.s3.to_parquet(dataset=True,
@@ -197,4 +199,26 @@ object PartitionedLake {
       (col("year") === d.getYear &&
         (col("month") < d.getMonthValue ||
           (col("month") === d.getMonthValue && col("day") <= d.getDayOfMonth)))
+
+  /** The directory of one day: `<root>/year=Y/month=M/day=D`, unpadded —
+    * the prefix the reference builds by hand (generate_report.py:32). */
+  def dayDir(root: String, d: java.time.LocalDate): String =
+    s"$root/year=${d.getYear}/month=${d.getMonthValue}/day=${d.getDayOfMonth}"
+
+  /** One day of the lake, read from [[dayDir]] alone: the root is never
+    * listed, so the cost is one directory listing whatever the lake's
+    * history. `dataSchema` is the files' schema; `year`/`month`/`day`
+    * are appended as `IntegerType` (`basePath` keeps them as columns), so
+    * no footer-inference job runs and the result has [[read]]'s schema.
+    * A day with no directory is an empty local relation with that schema
+    * — decided by one `exists` call, not a listing. */
+  def readDay(spark: SparkSession, root: String, d: java.time.LocalDate,
+              dataSchema: StructType): DataFrame = {
+    val schema = StructType(dataSchema.fields ++
+      PartitionCols.map(StructField(_, IntegerType, nullable = true)))
+    val dir = new Path(dayDir(root, d))
+    if (dir.getFileSystem(spark.sessionState.newHadoopConf()).exists(dir))
+      spark.read.schema(schema).option("basePath", root).parquet(dir.toString)
+    else spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+  }
 }

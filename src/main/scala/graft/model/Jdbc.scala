@@ -31,10 +31,10 @@ object Jdbc {
                         driver: String = "com.mysql.cj.jdbc.Driver")
 
   /** The reference's denormalizing extraction query (extract.py:87-101),
-    * restated over generic fact/dim names. Kept as the `query` option so
-    * the join runs DB-side exactly like the reference; the alternative —
-    * three `dbtable` reads joined in Spark — is preferable once dims are
-    * mirrored to the lake. */
+    * restated over generic fact/dim names. Given as a JDBC reader's
+    * `query` option, the join runs DB-side exactly like the reference;
+    * the alternative — three `dbtable` reads joined in Spark — is
+    * preferable once dims are mirrored to the lake. */
   def denormalizingQuery(since: Option[Timestamp]): String = {
     val bound = since.map(ts => s"WHERE ft.at > '$ts'").getOrElse("")
     s"""SELECT ft.transaction_id, ft.at, ft.total,
@@ -65,16 +65,4 @@ object Jdbc {
         .option("numPartitions", n.toString)
     }.load()
   }
-
-  /** Reader over the denormalizing query with the incremental bound pushed
-    * into the DB (S1+S2). */
-  def incrementalExtract(spark: SparkSession, conn: Conn,
-                         since: Option[Timestamp]): DataFrame =
-    spark.read.format("jdbc")
-      .option("url", conn.url)
-      .option("driver", conn.driver)
-      .option("user", conn.user)
-      .option("password", conn.password)
-      .option("query", denormalizingQuery(since))
-      .load()
 }

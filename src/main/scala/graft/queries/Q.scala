@@ -21,7 +21,4 @@ object Q {
   def apply(name: String, oracle: String)(
       fn: (SparkSession, String) => DataFrame): Q =
     Q(name, Some(oracle), fn)
-
-  def noOracle(name: String)(fn: (SparkSession, String) => DataFrame): Q =
-    Q(name, None, fn)
 }

@@ -12,11 +12,14 @@ import graft.model.Tables
   * generate_report.py): read exactly one day's partition from the lake,
   * compute the financial KPI set, render HTML on the driver.
   *
-  * Spark restatement of the Lambda (SURVEY §3.2): a partition-pruned scan
-  * (the `year=Y/month=M/day=D` directory — zero IO outside the day, where
-  * the reference builds the S3 prefix by hand, generate_report.py:32),
-  * a handful of small aggregates over the day slice, `collect()` of a few
-  * tiny rows into [[ReportMetrics]], template on the driver.
+  * Spark restatement of the Lambda (SURVEY §3.2): the reference builds
+  * the day's S3 prefix by hand (generate_report.py:32) and reads only it;
+  * [[daySlice]] does the same — it reads the `year=Y/month=M/day=D`
+  * directory alone, so a report never lists the rest of the lake. The
+  * report is then ONE Spark action: the whole-day, per-supplier and
+  * per-priority aggregates of the slice are collected together as a
+  * union of at most a few hundred rows, which [[fold]] turns into
+  * [[ReportMetrics]] on the driver; the template renders there too.
   *
   * All money rides as exact integer cents (order-independent at any
   * partition count); the fee model is the reference's 2%-of-revenue on
@@ -54,36 +57,45 @@ object Report {
   private def cents(c: org.apache.spark.sql.Column) = round(c * 100).cast("long")
   private def rev = col("l_extendedprice") * (lit(1) - col("l_discount"))
 
-  /** The day slice — a partition-column filter over the lake, pruned at
-    * file-listing time. */
-  def daySlice(spark: SparkSession, sfDir: String, date: LocalDate): DataFrame = {
-    val root = PartitionedLake.ensureLineitemLake(spark, sfDir)
-    PartitionedLake.read(spark, root)
-      .filter(col("year") === date.getYear &&
-        col("month") === date.getMonthValue &&
-        col("day") === date.getDayOfMonth)
-  }
+  /** The day slice: the lake's `year=Y/month=M/day=D` directory read
+    * alone ([[PartitionedLake.readDay]]) with `lineitem`'s schema — no
+    * other day is listed or read, and a day without data is an empty
+    * slice. */
+  def daySlice(spark: SparkSession, sfDir: String, date: LocalDate): DataFrame =
+    PartitionedLake.readDay(spark, PartitionedLake.ensureLineitemLake(spark, sfDir), date,
+      Tables.lineitem(spark, sfDir).schema)
+
+  /** (rc, n_tx): the day's revenue cents and line count, one row. */
+  private def dayTotals(slice: DataFrame): DataFrame =
+    slice.agg(coalesce(sum(cents(rev)), lit(0L)).as("rc"), count(lit(1)).as("n_tx"))
+
+  /** (s_name, rc, n_tx) over slice ⋈ broadcast `supplier`. */
+  private def bySupplier(spark: SparkSession, sfDir: String, slice: DataFrame): DataFrame =
+    slice
+      .join(broadcast(Tables.supplier(spark, sfDir)), col("l_suppkey") === col("s_suppkey"))
+      .groupBy("s_name")
+      .agg(sum(cents(rev)).as("rc"), count(lit(1)).as("n_tx"))
+
+  /** (o_orderpriority, rc) over slice ⋈ `orders`. */
+  private def byPriority(spark: SparkSession, sfDir: String, slice: DataFrame): DataFrame =
+    slice
+      .join(Tables.orders(spark, sfDir).select("o_orderkey", "o_orderpriority"),
+        col("l_orderkey") === col("o_orderkey"))
+      .groupBy("o_orderpriority")
+      .agg(sum(cents(rev)).as("rc"))
 
   /** Single-row scalar-metrics plan (the CORRECTNESS-gated face of the
-    * report; the list-valued tables are separate tiny aggregates consumed
-    * by [[run]]). Deterministic ties: best/worst break on
-    * (revenue, name) exactly like q18. */
+    * report, q44). Deterministic ties: best/worst break on
+    * (revenue, name) exactly like q18. [[metrics]] computes the same
+    * values by [[fold]]; ReportSpec keeps the two equal. */
   def metricsDF(spark: SparkSession, sfDir: String, date: LocalDate): DataFrame =
     metricsDFFrom(spark, sfDir, date, daySlice(spark, sfDir, date))
 
-  /** Same plan over a caller-supplied (typically cached) slice — the seam
-    * [[metrics]] uses so one scan of the lake feeds every aggregate of the
-    * report run. */
+  /** Same plan over a caller-supplied slice. */
   def metricsDFFrom(spark: SparkSession, sfDir: String, date: LocalDate,
                     slice: DataFrame): DataFrame = {
-    val tot = slice.agg(
-      coalesce(sum(cents(rev)), lit(0L)).as("rc"),
-      count(lit(1)).as("n_tx"))
-
     val tieKey = concat(format_string("%020d", col("rc")), col("s_name"))
-    val bestWorst = slice
-      .join(broadcast(Tables.supplier(spark, sfDir)), col("l_suppkey") === col("s_suppkey"))
-      .groupBy("s_name").agg(sum(cents(rev)).as("rc"))
+    val bestWorst = bySupplier(spark, sfDir, slice)
       .agg(
         coalesce(max_by(col("s_name"), tieKey), lit("n/a")).as("best_truck"),
         coalesce(max("rc"), lit(0L)).as("best_rc"),
@@ -93,7 +105,7 @@ object Report {
     val fees = perPaymentDF(spark, sfDir, slice)
       .agg(coalesce(sum("fee_cents"), lit(0L)).as("fee_c"))
 
-    tot.crossJoin(bestWorst).crossJoin(fees).select(
+    dayTotals(slice).crossJoin(bestWorst).crossJoin(fees).select(
       lit(date.toString).as("report_date"),
       (col("rc") / 100.0).as("total_revenue"),
       col("n_tx"),
@@ -110,53 +122,66 @@ object Report {
   /** Per-payment-method revenue + processing fee (2% on card-like methods,
     * group-level rounding like the reference's per-method cost dict). */
   def perPaymentDF(spark: SparkSession, sfDir: String, slice: DataFrame): DataFrame =
-    slice
-      .join(Tables.orders(spark, sfDir).select("o_orderkey", "o_orderpriority"),
-        col("l_orderkey") === col("o_orderkey"))
-      .groupBy(col("o_orderpriority").as("method"))
-      .agg(sum(cents(rev)).as("rc"))
-      .select(
-        col("method"), col("rc"),
-        when(lower(col("method")).contains("urgent"), round(col("rc") * 0.02).cast("long"))
-          .otherwise(0L).as("fee_cents"))
+    byPriority(spark, sfDir, slice).select(
+      col("o_orderpriority").as("method"), col("rc"),
+      when(lower(col("o_orderpriority")).contains("urgent"), round(col("rc") * 0.02).cast("long"))
+        .otherwise(0L).as("fee_cents"))
 
   /** Per-truck revenue table (ref generate_report.py:92-96). */
   def perTruckDF(spark: SparkSession, sfDir: String, slice: DataFrame): DataFrame =
-    slice
-      .join(broadcast(Tables.supplier(spark, sfDir)), col("l_suppkey") === col("s_suppkey"))
-      .groupBy(col("s_name").as("name"))
-      .agg(sum(cents(rev)).as("rc"), count(lit(1)).as("n_tx"))
-      .select(col("name"), (col("rc") / 100.0).as("revenue"), col("n_tx"),
+    bySupplier(spark, sfDir, slice)
+      .select(col("s_name").as("name"), (col("rc") / 100.0).as("revenue"), col("n_tx"),
         (round(col("rc") / col("n_tx")) / 100.0).as("avg_tx"))
       .orderBy(col("rc").desc, col("name"))
 
-  /** Run the full report job for one date: metrics + tables collected into
-    * the case class. The day slice is cached, so the (already
-    * partition-pruned) lake is scanned ONCE per run — the scalar metrics,
-    * the per-truck table and the per-payment table all aggregate the
-    * in-memory slice (asserted by ReportSpec). */
+  /** Run the full report job for one date in ONE Spark action: the
+    * whole-day totals, the per-supplier and the per-priority aggregates
+    * of the day slice are collected as one union — at most one row per
+    * supplier plus one per priority plus one — and [[fold]]ed on the
+    * driver. */
   def metrics(spark: SparkSession, sfDir: String, date: LocalDate): ReportMetrics = {
-    val slice = daySlice(spark, sfDir, date).cache()
-    try metricsFrom(spark, sfDir, date, slice)
-    finally { val _ = slice.unpersist() }
+    val slice = daySlice(spark, sfDir, date)
+    val rows = dayTotals(slice).select(lit(0), lit(null).cast("string"), col("rc"), col("n_tx"))
+      .union(bySupplier(spark, sfDir, slice)
+        .select(lit(1), col("s_name"), col("rc"), col("n_tx")))
+      .union(byPriority(spark, sfDir, slice)
+        .select(lit(2), col("o_orderpriority"), col("rc"), lit(0L)))
+      .collect().groupBy(_.getInt(0)).withDefaultValue(Array.empty[Row])
+    val day = rows(0).head
+    fold(date, day.getLong(2), day.getLong(3),
+      rows(1).toSeq.map(r => (r.getString(1), r.getLong(2), r.getLong(3))),
+      rows(2).toSeq.map(r => (r.getString(1), r.getLong(2))))
   }
 
-  private def metricsFrom(spark: SparkSession, sfDir: String, date: LocalDate,
-                          slice: DataFrame): ReportMetrics = {
-    val m = metricsDFFrom(spark, sfDir, date, slice).collect()(0)
-    val trucks = perTruckDF(spark, sfDir, slice).collect().toSeq.map { r =>
-      TruckRow(r.getString(0), r.getDouble(1), r.getLong(2), r.getDouble(3))
+  /** Spark's `round(x)` on a double: HALF_UP on the shortest decimal
+    * form of `x` (`BigDecimal(x)`, not the exact binary value). */
+  private def roundHalfUp(x: Double): Long =
+    BigDecimal(x).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
+
+  /** The report from its grouped rows, computed as [[metricsDFFrom]],
+    * [[perTruckDF]] and [[perPaymentDF]] compute it: `dayCents`/`nTx`
+    * are the whole day, `suppliers` the (name, cents, lines) and
+    * `priorities` the (method, cents) groups of the inner joins. */
+  def fold(date: LocalDate, dayCents: Long, nTx: Long,
+           suppliers: Seq[(String, Long, Long)],
+           priorities: Seq[(String, Long)]): ReportMetrics = {
+    val byKey = Ordering.by[(String, Long, Long), (Long, String)] { case (n, c, _) => (c, n) }
+    val best = suppliers.maxOption(byKey)
+    val worst = suppliers.minOption(byKey)
+    val fees = priorities.map { case (m, c) =>
+      (m, c, if (m.toLowerCase.contains("urgent")) roundHalfUp(c * 0.02) else 0L)
     }
-    val pays = perPaymentDF(spark, sfDir, slice).orderBy("method").collect().toSeq.map { r =>
-      PaymentRow(r.getString(0), r.getLong(1) / 100.0, r.getLong(2) / 100.0)
-    }
+    val feeC = fees.map(_._3).sum
     ReportMetrics(
-      reportDate = m.getString(0),
-      totalRevenue = m.getDouble(1), nTx = m.getLong(2), avgTx = m.getDouble(3),
-      bestTruck = m.getString(4), bestRevenue = m.getDouble(5),
-      worstTruck = m.getString(6), worstRevenue = m.getDouble(7),
-      totalFees = m.getDouble(8), netRevenue = m.getDouble(9),
-      perTruck = trucks, perPayment = pays)
+      reportDate = date.toString,
+      totalRevenue = dayCents / 100.0, nTx = nTx,
+      avgTx = if (nTx == 0) 0.0 else roundHalfUp(dayCents.toDouble / nTx) / 100.0,
+      bestTruck = best.fold("n/a")(_._1), bestRevenue = best.fold(0L)(_._2) / 100.0,
+      worstTruck = worst.fold("n/a")(_._1), worstRevenue = worst.fold(0L)(_._2) / 100.0,
+      totalFees = feeC / 100.0, netRevenue = (dayCents - feeC) / 100.0,
+      perTruck = suppliers.sortBy { case (n, c, _) => (-c, n) }.map { case (n, c, k) =>
+        TruckRow(n, c / 100.0, k, roundHalfUp(c.toDouble / k) / 100.0) },
+      perPayment = fees.sortBy(_._1).map { case (m, c, f) => PaymentRow(m, c / 100.0, f / 100.0) })
   }
 
   /** Driver-side HTML render (ref generate_report.py:160-387). */

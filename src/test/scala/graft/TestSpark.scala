@@ -23,4 +23,40 @@ object TestSpark {
   def hasPartitionGuard(plan: String): Boolean =
     "PartitionFilters: \\[([^\\]]*)\\]".r.findAllMatchIn(plan)
       .exists(_.group(1).contains("year"))
+
+  /** (jobs, tasks) the body's actions launch. The listener counts only
+    * jobs of a job group of this call's own — suites share the session
+    * and run concurrently — and a marker job in a second group drains
+    * the listener bus: events arrive in order, so once the marker's
+    * start is seen every job of the body has been counted. */
+  def jobsAndTasks(body: => Unit): (Int, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"cost-${java.util.UUID.randomUUID()}"
+    val marker = s"$group-drained"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val tasks = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) =>
+            jobs.incrementAndGet()
+            tasks.addAndGet(e.stageInfos.map(_.numTasks).sum)
+            ()
+          case Some(`marker`) => drained.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "measured")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "listener drain")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the listener bus never delivered the marker job")
+    } finally sc.removeSparkListener(listener)
+    (jobs.get, tasks.get)
+  }
 }

@@ -2,9 +2,15 @@ package graft.report
 
 import java.time.LocalDate
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.functions.{lit, round}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.etl.PartitionedLake
 
 /** Report metrics + HTML, including the empty-day branch
   * (generate_report.py:72-84) — SURVEY §7.4 trap 5. */
@@ -42,7 +48,7 @@ class ReportSpec extends AnyFunSuite {
     assert(empty.startsWith("<!DOCTYPE html>"))
   }
 
-  test("the report run feeds every aggregate from ONE cached lake scan") {
+  test("the faces over a cached day slice read the cache, never the lake") {
     val date = LocalDate.of(2000, 6, 15)
     val slice = Report.daySlice(spark, TestSpark.Sf, date).cache()
     try {
@@ -65,6 +71,95 @@ class ReportSpec extends AnyFunSuite {
           s"report aggregate must not re-scan the lake outside the cache:\n$s")
       }
     } finally { val _ = slice.unpersist() }
+  }
+
+  // ── one directory, one action ─────────────────────────────────────
+
+  private val DataDay = LocalDate.of(2000, 6, 15)
+  private val EmptyDay = LocalDate.of(1990, 1, 1)
+  private def lake = PartitionedLake.ensureLineitemLake(spark, TestSpark.Sf)
+
+  test("a report runs one action: <= 8 jobs on a data day, <= 2 on an empty day") {
+    // first calls build the lake and resolve the base tables (memoized)
+    Report.metrics(spark, TestSpark.Sf, DataDay)
+    Report.metrics(spark, TestSpark.Sf, EmptyDay)
+    val (dataJobs, _) = TestSpark.jobsAndTasks { Report.metrics(spark, TestSpark.Sf, DataDay); () }
+    val (emptyJobs, _) = TestSpark.jobsAndTasks { Report.metrics(spark, TestSpark.Sf, EmptyDay); () }
+    assert(dataJobs <= 8, s"data day ran $dataJobs jobs")
+    assert(emptyJobs <= 2, s"empty day ran $emptyJobs jobs")
+  }
+
+  test("the day slice reads only its day's directory") {
+    val dir = new Path(PartitionedLake.dayDir(lake, DataDay))
+    val qualified = dir.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(dir)
+    val files = Report.daySlice(spark, TestSpark.Sf, DataDay).inputFiles.toSeq
+    assert(files.nonEmpty)
+    assert(files.forall(f => new Path(f).getParent == qualified), files.mkString("\n"))
+  }
+
+  test("the day slice has the inferred lake schema, for a present and a missing day") {
+    val inferred = PartitionedLake.read(spark, lake).schema
+    assert(Report.daySlice(spark, TestSpark.Sf, DataDay).schema == inferred)
+    assert(Report.daySlice(spark, TestSpark.Sf, EmptyDay).schema == inferred)
+  }
+
+  /** The report as the three DataFrame faces compute it over one slice. */
+  private def fromFaces(date: LocalDate): Report.ReportMetrics = {
+    val slice = Report.daySlice(spark, TestSpark.Sf, date)
+    val k = Report.metricsDFFrom(spark, TestSpark.Sf, date, slice).collect()(0)
+    val trucks = Report.perTruckDF(spark, TestSpark.Sf, slice).collect().toSeq
+      .map(r => Report.TruckRow(r.getString(0), r.getDouble(1), r.getLong(2), r.getDouble(3)))
+    val pays = Report.perPaymentDF(spark, TestSpark.Sf, slice).orderBy("method").collect().toSeq
+      .map(r => Report.PaymentRow(r.getString(0), r.getLong(1) / 100.0, r.getLong(2) / 100.0))
+    Report.ReportMetrics(k.getString(0), k.getDouble(1), k.getLong(2), k.getDouble(3),
+      k.getString(4), k.getDouble(5), k.getString(6), k.getDouble(7), k.getDouble(8),
+      k.getDouble(9), trucks, pays)
+  }
+
+  test("metrics equals the DataFrame faces on every day of a month") {
+    val days = (1 to 30).map(LocalDate.of(2000, 6, _))
+    val present = days.filter(d =>
+      java.nio.file.Files.isDirectory(java.nio.file.Paths.get(PartitionedLake.dayDir(lake, d))))
+    assert(present.nonEmpty && present.size < days.size, "the month must mix data and empty days")
+    // the days are independent, so four run at a time
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+      val pairs = Await.result(Future.traverse(days)(d =>
+        Future((d, Report.metrics(spark, TestSpark.Sf, d), fromFaces(d)))), 5.minutes)
+      pairs.foreach { case (d, folded, faces) => assert(folded == faces, s"on $d") }
+    } finally pool.shutdown()
+  }
+
+  // ── the fold alone, on hand-built rows ────────────────────────────────
+
+  /** Spark's `round(x)` on a double, as a long. */
+  private def sparkRound(x: org.apache.spark.sql.Column): Long =
+    spark.range(1).select(round(x).cast("long")).head().getLong(0)
+
+  test("fold: a revenue tie between two suppliers breaks on the name") {
+    val m = Report.fold(DataDay, 1000L, 5L,
+      Seq(("Supplier#B", 500L, 2L), ("Supplier#A", 500L, 3L)), Seq(("5-LOW", 1000L)))
+    assert(m.bestTruck == "Supplier#B" && m.bestRevenue == 5.0)
+    assert(m.worstTruck == "Supplier#A" && m.worstRevenue == 5.0)
+    assert(m.perTruck.map(_.name) == Seq("Supplier#A", "Supplier#B"))
+    assert(m.totalFees == 0.0 && m.netRevenue == 10.0)
+  }
+
+  test("fold: an average of exactly .5 cents rounds half up, as Spark's round") {
+    val m = Report.fold(DataDay, 5L, 2L, Seq(("Supplier#A", 5L, 2L)), Nil)
+    assert(sparkRound(lit(5L) / lit(2L)) == 3L)
+    assert(m.avgTx == 0.03)
+    assert(m.perTruck.map(_.avgTx) == Seq(0.03))
+  }
+
+  test("fold: an URGENT fee of exactly .5 cents rounds half up, as Spark's round") {
+    val m = Report.fold(DataDay, 1125L, 4L, Seq(("Supplier#A", 1125L, 4L)),
+      Seq(("1-URGENT", 125L), ("2-HIGH", 1000L)))
+    assert(sparkRound(lit(125L) * 0.02) == 3L)
+    assert(m.perPayment == Seq(Report.PaymentRow("1-URGENT", 1.25, 0.03),
+      Report.PaymentRow("2-HIGH", 10.0, 0.0)))
+    assert(m.totalFees == 0.03 && m.netRevenue == 11.22)
   }
 
   test("report sink writes the reference's key scheme") {

@@ -541,42 +541,6 @@ class GraftLakeSourceSpec extends AnyFunSuite {
 
   // ── per-cycle commit cost and temporal pruning ───────────────────────
 
-  /** (jobs, tasks) the body's actions launch. The listener counts only
-    * jobs of a job group of this call's own — suites share the session
-    * and run concurrently — and a marker job in a second group drains
-    * the listener bus: events arrive in order, so once the marker's
-    * start is seen every job of the body has been counted. */
-  private def jobsAndTasks(body: => Unit): (Int, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val group = s"cost-${java.util.UUID.randomUUID()}"
-    val marker = s"$group-drained"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val tasks = new java.util.concurrent.atomic.AtomicInteger
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) =>
-            jobs.incrementAndGet()
-            tasks.addAndGet(e.stageInfos.map(_.numTasks).sum)
-            ()
-          case Some(`marker`) => drained.countDown()
-          case _ => ()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "measured")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(marker, "listener drain")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS),
-        "the listener bus never delivered the marker job")
-    } finally sc.removeSparkListener(listener)
-    (jobs.get, tasks.get)
-  }
-
   /** Rows (k, ts) of one 3-hourly batch, `ts` one second apart. */
   private def tsBatch(i: Int): DataFrame =
     spark.range(i * 100L, i * 100L + 100).select(col("id").as("k"),
@@ -620,8 +584,8 @@ class GraftLakeSourceSpec extends AnyFunSuite {
       val root = deepLake(depth)
       // cold: this JVM never inferred the lake's schema; warm: the
       // previous append left version v−1's inference cached
-      val cold = jobsAndTasks(connectorAppend(tsBatch(1), root))
-      val warm = jobsAndTasks(connectorAppend(tsBatch(2), root))
+      val cold = TestSpark.jobsAndTasks(connectorAppend(tsBatch(1), root))
+      val warm = TestSpark.jobsAndTasks(connectorAppend(tsBatch(2), root))
       assert(SnapshotLake.currentVersion(root).contains(depth + 2L))
       depth -> (cold, warm, root)
     }.toMap
