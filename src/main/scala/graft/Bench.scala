@@ -74,7 +74,7 @@ object Bench {
       "q172_split_leakage",        // builds the MinHash-LSH pair checkpoint (first consumer)
       "q182_dup_cluster_histogram", // builds the CC label checkpoint (r19/r20)
       "q35_near_dup_pairs",        // warm pair-checkpoint read (ledger continuity)
-      "q55_dash_kpis",             // opens + caches the dashboard slice
+      "q55_dash_kpis",             // opens the dashboard session: its one grouping action
       "q60_incremental_roundtrip", // runs the two incremental batches
       "q65_decontamination",       // materializes the shared shingle relation
       "q119_compacted_lake_roundtrip", // appends 3 batches + compacts the lake

@@ -8,8 +8,9 @@ import graft.report.Dashboard
 
 /** Oracle-backed dashboard session (ref: pipeline/dashboard.py:117-342):
   * each chart of [[graft.report.Dashboard]] as a CORRECTNESS entry, all
-  * running over the SAME cached filtered slice (one session per sf dir,
-  * memoized below — the N-charts-one-scan economics DashboardSpec asserts).
+  * folded from the SAME session's groups (one session per sf dir,
+  * memoized below: one grouping action feeds every chart, as
+  * DashboardSpec asserts).
   *
   * The pinned sidebar state: two-year inclusive date range + a
   * payment-method IN-list ('1-URGENT','2-HIGH','3-MEDIUM', with
@@ -23,8 +24,8 @@ object DashboardQueries {
   private val To         = LocalDate.of(1997, 12, 31)
   private val Priorities = Seq("1-URGENT", "2-HIGH", "3-MEDIUM")
 
-  /** One dashboard session per (Spark session, sf dir): the five chart
-    * queries share its cached slice exactly like one interactive user. */
+  /** One dashboard session per (Spark session, sf dir): the six chart
+    * queries share its groups exactly like one interactive user. */
   private val sessions = new graft.etl.Memo[(SparkSession, String), Dashboard]
   private def dash(s: SparkSession, d: String): Dashboard =
     sessions((s, d)) {

@@ -2,134 +2,134 @@ package graft.report
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, RelationalGroupedDataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.model.Tables
 
 /** The interactive-dashboard session (ref: pipeline/dashboard.py, SURVEY
   * §3.3): one filtered view of the fact table shared by every chart query.
   *
-  * The reference re-executes the whole script per UI interaction with a
-  * 1-hour cache TTL on the scans; here the session holds ONE cached
-  * filtered DataFrame (`df.filter(...).cache()`) and each chart is a lazy
-  * aggregate over it — N charts cost one scan plus N tiny shuffles
-  * (asserted by DashboardSpec). At 100 TB the cache becomes a materialized
-  * daily extract; the chart queries are unchanged.
+  * The reference re-executes the whole script per UI interaction — about
+  * fifteen aggregate queries over one filtered view. Here a filter change
+  * ([[Dashboard.open]]) is ONE Spark action: the slice's per-day and
+  * per-(supplier, priority) groups, each with its exact cent sum and line
+  * count, are collected together as one union. Their number is bounded by
+  * the days in range and the dimension sizes, not by the fact table. Every
+  * aggregate chart is a fold of those groups on the driver, returned as a
+  * local DataFrame whose collect runs no Spark job (asserted by
+  * DashboardSpec); only [[rawHead]] reads the slice again. At 100 TB the
+  * two group-bys stay the whole distributed cost of a filter change.
   *
   * Filters mirror the reference's sidebar exactly: inclusive date range
   * (P8), supplier IN-list, priority IN-list (P9) — ref dashboard.py:98-109.
   *
-  * Every chart is oracle-backed (q55-q59): money rides as exact integer
-  * cents, ties are broken totally, and functionally-dependent attributes
-  * travel as GROUP BY keys — never `first()` (the A8 trap,
+  * Every chart is oracle-backed (q55–q59, q62): money rides as exact
+  * integer cents, ties are broken totally, and functionally-dependent
+  * attributes travel as GROUP BY keys — never `first()` (the A8 trap,
   * ref dashboard.py:320-321 `'fsa_rating': 'first'`, which is
-  * row-order-dependent in a distributed engine).
+  * row-order-dependent in a distributed engine). Each fold computes what
+  * Spark's aggregate would: a null-only sum is null, `round` is
+  * [[Report.roundHalfUp]], and orders are Spark's (ASC NULLS FIRST,
+  * DESC NULLS LAST, strings by UTF-8 bytes).
   */
-final class Dashboard private (slice: DataFrame) {
+final class Dashboard private (
+    slice: DataFrame, days: Seq[Dashboard.Day], cells: Seq[Dashboard.Cell]) {
 
   import Dashboard._
+
+  private def local(schema: StructType, rows: Seq[Row]): DataFrame =
+    slice.sparkSession.createDataFrame(rows.asJava, schema)
 
   /** KPI row (ref :117-132): revenue, tx count, avg ticket, avg daily
     * revenue, card-share-of-transactions — all over the FILTERED slice.
     * `avg_daily_revenue` is the two-level aggregate (mean of exact daily
     * cent sums); `card_pct` is the reference's
     * `(payment_method == 'card').sum() / len * 100` with '1-URGENT' as the
-    * card-like method. */
+    * card-like method. An empty slice gives `(null, 0, null, null, null)`. */
   def kpis: DataFrame = {
-    val tot = slice.agg(
-      sum(cents(rev)).as("rc"),
-      count(lit(1)).as("n_tx"),
-      sum(when(col("o_orderpriority") === "1-URGENT", 1L).otherwise(0L)).as("n_card"))
-    val daily = slice
-      .groupBy(to_date(col("l_shipdate")).as("date"))
-      .agg(sum(cents(rev)).as("drc"))
-      .agg(sum("drc").as("rc_sum"), count(lit(1)).as("n_days"))
-    tot.crossJoin(daily).select(
-      (col("rc") / 100.0).as("total_revenue"),
-      col("n_tx"),
-      (round(col("rc") / col("n_tx")) / 100.0).as("avg_tx"),
-      (round(col("rc_sum") / col("n_days")) / 100.0).as("avg_daily_revenue"),
-      (round(lit(10000.0) * col("n_card") / col("n_tx")) / 100.0).as("card_pct"))
+    val rc = total(days.map(_.rc))
+    val nTx = days.map(_.n).sum
+    val nCard = cells.filter(_.priority == CardMethod).map(_.n).sum
+    local(KpisSchema, Seq(Row(
+      money(rc), nTx, avg(rc, nTx), avg(rc, days.size.toLong),
+      if (nTx == 0) null else Report.roundHalfUp(10000.0 * nCard / nTx) / 100.0)))
   }
 
   /** Daily revenue trend (ref :143). */
   def dailyTrend: DataFrame =
-    slice.groupBy(to_date(col("l_shipdate")).as("date"))
-      .agg((sum(cents(rev)) / 100.0).as("revenue"))
-      .orderBy("date")
+    local(DailyTrendSchema, days.sortBy(_.date.toEpochDay).map(d => Row(d.date, money(d.rc))))
 
   /** Hourly histogram analog — day-of-month histogram here (ref :156-157). */
   def dayOfMonthHistogram: DataFrame =
-    slice.groupBy(dayofmonth(col("l_shipdate")).as("day"))
-      .agg(count(lit(1)).as("n_tx")).orderBy("day")
+    local(HistogramSchema, days.groupMapReduce(_.date.getDayOfMonth)(_.n)(_ + _).toSeq.sorted
+      .map { case (day, n) => Row(day, n) })
 
   /** Revenue by supplier, descending (ref :177-178). */
   def revenueBySupplier: DataFrame =
-    slice.groupBy("s_name")
-      .agg((sum(cents(rev)) / 100.0).as("revenue"))
-      .orderBy(col("revenue").desc, col("s_name"))
+    local(RevenueBySupplierSchema, cells.groupMap(_.supplier)(_.rc).toSeq
+      .map { case (s, rcs) => (s, total(rcs)) }
+      .sortBy { case (s, rc) => (rc, s) }(byRevenueThenName)
+      .map { case (s, rc) => Row(s, money(rc)) })
 
   /** Priority mix for the pie chart (ref :230-231). */
   def priorityCounts: DataFrame =
-    slice.groupBy("o_orderpriority").count().orderBy("o_orderpriority")
+    local(PriorityCountsSchema, cells.groupMapReduce(_.priority)(_.n)(_ + _).toSeq
+      .sortBy(_._1)(sparkString).map { case (p, n) => Row(p, n) })
 
   /** Payment-method mix: grouped counts AND revenue per method — the pie
-    * (ref :257-258 `value_counts`) and the revenue bar (:267-268) from one
-    * pass over the slice. */
+    * (ref :257-258 `value_counts`) and the revenue bar (:267-268) from the
+    * same groups. */
   def paymentMix: DataFrame =
-    slice.groupBy(col("o_orderpriority").as("method"))
-      .agg(count(lit(1)).as("n_tx"), (sum(cents(rev)) / 100.0).as("revenue"))
-      .orderBy("method")
+    local(PaymentMixSchema, cells.groupBy(_.priority).toSeq.sortBy(_._1)(sparkString)
+      .map { case (p, cs) => Row(p, cs.map(_.n).sum, money(total(cs.map(_.rc)))) })
 
   /** Payment preference by truck (ref :268-281 grouped bar): the
-    * truck × payment count matrix as a PIVOT — one hash aggregate on
-    * s_name with the method columns folded map-side (values pinned, so no
-    * extra distinct-scan to discover them; at 100 TB always pass the value
-    * list). Absent combinations surface as 0, like the chart's empty bars. */
+    * truck × payment count matrix, one `n_<method>` column per value of
+    * `methods` in order (the PIVOT with pinned values it replaces; at
+    * 100 TB always pass the value list). Every truck in the slice gets a
+    * row, and absent combinations surface as 0, like the chart's empty
+    * bars. */
   def truckPaymentMatrix(methods: Seq[String]): DataFrame = {
-    val wide = slice.groupBy("s_name")
-      .pivot("o_orderpriority", methods)
-      .agg(count(lit(1)))
-    methods.foldLeft(wide) { (df, m) =>
-      val clean = "n_" + m.toLowerCase.replaceAll("[^a-z0-9]+", "_")
-      df.withColumn(clean, coalesce(col(s"`$m`"), lit(0L))).drop(m)
-    }.orderBy("s_name")
+    val schema = StructType(StructField("s_name", StringType) +:
+      methods.map(m => StructField("n_" + m.toLowerCase.replaceAll("[^a-z0-9]+", "_"), LongType,
+        nullable = false)))
+    local(schema, cells.groupBy(_.supplier).toSeq.sortBy(_._1)(sparkString).map { case (s, cs) =>
+      Row.fromSeq(s +: methods.map(m => cs.filter(_.priority == m).map(_.n).sum))
+    })
   }
 
   /** Per-truck performance table (ref :316-325): revenue sum/avg/count plus
     * the truck's own attributes (`fsa_rating`/`has_card_reader` analogs —
     * here `s_nationkey`/`s_acctbal`). The reference fetches those with
     * pandas `first()`; distributed, that is non-deterministic, so the
-    * functionally-dependent columns ride as GROUP BY keys instead — zero
-    * extra shuffle width, deterministic output (the A8 trap, properly). */
+    * functionally-dependent columns ride as GROUP BY keys instead —
+    * deterministic output (the A8 trap, properly). */
   def perTruckSummary: DataFrame =
-    slice.groupBy("s_name", "s_nationkey", "s_acctbal")
-      .agg(sum(cents(rev)).as("rc"), count(lit(1)).as("n_tx"))
-      .select(
-        col("s_name"), col("s_nationkey"), col("s_acctbal"),
-        (col("rc") / 100.0).as("revenue"),
-        (round(col("rc") / col("n_tx")) / 100.0).as("avg_tx"),
-        col("n_tx"))
-      .orderBy(col("revenue").desc, col("s_name"))
+    local(PerTruckSchema, cells.groupBy(c => (c.supplier, c.nation, c.acctbal)).toSeq
+      .map { case (k, cs) => (k, total(cs.map(_.rc)), cs.map(_.n).sum) }
+      .sortBy { case (k, rc, _) => (rc, k._1) }(byRevenueThenName)
+      .map { case ((s, nation, acctbal), rc, n) => Row(s, nation, acctbal, money(rc), avg(rc, n), n) })
 
   /** Top-k revenue days with their transaction counts (ref :296-300). */
   def topDays(k: Int): DataFrame =
-    slice.groupBy(to_date(col("l_shipdate")).as("date"))
-      .agg(sum(cents(rev)).as("rc"), count(lit(1)).as("n_tx"))
-      .orderBy(col("rc").desc, col("date"))
-      .limit(k)
-      .select(col("date"), (col("rc") / 100.0).as("revenue"), col("n_tx"))
+    local(TopDaysSchema, days
+      .sortBy(d => (d.rc, d.date.toEpochDay))(Ordering.Tuple2(centsDesc, Ordering.Long))
+      .take(k).map(d => Row(d.date, money(d.rc), d.n)))
 
-  /** Raw explorer page (ref :342). */
+  /** Raw explorer page (ref :342): one ordered-limit action over the
+    * slice. */
   def rawHead(k: Int): DataFrame =
     slice.select("l_orderkey", "l_shipdate", "s_name", "o_orderpriority")
       .orderBy(col("l_shipdate").desc, col("l_orderkey")).limit(k)
 
-  /** The cached slice itself — for plan assertions in tests. */
-  private[report] def sliceDF: DataFrame = slice
-
-  def close(): Unit = { val _ = slice.unpersist() }
+  /** The session holds no cached data and nothing to release; callers may
+    * still scope a session with it. */
+  def close(): Unit = ()
 }
 
 object Dashboard {
@@ -140,21 +140,82 @@ object Dashboard {
       suppliers: Option[Seq[String]] = None,
       priorities: Option[Seq[String]] = None)
 
+  /** One ship day of the slice: its cent sum (null when no line of the day
+    * has a price) and line count. */
+  private[report] final case class Day(date: LocalDate, rc: Option[Long], n: Long)
+
+  /** One (supplier, priority) group of the slice; the supplier's own
+    * attributes ride as keys. */
+  private[report] final case class Cell(
+      supplier: String, nation: Integer, acctbal: java.lang.Double, priority: String,
+      rc: Option[Long], n: Long)
+
+  private val CardMethod = "1-URGENT"
+
   private def rev = col("l_extendedprice") * (lit(1) - col("l_discount"))
   private def cents(c: org.apache.spark.sql.Column) = round(c * 100).cast("long")
 
-  /** Open a session: join the fact to its dimensions once, apply the
-    * sidebar filters, cache the slice. */
+  /** Spark's `sum` of group sums: null when every group's is. */
+  private def total(rcs: Seq[Option[Long]]): Option[Long] = rcs.flatten.reduceOption(_ + _)
+  /** `rc / 100.0`. */
+  private def money(rc: Option[Long]): Any = rc.fold[Any](null)(_ / 100.0)
+  /** `round(rc / n) / 100.0`; a non-null sum implies `n > 0`. */
+  private def avg(rc: Option[Long], n: Long): Any =
+    rc.fold[Any](null)(c => Report.roundHalfUp(c.toDouble / n) / 100.0)
+
+  /** ASC NULLS FIRST on UTF-8 bytes, as Spark orders strings. */
+  private val sparkString: Ordering[String] =
+    Ordering.by((s: String) => Option(s).map(UTF8String.fromString))
+  /** DESC NULLS LAST on a nullable cent sum. */
+  private val centsDesc: Ordering[Option[Long]] = Ordering.Option(Ordering.Long).reverse
+  private val byRevenueThenName = Ordering.Tuple2(centsDesc, sparkString)
+
+  private def schema(fields: (String, DataType, Boolean)*): StructType =
+    StructType(fields.map { case (n, t, nullable) => StructField(n, t, nullable) })
+  private val KpisSchema = schema(("total_revenue", DoubleType, true), ("n_tx", LongType, false),
+    ("avg_tx", DoubleType, true), ("avg_daily_revenue", DoubleType, true),
+    ("card_pct", DoubleType, true))
+  private val DailyTrendSchema = schema(("date", DateType, true), ("revenue", DoubleType, true))
+  private val HistogramSchema = schema(("day", IntegerType, true), ("n_tx", LongType, false))
+  private val RevenueBySupplierSchema =
+    schema(("s_name", StringType, true), ("revenue", DoubleType, true))
+  private val PriorityCountsSchema =
+    schema(("o_orderpriority", StringType, true), ("count", LongType, false))
+  private val PaymentMixSchema = schema(("method", StringType, true), ("n_tx", LongType, false),
+    ("revenue", DoubleType, true))
+  private val PerTruckSchema = schema(("s_name", StringType, true),
+    ("s_nationkey", IntegerType, true), ("s_acctbal", DoubleType, true),
+    ("revenue", DoubleType, true), ("avg_tx", DoubleType, true), ("n_tx", LongType, false))
+  private val TopDaysSchema = schema(("date", DateType, true), ("revenue", DoubleType, true),
+    ("n_tx", LongType, false))
+
+  /** Open a session: join the fact to its dimensions, keep the columns the
+    * charts read, apply the sidebar filters, and collect the slice's
+    * per-day and per-(supplier, priority) groups in one action. */
   def open(spark: SparkSession, sfDir: String, f: Filters): Dashboard = {
     val joined = Tables.lineitem(spark, sfDir)
-      .join(broadcast(Tables.supplier(spark, sfDir)),
+      .select("l_orderkey", "l_suppkey", "l_shipdate", "l_extendedprice", "l_discount")
+      .join(broadcast(Tables.supplier(spark, sfDir)
+        .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")),
         col("l_suppkey") === col("s_suppkey"))
       .join(Tables.orders(spark, sfDir).select("o_orderkey", "o_orderpriority"),
         col("l_orderkey") === col("o_orderkey"))
     val dated = joined.filter(
       to_date(col("l_shipdate")).between(lit(f.from.toString), lit(f.to.toString)))
     val withSup = f.suppliers.fold(dated)(xs => dated.filter(col("s_name").isin(xs: _*)))
-    val full = f.priorities.fold(withSup)(xs => withSup.filter(col("o_orderpriority").isin(xs: _*)))
-    new Dashboard(full.cache())
+    val slice = f.priorities.fold(withSup)(xs => withSup.filter(col("o_orderpriority").isin(xs: _*)))
+
+    def sums(g: RelationalGroupedDataset) = g.agg(sum(cents(rev)).as("rc"), count(lit(1)).as("n"))
+    val byDay = sums(slice.groupBy(to_date(col("l_shipdate")).as("date")))
+    val byCell = sums(slice.groupBy("s_name", "s_nationkey", "s_acctbal", "o_orderpriority"))
+    // the date filter drops null ship dates, so only a cell row has a null date
+    val (dayRows, cellRows) = byDay.unionByName(byCell, allowMissingColumns = true).collect()
+      .toSeq.partition(r => !r.isNullAt(r.fieldIndex("date")))
+    def rc(r: Row) = Option(r.getAs[java.lang.Long]("rc")).map(_.longValue)
+    new Dashboard(slice,
+      dayRows.map(r => Day(r.getAs[java.sql.Date]("date").toLocalDate, rc(r), r.getAs[Long]("n"))),
+      cellRows.map(r => Cell(r.getAs[String]("s_name"), r.getAs[Integer]("s_nationkey"),
+        r.getAs[java.lang.Double]("s_acctbal"), r.getAs[String]("o_orderpriority"),
+        rc(r), r.getAs[Long]("n"))))
   }
 }

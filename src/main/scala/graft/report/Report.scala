@@ -155,7 +155,7 @@ object Report {
 
   /** Spark's `round(x)` on a double: HALF_UP on the shortest decimal
     * form of `x` (`BigDecimal(x)`, not the exact binary value). */
-  private def roundHalfUp(x: Double): Long =
+  private[report] def roundHalfUp(x: Double): Long =
     BigDecimal(x).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
 
   /** The report from its grouped rows, computed as [[metricsDFFrom]],

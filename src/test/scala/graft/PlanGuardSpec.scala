@@ -20,7 +20,6 @@ class PlanGuardSpec extends AnyFunSuite {
     "q44_report_metrics"     -> "cross join of single-row aggregates",
     "q45_embedding_near_dup" -> "sampled baseline capped at 500 rows",
     "q49_range_join_price_bands" -> "5-row literal interval dimension",
-    "q55_dash_kpis"          -> "cross join of single-row aggregates",
     "q71_tfidf_topk"         -> "cross join of the single-row corpus count",
     "q77_ann_recall"         -> "5-row query batch × corpus/centroids (recall harness over q39+q40)",
     "q79_daily_anomaly"      -> "cross join of the single-row mean/stddev aggregate",

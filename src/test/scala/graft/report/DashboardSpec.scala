@@ -1,20 +1,33 @@
 package graft.report
 
-import java.time.LocalDate
+import java.time.{LocalDate, LocalDateTime}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.model.{Schemas, Tables}
 
 /** The dashboard session: filters apply everywhere, charts agree with the
-  * underlying slice, the cached base is shared. */
+  * underlying slice and with their Catalyst formulations, and a filter
+  * change costs one grouping action. */
 class DashboardSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private val filters = Dashboard.Filters(
     from = LocalDate.of(2000, 1, 1), to = LocalDate.of(2000, 12, 31),
     priorities = Some(Seq("1-URGENT", "2-HIGH")))
+
+  /** The nine aggregate charts in the reference page's order. */
+  private def aggregateCharts(d: Dashboard, methods: Seq[String]): Seq[(String, DataFrame)] = Seq(
+    "kpis" -> d.kpis, "dailyTrend" -> d.dailyTrend,
+    "dayOfMonthHistogram" -> d.dayOfMonthHistogram,
+    "revenueBySupplier" -> d.revenueBySupplier, "priorityCounts" -> d.priorityCounts,
+    "paymentMix" -> d.paymentMix, "truckPaymentMatrix" -> d.truckPaymentMatrix(methods),
+    "topDays" -> d.topDays(10), "perTruckSummary" -> d.perTruckSummary)
 
   test("charts are internally consistent over one filtered slice") {
     val d = Dashboard.open(spark, TestSpark.Sf, filters)
@@ -38,30 +51,32 @@ class DashboardSpec extends AnyFunSuite {
     } finally d.close()
   }
 
-  test("ONE cached scan feeds every chart: no chart re-reads the lake files") {
+  /** Jobs of a whole session — `open`, the nine aggregate charts and
+    * `rawHead` — at this suite's data: 10 measured (7 for `open`'s join
+    * stages and grouping union, 3 for `rawHead`); a session over a cached
+    * slice with one Catalyst plan per chart ran ~41. */
+  private val SessionJobBudget = 10
+
+  test("a filter change is one grouping action; aggregate charts run no job") {
     import org.apache.spark.sql.execution.columnar.InMemoryRelation
     import org.apache.spark.sql.execution.datasources.LogicalRelation
-    val d = Dashboard.open(spark, TestSpark.Sf, filters)
-    try {
-      d.sliceDF.count() // materialize the cache once
-      val charts = Seq(
-        "kpis" -> d.kpis, "dailyTrend" -> d.dailyTrend,
-        "dayOfMonthHistogram" -> d.dayOfMonthHistogram,
-        "revenueBySupplier" -> d.revenueBySupplier,
-        "paymentMix" -> d.paymentMix, "perTruckSummary" -> d.perTruckSummary,
-        "truckPaymentMatrix" -> d.truckPaymentMatrix(Seq("1-URGENT", "2-HIGH")),
-        "topDays" -> d.topDays(10), "rawHead" -> d.rawHead(10))
-      charts.foreach { case (name, df) =>
-        df.collect()
-        val plan = df.queryExecution.optimizedPlan
-        // the chart's logical plan reads ONLY the in-memory slice — a file
-        // relation at this level would mean a second scan of the sources
-        val fileRelations = plan.collect { case r: LogicalRelation => r }
-        val cached = plan.collect { case m: InMemoryRelation => m }
-        assert(fileRelations.isEmpty, s"$name re-scans source files: $fileRelations")
-        assert(cached.nonEmpty, s"$name does not read the cached slice")
-      }
-    } finally d.close()
+    var d: Dashboard = null
+    val (openJobs, _) = TestSpark.jobsAndTasks { d = Dashboard.open(spark, TestSpark.Sf, filters) }
+    val chartJobs = aggregateCharts(d, Seq("1-URGENT", "2-HIGH")).map { case (name, df) =>
+      val (jobs, _) = TestSpark.jobsAndTasks { df.collect(); () }
+      val plan = df.queryExecution.optimizedPlan
+      assert(plan.collect { case r: LogicalRelation => r }.isEmpty, s"$name reads the source files")
+      name -> jobs
+    }
+    assert(chartJobs.forall(_._2 == 0), s"aggregate charts launched jobs: $chartJobs")
+    val raw = d.rawHead(10)
+    val (rawJobs, _) = TestSpark.jobsAndTasks { raw.collect(); () }
+    assert(raw.queryExecution.optimizedPlan.collect { case m: InMemoryRelation => m }.isEmpty,
+      "rawHead reads a cache")
+    val total = openJobs + chartJobs.map(_._2).sum + rawJobs
+    assert(openJobs > 0 && rawJobs > 0)
+    assert(total <= SessionJobBudget,
+      s"a session ran $total jobs (open $openJobs, charts $chartJobs, rawHead $rawJobs)")
   }
 
   test("date-range filter bounds the slice inclusively") {
@@ -71,5 +86,140 @@ class DashboardSpec extends AnyFunSuite {
       val dates = d.dailyTrend.collect().map(_.getDate(0).toString).toSet
       assert(dates == Set("2000-06-15"))
     } finally d.close()
+  }
+
+  /** Each fold against its Catalyst formulation over the same slice:
+    * rows in order, column names, types and nullability. */
+  private def assertChartsEqual(sf: String, f: Dashboard.Filters, methods: Seq[String],
+                                nonEmpty: Boolean): Unit = {
+    val ref = CatalystCharts.slice(spark, sf, f).cache()
+    try {
+      val d = Dashboard.open(spark, sf, f)
+      CatalystCharts.charts(ref, methods).zip(aggregateCharts(d, methods)).foreach {
+        case ((name, want), (_, got)) =>
+          assert(got.schema == want.schema, s"$name schema for $f")
+          assert(got.collect().toSeq == want.collect().toSeq, s"$name rows for $f")
+      }
+      assert((d.kpis.collect()(0).getLong(1) > 0) == nonEmpty, s"slice of $f")
+    } finally { val _ = ref.unpersist() }
+  }
+
+  private val AllMethods = Seq("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW")
+  private def day(y: Int, m: Int, d: Int) = LocalDate.of(y, m, d)
+
+  for ((label, f, methods, nonEmpty) <- Seq(
+      ("the whole history", Dashboard.Filters(day(1995, 1, 1), day(2001, 12, 31)), AllMethods, true),
+      ("two years with a priority IN-list, a pivot value absent from the slice",
+        Dashboard.Filters(day(1996, 1, 1), day(1997, 12, 31), None,
+          Some(Seq("1-URGENT", "2-HIGH", "3-MEDIUM"))),
+        Seq("1-URGENT", "5-LOW", "9-NONE"), true),
+      ("six weeks with a supplier and a priority IN-list",
+        Dashboard.Filters(day(1998, 3, 1), day(1998, 4, 11),
+          Some(Seq("Supplier#000000001", "Supplier#000000004", "Supplier#000000007")),
+          Some(Seq("2-HIGH", "5-LOW"))),
+        Seq("2-HIGH", "5-LOW"), true),
+      ("one day", Dashboard.Filters(day(1995, 6, 6), day(1995, 6, 6)), AllMethods, true),
+      ("an empty range", Dashboard.Filters(day(2010, 1, 1), day(2010, 12, 31)), AllMethods,
+        false)))
+    test(s"every aggregate chart equals its Catalyst formulation: $label") {
+      assertChartsEqual(TestSpark.Sf, f, methods, nonEmpty)
+    }
+
+  test("folds keep Spark's nulls: null prices, supplier names and priorities") {
+    val dir = java.nio.file.Files.createTempDirectory("dash-nulls").toString
+    def write(name: String, rows: Seq[Row]): Unit =
+      spark.createDataFrame(rows.asJava, Schemas.byName(name))
+        .coalesce(1).write.parquet(s"$dir/$name.parquet")
+    def ts(day: Int) = LocalDateTime.of(1996, 3, day, 0, 0)
+    def line(order: Long, supp: Long, price: java.lang.Double, day: Int) =
+      Row(order, 1L, supp, 1, 1.0, price, 0.05, 0.0, "N", "O", ts(day))
+    write("supplier", Seq(Row(1L, "S1", 1, 10.0), Row(2L, null, 2, null), Row(3L, "S3", 3, 30.0)))
+    write("orders", Seq(Row(10L, 1L, "O", 1.0, ts(1), "1-URGENT"),
+      Row(11L, 1L, "O", 1.0, ts(1), null), Row(12L, 1L, "O", 1.0, ts(1), "2-HIGH")))
+    write("lineitem", Seq(
+      line(10, 1, 100.0, 1), line(11, 2, 50.5, 1), line(12, 3, null, 1),
+      line(10, 3, null, 2), line(11, 3, null, 2), // a day whose every price is null
+      line(12, 2, 20.25, 3), line(11, 1, 7.0, 3)))
+    try {
+      assert(Tables.lineitem(spark, dir).count() == 7)
+      assertChartsEqual(dir, Dashboard.Filters(day(1996, 3, 1), day(1996, 3, 31)),
+        Seq("1-URGENT", "2-HIGH"), nonEmpty = true)
+    } finally Tables.invalidate(dir)
+  }
+}
+
+/** Test-only Catalyst reference for the nine aggregate charts: their
+  * groupBy/pivot/orderBy formulations over the joined and filtered slice,
+  * which [[Dashboard]]'s driver-side folds replace. */
+private object CatalystCharts {
+
+  private def rev = col("l_extendedprice") * (lit(1) - col("l_discount"))
+  private def cents(c: Column) = round(c * 100).cast("long")
+
+  def slice(spark: SparkSession, sfDir: String, f: Dashboard.Filters): DataFrame = {
+    val joined = Tables.lineitem(spark, sfDir)
+      .join(broadcast(Tables.supplier(spark, sfDir)),
+        col("l_suppkey") === col("s_suppkey"))
+      .join(Tables.orders(spark, sfDir).select("o_orderkey", "o_orderpriority"),
+        col("l_orderkey") === col("o_orderkey"))
+    val dated = joined.filter(
+      to_date(col("l_shipdate")).between(lit(f.from.toString), lit(f.to.toString)))
+    val withSup = f.suppliers.fold(dated)(xs => dated.filter(col("s_name").isin(xs: _*)))
+    f.priorities.fold(withSup)(xs => withSup.filter(col("o_orderpriority").isin(xs: _*)))
+  }
+
+  def charts(slice: DataFrame, methods: Seq[String]): Seq[(String, DataFrame)] = {
+    val kpis = {
+      val tot = slice.agg(
+        sum(cents(rev)).as("rc"),
+        count(lit(1)).as("n_tx"),
+        sum(when(col("o_orderpriority") === "1-URGENT", 1L).otherwise(0L)).as("n_card"))
+      val daily = slice
+        .groupBy(to_date(col("l_shipdate")).as("date"))
+        .agg(sum(cents(rev)).as("drc"))
+        .agg(sum("drc").as("rc_sum"), count(lit(1)).as("n_days"))
+      tot.crossJoin(daily).select(
+        (col("rc") / 100.0).as("total_revenue"),
+        col("n_tx"),
+        (round(col("rc") / col("n_tx")) / 100.0).as("avg_tx"),
+        (round(col("rc_sum") / col("n_days")) / 100.0).as("avg_daily_revenue"),
+        (round(lit(10000.0) * col("n_card") / col("n_tx")) / 100.0).as("card_pct"))
+    }
+    val dailyTrend = slice.groupBy(to_date(col("l_shipdate")).as("date"))
+      .agg((sum(cents(rev)) / 100.0).as("revenue"))
+      .orderBy("date")
+    val dayOfMonthHistogram = slice.groupBy(dayofmonth(col("l_shipdate")).as("day"))
+      .agg(count(lit(1)).as("n_tx")).orderBy("day")
+    val revenueBySupplier = slice.groupBy("s_name")
+      .agg((sum(cents(rev)) / 100.0).as("revenue"))
+      .orderBy(col("revenue").desc, col("s_name"))
+    val priorityCounts = slice.groupBy("o_orderpriority").count().orderBy("o_orderpriority")
+    val paymentMix = slice.groupBy(col("o_orderpriority").as("method"))
+      .agg(count(lit(1)).as("n_tx"), (sum(cents(rev)) / 100.0).as("revenue"))
+      .orderBy("method")
+    val truckPaymentMatrix = {
+      val wide = slice.groupBy("s_name").pivot("o_orderpriority", methods).agg(count(lit(1)))
+      methods.foldLeft(wide) { (df, m) =>
+        val clean = "n_" + m.toLowerCase.replaceAll("[^a-z0-9]+", "_")
+        df.withColumn(clean, coalesce(col(s"`$m`"), lit(0L))).drop(m)
+      }.orderBy("s_name")
+    }
+    val topDays = slice.groupBy(to_date(col("l_shipdate")).as("date"))
+      .agg(sum(cents(rev)).as("rc"), count(lit(1)).as("n_tx"))
+      .orderBy(col("rc").desc, col("date"))
+      .limit(10)
+      .select(col("date"), (col("rc") / 100.0).as("revenue"), col("n_tx"))
+    val perTruckSummary = slice.groupBy("s_name", "s_nationkey", "s_acctbal")
+      .agg(sum(cents(rev)).as("rc"), count(lit(1)).as("n_tx"))
+      .select(
+        col("s_name"), col("s_nationkey"), col("s_acctbal"),
+        (col("rc") / 100.0).as("revenue"),
+        (round(col("rc") / col("n_tx")) / 100.0).as("avg_tx"),
+        col("n_tx"))
+      .orderBy(col("revenue").desc, col("s_name"))
+    Seq("kpis" -> kpis, "dailyTrend" -> dailyTrend, "dayOfMonthHistogram" -> dayOfMonthHistogram,
+      "revenueBySupplier" -> revenueBySupplier, "priorityCounts" -> priorityCounts,
+      "paymentMix" -> paymentMix, "truckPaymentMatrix" -> truckPaymentMatrix,
+      "topDays" -> topDays, "perTruckSummary" -> perTruckSummary)
   }
 }
