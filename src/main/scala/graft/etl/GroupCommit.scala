@@ -24,8 +24,11 @@ import java.util.concurrent.locks.ReentrantLock
   * become LEADER (a `tryLock`, never blocking). The leader drains
   * everything queued at that instant — its own delta plus every
   * concurrent follower's — and publishes one combined "append" record
-  * through the normal CAS loop ([[SnapshotLake.tryCommit]]: same
-  * backoff, same checkpoint cadence, same CDC hook). Followers park on
+  * through [[SnapshotLake.tryCommit]], the link every commit takes (same
+  * backoff, same checkpoint cadence, same CDC hook). It retries in a
+  * loop of its own rather than the lake's one commit loop, because
+  * each attempt re-decides which members ride an already-committed tag
+  * and which in-batch duplicates piggyback. Followers park on
   * their future; the leader completes every member with the SAME
   * committed version. A group commit IS a plain append record whose
   * `add` list happens to union k writers' files — readers, time
@@ -136,10 +139,9 @@ private[graft] object GroupCommit {
               remaining.partition(_.tag.forall(seen.add))
             val cur = SnapshotLake.currentVersion(root)
             val v = cur.getOrElse(0L) + 1
-            if (SnapshotLake.tryCommit(root, v, "append", cur.getOrElse(0L),
-                addedRows = committers.iterator.map(_.rows).sum,
-                add = committers.flatMap(_.add),
-                tags = committers.flatMap(_.tag))) {
+            if (SnapshotLake.tryCommit(root, v, SnapshotLake.Change("append",
+                cur.getOrElse(0L), committers.iterator.map(_.rows).sum,
+                committers.flatMap(_.add), tags = committers.flatMap(_.tag)))) {
               links.incrementAndGet()
               (committers ++ piggy).foreach(p => { p.done.complete(v); () })
               remaining = Vector.empty

@@ -124,8 +124,9 @@ trait LakeCheckpoints {
     def tags: Seq[String] = if (tagList.nonEmpty) tagList else tag.toSeq
   }
 
-  // minimal parsers of our own writer's format (uuid-based paths and
-  // quote-free tags — nothing needing escape can reach these fields)
+  // minimal parsers of our own writer's format: tags and paths reach it
+  // only through SnapshotLake's checks (checkTag, and indexAndCount's
+  // path check), which keep out every character these parsers misread
   private[etl] def arrField(json: String, key: String): Seq[String] = {
     val mark = s""""$key":["""
     val i = json.indexOf(mark)

@@ -815,11 +815,9 @@ object SnapshotLake extends LakeCheckpoints {
       newSchema.fields.length, "evolved schema repeats a logical name")
     require(newSchema.fields.map(physNameOf).distinct.length ==
       newSchema.fields.length, "evolved schema repeats a physical name")
-    var committed = -1L
-    while (committed < 0) {
-      val cur = currentVersion(root).getOrElse(
-        throw new IllegalStateException(
-          s"nothing to evolve at $root (no committed version)"))
+    commitLoop(root) { head =>
+      val cur = head.getOrElse(throw new IllegalStateException(
+        s"nothing to evolve at $root (no committed version)"))
       val before = declaredSchema(root, Some(cur)).getOrElse {
         val fs = files(root, cur)
         if (fs.isEmpty) new StructType()
@@ -857,11 +855,8 @@ object SnapshotLake extends LakeCheckpoints {
         if (beforePhys.contains(physNameOf(f)) || !resultMapped) f
         else stampFresh(f)
       })
-      if (tryCommit(root, cur + 1, "evolve", cur, addedRows = 0L,
-          schemaB64 = Some(encodeSchema(declared))))
-        committed = cur + 1
+      Change("evolve", cur, addedRows = 0L, schema = Some(declared))
     }
-    committed
   }
 
   /** The head declared schema, or the merged inferred one when no
@@ -1054,21 +1049,12 @@ object SnapshotLake extends LakeCheckpoints {
     require(keys.columns.length == 1,
       s"tombstone relation must be exactly the key column: ${keys.columns.toSeq}")
     val newTombs = writeData(keys, root).files
-    var committed = -1L
-    while (committed < 0) {
-      val cur = currentVersion(root).getOrElse(
+    commitLoop(root) { head =>
+      val cur = head.getOrElse(
         throw new IllegalStateException(s"nothing to delete from at $root"))
-      if (tryCommit(root, cur + 1, "delete", cur,
-          addedRows = 0L, addDel = newTombs))
-        committed = cur + 1
+      Change("delete", cur, addedRows = 0L, addDel = newTombs)
     }
-    committed
   }
-
-  /** One commit's freshly written data files plus their total row count
-    * (from the same footer pass that harvested the index — the manifest
-    * `addedRows` and bloom sizing never cost a second footer open). */
-  private final case class Written(files: Seq[String], rows: Long)
 
   /** `df` with its columns under their PHYSICAL names (one simultaneous
     * select, so even swap-shaped mappings translate correctly) — every
@@ -1088,41 +1074,27 @@ object SnapshotLake extends LakeCheckpoints {
       org.apache.spark.sql.functions.col(c).as(m.getOrElse(c, c))): _*)
   }
 
+  /** THE data write every commit's new files come from: rows land in a
+    * fresh `data/<uuid>/`, or — with `partCols` — hive-partitioned under
+    * `data/commit=<uuid>/<p1=v1>/.../part-*.parquet`, the commit marker
+    * itself hive-encoded so ONE basePath-anchored scan covers every
+    * commit of the lake (the marker column is synthesized by partition
+    * discovery and dropped by readers). Returns the written files with
+    * their row total, not yet in any manifest. */
   private def writeData(df0: DataFrame, root: String,
                         index: IndexSpec = IndexSpec.none,
-                        declare: Option[StructType] = None): Written = {
+                        declare: Option[StructType] = None,
+                        partCols: Seq[String] = Nil): Staged = {
     val m = declare.map(mappingOf).getOrElse(columnMapping(root))
     val df = toPhysical(df0, root, declare)
-    val sub = s"data/${UUID.randomUUID().toString}"
-    df.write.mode("overwrite").parquet(Paths.get(root, sub).toString)
-    val s = Files.list(Paths.get(root, sub))
-    val rel =
-      try s.iterator().asScala.map(_.getFileName.toString)
-        .filter(_.endsWith(".parquet")).map(n => s"$sub/$n").toVector.sorted
-      finally s.close()
-    indexAndCount(df.sparkSession, root, rel, index, m)
-  }
-
-  /** Hive-partitioned data write: rows land under
-    * `data/commit=<uuid>/<p1=v1>/.../part-*.parquet`. The commit marker
-    * is itself hive-encoded so ONE basePath-anchored scan covers every
-    * commit of the lake (the marker column is synthesized by partition
-    * discovery and dropped by readers). */
-  private def writeDataPartitioned(df0: DataFrame, root: String,
-                                   partCols: Seq[String],
-                                   index: IndexSpec): Written = {
-    val m = columnMapping(root)
-    val df = toPhysical(df0, root)
-    val physParts = partCols.map(c => m.getOrElse(c, c))
-    val sub = s"data/commit=${UUID.randomUUID().toString}"
+    val sub = s"data/${if (partCols.isEmpty) "" else "commit="}${UUID.randomUUID()}"
     val dir = Paths.get(root, sub)
-    df.write.mode("overwrite").partitionBy(physParts: _*).parquet(dir.toString)
+    df.write.mode("overwrite").partitionBy(partCols.map(c => m.getOrElse(c, c)): _*)
+      .parquet(dir.toString)
     val s = Files.walk(dir)
     val rel =
-      try s.iterator().asScala
-        .filter(p => p.getFileName.toString.endsWith(".parquet"))
-        .map(p => s"$sub/${dir.relativize(p).toString}")
-        .toVector.sorted
+      try s.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet"))
+        .map(p => s"$sub/${dir.relativize(p)}").toVector.sorted
       finally s.close()
     indexAndCount(df.sparkSession, root, rel, index, m)
   }
@@ -1136,7 +1108,14 @@ object SnapshotLake extends LakeCheckpoints {
     * by vacuum, like the data files themselves. */
   private def indexAndCount(spark: SparkSession, root: String,
                             rel: Seq[String], index0: IndexSpec,
-                            mapping: Map[String, String] = Map.empty): Written = {
+                            mapping: Map[String, String] = Map.empty): Staged = {
+    // a path must read back from the record's array parser, which splits
+    // on `,`: hive escaping keeps `,` in a partition value, so such a
+    // file set is refused before any link
+    rel.iterator.flatMap(_.split('/')).find(_.exists(Unrecordable)).foreach { seg =>
+      throw new IllegalArgumentException(s"cannot commit partition value " +
+        s"'$seg': a manifest path may not contain any of ${Unrecordable.mkString(" ")}")
+    }
     // index columns arrive LOGICAL; the files carry PHYSICAL names, and
     // the sidecars key physical (renames then never invalidate an index)
     val index =
@@ -1187,7 +1166,7 @@ object SnapshotLake extends LakeCheckpoints {
     }
     if (index.ndvCols.nonEmpty)
       FileStats.buildNdvSidecars(spark, root, rel2, index.ndvCols)
-    Written(rel2, meta.values.map(_.rows).sum)
+    Staged(rel2, meta.values.map(_.rows).sum)
   }
 
   /** What to index at commit time: footer min/max for `statsCols`, a
@@ -1286,52 +1265,91 @@ object SnapshotLake extends LakeCheckpoints {
   def tagVersion(root: String, tag: String): Option[Long] =
     if (currentVersion(root).isEmpty) None else findTag(root, tag)
 
-  /** Publish version `version`'s CHANGE record if and only if the version
-    * is still free. True on success; false means another writer won the
-    * version. Record bytes are O(this commit's change), never O(table) —
-    * and every [[CkptEvery]]-th successful commit also publishes the
-    * checkpoint future resolutions and tag probes start from. */
   /** MEASUREMENT hook ([[graft.ManifestCeiling]]): commit a pre-listed
     * file set through the normal CAS/checkpoint path without the data
     * write or footer harvest — what lets a synthetic million-file
     * manifest exercise resolution/pruning/planning at a scale no local
     * data generation could reach. Sidecars are the caller's job. */
   private[graft] def commitSynthetic(root: String, rel: Seq[String],
-                                     rows: Long): Long = {
+                                     rows: Long): Long =
+    publish(root, Staged(rel, rows))
+
+  /** One commit's CHANGE — the content of its log record: files and
+    * tombstone files added/removed against `base`, the rows it added
+    * (-1 = unknown), an optional declared schema, and its idempotence
+    * tags. Bytes are O(this change), never O(table). */
+  private[etl] final case class Change(op: String, base: Long,
+                                       addedRows: Long = -1L,
+                                       add: Seq[String] = Nil,
+                                       remove: Seq[String] = Nil,
+                                       addDel: Seq[String] = Nil,
+                                       removeDel: Seq[String] = Nil,
+                                       schema: Option[StructType] = None,
+                                       tags: Seq[String] = Nil)
+
+  /** Characters no record string may carry: the hand-rolled parsers
+    * ([[LakeCheckpoints]]) end a string at `"`, split a `tagList` or
+    * file array at `,` and end it at `]`, and a real JSON reader would
+    * take `\` as an escape. */
+  private val Unrecordable = Set('"', '\\', ',', ']')
+
+  /** The one idempotence-tag rule: non-empty, no [[Unrecordable]]
+    * character, and no `}`, which ends the checkpoint tag map — every
+    * record and checkpoint field then reads the tag back verbatim. A tag
+    * that read back different could never be found again, and its
+    * replay would commit twice. Returns `tag`. */
+  private def checkTag(tag: String): String = {
+    require(tag.nonEmpty && !tag.exists(c => c == '}' || Unrecordable(c)),
+      s"tag must be non-empty and free of ${Unrecordable.mkString(" ")} }: $tag")
+    tag
+  }
+
+  /** THE commit loop every manifest write goes through (optimistic
+    * concurrency, never a lock). Each attempt runs `beforeAttempt` (a
+    * test seam), yields to an already-committed `tag` (a replay, or a
+    * racing same-tag writer: returns its version), reads the head, builds
+    * the change from it — `attempt` sees the head each time, so
+    * reconciling and fencing ([[abortIfRemoved]], which throws) happen
+    * per attempt — and links it at head + 1. A lost link re-reads the
+    * head and tries again. Returns the committed version. */
+  private def commitLoop(root: String, tag: Option[String] = None,
+                         beforeAttempt: () => Unit = () => ())(
+                         attempt: Option[Long] => Change): Long = {
+    tag.foreach(checkTag)
     var committed = -1L
     while (committed < 0) {
-      val cur = currentVersion(root)
-      if (tryCommit(root, cur.getOrElse(0L) + 1, "append", cur.getOrElse(0L),
-          addedRows = rows, add = rel))
-        committed = cur.getOrElse(0L) + 1
+      beforeAttempt()
+      tag.flatMap(findTag(root, _)).foreach(v => return v)
+      val head = currentVersion(root)
+      val next = head.getOrElse(0L) + 1
+      if (tryCommit(root, next, attempt(head).copy(tags = tag.toSeq)))
+        committed = next
     }
     committed
   }
 
-  private[etl] def tryCommit(root: String, version: Long, op: String, base: Long,
-                        tag: Option[String] = None,
-                        addedRows: Long = -1L,
-                        add: Seq[String] = Nil, remove: Seq[String] = Nil,
-                        addDel: Seq[String] = Nil,
-                        removeDel: Seq[String] = Nil,
-                        schemaB64: Option[String] = None,
-                        tags: Seq[String] = Nil): Boolean = {
+  /** Publish version `version`'s CHANGE record if and only if the version
+    * is still free. True on success; false means another writer won the
+    * version (after a backoff). Every [[CkptEvery]]-th successful commit
+    * also publishes the checkpoint future resolutions and tag probes
+    * start from. */
+  private[etl] def tryCommit(root: String, version: Long, c: Change): Boolean = {
     Files.createDirectories(manifestDir(root))
     def arr(xs: Seq[String]) = xs.map(f => s""""$f"""").mkString("[", ",", "]")
     // one tag keeps the legacy field (byte-identical with every solo
     // committer); a multi-tag GROUP commit writes `tagList` — k
     // exactly-once appends under one link, Delta's multi-txn shape
-    val allTags = tag.toSeq ++ tags
     val tagField =
-      if (allTags.size == 1) s""""tag":"${allTags.head}","""
-      else if (allTags.nonEmpty) s""""tagList":${arr(allTags)},"""
+      if (c.tags.size == 1) s""""tag":"${c.tags.head}","""
+      else if (c.tags.nonEmpty) s""""tagList":${arr(c.tags)},"""
       else ""
-    val rowsField = if (addedRows >= 0) s""""addedRows":$addedRows,""" else ""
-    val schemaField = schemaB64.map(b => s""""schemaB64":"$b",""").getOrElse("")
+    val rowsField = if (c.addedRows >= 0) s""""addedRows":${c.addedRows},""" else ""
+    val schemaField =
+      c.schema.map(d => s""""schemaB64":"${encodeSchema(d)}",""").getOrElse("")
     val json =
-      s"""{"version":$version,"op":"$op",$tagField$rowsField$schemaField"base":$base,""" +
-        s""""add":${arr(add)},"remove":${arr(remove)},""" +
-        s""""addDel":${arr(addDel)},"removeDel":${arr(removeDel)}}"""
+      s"""{"version":$version,"op":"${c.op}",$tagField$rowsField$schemaField""" +
+        s""""base":${c.base},"add":${arr(c.add)},"remove":${arr(c.remove)},""" +
+        s""""addDel":${arr(c.addDel)},"removeDel":${arr(c.removeDel)}}"""
     val tmp = manifestDir(root).resolve(s".tmp-${UUID.randomUUID()}")
     Files.writeString(tmp, json)
     val pubT0 = System.nanoTime()
@@ -1374,7 +1392,7 @@ object SnapshotLake extends LakeCheckpoints {
           Thread.currentThread().interrupt() }
     }
     if (won && version % CkptEvery == 0L) writeCheckpoint(root, version)
-    if (won) maybeMaterializeCdc(root, version, op)
+    if (won) maybeMaterializeCdc(root, version, c.op)
     won
   }
 
@@ -1391,19 +1409,14 @@ object SnapshotLake extends LakeCheckpoints {
              index: IndexSpec = IndexSpec.none,
              declareSchema: Option[StructType] = None): Long = {
     val w = writeData(df, root, index, declareSchema)
-    var committed = -1L
-    while (committed < 0) {
-      val cur = currentVersion(root)
-      val next = cur.getOrElse(0L) + 1
-      // O(change): the record lists only this commit's files — no state
-      // resolution on the append path at all
-      if (tryCommit(root, next, "append", cur.getOrElse(0L),
-          addedRows = w.rows, add = w.files,
-          schemaB64 = declareSchema.map(encodeSchema)))
-        committed = next
-    }
-    committed
+    commitLoop(root)(appendOf(w, declareSchema))
   }
+
+  /** An append's change: only this commit's files — O(change), no state
+    * resolution on the append path at all. */
+  private def appendOf(w: Staged, declare: Option[StructType] = None)(
+                       head: Option[Long]): Change =
+    Change("append", head.getOrElse(0L), w.rows, w.files, schema = declare)
 
   /** [[append]] through the in-JVM group-commit coalescer
     * ([[GroupCommit]]): the data write is this caller's own distributed
@@ -1439,9 +1452,7 @@ object SnapshotLake extends LakeCheckpoints {
     * writer's replay horizon. */
   def appendOnceGrouped(df: DataFrame, root: String, tag: String,
                         index: IndexSpec = IndexSpec.none): Long = {
-    require(tag.nonEmpty && !tag.exists(c => c == '"' || c == '\\'),
-      s"tag must be quote-free: $tag")
-    findTag(root, tag).getOrElse {
+    findTag(root, checkTag(tag)).getOrElse { // bad tags fail before enqueue
       val w = writeData(df, root, index)
       GroupCommit.commit(root, w.files, w.rows, Some(tag))
     }
@@ -1466,18 +1477,11 @@ object SnapshotLake extends LakeCheckpoints {
   def overwrite(df: DataFrame, root: String,
                 index: IndexSpec = IndexSpec.none): Long = {
     val w = writeData(df, root, index)
-    var committed = -1L
-    while (committed < 0) {
-      val cur = currentVersion(root)
-      val prevFiles = cur.map(files(root, _)).getOrElse(Nil)
-      val prevDels = cur.map(deletesOf(root, _)).getOrElse(Nil)
-      val next = cur.getOrElse(0L) + 1
-      if (tryCommit(root, next, "overwrite", cur.getOrElse(0L),
-          addedRows = w.rows, add = w.files, remove = prevFiles,
-          removeDel = prevDels))
-        committed = next
+    commitLoop(root) { head =>
+      Change("overwrite", head.getOrElse(0L), w.rows, w.files,
+        remove = head.map(files(root, _)).getOrElse(Nil),
+        removeDel = head.map(deletesOf(root, _)).getOrElse(Nil))
     }
-    committed
   }
 
   /** Append `df` as a HIVE-PARTITIONED snapshot version: rows land under
@@ -1492,23 +1496,16 @@ object SnapshotLake extends LakeCheckpoints {
     * compact / compactSmall) preserve the partitioning; a Z-order
     * rewrite trades it for Morton clustering, storing the partition
     * columns back as data columns. Same CAS/O(change) commit mechanics
-    * as [[append]]. Partition values are hive-encoded by the writer;
-    * keep them to simple alphanumerics. */
+    * as [[append]]. Partition values are hive-encoded by the writer, and
+    * one that still holds a character a manifest path cannot carry (`,`,
+    * which hive escaping keeps) is refused before the link, naming the
+    * value — the lake stays at its prior head. */
   def appendPartitioned(df: DataFrame, root: String, partCols: Seq[String],
                         index: IndexSpec = IndexSpec.none): Long = {
     require(partCols.nonEmpty, "appendPartitioned needs partition columns")
     require(!df.columns.contains("commit"),
       "'commit' is the reserved partition-discovery marker column")
-    val w = writeDataPartitioned(df, root, partCols, index)
-    var committed = -1L
-    while (committed < 0) {
-      val cur = currentVersion(root)
-      val next = cur.getOrElse(0L) + 1
-      if (tryCommit(root, next, "append", cur.getOrElse(0L),
-          addedRows = w.rows, add = w.files))
-        committed = next
-    }
-    committed
+    publish(root, writeData(df, root, index, partCols = partCols))
   }
 
   /** Exactly-once append for REPLAYABLE writers (a streaming
@@ -1527,74 +1524,29 @@ object SnapshotLake extends LakeCheckpoints {
     * contract Delta documents between VACUUM and streaming checkpoints. */
   def appendOnce(df: DataFrame, root: String, tag: String,
                  index: IndexSpec = IndexSpec.none): Long = {
-    require(tag.nonEmpty && !tag.exists(c => c == '"' || c == '\\'),
-      s"tag must be quote-free: $tag")
-    def existing: Option[Long] = findTag(root, tag)
-    existing.getOrElse {
-      val w = writeData(df, root, index)
-      var committed = -1L
-      while (committed < 0) {
-        existing match {
-          case Some(v) => return v // a racing same-tag writer won; our
-                                   // data files are orphans for vacuum
-          case None =>
-            val cur = currentVersion(root)
-            if (tryCommit(root, cur.getOrElse(0L) + 1, "append",
-                cur.getOrElse(0L), Some(tag),
-                addedRows = w.rows, add = w.files))
-              committed = cur.getOrElse(0L) + 1
-        }
-      }
-      committed
-    }
+    // probe BEFORE the write, so a replay writes no data; a racing
+    // same-tag writer that wins meanwhile leaves our files orphans
+    findTag(root, checkTag(tag)).getOrElse(
+      publish(root, writeData(df, root, index), Some(tag)))
   }
 
-  /** Exactly-once append of PRE-WRITTEN data files — [[appendOnce]]'s
-    * commit half, for writers that landed their parquet through their
-    * own distributed path (the connector's streaming SINK: executors
-    * write task files, the driver commits the epoch). Harvests the
-    * sidecar indexes + row counts for `rel` (one distributed footer
-    * pass, same as any commit), then runs the tagged CAS loop. Replay
-    * semantics identical to appendOnce: an existing tag wins and the
-    * caller's files stay unreferenced orphans for [[vacuum]]. An empty
-    * `rel` commits an empty tagged version — a no-data epoch still
-    * advances exactly-once state. */
-  def commitStreamedFiles(spark: SparkSession, root: String,
-                          rel: Seq[String], tag: String,
-                          index: IndexSpec = IndexSpec.none): Long = {
-    require(tag.nonEmpty && !tag.exists(c => c == '"' || c == '\\'),
-      s"tag must be quote-free: $tag")
-    def existing: Option[Long] = findTag(root, tag)
-    existing.getOrElse {
-      val w = indexAndCount(spark, root, rel, index, columnMapping(root))
-      var committed = -1L
-      while (committed < 0) {
-        existing match {
-          case Some(v) => return v // a racing same-tag writer won
-          case None =>
-            val cur = currentVersion(root)
-            if (tryCommit(root, cur.getOrElse(0L) + 1, "append",
-                cur.getOrElse(0L), Some(tag),
-                addedRows = w.rows, add = w.files))
-              committed = cur.getOrElse(0L) + 1
-        }
-      }
-      committed
-    }
-  }
-
-  /** [[commitStreamedFiles]] through the group-commit coalescer: the
-    * sidecar harvest stays this caller's own distributed pass, and only
-    * the tagged manifest link coalesces — N streaming queries epoch-
-    * committing the same table land under shared multi-tag links
-    * ([[GroupCommit]]) instead of racing the head once per epoch.
-    * Replay / empty-epoch semantics identical to commitStreamedFiles. */
+  /** Exactly-once commit of PRE-WRITTEN data files through the
+    * group-commit coalescer — for writers that landed their parquet
+    * through their own distributed path (the connector's streaming SINK:
+    * executors write task files, the driver commits the epoch). The
+    * sidecar index + row-count harvest for `rel` stays this caller's own
+    * distributed footer pass, and only the tagged manifest link
+    * coalesces — N streaming queries epoch-committing the same table
+    * land under shared multi-tag links ([[GroupCommit]]) instead of
+    * racing the head once per epoch. Replay semantics are
+    * [[appendOnce]]'s: an existing tag wins and the caller's files stay
+    * unreferenced orphans for [[vacuum]]. An empty `rel` commits an
+    * empty tagged version — a no-data epoch still advances exactly-once
+    * state. */
   def commitStreamedFilesGrouped(spark: SparkSession, root: String,
                                  rel: Seq[String], tag: String,
                                  index: IndexSpec = IndexSpec.none): Long = {
-    require(tag.nonEmpty && !tag.exists(c => c == '"' || c == '\\'),
-      s"tag must be quote-free: $tag")
-    findTag(root, tag).getOrElse {
+    findTag(root, checkTag(tag)).getOrElse { // bad tags fail before enqueue
       val w = indexAndCount(spark, root, rel, index, columnMapping(root))
       GroupCommit.commit(root, w.files, w.rows, Some(tag))
     }
@@ -1618,32 +1570,25 @@ object SnapshotLake extends LakeCheckpoints {
     // hive partitioning when it has one
     val materialized = applyDeletes(spark, root, baseV,
       readDeclared(spark, root, baseV, baseFiles)).repartition(partitions)
-    val pc = partColsOf(baseFiles)
     val rewritten =
-      (if (pc.isEmpty) writeData(materialized, root)
-       else writeDataPartitioned(materialized, root, pc, IndexSpec.none)).files
-    var committed = -1L
-    while (committed < 0) {
-      onBeforeCommit()
-      val cur = currentVersion(root).get // ≥ baseV: manifests never retract
-      val curFiles = files(root, cur)
+      writeData(materialized, root, partCols = partColsOf(baseFiles)).files
+    commitLoop(root, beforeAttempt = onBeforeCommit) { head =>
       // Conflict fence: this rewrite READ every base file; if a commit
       // that raced past baseV REMOVED one (a concurrent merge/compact
       // rewrote it), our rewrite holds its stale rows and carrying the
       // winner's replacement too would duplicate every survivor row.
       // Append-only races never remove files, so they never trip this.
-      abortIfRemoved(root, baseV, cur, baseFiles, curFiles, "compact")
+      // (head ≥ baseV: manifests never retract)
+      abortIfRemoved(root, baseV, head.get, baseFiles, "compact")
       // Delta record: base files out, rewrite in. Reconciliation is
       // structural — files added by racing commits simply aren't in
       // `remove`, and tombstones committed since baseV aren't in
       // `removeDel`, so both survive (key tombstones are file-agnostic,
       // so carrying them stays correct); the base tombstones the rewrite
       // materialized come out.
-      if (tryCommit(root, cur + 1, "compact", baseV, addedRows = 0L,
-          add = rewritten, remove = baseFiles, removeDel = baseDeletes))
-        committed = cur + 1
+      Change("compact", baseV, addedRows = 0L,
+        add = rewritten, remove = baseFiles, removeDel = baseDeletes)
     }
-    committed
   }
 
   /** REPLACE a set of live files with pre-written replacements — the
@@ -1663,17 +1608,12 @@ object SnapshotLake extends LakeCheckpoints {
                                    added: Seq[String], op: String,
                                    index: IndexSpec = IndexSpec.none): Long = {
     val w = indexAndCount(spark, root, added, index)
-    var committed = -1L
-    while (committed < 0) {
-      val cur = currentVersion(root).getOrElse(
+    commitLoop(root) { head =>
+      val cur = head.getOrElse(
         throw new IllegalStateException(s"nothing to replace at $root"))
-      val curFiles = files(root, cur)
-      abortIfRemoved(root, baseV, cur, removed, curFiles, op)
-      if (tryCommit(root, cur + 1, op, baseV, addedRows = w.rows,
-          add = w.files, remove = removed))
-        committed = cur + 1
+      abortIfRemoved(root, baseV, cur, removed, op)
+      Change(op, baseV, w.rows, w.files, remove = removed)
     }
-    committed
   }
 
   /** The serializable-writer fence every REWRITING commit (compact /
@@ -1688,9 +1628,8 @@ object SnapshotLake extends LakeCheckpoints {
     * concurrency keeps its lock-free reconcile (spec'd, rounds 10-11) —
     * only rewrite-vs-rewrite overlap aborts. */
   private def abortIfRemoved(root: String, baseV: Long, cur: Long,
-                             readSet: Seq[String], curFiles: Seq[String],
-                             op: String): Unit = {
-    val lost = readSet.filterNot(curFiles.toSet)
+                             readSet: Seq[String], op: String): Unit = {
+    val lost = readSet.filterNot(files(root, cur).toSet)
     if (lost.nonEmpty) {
       fenceAborts.incrementAndGet()
       throw new java.util.ConcurrentModificationException(
@@ -1719,23 +1658,15 @@ object SnapshotLake extends LakeCheckpoints {
     val small = baseFiles.filter(f => Files.size(Paths.get(root, f)) < minBytes)
     if (small.size <= 1) return baseV
     val packed = readListing(spark, root, small).repartition(partitions)
-    val pc = partColsOf(baseFiles)
     val rewritten =
-      (if (pc.isEmpty) writeData(packed, root, index)
-       else writeDataPartitioned(packed, root, pc, index)).files
-    var committed = -1L
-    while (committed < 0) {
-      val cur = currentVersion(root).get
-      val curFiles = files(root, cur)
+      writeData(packed, root, index, partCols = partColsOf(baseFiles)).files
+    commitLoop(root) { head =>
       // read set = the small files only; disjoint racing rewrites survive
-      abortIfRemoved(root, baseV, cur, small, curFiles, "compactSmall")
+      abortIfRemoved(root, baseV, head.get, small, "compactSmall")
       // racing appends survive structurally (absent from `remove`);
       // deletion vectors are carried live in full (no del delta)
-      if (tryCommit(root, cur + 1, "compact", baseV, addedRows = 0L,
-          add = rewritten, remove = small))
-        committed = cur + 1
+      Change("compact", baseV, addedRows = 0L, add = rewritten, remove = small)
     }
-    committed
   }
 
   /** Compact the current snapshot into `files` files laid out along the
@@ -1763,16 +1694,11 @@ object SnapshotLake extends LakeCheckpoints {
         .sortWithinPartitions("__z")
         .drop("__z"),
       root, index).files
-    var committed = -1L
-    while (committed < 0) {
-      val cur = currentVersion(root).get
-      val curFiles = files(root, cur)
-      abortIfRemoved(root, baseV, cur, baseFiles, curFiles, "compactZOrder")
-      if (tryCommit(root, cur + 1, "compact", baseV, addedRows = 0L,
-          add = rewritten, remove = baseFiles, removeDel = baseDeletes))
-        committed = cur + 1
+    commitLoop(root) { head =>
+      abortIfRemoved(root, baseV, head.get, baseFiles, "compactZOrder")
+      Change("compact", baseV, addedRows = 0L,
+        add = rewritten, remove = baseFiles, removeDel = baseDeletes)
     }
-    committed
   }
 
   /** A snapshot read whose file listing was pruned by an index: `df`
@@ -1905,6 +1831,7 @@ object SnapshotLake extends LakeCheckpoints {
             tag: Option[String] = None,
             onBeforeCommit: () => Unit = () => ()): Long = {
     import org.apache.spark.sql.functions.{col, lit, not}
+    tag.foreach(checkTag) // before the rewrite, not after it
     // The anti-join's update-key side is usually tiny relative to the
     // touched files and its size ESTIMATE derives from a filtered scan
     // (the Finding-2 estimator class), so it is pinned broadcast by
@@ -1928,33 +1855,20 @@ object SnapshotLake extends LakeCheckpoints {
         .unionByName(newRows)
     // a partitioned lake's rewrite stays partitioned (updates must carry
     // the partition columns — unionByName above enforces it)
-    val pc = partColsOf(baseFiles)
-    val rewritten =
-      if (pc.isEmpty) writeData(survivors, root, index)
-      else writeDataPartitioned(survivors, root, pc, index)
-    var committed = -1L
-    while (committed < 0) {
-      onBeforeCommit()
-      // Same-tag recheck INSIDE the CAS loop (not only up front in
-      // [[mergeOnce]]): a zombie replay racing its successor must not
-      // double-apply — if the tag landed while we were rewriting, this
-      // attempt yields to it and our rewrite is vacuum-reapable orphans,
-      // mirroring appendOnce's in-loop defense.
-      tag.foreach(t => findTag(root, t).foreach(v => return v))
-      val cur = currentVersion(root).get
-      val curFiles = files(root, cur)
+    val rewritten = writeData(survivors, root, index, partCols = partColsOf(baseFiles))
+    // The same-tag recheck runs INSIDE the loop (not only up front in
+    // [[mergeOnce]]): a zombie replay racing its successor must not
+    // double-apply — if the tag landed while we were rewriting, this
+    // attempt yields to it and our rewrite is vacuum-reapable orphans.
+    commitLoop(root, tag, onBeforeCommit) { head =>
       // read set = the touched candidates; see [[abortIfRemoved]]
-      abortIfRemoved(root, baseV, cur, touched, curFiles, "merge")
+      abortIfRemoved(root, baseV, head.get, touched, "merge")
       // Delta record: touched files out, rewrite in. Racing appends and
       // racing DISJOINT rewrites survive structurally (their files are
       // simply not in `remove`), and live tombstones are carried —
       // tombstone-wins (see deleteWhere).
-      if (tryCommit(root, cur + 1, "merge", baseV, tag,
-          addedRows = rewritten.rows,
-          add = rewritten.files, remove = touched))
-        committed = cur + 1
+      Change("merge", baseV, rewritten.rows, rewritten.files, remove = touched)
     }
-    committed
   }
 
   /** Files of `fileList` that MAY contain a key of `keys` (any column
@@ -2015,9 +1929,7 @@ object SnapshotLake extends LakeCheckpoints {
                 index: IndexSpec = IndexSpec.none,
                 deleteCol: Option[String] = None,
                 onBeforeCommit: () => Unit = () => ()): Long = {
-    require(tag.nonEmpty && !tag.exists(c => c == '"' || c == '\\'),
-      s"tag must be quote-free: $tag")
-    findTag(root, tag).getOrElse {
+    findTag(root, checkTag(tag)).getOrElse {
       merge(spark, root, updates, key, index, deleteCol, tag = Some(tag),
         onBeforeCommit = onBeforeCommit)
     }
@@ -2289,20 +2201,14 @@ object SnapshotLake extends LakeCheckpoints {
     * still exist. */
   def restore(root: String, toV: Long): Long = {
     val target = resolve(root, toV)._1
-    var committed = -1L
-    while (committed < 0) {
-      val cur = currentVersion(root).get // ≥ toV: toV resolved above
-      val curSt = resolve(root, cur)._1
-      val curF = curSt.files.toSet
-      val curD = curSt.deletes.toSet
-      if (tryCommit(root, cur + 1, "restore", toV, addedRows = 0L,
-          add = target.files.filterNot(curF),
-          remove = curSt.files.filterNot(target.files.toSet),
-          addDel = target.deletes.filterNot(curD),
-          removeDel = curSt.deletes.filterNot(target.deletes.toSet)))
-        committed = cur + 1
+    commitLoop(root) { head =>
+      val curSt = resolve(root, head.get)._1 // ≥ toV: toV resolved above
+      Change("restore", toV, addedRows = 0L,
+        add = target.files.filterNot(curSt.files.toSet),
+        remove = curSt.files.filterNot(target.files.toSet),
+        addDel = target.deletes.filterNot(curSt.deletes.toSet),
+        removeDel = curSt.deletes.filterNot(target.deletes.toSet))
     }
-    committed
   }
 
   /** ZERO-COPY CLONE of version `version` (default: head) of `srcRoot`
@@ -2346,8 +2252,8 @@ object SnapshotLake extends LakeCheckpoints {
         catch { case _: FileAlreadyExistsException => () }
       }
     }
-    if (!tryCommit(dstRoot, 1L, "clone", 0L,
-        add = st.files, addDel = st.deletes))
+    if (!tryCommit(dstRoot, 1L,
+        Change("clone", 0L, add = st.files, addDel = st.deletes)))
       throw new IllegalStateException(
         s"clone target $dstRoot was committed to concurrently")
     1L
@@ -2402,7 +2308,6 @@ object SnapshotLake extends LakeCheckpoints {
     val candidates = baseFiles.filter(f => FileStats.mayMatch(ranges(f), physPreds))
     val dropped = candidates.filter(f => wholeMatch(ranges(f), physPreds))
     val rewriteSet = candidates.filterNot(dropped.toSet)
-    val pc = partColsOf(baseFiles)
     val rewritten: Seq[String] =
       if (rewriteSet.isEmpty) Nil
       else {
@@ -2415,19 +2320,13 @@ object SnapshotLake extends LakeCheckpoints {
         // survivors = rows NOT matching; NULL-valued rows never match a
         // range predicate, so they must survive (coalesce, not plain NOT)
         val survivors = d0.filter(not(coalesce(conj, lit(false))))
-        (if (pc.isEmpty) writeData(survivors, root, index)
-         else writeDataPartitioned(survivors, root, pc, index)).files
+        writeData(survivors, root, index, partCols = partColsOf(baseFiles)).files
       }
-    var committed = -1L
-    while (committed < 0) {
-      val cur = currentVersion(root).get
-      val curFiles = files(root, cur)
+    val committed = commitLoop(root) { head =>
       // read-or-dropped set: a racing rewrite of a dropped file would
       // re-home its rows into files this commit doesn't remove
-      abortIfRemoved(root, baseV, cur, candidates, curFiles, "deleteMatching")
-      if (tryCommit(root, cur + 1, "delete", baseV, addedRows = 0L,
-          add = rewritten, remove = candidates))
-        committed = cur + 1
+      abortIfRemoved(root, baseV, head.get, candidates, "deleteMatching")
+      Change("delete", baseV, addedRows = 0L, add = rewritten, remove = candidates)
     }
     DeleteResult(committed, baseFiles.size - candidates.size,
       dropped.size, rewriteSet.size)
@@ -2616,22 +2515,15 @@ object SnapshotLake extends LakeCheckpoints {
     val clean = append(df.filter(not(failAny)), root, index)
     val w = writeData(df.filter(failAny).withColumn("_violated", viol),
       quarantineRoot)
-    if (w.rows == 0L) Expected(clean, None)
-    else {
-      var committed = -1L
-      while (committed < 0) {
-        val cur = currentVersion(quarantineRoot)
-        if (tryCommit(quarantineRoot, cur.getOrElse(0L) + 1, "append",
-            cur.getOrElse(0L), addedRows = w.rows, add = w.files))
-          committed = cur.getOrElse(0L) + 1
-      }
-      Expected(clean, Some(committed))
-    }
+    Expected(clean, if (w.rows == 0L) None else Some(publish(quarantineRoot, w)))
   }
 
-  /** A write-audit-publish staging handle: data files (and their index
-    * sidecars) that exist on disk but appear in NO manifest — invisible
-    * to every reader until [[publish]] links them in. */
+  /** A write-audit-publish staging handle — and what every data write
+    * returns: data files (and their index sidecars) that exist on disk
+    * but appear in NO manifest, invisible to every reader until a commit
+    * links them in, plus their total row count (from the footer pass
+    * that harvested the index — the record's `addedRows` and bloom
+    * sizing never cost a second footer open). */
   final case class Staged(files: Seq[String], rows: Long)
 
   /** WRITE-AUDIT-PUBLISH stage 1 (Iceberg's WAP pattern): write `df`'s
@@ -2645,10 +2537,8 @@ object SnapshotLake extends LakeCheckpoints {
     * its files are unreferenced orphans [[vacuum]] reaps, the same
     * guarantee the exactly-once writers lean on). */
   def stageAppend(df: DataFrame, root: String,
-                  index: IndexSpec = IndexSpec.none): Staged = {
-    val w = writeData(df, root, index)
-    Staged(w.files, w.rows)
-  }
+                  index: IndexSpec = IndexSpec.none): Staged =
+    writeData(df, root, index)
 
   /** The audit view of a staged batch: exactly its rows, read from the
     * staged files (production readers still see nothing). Union with
@@ -2668,19 +2558,8 @@ object SnapshotLake extends LakeCheckpoints {
     * ([[appendOnce]]'s contract): a replayed publish of the same tag
     * returns the existing version and the duplicate staged files stay
     * orphans for vacuum. */
-  def publish(root: String, staged: Staged, tag: Option[String] = None): Long = {
-    tag.foreach(t => require(t.nonEmpty && !t.exists(c => c == '"' || c == '\\'),
-      s"tag must be quote-free: $t"))
-    var committed = -1L
-    while (committed < 0) {
-      tag.foreach(t => findTag(root, t).foreach(v => return v))
-      val cur = currentVersion(root)
-      if (tryCommit(root, cur.getOrElse(0L) + 1, "append", cur.getOrElse(0L),
-          tag, addedRows = staged.rows, add = staged.files))
-        committed = cur.getOrElse(0L) + 1
-    }
-    committed
-  }
+  def publish(root: String, staged: Staged, tag: Option[String] = None): Long =
+    commitLoop(root, tag)(appendOf(staged))
 
   /** Drop a rejected staged batch: delete its files, sidecars, and
     * commit dirs. Deterministic cleanup for the audit-failed path;

@@ -226,8 +226,8 @@ final case class GraftLakeFilesMsg(files: Seq[String], rows: Long)
   * .execution.datasources.parquet.ParquetWriteSupport]] (the same
   * encoder the built-in sink uses), and the DRIVER turns each epoch's
   * commit messages into ONE tagged manifest commit
-  * ([[graft.etl.SnapshotLake.commitStreamedFiles]]) — sidecar indexes
-  * harvested like any commit (`.option("statsCols", ...)` /
+  * ([[graft.etl.SnapshotLake.commitStreamedFilesGrouped]]) — sidecar
+  * indexes harvested like any commit (`.option("statsCols", ...)` /
   * `.option("bloomCol", ...)` work).
   *
   * Exactly-once: the epoch tag is `stream-<queryId>-e<epochId>`
