@@ -11,9 +11,14 @@ import org.apache.spark.sql.expressions.Window
   * pipelines chain them with `transform(...)`.
   *
   * Scale notes: the only shuffle in the whole chain is the window used for
-  * deterministic keep-first dedup (one hash exchange on the dedup key).
+  * deterministic keep-first dedup. Over a whole table it is one hash
+  * exchange on the seven dedup keys. A lake writer first applies
+  * [[partitionByDay]]: that hash partitioning on the event day already
+  * clusters the window's keys and the writer's `year/month/day`, so the
+  * batch shuffles once, before the cleaning, and neither the window nor
+  * `PartitionedLake.append`'s repartition adds another exchange.
   * Everything else is narrow and stays inside a single WholeStageCodegen
-  * span on top of the parquet scan.
+  * span on top of the scan.
   */
 object Clean {
 
@@ -42,25 +47,40 @@ object Clean {
       .drop("__rn")
   }
 
+  /** The `year`, `month` and `day` of an event timestamp, by column name. */
+  private def dayOf(ts: Column): Seq[(String, Column)] =
+    Seq("year" -> year(ts), "month" -> month(ts), "day" -> dayofmonth(ts))
+
   /** F4: derive year/month/day partition columns from the event timestamp
     * (load.py:45-47) — unpadded integer values, matching Spark's own
     * `partitionBy` convention (SURVEY.md §7.4 trap 4).
     */
   def derivePartitionCols(tsCol: String)(df: DataFrame): DataFrame =
-    df.withColumn("year", year(col(tsCol)))
-      .withColumn("month", month(col(tsCol)))
-      .withColumn("day", dayofmonth(col(tsCol)))
+    dayOf(col(tsCol)).foldLeft(df) { case (d, (name, c)) => d.withColumn(name, c) }
+
+  /** Hash-partition a raw batch on the day of `tsCol`, with the same
+    * expressions [[derivePartitionCols]] names. Applied before
+    * [[cleanEvents]] by a lake writer, it is the batch's one shuffle: the
+    * dedup window and the writer's per-day repartition are both clustered
+    * by it, so the planner adds no further exchange.
+    */
+  def partitionByDay(tsCol: String)(df: DataFrame): DataFrame =
+    df.repartition(dayOf(col(tsCol)).map(_._2): _*)
 
   /** The full cleaning pipeline over the `events` table, stage order as in
-    * transform.py:10-46: value null/zero filter → keep-first dedup on the
-    * natural key → partition-column derivation → projection.
+    * transform.py:10-46: value null/zero filter → partition-column
+    * derivation → keep-first dedup on the natural key → projection. The
+    * dedup key leads with `year/month/day`: they are functions of `ts`, so
+    * the result is the four-key dedup's, and an input already partitioned
+    * by [[partitionByDay]] satisfies the window without an exchange.
     */
   def cleanEvents(events: DataFrame): DataFrame =
     events
       .transform(dropNullOrZero("value"))
       .transform(dropNullCritical(Seq("event_id", "ts", "user_id", "event_type", "value")))
-      .transform(dedupKeepFirst(Seq("ts", "user_id", "event_type", "value"), "event_id"))
       .transform(derivePartitionCols("ts"))
+      .transform(dedupKeepFirst(
+        Seq("year", "month", "day", "ts", "user_id", "event_type", "value"), "event_id"))
       .select(
         col("event_id"), col("ts"), col("user_id"), col("event_type"),
         (round(col("value") * 100) / 100.0).as("value"),

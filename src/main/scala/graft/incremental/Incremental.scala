@@ -5,10 +5,11 @@ import java.sql.Timestamp
 import java.time.format.DateTimeFormatter
 import java.time.LocalDateTime
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
-import graft.etl.PartitionedLake
+import graft.etl.{Clean, PartitionedLake}
 
 /** The incremental batch runner — the reference's 3-hourly ETL loop
   * restated as one lazy Spark plan per batch with driver-side watermark
@@ -32,9 +33,18 @@ import graft.etl.PartitionedLake
   * The Structured Streaming twin with checkpointed offsets lives in
   * graft.streaming; this module is the deliberate batch restatement.
   *
-  * At scale: the watermark filter lands on the source scan (JDBC pushdown
-  * or parquet row-group stats), state IO is O(1) driver-side, and the
-  * append only touches the partitions present in the batch.
+  * One batch is one Spark action with one shuffle: the cleaned batch is
+  * written under an `Observation` of (row count, max ts), read only after
+  * the write returns, and the batch is hash-partitioned on its event day
+  * once ([[graft.etl.Clean.partitionByDay]]), which serves both the dedup
+  * window and the one-file-per-day append.
+  *
+  * At scale: the watermark filter is pushed to the source scan (JDBC
+  * pushdown; on parquet a `PushedFilters` entry, which skips whole row
+  * groups by their statistics — a source of one row group, like the test
+  * `events` file, is still read whole every batch). State IO is O(1)
+  * driver-side, and the append only touches the partitions present in
+  * the batch.
   */
 final class Incremental(stateFile: Path) {
 
@@ -66,20 +76,31 @@ final class Incremental(stateFile: Path) {
     }
 
   /** Run one batch: extract → clean → append → advance state.
-    * Returns the number of rows appended (0 ⇒ short-circuited). */
+    * Returns the number of rows appended (0 ⇒ short-circuited).
+    *
+    * The write is the batch's only action; (n, max ts) come from an
+    * `Observation` on it, read only once the write has returned, so a
+    * failed write throws before any state is touched. An empty batch still
+    * runs the (empty) write, which leaves a `_SUCCESS` marker: if the lake
+    * root did not exist before, the marker and the root are removed again,
+    * so an empty batch leaves no lake behind — without an emptiness probe,
+    * which would cost a second job on every batch. */
   def runBatch(source: DataFrame, lakeRoot: String): Long = {
-    val batch = extract(source, "ts")
-    val cleaned = graft.etl.Clean.cleanEvents(batch).persist()
-    try {
-      val agg = cleaned.agg(count(lit(1)), max(col("ts"))).collect()(0)
-      val n = agg.getLong(0)
-      if (n == 0) 0L // empty-batch short-circuit (pipeline.py:13-16)
-      else {
-        PartitionedLake.append(cleaned, lakeRoot)
-        writeState(agg.getTimestamp(1))
-        n
-      }
-    } finally { val _ = cleaned.unpersist() }
+    val obs = Observation()
+    val cleaned = Clean.cleanEvents(Clean.partitionByDay("ts")(extract(source, "ts")))
+      .observe(obs, count(lit(1)).as("n"), max(col("ts")).as("max_ts"))
+    val root = new HPath(lakeRoot)
+    val fs = root.getFileSystem(source.sparkSession.sessionState.newHadoopConf())
+    val existed = fs.exists(root)
+    PartitionedLake.append(cleaned, lakeRoot)
+    val m = obs.get
+    val n = m("n").asInstanceOf[Long]
+    if (n > 0) writeState(m("max_ts").asInstanceOf[Timestamp])
+    else if (!existed) { // empty-batch short-circuit (pipeline.py:13-16)
+      Seq("_SUCCESS", "._SUCCESS.crc").foreach(f => fs.delete(new HPath(root, f), false))
+      if (fs.listStatus(root).isEmpty) fs.delete(root, false)
+    }
+    n
   }
 }
 

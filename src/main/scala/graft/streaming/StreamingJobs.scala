@@ -327,15 +327,18 @@ object StreamingJobs {
 
   /** Exactly-once-ish partitioned lake append (§2.9c): checkpointed source
     * offsets replace the text-file watermark, `foreachBatch` applies the
-    * same clean→append batch logic. `Trigger.AvailableNow` drains what
-    * exists and stops — the reference's cron-batch cadence without its
-    * stale-state double-write hazard. */
+    * same clean→append batch logic as `Incremental.runBatch` — each
+    * micro-batch is hash-partitioned on its event day once
+    * (`Clean.partitionByDay`), so the dedup and the per-day write share
+    * one shuffle. `Trigger.AvailableNow` drains what exists and stops —
+    * the reference's cron-batch cadence without its stale-state
+    * double-write hazard. */
   def toLake(events: DataFrame, lakeRoot: String, checkpointDir: String): DataStreamWriter[org.apache.spark.sql.Row] =
     events.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         graft.etl.PartitionedLake.append(
-          graft.etl.Clean.cleanEvents(batch), lakeRoot)
+          graft.etl.Clean.cleanEvents(graft.etl.Clean.partitionByDay("ts")(batch)), lakeRoot)
       }
 }

@@ -3,6 +3,8 @@ package graft.incremental
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,7 +14,8 @@ import graft.model.Tables
 
 /** The incremental contract (§2.9a/b/c): multi-batch union equals the
   * full scan, the +1 s watermark boundary drops same-second stragglers,
-  * and empty batches leave state untouched. */
+  * empty batches and failed writes leave state untouched, and a batch
+  * costs one write. */
 class IncrementalSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -49,7 +52,6 @@ class IncrementalSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft-inc").toString
     val inc = Incremental(dir)
     inc.writeState(Timestamp.valueOf("2024-01-01 10:00:00"))
-    import scala.jdk.CollectionConverters._
     val schema = graft.streaming.StreamingJobs.eventsSchema
     val rows = Seq(
       org.apache.spark.sql.Row(1L, Timestamp.valueOf("2024-01-01 10:00:00"), 1L, "a", 1.0), // == watermark: dropped
@@ -72,6 +74,52 @@ class IncrementalSpec extends AnyFunSuite {
     assert(n == 0)
     assert(inc.readState().contains(w), "state must not advance on an empty batch")
     assert(!Files.exists(java.nio.file.Paths.get(lake)), "no write on an empty batch")
+  }
+
+  test("a batch is one write: ≤ 2 jobs when non-empty, ≤ 4 when empty") {
+    val dir = Files.createTempDirectory("graft-inc").toString
+    val lake = s"$dir/lake"
+    val inc = Incremental(dir)
+    val (full, fullTasks) = TestSpark.jobsAndTasks { assert(inc.runBatch(events, lake) > 0) }
+    // one shuffle map stage and the write: no persist, no separate collect
+    assert(full <= 2, s"non-empty batch ran $full jobs ($fullTasks tasks)")
+    val (empty, _) = TestSpark.jobsAndTasks { assert(inc.runBatch(events, lake) == 0) }
+    // the persist + collect + write formulation ran 4 jobs on an empty batch
+    assert(empty <= 4, s"empty batch ran $empty jobs")
+  }
+
+  /** Every parquet file under `root` with its size and modification time. */
+  private def parquetFiles(root: String): Map[String, (Long, Long)] = {
+    val s = Files.walk(java.nio.file.Paths.get(root))
+    try s.iterator().asScala.filter(_.toString.endsWith(".parquet"))
+      .map(f => f.toString -> (Files.size(f), Files.getLastModifiedTime(f).toMillis)).toMap
+    finally s.close()
+  }
+
+  test("an empty batch into an existing lake changes no data file and keeps the state") {
+    val dir = Files.createTempDirectory("graft-inc").toString
+    val lake = s"$dir/lake"
+    val inc = Incremental(dir)
+    assert(inc.runBatch(events, lake) > 0)
+    val w = inc.readState().get
+    val before = parquetFiles(lake)
+    assert(before.nonEmpty)
+    assert(inc.runBatch(events, lake) == 0) // the watermark leaves nothing
+    assert(parquetFiles(lake) == before, "an empty batch must not add or rewrite a data file")
+    assert(inc.readState().contains(w), "state must not advance on an empty batch")
+  }
+
+  test("a failing write rethrows and leaves the state file as it was") {
+    val dir = Files.createTempDirectory("graft-inc").toString
+    val lake = java.nio.file.Paths.get(dir, "lake")
+    Files.writeString(lake, "not a directory") // the lake root is a regular file
+    val inc = Incremental(dir)
+    inc.writeState(Timestamp.valueOf("2000-01-01 00:00:00")) // before all data
+    val stateFile = java.nio.file.Paths.get(dir, "pipeline-state", "last_run.txt")
+    val state = Files.readString(stateFile)
+    intercept[Exception] { inc.runBatch(events, lake.toString) }
+    assert(Files.readString(stateFile) == state, "a failed write must not advance the state")
+    assert(Files.readString(lake) == "not a directory")
   }
 
   test("first run (no state) extracts everything") {
