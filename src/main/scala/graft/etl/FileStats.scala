@@ -5,7 +5,6 @@ import java.util.Base64
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
@@ -86,21 +85,23 @@ object FileStats {
   final case class FileMeta(ranges: Map[String, ColRange], rows: Long)
 
   /** Read min/max for `cols` AND the row count from the footers of
-    * `relFiles` (paths relative to `root`), distributed over the
-    * executors — one footer open per file total, never one per purpose,
-    * and never serialized on the driver (a thousand-file commit harvests
-    * in parallel). Columns a footer lacks statistics for are absent
-    * (⇒ never pruned on). */
+    * `relFiles` (paths relative to `root`) in one Spark job of up to 32
+    * tasks — one footer open per file total, never one per purpose, and
+    * never a driver loop over the footers. The footers open with the
+    * session's Hadoop conf, broadcast once per harvest
+    * ([[graft.sources.GraftLakeConf]]), not a conf built per file.
+    * Columns a footer lacks statistics for are absent (⇒ never pruned
+    * on). */
   def harvest(spark: SparkSession, root: String, relFiles: Seq[String],
               cols: Seq[String]): Map[String, FileMeta] = {
     val rootAbs = Paths.get(root).toAbsolutePath.toString
     val colSet = cols.toSet
+    val hconf = graft.sources.GraftLakeConf.session(spark)
     spark.sparkContext
       .parallelize(relFiles, math.max(1, math.min(relFiles.size, 32)))
       .map { rel =>
-        val conf = new Configuration()
         val in = HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(s"$rootAbs/$rel"), conf)
+          new org.apache.hadoop.fs.Path(s"$rootAbs/$rel"), hconf.value.value)
         val reader = ParquetFileReader.open(in)
         try {
           val ranges = scala.collection.mutable.Map.empty[String, ColRange]

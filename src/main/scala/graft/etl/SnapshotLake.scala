@@ -496,8 +496,11 @@ object SnapshotLake extends LakeCheckpoints {
     *     leaf dir (files of one commit directory share a write, hence a
     *     schema). On a lake whose commits wrote different column sets the
     *     non-merging schema is therefore that of the commit whose data
-    *     dir sorts first — declare a schema, or read with `mergeSchema`,
-    *     to fix it.
+    *     dir sorts first. Plain commit dirs are named in write order
+    *     ([[newDataDir]]), so on a lake this library wrote the rule is:
+    *     the first commit (the oldest one with live plain files) names
+    *     the schema — declare a schema, or read with `mergeSchema`, to
+    *     change it.
     *
     * The inference is INCREMENTAL: an undeclared version whose record
     * only adds plain files inherits version v−1's cached inference when
@@ -505,7 +508,9 @@ object SnapshotLake extends LakeCheckpoints {
     * when no added path sorts before the footer v−1 was read from (zero
     * footer opens); with it, when the additions are one leaf dir whose
     * footer equals v−1's schema (one footer open). A commit-by-commit
-    * writer or reader then pays O(change), never O(history). It falls
+    * writer or reader then pays O(change), never O(history): a solo
+    * append's time-ordered dir always sorts last, and racing writers can
+    * miss the inheritance for one version at worst. It falls
     * back to the footers of the whole listing on a cold cache (first call
     * in this JVM, or a soft reference the GC cleared), when that proof
     * fails (an added path sorts first, or the additions bring other
@@ -1075,7 +1080,7 @@ object SnapshotLake extends LakeCheckpoints {
   }
 
   /** THE data write every commit's new files come from: rows land in a
-    * fresh `data/<uuid>/`, or — with `partCols` — hive-partitioned under
+    * fresh [[newDataDir]], or — with `partCols` — hive-partitioned under
     * `data/commit=<uuid>/<p1=v1>/.../part-*.parquet`, the commit marker
     * itself hive-encoded so ONE basePath-anchored scan covers every
     * commit of the lake (the marker column is synthesized by partition
@@ -1087,7 +1092,7 @@ object SnapshotLake extends LakeCheckpoints {
                         partCols: Seq[String] = Nil): Staged = {
     val m = declare.map(mappingOf).getOrElse(columnMapping(root))
     val df = toPhysical(df0, root, declare)
-    val sub = s"data/${if (partCols.isEmpty) "" else "commit="}${UUID.randomUUID()}"
+    val sub = if (partCols.isEmpty) newDataDir() else s"data/commit=${UUID.randomUUID()}"
     val dir = Paths.get(root, sub)
     df.write.mode("overwrite").partitionBy(partCols.map(c => m.getOrElse(c, c)): _*)
       .parquet(dir.toString)
@@ -1097,6 +1102,21 @@ object SnapshotLake extends LakeCheckpoints {
         .map(p => s"$sub/${dir.relativize(p)}").toVector.sorted
       finally s.close()
     indexAndCount(df.sparkSession, root, rel, index, m)
+  }
+
+  private val lastDataDirMillis = new java.util.concurrent.atomic.AtomicLong
+
+  /** A fresh plain commit directory, `data/t<epoch millis as 12 hex
+    * digits>-<uuid>`: the names sort in write order, and after every
+    * earlier form of data directory (random-UUID hex, `commit=<uuid>`,
+    * `stream-<id>-e<N>`), so the files of a solo append always sort after
+    * the footer version v−1's schema was inferred from and [[schemaOf]]
+    * inherits that inference. The millis strictly increase within the
+    * JVM, so a clock step back cannot reorder two commits of one
+    * writer. */
+  private[graft] def newDataDir(): String = {
+    val t = lastDataDirMillis.updateAndGet(p => math.max(p + 1, System.currentTimeMillis()))
+    f"data/t$t%012x-${UUID.randomUUID()}"
   }
 
   /** The shared post-write pass: ONE distributed footer harvest

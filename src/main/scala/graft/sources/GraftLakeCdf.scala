@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -108,7 +109,7 @@ final class GraftLakeCdfScanBuilder(root: String, fullSchema: StructType,
                                     startV: Long, endV: Option[Long],
                                     skipChangeCommits: Boolean,
                                     maxVersionsPerTrigger: Option[Long],
-                                    hconf: SerializableConfiguration)
+                                    hconf: Broadcast[SerializableConfiguration])
     extends ScanBuilder with SupportsPushDownRequiredColumns {
   private var required: StructType = fullSchema
   override def pruneColumns(requiredSchema: StructType): Unit =
@@ -133,7 +134,7 @@ final class GraftLakeCdfScan(root: String, rootAbs: String,
                              startV: Long, endV: Option[Long],
                              skipChangeCommits: Boolean,
                              maxVersionsPerTrigger: Option[Long],
-                             hconf: SerializableConfiguration)
+                             hconf: Broadcast[SerializableConfiguration])
     extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this

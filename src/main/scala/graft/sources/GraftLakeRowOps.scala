@@ -1,7 +1,6 @@
 package graft.sources
 
-import java.util.UUID
-
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.expressions.NamedReference
 import org.apache.spark.sql.connector.read.ScanBuilder
@@ -110,9 +109,9 @@ final class GraftLakeReplaceWrite(root: String, rootAbs: String,
                                   schema: StructType,
                                   cmd: RowLevelOperation.Command,
                                   scanOf: () => GraftLakeScan,
-                                  hconf: SerializableConfiguration)
+                                  hconf: Broadcast[SerializableConfiguration])
     extends BatchWrite {
-  private val commitDir = s"data/${UUID.randomUUID().toString}"
+  private val commitDir = SnapshotLake.newDataDir()
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     GraftLakeReplaceWriterFactory(rootAbs, commitDir, schema, hconf)
@@ -135,10 +134,10 @@ final class GraftLakeReplaceWrite(root: String, rootAbs: String,
 
 final case class GraftLakeReplaceWriterFactory(rootAbs: String, dir: String,
                                                schema: StructType,
-                                               hconf: SerializableConfiguration)
+                                               hconf: Broadcast[SerializableConfiguration])
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : org.apache.spark.sql.connector.write.DataWriter[org.apache.spark.sql.catalyst.InternalRow] =
     new GraftLakeDataWriter(rootAbs, dir,
-      f"part-$partitionId%05d-t$taskId.parquet", schema, hconf.value)
+      f"part-$partitionId%05d-t$taskId.parquet", schema, hconf.value.value)
 }

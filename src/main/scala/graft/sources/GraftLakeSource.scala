@@ -7,6 +7,7 @@ import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.hadoop.mapreduce.TaskAttemptID
 import org.apache.hadoop.mapred.FileSplit
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, UnsafeProjection}
@@ -17,6 +18,7 @@ import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggr
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportStatistics, SupportsRuntimeFiltering}
 import org.apache.spark.sql.connector.read.colstats.ColumnStatistics
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
+import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, VectorizedParquetRecordReader}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, InsertableRelation, LessThan, LessThanOrEqual}
@@ -54,8 +56,8 @@ import graft.etl.{FileStats, SnapshotLake}
   *   - **Column pruning → parquet projection**: the required schema
   *     from [[GraftLakeScanBuilder.pruneColumns]] becomes the parquet
   *     read projection, so unselected columns are never decoded.
-  *   - **Vectorized decode**: each input partition reads through
-  *     Spark's own [[VectorizedParquetRecordReader]] and emits
+  *   - **Vectorized decode**: each file of an input partition reads
+  *     through Spark's own [[VectorizedParquetRecordReader]] and emits
   *     [[ColumnarBatch]]es (`supportColumnarReads`), so a connector scan
   *     feeds whole-stage codegen through the same columnar path as the
   *     built-in parquet source — one footer open per file, no per-value
@@ -68,9 +70,13 @@ import graft.etl.{FileStats, SnapshotLake}
   *     read; the vector is O(deleted keys) between compactions by the
   *     [[SnapshotLake.deleteWhere]] contract) and filters rows during
   *     the scan, equal by construction to the native reader's anti-join.
-  *   - One input partition per manifest file: Spark schedules them like
-  *     any other scan, locality-free on object storage exactly as
-  *     Delta/Iceberg connectors plan.
+  *   - Input partitions packed like the built-in file scan's: the kept
+  *     files fill tasks up to `FilePartition.maxSplitBytes`, each file
+  *     costing its length plus `spark.sql.files.openCostInBytes`, so a
+  *     day of small commit files reads in a few tasks and a large file
+  *     still gets a task of its own ([[GraftLakeScan.pack]]).
+  *     Locality-free on object storage, as Delta/Iceberg connectors
+  *     plan.
   *
   * Decode scope = whatever Spark's vectorized parquet reader decodes —
   * the same types the built-in source supports.
@@ -719,11 +725,9 @@ final class GraftLakeScanBuilder(root: String, version: Option[Long],
       GraftLakeScan.partTupleOf(f)))
     countPushed = Some(new GraftLakeCountScan(nCounts.size,
       whole.map(rowsBy).sum, whole.size, all.size - candidates.size,
-      parts, physExact, filterCols, sessionConf()))
+      parts, physExact, filterCols, GraftLakeConf.session()))
     true
   }
-
-  private def sessionConf(): SerializableConfiguration = GraftLakeConf.session()
 
   override def build(): Scan = (aggPushed, countPushed) match {
     case (Some((schema, row)), _) => new GraftLakeAggScan(schema, row)
@@ -784,7 +788,7 @@ final class GraftLakeScanBuilder(root: String, version: Option[Long],
       if (!reportColStats) Map.empty[String, Map[String, Long]]
       else idx.ndv
     val scan = new GraftLakeScan(root, rootAbs, kept, all.size, required,
-      fullSchema, ranges, stats, lengths, dv, sessionConf(),
+      fullSchema, ranges, stats, lengths, dv, GraftLakeConf.session(),
       startingVersion, skipChangeCommits, maxVersionsPerTrigger,
       exact.map(physFilter), // readers evaluate in file (physical) space
       v, idx.statCols, idx.rows,
@@ -795,12 +799,20 @@ final class GraftLakeScanBuilder(root: String, version: Option[Long],
   }
 }
 
-/** One manifest file = one input partition: absolute path, byte length
+/** One lake file as the readers open it: absolute path, byte length
   * (the split range and, on object storage, the saved HEAD request),
-  * and the hive partition tuple its path encodes (raw encoded values;
-  * decoded into constant vectors on the executor). */
+  * and the constants its rows carry — the hive partition tuple its path
+  * encodes (raw encoded values, decoded into constant vectors on the
+  * executor) plus any metadata constant such as `_file`. The streaming
+  * and change-feed scans plan each file as an input partition of its
+  * own; the snapshot scan packs files into [[GraftLakePackedPartition]]s. */
 final case class GraftLakeInputPartition(absPath: String, length: Long,
                                          partVals: Seq[(String, String)])
+    extends InputPartition
+
+/** Several lake files one task reads one after another — the snapshot
+  * scan's input partition ([[GraftLakeScan.pack]]). */
+final case class GraftLakePackedPartition(files: Seq[GraftLakeInputPartition])
     extends InputPartition
 
 /** The live tombstone vector of the scanned version: file list (path,
@@ -816,7 +828,7 @@ final class GraftLakeScan(root: String, rootAbs: String,
                           stats: Map[String, Map[String, FileStats.ColRange]],
                           lengths: Map[String, Long],
                           dv: Option[GraftLakeDv],
-                          hconf: SerializableConfiguration,
+                          hconf: Broadcast[SerializableConfiguration],
                           startingVersion: Long = 1L,
                           skipChangeCommits: Boolean = false,
                           maxVersionsPerTrigger: Option[Long] = None,
@@ -1070,11 +1082,14 @@ final class GraftLakeScan(root: String, rootAbs: String,
     }) fileFiltered = true
   }
 
+  // called again after runtime filtering, so DPP and `_file` group
+  // filters have pruned `liveFiles` before the files are packed
   override def planInputPartitions(): Array[InputPartition] =
-    liveFiles.map(f => GraftLakeInputPartition(s"$rootAbs/$f", lengths(f),
-      // the hive tuple plus the `_file` metadata constant (emitted only
-      // when the projection asks for it)
-      GraftLakeScan.partTupleOf(f) :+ ("_file" -> f))).toArray
+    GraftLakeScan.pack(SparkSession.active,
+      liveFiles.map(f => GraftLakeInputPartition(s"$rootAbs/$f", lengths(f),
+        // the hive tuple plus the `_file` metadata constant (emitted only
+        // when the projection asks for it)
+        GraftLakeScan.partTupleOf(f) :+ ("_file" -> f)))).toArray
   override def createReaderFactory(): PartitionReaderFactory =
     // readers live in file space: request PHYSICAL column names (the
     // emitted rows are positional, so readSchema stays logical)
@@ -1124,13 +1139,17 @@ final class GraftLakeAggScan(schema: StructType, row: Seq[Any])
 
 final case class GraftLakeAggPartition(values: Seq[Any]) extends InputPartition
 
-/** The task-side Hadoop conf every connector reader/writer ships: the
-  * session conf plus the SQLConf keys ParquetReadSupport /
-  * ParquetToSparkSchemaConverter / ParquetWriteSupport resolve from it
-  * — set explicitly like ParquetFileFormat does on both of its paths. */
-private[sources] object GraftLakeConf {
-  def session(): SerializableConfiguration = {
-    val spark = SparkSession.active
+/** The task-side Hadoop conf every connector reader/writer and the
+  * commit-time footer harvest use: the session conf plus the SQLConf keys
+  * ParquetReadSupport / ParquetToSparkSchemaConverter /
+  * ParquetWriteSupport resolve from it — set explicitly like
+  * ParquetFileFormat does on both of its paths. Broadcast once per scan,
+  * write or harvest, as `FileSourceScanExec` does: a factory carries only
+  * the broadcast handle, and an executor deserializes the conf once
+  * instead of every task deserializing its own copy. */
+private[graft] object GraftLakeConf {
+  def session(spark: SparkSession = SparkSession.active)
+      : Broadcast[SerializableConfiguration] = {
     val c = spark.sessionState.newHadoopConf()
     val sc = spark.sessionState.conf
     // read side
@@ -1151,7 +1170,7 @@ private[sources] object GraftLakeConf {
       sc.parquetFieldIdWriteEnabled)
     c.setBoolean(SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE.key,
       sc.parquetAnnotateVariantLogicalType)
-    new SerializableConfiguration(c)
+    spark.sparkContext.broadcast(new SerializableConfiguration(c))
   }
 }
 
@@ -1296,6 +1315,38 @@ object GraftLakeScan {
       case _: NumberFormatException | _: ArithmeticException => None
     }
 
+  /** The snapshot scan's files packed into tasks by the built-in file
+    * scan's rule: the split size is `FilePartition.maxSplitBytes` over
+    * the files (`spark.sql.files.maxPartitionBytes`, `openCostInBytes`,
+    * and `minPartitionNum` or the default parallelism), and each file
+    * fills the current task at its length plus the open cost, a new task
+    * starting when the next file would pass the split size. Unlike the
+    * built-in scan, a file is never split and the files keep manifest
+    * order (no sort by size), so a scan emits its rows in the order the
+    * one-file-per-task plan did. A file of at least the split size gets a
+    * task of its own: at scale the parallelism is the built-in reader's. */
+  private[sources] def pack(spark: SparkSession,
+                            files: Seq[GraftLakeInputPartition])
+      : Seq[GraftLakePackedPartition] = {
+    val openCost = spark.sessionState.conf.filesOpenCostInBytes
+    val maxSplit = FilePartition.maxSplitBytes(spark,
+      files.iterator.map(_.length + openCost).sum)
+    val out = Seq.newBuilder[GraftLakePackedPartition]
+    var cur = Vector.empty[GraftLakeInputPartition]
+    var size = 0L
+    files.foreach { f =>
+      if (cur.nonEmpty && size + f.length > maxSplit) {
+        out += GraftLakePackedPartition(cur)
+        cur = Vector.empty
+        size = 0L
+      }
+      cur :+= f
+      size += f.length + openCost
+    }
+    if (cur.nonEmpty) out += GraftLakePackedPartition(cur)
+    out.result()
+  }
+
   /** The hive partition tuple a relative lake path encodes, raw (still
     * path-escaped): `data/commit=<uuid>/p=v/part-x.parquet` → [(p, v)]. */
   private[sources] def partTupleOf(rel: String): Seq[(String, String)] =
@@ -1393,22 +1444,48 @@ object GraftLakeScan {
 
 final class GraftLakeReaderFactory(required: StructType,
                                    dv: Option[GraftLakeDv],
-                                   conf: SerializableConfiguration,
+                                   conf: Broadcast[SerializableConfiguration],
                                    exact: Array[Filter] = Array.empty,
                                    fullSchema: StructType = new StructType())
     extends PartitionReaderFactory {
+  private def filesOf(p: InputPartition): Seq[GraftLakeInputPartition] = p match {
+    case packed: GraftLakePackedPartition => packed.files
+    case file: GraftLakeInputPartition => Seq(file)
+  }
   // columnar is the default path; a live tombstone vector or accepted
   // exact filters need row-level work during the scan, so those read
   // row-based
   override def supportColumnarReads(p: InputPartition): Boolean =
     dv.isEmpty && exact.isEmpty
   override def createColumnarReader(p: InputPartition): PartitionReader[ColumnarBatch] =
-    new GraftLakeColumnarReader(
-      p.asInstanceOf[GraftLakeInputPartition], required, conf.value)
+    new GraftLakeFilesReader[ColumnarBatch](filesOf(p),
+      new GraftLakeColumnarReader(_, required, conf.value.value))
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    new GraftLakeRowReader(
-      p.asInstanceOf[GraftLakeInputPartition], required, dv, conf.value,
-      exact, fullSchema)
+    new GraftLakeFilesReader[InternalRow](filesOf(p),
+      new GraftLakeRowReader(_, required, dv, conf.value.value, exact, fullSchema))
+}
+
+/** A partition's files read one after another, each through its own
+  * per-file reader (its hive tuple, `_file` constant, tombstone probe
+  * and exact filters stay per file); a file's reader is opened when the
+  * previous one is exhausted and closed before the next opens, as the
+  * built-in file scan's iterator does. */
+final class GraftLakeFilesReader[T](files: Seq[GraftLakeInputPartition],
+                                    open: GraftLakeInputPartition => PartitionReader[T])
+    extends PartitionReader[T] {
+  private val rest = files.iterator
+  private var cur: PartitionReader[T] = _
+  override def next(): Boolean = {
+    while (cur == null || !cur.next()) {
+      close()
+      if (!rest.hasNext) return false
+      cur = open(rest.next())
+    }
+    true
+  }
+  override def get(): T = cur.get()
+  override def close(): Unit =
+    if (cur != null) { val c = cur; cur = null; c.close() }
 }
 
 /** The hot path: whole [[ColumnarBatch]]es straight from Spark's
@@ -1566,7 +1643,7 @@ final class GraftLakeCountScan(nCounts: Int, interior: Long,
                                val metadataFiles: Int, val prunedFiles: Int,
                                boundary: Seq[GraftLakeInputPartition],
                                filters: Array[Filter], filterCols: StructType,
-                               hconf: SerializableConfiguration)
+                               hconf: Broadcast[SerializableConfiguration])
     extends Scan with Batch {
   def scannedFiles: Int = boundary.size
   def metadataOnly: Boolean = boundary.isEmpty
@@ -1589,7 +1666,7 @@ final case class GraftLakeCountPartition(interior: Long,
 
 final class GraftLakeCountReaderFactory(nCounts: Int, filters: Array[Filter],
                                         filterCols: StructType,
-                                        conf: SerializableConfiguration)
+                                        conf: Broadcast[SerializableConfiguration])
     extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val cp = p.asInstanceOf[GraftLakeCountPartition]
@@ -1597,7 +1674,7 @@ final class GraftLakeCountReaderFactory(nCounts: Int, filters: Array[Filter],
       private var emitted = false
       private def countFile(fp: GraftLakeInputPartition): Long = {
         val (r, perm) = GraftLakeScan.openVectorized(
-          conf.value, fp, filterCols, columnar = false)
+          conf.value.value, fp, filterCols, columnar = false)
         val preds = filters.map(f => GraftLakeCountScan.compile(f,
           c => perm(filterCols.fieldIndex(c)), c => filterCols(c).dataType))
         try {

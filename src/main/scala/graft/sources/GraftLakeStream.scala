@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.types.StructType
@@ -82,7 +83,7 @@ final class GraftLakeMicroBatchStream(root: String, rootAbs: String,
                                       startingVersion: Long,
                                       skipChangeCommits: Boolean,
                                       maxVersionsPerTrigger: Option[Long],
-                                      hconf: SerializableConfiguration,
+                                      hconf: Broadcast[SerializableConfiguration],
                                       exact: Array[org.apache.spark.sql.sources.Filter] = Array.empty,
                                       fullSchema: StructType = new StructType(),
                                       maxFilesPerTrigger: Option[Long] = None,
@@ -243,7 +244,7 @@ final class GraftLakeStreamingWrite(root: String, rootAbs: String,
                                     schema: org.apache.spark.sql.types.StructType,
                                     index: SnapshotLake.IndexSpec,
                                     queryId: String,
-                                    hconf: SerializableConfiguration)
+                                    hconf: Broadcast[SerializableConfiguration])
     extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
   import org.apache.spark.sql.connector.write.{PhysicalWriteInfo, WriterCommitMessage}
   import org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory
@@ -285,7 +286,7 @@ final class GraftLakeStreamingWrite(root: String, rootAbs: String,
 
 final case class GraftLakeStreamWriterFactory(
     rootAbs: String, schema: org.apache.spark.sql.types.StructType,
-    queryId: String, hconf: SerializableConfiguration)
+    queryId: String, hconf: Broadcast[SerializableConfiguration])
     extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
       : org.apache.spark.sql.connector.write.DataWriter[org.apache.spark.sql.catalyst.InternalRow] =
@@ -294,7 +295,7 @@ final case class GraftLakeStreamWriterFactory(
       // replayed epoch (or a speculative attempt) never collides with
       // a live writer, and only committed messages' names are linked
       s"data/stream-$queryId-e$epochId",
-      f"part-$partitionId%05d-t$taskId.parquet", schema, hconf.value)
+      f"part-$partitionId%05d-t$taskId.parquet", schema, hconf.value.value)
 }
 
 /** Task-side parquet writer over InternalRow — lazily opened so a

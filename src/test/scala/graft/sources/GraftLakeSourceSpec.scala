@@ -615,6 +615,18 @@ class GraftLakeSourceSpec extends AnyFunSuite {
       .filter(col("tag") === "t").count() == 100L)
   }
 
+  test("each of 30 successive solo connector appends opens no footer when warm") {
+    val root = deepLake(3)
+    // the first append infers version 3's schema from one footer, which
+    // is one Spark job; every later one must inherit version v−1's
+    // inference, so it runs exactly one job fewer
+    val jobs = (1 to 30).map(i =>
+      TestSpark.jobsAndTasks(connectorAppend(tsBatch(i), root))._1)
+    assert(SnapshotLake.currentVersion(root).contains(33L))
+    info(s"jobs per append, cold first: $jobs")
+    assert(jobs.tail.forall(_ == jobs.head - 1), s"jobs per append, cold first: $jobs")
+  }
+
   test("read, load and the append check agree on an undeclared mixed-schema lake") {
     def shape(s: org.apache.spark.sql.types.StructType) =
       s.fields.map(f => f.name -> f.dataType.simpleString).toSeq
