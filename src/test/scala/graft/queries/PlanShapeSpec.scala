@@ -302,21 +302,20 @@ class PlanShapeSpec extends AnyFunSuite {
       docs.filter(col("doc_id") < 20), stateRoot, 0L, 0.5)
     graft.streaming.StreamingDedup.processBatch(
       docs.filter(col("doc_id") >= 20 && col("doc_id") < 40), stateRoot, 1L, 0.5)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      // disable broadcast so the probe must stand on its bucketing (a
-      // broadcast corpus would hide a missing bucket spec — and at scale
-      // the corpus side could never broadcast anyway)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val probe = graft.streaming.StreamingDedup
-        .crossCandidates(spark, stateRoot, 1L)
-      val p = probe.queryExecution.executedPlan.toString
-      assert(!p.contains("Exchange"),
-        s"the bucketed probe must plan with zero shuffle exchanges:\n$p")
-      assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"),
-        s"probe must be a real bucket-colocated join:\n$p")
-      assert(probe.count() >= 0L) // executes end-to-end on the bucketed scan
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    // disable broadcast so the probe must stand on its bucketing (a
+    // broadcast corpus would hide a missing bucket spec — and at scale
+    // the corpus side could never broadcast anyway); child session — no
+    // shared-conf race with suites running concurrently
+    val noBroadcast = spark.newSession()
+    noBroadcast.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val probe = graft.streaming.StreamingDedup
+      .crossCandidates(noBroadcast, stateRoot, 1L)
+    val p = probe.queryExecution.executedPlan.toString
+    assert(!p.contains("Exchange"),
+      s"the bucketed probe must plan with zero shuffle exchanges:\n$p")
+    assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"),
+      s"probe must be a real bucket-colocated join:\n$p")
+    assert(probe.count() >= 0L) // executes end-to-end on the bucketed scan
     // and the verify side: the sets table scan is bucketed on doc_id
     val setsPlan = spark.table(
       graft.streaming.StreamingDedup.setsTable(stateRoot))
@@ -354,14 +353,15 @@ class PlanShapeSpec extends AnyFunSuite {
       s"a ~3 KB connector dim must auto-broadcast from its reported stats:\n$p")
     // counterfactual: the SAME join with the threshold below the dim's
     // reported size must NOT broadcast — proving the decision came from
-    // the scan's statistics, not from some other default
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "64")
-      val p2 = fact.join(dim, "k").queryExecution.executedPlan.toString
-      assert(!p2.contains("BroadcastHashJoin"),
-        s"stats above the threshold must refuse the auto-broadcast:\n$p2")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    // the scan's statistics, not from some other default (child session —
+    // no shared-conf race with suites running concurrently)
+    val lowThreshold = spark.newSession()
+    lowThreshold.conf.set("spark.sql.autoBroadcastJoinThreshold", "64")
+    val p2 = lowThreshold.read.format("graftlake").load(factRoot)
+      .join(lowThreshold.read.format("graftlake").load(dimRoot), "k")
+      .queryExecution.executedPlan.toString
+    assert(!p2.contains("BroadcastHashJoin"),
+      s"stats above the threshold must refuse the auto-broadcast:\n$p2")
     // the estimate itself: exact numRows from the rows sidecars, bytes
     // from the post-pruning file lengths
     val scan = dim.queryExecution.executedPlan.collect {
