@@ -4,6 +4,15 @@ package graft
   * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line with per-query seconds.
   * Failures are recorded per query in an `errors` map (never swallowed —
   * a broken query must not bench as ~0 s with rc=0; VERDICT.md round 1).
+  *
+  * Accounting: every build of memoized shared state (a base-table load,
+  * a lake fixture, a graft.etl.Artifact such as the dedup pair relation)
+  * is billed to `prepare_sec`, wherever it runs — the warm-up, a query's
+  * untimed warm lap, or a timed run. [[graft.etl.Memo]] meters each build
+  * on the thread that runs it; a timed run's builds are subtracted from
+  * that run, and a query's cost is the minimum over its runs of what
+  * remains. `query_sec` sums those minimums; `total_sec` is
+  * prepare + query.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -19,23 +28,15 @@ object Bench {
     val probeParSec = BoxProbe.measurePar()
 
     val spark = Sessions.local()
-
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    def billedNanos: Long = graft.etl.Memo.billed.nanos
+    val billed0 = billedNanos
 
     // untimed warm-up: initialize the parquet reader, shuffle, codegen and
     // JIT infrastructure once, so the alphabetically-first query does not
     // absorb session start-up in its measurement; then read every base
     // table fully once (noop sink = full scan, no result materialization)
-    // so one-shot queries measure compute, not the machine's cold page
-    // cache — min-of-N already gives every repeated query a warm read.
+    // so a query's first run measures compute, not the machine's cold
+    // page cache.
     try {
       spark.range(1 << 20).selectExpr("sum(id)").collect()
       import graft.model.Tables
@@ -44,11 +45,6 @@ object Bench {
         Tables.part, Tables.nation, Tables.region, Tables.events,
         Tables.documents, Tables.embeddings)
         .foreach(t => t(spark, sfDir).write.mode("overwrite").format("noop").save())
-      // stage the shared tokenized-corpus relation here (ETL, not query
-      // cost — a maintained lake table at production scale) so its
-      // one-time build never bills to whichever of its ~8 consumers
-      // sorts first in the suite (BENCH_r08: q126 absorbed it).
-      graft.queries.TextCorpus.stageTokenized(spark, sfDir)
     } catch { case e: Throwable => System.err.println(s"warm-up: $e") }
 
     // Per-query time = MIN over `runs` repeats: single runs swing up to
@@ -56,34 +52,6 @@ object Bench {
     // not be compiled in time, nondeterministically — observed as
     // "regressions" that vanish on re-run), and min-of-N is the standard
     // way to report the code's actual cost rather than the JIT's mood.
-    // EXCEPTION: queries that build JVM-memoized shared state on first run
-    // (the dedup pair checkpoint, the dashboard session, the incremental
-    // lake) run ONCE — their repeat would measure the warm amortized path
-    // and silently drop the one-time pipeline cost from the total.
-    val oneShot = Set(
-      // NOTE on builder attribution: the suite runs alphabetically, so the
-      // FIRST consumer of a session checkpoint is what actually builds it.
-      // For the MinHash pair relation that is q172 (not q182 as the r19
-      // note claimed — ADVICE r19): q172_split_leakage consumes
-      // Dedup.nearDupPairsCkpt and sorts before q182, so its warm lap was
-      // silently absorbing the pair build. q172 is therefore one_shot and
-      // bills the pair-checkpoint build; q182 (the first ccLabelsCkpt
-      // consumer) stays one_shot and bills the CC-label build layered on
-      // the now-warm pair relation. q35 keeps its slot for the ledger's
-      // cross-round continuity; it measures the warm checkpoint read.
-      "q172_split_leakage",        // builds the MinHash-LSH pair checkpoint (first consumer)
-      "q182_dup_cluster_histogram", // builds the CC label checkpoint (r19/r20)
-      "q35_near_dup_pairs",        // warm pair-checkpoint read (ledger continuity)
-      "q55_dash_kpis",             // opens the dashboard session: its one grouping action
-      "q60_incremental_roundtrip", // runs the two incremental batches
-      "q65_decontamination",       // materializes the shared shingle relation
-      "q119_compacted_lake_roundtrip", // appends 3 batches + compacts the lake
-      "q160_jdbc_roundtrip",       // stages events into the embedded Derby db
-      "q164_bpe_train_loop",       // runs the memoized BPE training pass q169 shares
-      "q173_bigram_perplexity",    // builds the surprisal-model checkpoint q210 shares (r20)
-      "q193_semantic_leakage",     // builds the embedding LSH pair checkpoint q54 shares
-      "q258_group_commit_exactly_once" // 8-writer group-committed lake build + replays
-    )
     // 3 timed runs by default (median-of-3 is the committed protocol,
     // VERDICT r9/r10): with 2 runs a single JIT-queue hiccup makes the
     // spread section cry wolf every round; with 3, `med` separates a
@@ -127,16 +95,14 @@ object Bench {
     // accumulated debt). Opt out with SPARK_GRAFT_BENCH_GC=0 to A/B.
     val gcEachQuery = sys.env.getOrElse("SPARK_GRAFT_BENCH_GC", "1") == "1"
     case class R(name: String, best: Double, med: Double, worst: Double,
-                 n: Int, err: Option[String])
-    // Per-query untimed warm lap (non-one-shot queries only): the first
-    // execution of a query pays whole-stage-codegen compile + JIT queue
-    // nondeterminism, which showed up as >2× min/max spreads on small
-    // queries (BENCH_r07: q132 3.8×, q54 3.0×, q37 2.9×, q113 2.4×) with
-    // identical plans. Running once untimed before the measured repeats
-    // makes both timed runs measure the compiled code. It also hoists any
-    // memoized first-use setup (q132's ANALYZE TABLE stats build) out of
-    // the timed window. One-shots skip it — their single run must include
-    // their one-time pipeline cost by design. Opt out: SPARK_GRAFT_BENCH_WARM=0.
+                 err: Option[String], gcMs: Long)
+    // Per-query untimed warm lap: the first execution of a query pays
+    // whole-stage-codegen compile + JIT queue nondeterminism, which showed
+    // up as >2× min/max spreads on small queries (BENCH_r07: q132 3.8×,
+    // q54 3.0×, q37 2.9×, q113 2.4×) with identical plans. Running once untimed before the measured repeats
+    // makes both timed runs measure the compiled code. Memoized first-use
+    // builds usually run here; they bill to prepare either way.
+    // Opt out: SPARK_GRAFT_BENCH_WARM=0.
     val warmLap = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARM", "1") == "1"
     // After the warm lap, wait for the JIT compile queue to drain before
     // the timed runs (bounded): the warm lap ENQUEUES the query's
@@ -159,7 +125,7 @@ object Bench {
       }
     }
     val results = selected.map { case (name, fn) =>
-      val n = if (oneShot(name)) 1 else runs
+      // per-run cost = wall minus the builds billed inside that run
       var times = Vector.empty[Double]
       // per-run GC deltas IN RUN ORDER (times above get sorted): when a
       // spread anomaly fires (BENCH_r14's q191: run 1 fast, runs 2-3
@@ -169,44 +135,28 @@ object Bench {
       var runGc = Vector.empty[Long]
       var err: Option[String] = None
       var i = 0
-      if (warmLap && !oneShot(name)) {
+      val prep0 = billedNanos
+      if (warmLap) {
         // failures here are ignored — the timed loop records them properly
         try fn(spark, sfDir).count() catch { case _: Throwable => () }
-        spark.catalog.clearCache()
+        Runner.cleanup(spark)
         jitSettle(2000)
       }
       val gc0 = gcMs
       val wall0 = System.nanoTime()
-      while (i < n && err.isEmpty) {
+      while (i < runs && err.isEmpty) {
+        val b0 = billedNanos
         val t0 = System.nanoTime()
         val g0 = gcMs
         try fn(spark, sfDir).count()
         catch { case e: Throwable => err = Some(s"${e.getClass.getSimpleName}: ${e.getMessage}") }
-        val t = (System.nanoTime() - t0) / 1e9
-        times :+= t
+        times :+= (System.nanoTime() - t0 - (billedNanos - b0)) / 1e9
         runGc :+= gcMs - g0
-        // drop this query's persisted intermediates (LSH signatures etc.) —
-        // they are per-query, and letting them accumulate across the whole
-        // inventory starves later queries' execution memory. Outside the
-        // timed window: cache teardown is bench bookkeeping, not query time.
-        spark.catalog.clearCache()
-        // streaming queries leave memory-sink temp views holding their
-        // drained rows in driver memory; dropping them after the timed
-        // window keeps tens of accumulated sinks from pressuring the heap
-        // of every later query. (Any lingering stream is stopped too —
-        // AvailableNow drains terminate themselves, this is a belt.)
-        spark.streams.active.foreach(_.stop())
-        spark.catalog.listTables().collect()
-          .filter(t => t.isTemporary && t.name.contains("_sink_"))
-          .foreach(t => spark.catalog.dropTempView(t.name))
-        // anything still persisted after clearCache is a localCheckpoint
-        // stray (checkpoint blocks are RDD-level — clearCache cannot see
-        // them, and the async ContextCleaner reclaims them too late for a
-        // 176-query suite; all cross-query memoized state is parquet- or
-        // local-rows-backed, so a sweep here releases only dead blocks).
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+        // outside the timed window: teardown is bench bookkeeping
+        Runner.cleanup(spark)
         i += 1
       }
+      val prepareS = (billedNanos - prep0) / 1e9
       // gc_ms = GC incurred during this query's timed runs ONLY — read the
       // delta BEFORE the inter-query cleanup collection, and report that
       // collection's cost as its own field so the two never conflate.
@@ -223,8 +173,8 @@ object Bench {
         "%.3f".formatLocal(java.util.Locale.ROOT, t)).mkString("[", ",", "]")
       val runGcField = runGc.mkString("[", ",", "]")
       appendDetail(
-        s"""{"q":${jstr(name)},"best":${"%.3f".formatLocal(java.util.Locale.ROOT, best)},"med":${"%.3f".formatLocal(java.util.Locale.ROOT, med)},"worst":${"%.3f".formatLocal(java.util.Locale.ROOT, worst)},"runs":$runsField,"run_gc_ms":$runGcField,"wall":${"%.3f".formatLocal(java.util.Locale.ROOT, wallS)},"gc_ms":$queryGcMs,"cleanup_gc_ms":$cleanupGcMs,"heap_mb":$heapMb}""")
-      R(name, best, med, worst, n, err)
+        s"""{"q":${Runner.json(name)},"best":${"%.3f".formatLocal(java.util.Locale.ROOT, best)},"med":${"%.3f".formatLocal(java.util.Locale.ROOT, med)},"worst":${"%.3f".formatLocal(java.util.Locale.ROOT, worst)},"runs":$runsField,"run_gc_ms":$runGcField,"wall":${"%.3f".formatLocal(java.util.Locale.ROOT, wallS)},"prepare_s":${"%.3f".formatLocal(java.util.Locale.ROOT, prepareS)},"gc_ms":$queryGcMs,"cleanup_gc_ms":$cleanupGcMs,"heap_mb":$heapMb}""")
+      R(name, best, med, worst, err, runGc.sum)
     }
     // 3-decimal seconds: ~70 full-precision doubles push the line past the
     // harness's stdout-tail window and truncate the leading fields (the
@@ -237,8 +187,8 @@ object Bench {
     // fields (BENCH_r04 lost its total this way). Full names appear only
     // in `errors` (rare, and a failing run matters more than its width).
     def short(n: String): String = n.takeWhile(_ != '_')
-    val qs = results.map(r => s"${jstr(short(r.name))}:${sec(r.best)}").mkString("{", ",", "}")
-    val errs = results.collect { case R(k, _, _, _, _, Some(e)) => s"${jstr(k)}:${jstr(e)}" }
+    val qs = results.map(r => s"${Runner.json(short(r.name))}:${sec(r.best)}").mkString("{", ",", "}")
+    val errs = results.collect { case R(k, _, _, _, Some(e), _) => s"${Runner.json(k)}:${Runner.json(e)}" }
       .mkString("{", ",", "}")
     // Variance disclosure without blowing the line budget: `spread` lists
     // [runs, min, med, max] ONLY for queries whose MEDIAN disagrees
@@ -247,28 +197,21 @@ object Bench {
     // section trustworthy: with 3 runs, one JIT/GC stall inflates max but
     // not med — med ≫ min is the signature of a real, repeatable
     // slowdown, which is the only thing worth a regression triage.
-    // One-shots (n=1) never appear.
     val spread = results
-      .filter(r => r.n > 1 && r.err.isEmpty &&
+      .filter(r => runs > 1 && r.err.isEmpty &&
         (r.med - r.best) > 0.25 && r.med > 1.5 * r.best)
       .sortBy(r => r.best - r.med)
       .take(10)
-      .map(r => s"${jstr(short(r.name))}:[${r.n},${sec(r.best)},${sec(r.med)},${sec(r.worst)}]")
+      .map(r => s"${Runner.json(short(r.name))}:[$runs,${sec(r.best)},${sec(r.med)},${sec(r.worst)}]")
       .mkString("{", ",", "}")
-    val total = results.map(_.best).sum
-    // the total SPLIT by one-shot membership (VERDICT r18 ask 3): a
-    // query joining the one_shot list moves its one-time pipeline cost
-    // into the total without any code getting slower (r18's +4.8%
-    // "regression" was exactly q193 joining the list), so cross-round
-    // total comparisons must use total_amortized_sec at equal one_shot
-    // sets — and fall back to per-query detail medians otherwise.
-    val oneShotSec = results.filter(r => oneShot(r.name)).map(_.best).sum
-    // one-shots are listed in the output so a reader comparing per-query
-    // numbers knows which entries deliberately include one-time pipeline
-    // cost (they run once; repeats would measure the warm amortized path)
-    val oneShots = selected.map(_._1).filter(oneShot)
-      .map(n => jstr(short(n))).mkString("[", ",", "]")
-    println(s"""{"metric":"total","value":${sec(total)},"unit":"sec","queries":$qs,"errors":$errs,"runs":$runs,"spread":$spread,"one_shot":$oneShots,"gc_sec":${sec(gcMs / 1000.0)},"heap_mb":$heapMb,"probe_sec":${sec(probeSec)},"probe_par_sec":${sec(probeParSec)},"sf":"$sfDir","n_queries":${results.size},"total_amortized_sec":${sec(total - oneShotSec)},"total_one_shot_sec":${sec(oneShotSec)},"total_sec":${sec(total)}}""")
+    val querySec = results.map(_.best).sum
+    val prepareSec = (billedNanos - billed0) / 1e9
+    // GC split: collections inside the timed windows (Σ run_gc_ms) versus
+    // the harness's own (the per-query System.gc(), the warm-up, warm laps
+    // and the cleanup between runs)
+    val gcQuerySec = results.map(_.gcMs).sum / 1000.0
+    val gcHarnessSec = gcMs / 1000.0 - gcQuerySec
+    println(s"""{"metric":"total","value":${sec(prepareSec + querySec)},"unit":"sec","queries":$qs,"errors":$errs,"runs":$runs,"spread":$spread,"prepare_sec":${sec(prepareSec)},"query_sec":${sec(querySec)},"total_sec":${sec(prepareSec + querySec)},"gc_query_sec":${sec(gcQuerySec)},"gc_harness_sec":${sec(gcHarnessSec)},"heap_mb":$heapMb,"probe_sec":${sec(probeSec)},"probe_par_sec":${sec(probeParSec)},"sf":"$sfDir","n_queries":${results.size}}""")
     spark.stop()
     if (results.exists(_.err.nonEmpty)) sys.exit(1)
   }

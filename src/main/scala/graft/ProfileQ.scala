@@ -42,9 +42,7 @@ object ProfileQ {
         val t1 = System.nanoTime()
         df.count()
         val t2 = System.nanoTime()
-        spark.catalog.clearCache()
-        spark.streams.active.foreach(_.stop())
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+        Runner.cleanup(spark)
         Thread.sleep(300) // let listener events drain
         val jobMs = done.toArray(Array.empty[(Int, Long, String)]).sortBy(_._1)
         val jobTotal = jobMs.map(_._2).sum / 1e6

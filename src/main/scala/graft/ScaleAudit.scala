@@ -36,8 +36,7 @@ object ScaleAudit {
         val df = fn(spark, dir)
         df.count()
         val p = profile(df.queryExecution.executedPlan.toString)
-        spark.catalog.clearCache()
-        spark.streams.active.foreach(_.stop())
+        Runner.cleanup(spark)
         p
       }
       try {

@@ -56,30 +56,14 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         if (timed) println(f"VERIFY $name%-36s FAILED")
       }
-      spark.catalog.clearCache() // per-query intermediates must not accumulate
-      // localCheckpoint strays are RDD-level and invisible to clearCache;
-      // released here so 176 queries don't accumulate dead blocks (all
-      // cross-query memoized state is parquet- or local-rows-backed).
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      Runner.cleanup(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Runner.json(k)}: ${Runner.json(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val schemaJson = schemas
       .map { case (k, cols) =>
-        s"${q(k)}: ${cols.map(q).mkString("[", ",", "]")}" }
+        s"${Runner.json(k)}: ${cols.map(Runner.json).mkString("[", ",", "]")}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/schemas.json"), schemaJson)
   }

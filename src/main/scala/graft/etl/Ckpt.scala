@@ -23,9 +23,17 @@ object Ckpt {
     * plan: only LogicalRDD leaves are touched. A released Dataset must
     * not be recomputed (the lineage was truncated at the checkpoint),
     * so call this only once every consumer of it has materialized. */
-  def release(df: DataFrame): Unit =
+  def release(df: DataFrame): Unit = releaseBeyond(df, Set.empty)
+
+  /** [[release]] of what a build made from `input`: the blocks of every
+    * checkpoint in `out`'s plan except those `input` itself reads, which
+    * belong to the caller. */
+  def releaseBuilt(out: DataFrame, input: DataFrame): Unit =
+    releaseBeyond(out, input.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd.id }.toSet)
+
+  private def releaseBeyond(df: DataFrame, keep: Set[Int]): Unit =
     df.queryExecution.analyzed.foreach {
-      case l: LogicalRDD => l.rdd.unpersist(blocking = false)
-      case _             => ()
+      case l: LogicalRDD if !keep(l.rdd.id) => l.rdd.unpersist(blocking = false)
+      case _                                => ()
     }
 }

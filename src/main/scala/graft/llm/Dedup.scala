@@ -153,7 +153,7 @@ object Dedup {
     * branches of the near-dup pipeline: [[minhashSignatures]] and
     * [[shingleSets]] each rerun the fan-out + shingle-hash map pass (the
     * pipeline's dominant per-row work) when called separately; deriving
-    * both from one cached relation halves it. Caller owns the unpersist. */
+    * both from one materialized relation halves it. */
   private def hashedShingles(docs: DataFrame, shingleN: Int): DataFrame = {
     require(shingleN == 3, "shingle_hashes is registered for n=3")
     fanOut(docs)
@@ -173,131 +173,51 @@ object Dedup {
     * a superset of the ≥threshold pairs at these params; the verify filter
     * makes the result exact).
     *
-    * The hashed-shingle relation is persisted AND materialized eagerly:
-    * the downstream joins read it from several racing broadcast-build
-    * threads, and planning against an unmaterialized cache is a race that
-    * occasionally re-derives the whole pipeline serially inside a
-    * broadcast job (observed as nondeterministic 10× swings). The band
+    * The hashed-shingle relation is materialized eagerly (a local
+    * checkpoint): the downstream joins read it from several racing
+    * broadcast-build threads, and planning against an unmaterialized cache
+    * is a race that occasionally re-derives the whole pipeline serially
+    * inside a broadcast job (observed as nondeterministic 10× swings).
+    * Its blocks belong to the caller: `Ckpt.release` on the result frees
+    * them once it has been consumed, as [[nearDupPairsCkpt]] does. The band
     * self-join's duplicate read of the signature aggregate is handled by
     * Spark's ReusedExchange (identical subplans inside one query reuse
     * one shuffle). At 100 TB this is the stage a production pipeline
     * checkpoints to the lake. */
   def nearDupPairs(docs: DataFrame, threshold: Double, shingleN: Int = 3): DataFrame = {
-    val hashed = hashedShingles(docs, shingleN).persist()
-    hashed.count()
+    val hashed = hashedShingles(docs, shingleN).localCheckpoint()
     verifiedJaccard(candidatePairs(sigsFrom(hashed)), setsFrom(hashed))
       .filter(col("jaccard") >= threshold)
   }
 
-  // ── Pair-relation checkpoint ──────────────────────────────────────────
+  // ── Shared pair and label relations ──────────────────────────────────
   //
   // The MinHash-LSH pipeline is the expensive stage of the dedup family;
   // everything downstream (the pair report, near-dedup, connected-component
-  // clustering) consumes the SAME small pair relation. A production
-  // pipeline at 100 TB checkpoints that relation to the lake and fans the
-  // consumers out from the checkpoint; re-deriving the signatures per
-  // consumer would multiply the dominant cost by the number of consumers.
-  //
-  // The registry below is that checkpoint seam, scoped to one JVM: the
-  // first consumer of a (corpus, threshold, shingleN) key materializes the
-  // pairs to scratch parquet (replacing the earlier persist()+count()
-  // stand-in — a parquet write is a clean job barrier, so the racing
-  // broadcast-build problem the eager counts worked around disappears with
-  // the caches), and every later consumer re-reads the tiny file. Per-JVM
-  // scoping keeps benchmarks honest: a fresh session always pays for one
-  // full pipeline run before any consumer benefits.
+  // clustering, the split-leakage audit) consumes the SAME small pair
+  // relation. A production pipeline at 100 TB checkpoints that relation to
+  // the lake and fans the consumers out from it; re-deriving the
+  // signatures per consumer would multiply the dominant cost by the number
+  // of consumers. Both relations below are graft.etl.Artifact builds: once
+  // per (corpus, params) and JVM, then read back from parquet.
 
-  private lazy val ckptRoot: java.nio.file.Path = {
-    val base =
-      if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get("/dev/shm")))
-        java.nio.file.Paths.get("/dev/shm")
-      else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    val dir = java.nio.file.Files.createTempDirectory(base, "graft-dedup-ckpt")
-    // deleteOnExit cannot remove a non-empty directory; a shutdown hook
-    // recursively clears the checkpoint tree so /dev/shm (RAM-backed) does
-    // not accumulate parquet across JVM runs.
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(p: java.nio.file.Path): Unit = {
-        if (java.nio.file.Files.isDirectory(p)) {
-          val children = java.nio.file.Files.list(p)
-          try children.forEach(rm) finally children.close()
-        }
-        java.nio.file.Files.deleteIfExists(p)
-        ()
-      }
-      rm(dir)
-    }))
-    dir
-  }
-
-  /** Checkpoint identity: caller key + banding params + a cheap content
-    * fingerprint (row count, min/max doc_id) so a regenerated or different
-    * corpus passed under the same `corpusKey` cannot silently reuse stale
-    * pairs. */
-  private final case class CkptKey(
-      corpusKey: String, threshold: Double, shingleN: Int,
-      nDocs: Long, minId: String, maxId: String)
-  private val ckptPaths = new java.util.concurrent.ConcurrentHashMap[CkptKey, String]()
-  private val ckptLocks = new java.util.concurrent.ConcurrentHashMap[CkptKey, Object]()
-  private val ckptSeq   = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** Near-dup pairs via the per-session lake checkpoint: computed once per
-    * (corpusKey, content fingerprint, params), re-read from parquet by
-    * every later consumer in the same JVM. Locking is per-key, so two
-    * different corpora can build their checkpoints concurrently. */
-  def nearDupPairsCkpt(docs: DataFrame, corpusKey: String, threshold: Double,
-                       shingleN: Int = 3): DataFrame = {
-    val fp = docs.agg(count(lit(1)), min("doc_id"), max("doc_id")).collect()(0)
-    val key = CkptKey(corpusKey, threshold, shingleN,
-      fp.getLong(0), String.valueOf(fp.get(1)), String.valueOf(fp.get(2)))
-    val lock = ckptLocks.computeIfAbsent(key, _ => new Object)
-    val dir = lock.synchronized {
-      Option(ckptPaths.get(key)).getOrElse {
-        val d = ckptRoot.resolve(s"pairs_${ckptSeq.getAndIncrement()}").toString
-        val hashed = hashedShingles(docs, shingleN).persist()
-        hashed.count()
-        try
-          verifiedJaccard(candidatePairs(sigsFrom(hashed)), setsFrom(hashed))
-            .filter(col("jaccard") >= threshold)
-            .write.mode("overwrite").parquet(d)
-        finally { val _ = hashed.unpersist() }
-        ckptPaths.put(key, d)
-        d
-      }
-    }
-    docs.sparkSession.read.parquet(dir)
-  }
+  /** [[nearDupPairs]] built once per (corpus, threshold, shingleN). */
+  def nearDupPairsCkpt(docs: DataFrame, threshold: Double, shingleN: Int = 3): DataFrame =
+    graft.etl.Artifact("dedup-pairs", threshold, shingleN)(docs)(
+      nearDupPairs(_, threshold, shingleN))
 
   /** (doc_id, component) transitive-cluster labels over the thresholded
-    * pair checkpoint, materialized once per (corpus fingerprint,
-    * threshold) exactly like the pair relation itself: the three cluster
-    * consumers (q53 survivors, q182 histogram, q192 quality survivorship)
-    * each re-ran the O(log n) star contraction per invocation over an
-    * IDENTICAL pair input. In production the label relation is a
-    * maintained lake table refreshed alongside the pair relation —
-    * consumers read it, they don't re-derive it per query. Keyed by the
-    * same cheap content fingerprint as [[nearDupPairsCkpt]] (and sharing
-    * its stale-reuse caveat, ADVICE r18). */
-  def ccLabelsCkpt(docs: DataFrame, corpusKey: String, threshold: Double,
-                   shingleN: Int = 3): DataFrame = {
-    val fp = docs.agg(count(lit(1)), min("doc_id"), max("doc_id")).collect()(0)
-    val key = CkptKey(corpusKey + "#cc", threshold, shingleN,
-      fp.getLong(0), String.valueOf(fp.get(1)), String.valueOf(fp.get(2)))
-    val lock = ckptLocks.computeIfAbsent(key, _ => new Object)
-    val dir = lock.synchronized {
-      Option(ckptPaths.get(key)).getOrElse {
-        val d = ckptRoot.resolve(s"cc_${ckptSeq.getAndIncrement()}").toString
-        val labels = connectedComponentsLogN(
-          nearDupPairsCkpt(docs, corpusKey, threshold, shingleN)
-            .filter(col("jaccard") >= threshold))
-        try labels.write.mode("overwrite").parquet(d)
-        finally graft.etl.Ckpt.release(labels)
-        ckptPaths.put(key, d)
-        d
-      }
+    * pair relation, built once per (corpus, threshold, shingleN) like the
+    * pair relation itself: the three cluster consumers (q53 survivors,
+    * q182 histogram, q192 quality survivorship) would otherwise each
+    * re-run the O(log n) star contraction over an IDENTICAL pair input.
+    * In production the label relation is a maintained lake table
+    * refreshed alongside the pair relation. */
+  def ccLabelsCkpt(docs: DataFrame, threshold: Double, shingleN: Int = 3): DataFrame =
+    graft.etl.Artifact("dedup-cc", threshold, shingleN)(docs) { in =>
+      connectedComponentsLogN(
+        nearDupPairsCkpt(in, threshold, shingleN).filter(col("jaccard") >= threshold))
     }
-    docs.sparkSession.read.parquet(dir)
-  }
 
   /** Near-dedup given a precomputed pair relation (doc_a, doc_b, …): drop
     * every document that is the *larger* doc_id of some near-dup pair
@@ -310,7 +230,7 @@ object Dedup {
   }
 
   /** Near-dedup computing its own pairs (tests / one-shot callers; query
-    * paths share the checkpointed relation via [[nearDupPairsCkpt]]). */
+    * paths share the built relation via [[nearDupPairsCkpt]]). */
   def nearDedup(docs: DataFrame, threshold: Double): DataFrame =
     nearDedup(docs, nearDupPairs(docs, threshold))
 

@@ -216,7 +216,7 @@ object AuditOps {
          |       CAST(sum(n_bigrams) AS BIGINT) AS total_bigrams,
          |       CAST(sum((rank % 1000003) * (doc_id % 1000003)) AS BIGINT) AS order_fp
          |FROM rk CROSS JOIN tot GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-      val sc = CurationOps.bigramSurprisalCkpt(s, d)
+      val sc = CurationOps.bigramSurprisalCkpt(docs(s, d))
         .select(col("doc_id"), col("n_bigrams"),
           round(col("ssum").cast("double") / col("n_bigrams")).cast("long").as("sm"))
       val tot = sc.agg(count(lit(1)).cast("long").as("n_total"))

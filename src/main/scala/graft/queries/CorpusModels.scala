@@ -186,7 +186,7 @@ object CorpusModels {
     qualitySurvivorsFromLabels(docsDf, Dedup.connectedComponentsLogN(pairs))
 
   /** [[qualitySurvivors]] over a precomputed (doc_id, component) label
-    * relation — the seam q192 uses to ride the session CC checkpoint
+    * relation — the seam q192 uses to ride the shared CC label artifact
     * instead of re-running the star contraction per invocation. */
   private[queries] def qualitySurvivorsFromLabels(docsDf: DataFrame,
                                                   labels: DataFrame): DataFrame = {
@@ -351,7 +351,7 @@ object CorpusModels {
          |       round(100.0 * sum(qp) / count(*)) / 100.0 AS avg_q_ppm
          |FROM rk WHERE rn = 1 GROUP BY lang ORDER BY lang""".stripMargin) { (s, d) =>
       qualitySurvivorsFromLabels(fanned(s, d),
-          Dedup.ccLabelsCkpt(docs(s, d), d, LlmPipeline.JaccardThreshold))
+          Dedup.ccLabelsCkpt(docs(s, d), LlmPipeline.JaccardThreshold))
         .groupBy("lang")
         .agg(count(lit(1)).as("n_survivors"),
           (round(lit(100.0) * sum("qp") / count(lit(1))) / 100.0).as("avg_q_ppm"))

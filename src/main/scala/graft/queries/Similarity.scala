@@ -292,9 +292,8 @@ object Similarity {
          |SELECT vec_a, vec_b, cm / 1e6 AS cos
          |FROM p WHERE cm >= 400000 ORDER BY vec_a, vec_b""".stripMargin
     }) { (s, d) =>
-      // rides the per-session verified-pair checkpoint q193 shares (the
-      // suite's alphabetically-first consumer, q193, is the builder)
-      Ann.lshNearDupPairsCkpt(corpus(s, d), Dim, 400000L, s"emb-$d")
+      // reads the verified-pair artifact q193 shares
+      Ann.lshNearDupPairsCkpt(corpus(s, d), Dim, 400000L)
         .select(col("vec_a"), col("vec_b"), (col("cm") / 1e6).as("cos"))
         .orderBy("vec_a", "vec_b")
     },
@@ -1130,7 +1129,7 @@ object Similarity {
           .when(conv(substring(md5(col("vec_id").cast("string")), 1, 4), 16, 10)
             .cast("long") % 100 < 90, "val")
           .otherwise("test").as(splitAs))
-      Ann.lshNearDupPairsCkpt(corpus(s, d), Dim, 400000L, s"emb-$d")
+      Ann.lshNearDupPairsCkpt(corpus(s, d), Dim, 400000L)
         .join(split("vec_a", "sa"), "vec_a")
         .join(split("vec_b", "sb"), "vec_b")
         .select(least(col("sa"), col("sb")).as("split_a"),

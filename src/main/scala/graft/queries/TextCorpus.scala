@@ -26,29 +26,18 @@ object TextCorpus {
   private val tokCte =
     "SELECT doc_id, lang, unnest(string_split(text, ' ')) AS tok FROM documents"
 
-  /** The exploded (doc_id, lang, tok) relation, tokenized ONCE per
-    * (session, corpus) and checkpointed to scratch parquet — the
-    * "tokenize once, curate many" seam. The vocabulary and TF-IDF passes
-    * (q70, q71 — whose tf and df branches each reference the relation)
-    * read this instead of re-running the fan-out + split map pass per
-    * query; at 100 TB the tokenized corpus is a lake table maintained
-    * alongside the documents themselves. */
-  private val tokensDir = new graft.etl.Memo[(SparkSession, String), String]
-  private def tokenized(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(tokensDir((s, d)) {
-      val tmp = graft.etl.Scratch.tempDir("graft-tokens").toString
-      fanned(s, d)
-        .select(col("doc_id"), col("lang"),
-          explode(TextOps.tokens(col("text"))).as("tok"))
-        .write.mode("overwrite").parquet(tmp)
-      tmp
-    })
-
-  /** Force the one-time tokenized-corpus staging (ETL, not query cost:
-    * at 100 TB this relation is a lake table maintained alongside the
-    * documents) — called from Bench's untimed warm-up so its build never
-    * bills to whichever tokenized consumer happens to sort first. */
-  def stageTokenized(s: SparkSession, d: String): Unit = tokenized(s, d)
+  /** The exploded (doc_id, lang, tok) relation as a graft.etl.Artifact,
+    * tokenized once per corpus — the "tokenize once, curate many" seam.
+    * The vocabulary and TF-IDF passes (q70, q71 — whose tf and df
+    * branches each reference the relation) read this instead of
+    * re-running the fan-out + split map pass per query; at 100 TB the
+    * tokenized corpus is a lake table maintained alongside the documents
+    * themselves. */
+  private[queries] def tokenized(docs: DataFrame): DataFrame =
+    graft.etl.Artifact("tokens")(docs) { in =>
+      graft.etl.FanOut.fanOut(in, col("doc_id"))
+        .select(col("doc_id"), col("lang"), explode(TextOps.tokens(col("text"))).as("tok"))
+    }
 
   /** Deterministic "random" order / bucket assignment: md5 of the doc id —
     * identical lowercase hex in both engines, stable under any partitioning
@@ -80,7 +69,7 @@ object TextCorpus {
          |       count(DISTINCT doc_id) AS df
          |FROM tok GROUP BY tok
          |ORDER BY tf DESC, tok LIMIT 30""".stripMargin) { (s, d) =>
-      tokenized(s, d)
+      tokenized(docs(s, d))
         .groupBy("tok")
         .agg(count(lit(1)).as("tf"), countDistinct("doc_id").as("df"))
         .orderBy(col("tf").desc, col("tok"))
@@ -107,7 +96,7 @@ object TextCorpus {
          |        PARTITION BY doc_id ORDER BY tfidf DESC, tok) AS rn FROM sc)
          |SELECT doc_id, tok, tfidf FROM r WHERE rn <= 3
          |ORDER BY doc_id, tfidf DESC, tok""".stripMargin) { (s, d) =>
-      val tok = tokenized(s, d)
+      val tok = tokenized(docs(s, d))
       val tf = tok.groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
       val df = tok.groupBy("tok").agg(countDistinct("doc_id").as("df"))
       val n  = docs(s, d).agg(count(lit(1)).as("n"))
@@ -412,7 +401,7 @@ object TextCorpus {
          |SELECT doc_id, n_tok,
          |       round(CAST(ssum AS DOUBLE) / n_tok) / 1e6 AS avg_surprisal
          |FROM d ORDER BY avg_surprisal DESC, doc_id LIMIT 20""".stripMargin) { (s, d) =>
-      val tok = tokenized(s, d)
+      val tok = tokenized(docs(s, d))
       val uni = tok.groupBy("tok").agg(count(lit(1)).as("tf"))
       val tot = uni.agg(sum("tf").cast("long").as("n"))
       tok.join(broadcast(uni), "tok")
@@ -528,7 +517,7 @@ object TextCorpus {
          |        GROUP BY 1, 2)
          |SELECT tok, CAST(tf AS BIGINT) AS exact_tf, CAST(est AS BIGINT) AS cms_est
          |FROM est ORDER BY exact_tf DESC, tok LIMIT 20""".stripMargin) { (s, d) =>
-      val tf = tokenized(s, d).groupBy("tok").agg(count(lit(1)).as("tf"))
+      val tf = tokenized(docs(s, d)).groupBy("tok").agg(count(lit(1)).as("tf"))
       val hashes = tf
         .select(col("tok"), col("tf"),
           explode(array(lit(0), lit(1), lit(2))).as("row_id"))
@@ -586,7 +575,7 @@ object TextCorpus {
          |                    + coalesce(sm, 0.0))) / 1e6 AS bm25
          |FROM piv ORDER BY bm25 DESC, doc_id LIMIT 20""".stripMargin) { (s, d) =>
       val terms = Seq("join", "vector", "merge")
-      val tok = tokenized(s, d)
+      val tok = tokenized(docs(s, d))
       val dl = tok.groupBy("doc_id").agg(count(lit(1)).as("dl"))
       val stats = dl.agg(
         (sum("dl").cast("double") / count(lit(1))).as("avgdl"),
@@ -673,7 +662,7 @@ object TextCorpus {
       val dense = Ann
         .bruteForceTopK(embC, embC.filter(col("id") < 5).select("id", "vec"), 30)
         .select(col("qid"), col("vec_id").as("doc_id"), col("rank").as("dense_rank"))
-      val dt = tokenized(s, d).select("doc_id", "tok").distinct()
+      val dt = tokenized(docs(s, d)).select("doc_id", "tok").distinct()
       val qt = dt.filter(col("doc_id") < 5).select(col("doc_id").as("qid"), col("tok"))
       val overlap = dt.join(broadcast(qt), "tok")
         .filter(col("doc_id") =!= col("qid"))

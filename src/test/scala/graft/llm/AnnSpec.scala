@@ -218,7 +218,7 @@ class AnnSpec extends AnyFunSuite {
     val a = spark.createDataFrame(
       (0 until 10).map(i => (i.toLong, oneHot(if (i == 1) 0 else i))))
       .toDF("id", "vec").select(col("id"), col("vec").cast("array<float>"))
-    val pa = Ann.lshNearDupPairsCkpt(a, dim, 400000L, "spec-ckpt-inval")
+    val pa = Ann.lshNearDupPairsCkpt(a, dim, 400000L)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pa == Set((0L, 1L)), s"corpus A pairs: $pa")
     // corpus B: SAME ids (count, min, max all unchanged), the duplicate
@@ -226,18 +226,17 @@ class AnnSpec extends AnyFunSuite {
     val b = spark.createDataFrame(
       (0 until 10).map(i => (i.toLong, oneHot(if (i == 3) 2 else i))))
       .toDF("id", "vec").select(col("id"), col("vec").cast("array<float>"))
-    val pb = Ann.lshNearDupPairsCkpt(b, dim, 400000L, "spec-ckpt-inval")
+    val pb = Ann.lshNearDupPairsCkpt(b, dim, 400000L)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pb == Set((2L, 3L)),
       s"regenerated corpus must MISS the checkpoint and recompute: $pb")
     // and the unchanged corpus still HITS (same fingerprint → same path)
-    val pa2 = Ann.lshNearDupPairsCkpt(a, dim, 400000L, "spec-ckpt-inval")
+    val pa2 = Ann.lshNearDupPairsCkpt(a, dim, 400000L)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pa2 == pa)
     // empty corpus: sum(xxhash64) aggregates to NULL, not 0 — the guard
     // must keep the fingerprint read from NPEing (ADVICE r18)
-    assert(Ann.lshNearDupPairsCkpt(a.limit(0), dim, 400000L,
-      "spec-ckpt-empty").count() == 0L)
+    assert(Ann.lshNearDupPairsCkpt(a.limit(0), dim, 400000L).count() == 0L)
   }
 
   test("q176: mined hard negatives always cross labels and never beat the unrestricted best") {

@@ -143,16 +143,15 @@ class DedupSpec extends AnyFunSuite {
     val d = docsOf(
       (1L, "one two three four five six seven eight nine ten eleven twelve"),
       (2L, "one two three four five six seven eight nine ten eleven twelve"))
-    val key = s"dedup-ckpt-test-${System.identityHashCode(this)}"
-    val first = Dedup.nearDupPairsCkpt(d, key, 0.5).collect()
+    val first = Dedup.nearDupPairsCkpt(d, 0.5).collect()
     // same corpus + same key ⇒ the checkpointed relation is served again
-    val again = Dedup.nearDupPairsCkpt(d, key, 0.5).collect()
+    val again = Dedup.nearDupPairsCkpt(d, 0.5).collect()
     assert(first.map(r => (r.getLong(0), r.getLong(1))).toSet == Set((1L, 2L)))
     assert(again.map(r => (r.getLong(0), r.getLong(1))).toSet == Set((1L, 2L)))
     // a DIFFERENT corpus under the same caller key must NOT serve stale
     // pairs: the content fingerprint in the checkpoint identity forces a
     // recompute (here: an empty corpus ⇒ empty pair relation)
-    val changed = Dedup.nearDupPairsCkpt(d.filter(lit(false)), key, 0.5).collect()
+    val changed = Dedup.nearDupPairsCkpt(d.filter(lit(false)), 0.5).collect()
     assert(changed.isEmpty, "regenerated corpus under the same key must recompute")
   }
 

@@ -93,7 +93,7 @@ class CorpusModelsSpec extends AnyFunSuite {
 
   test("q192: one survivor per cluster, argmax quality, singletons kept") {
     val docsDf = graft.model.Tables.documents(spark, TestSpark.Sf)
-    val pairs = Dedup.nearDupPairsCkpt(docsDf, TestSpark.Sf, LlmPipeline.JaccardThreshold)
+    val pairs = Dedup.nearDupPairsCkpt(docsDf, LlmPipeline.JaccardThreshold)
       .filter(col("jaccard") >= LlmPipeline.JaccardThreshold)
     val surv = CorpusModels.qualitySurvivors(docsDf, pairs).cache()
     val labels = Dedup.connectedComponentsLogN(pairs)
