@@ -131,7 +131,7 @@ object ManifestCeiling {
       val keys = spark.range(0, 10)
         .select((col("id") * (nFiles / 10L) * 10 + 5).as("k"))
       val cand = SnapshotLake.candidateFiles(spark, root,
-        SnapshotLake.files(root, head), "k", keys)
+        graft.etl.LakeIndex.of(root, head), SnapshotLake.files(root, head), "k", keys)
       require(cand.size == 10, s"candidates=${cand.size}")
     }
     // the inferred-schema memo's measured win (VERDICT r17 ask 1): an
@@ -182,7 +182,8 @@ object ManifestCeiling {
         case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
           b.scan
       }.collectFirst { case s: graft.sources.GraftLakeCdfScan => s }.get
-      require(scan.planInputPartitions().length == nFiles)
+      require(scan.planInputPartitions().map(
+        _.asInstanceOf[graft.sources.GraftLakePackedPartition].files.size).sum == nFiles)
     }
     cdfPlan("CDF full-range planning (cold)")
     cdfPlan("CDF full-range planning (warm)", 3)

@@ -30,7 +30,7 @@ object Scratch {
 
   /** Delete `p` and everything under it; a symlink is removed, never
     * followed. Best effort: one undeletable entry does not stop the rest. */
-  private def rm(p: Path): Unit =
+  private[graft] def rm(p: Path): Unit =
     try {
       if (Files.isDirectory(p, LinkOption.NOFOLLOW_LINKS)) {
         val children = Files.list(p)

@@ -5,8 +5,10 @@ import java.util.UUID
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.types.{StructField, StructType}
+
+import graft.sources.{GraftLakeFileSet, GraftLakeSource}
 
 /** Snapshot-isolated lake commits — the manifest/version protocol a
   * multi-writer 100 TB lake needs (VERDICT r10 item 2). The plain
@@ -57,12 +59,19 @@ import org.apache.spark.sql.types.{StructField, StructType}
   * On top of the commit protocol sits the maintenance/index layer built
   * round 11: commit-time file statistics and bloom sidecars with pruned
   * readers ([[IndexSpec]]/[[readPruned]]/[[readPointLookup]], harvest in
-  * [[FileStats]]), Z-order and small-file-selective compaction
+  * [[FileStats]], pruning through the per-version [[LakeIndex]]),
+  * Z-order and small-file-selective compaction
   * ([[compactZOrder]]/[[compactSmall]]), index-targeted copy-on-write
   * [[merge]] (+ tag-idempotent [[mergeOnce]] for streaming CDC apply),
   * merge-on-read deletion vectors ([[deleteWhere]], materialized by
   * [[compact]]), the DV-aware [[changeFeed]], commit metadata
   * ([[history]]), and schema-on-read evolution (`read(mergeSchema)`).
+  *
+  * Every row this object reads — snapshot, pruned and point reads,
+  * metadata counts, and the file subsets its rewrites materialize — is
+  * scanned by the `graftlake` DSv2 connector
+  * ([[graft.sources.GraftLakeSource]]): one decoder, one deletion-vector
+  * probe and one column-mapping translation for the whole lake.
   *
   * At 100 TB the mechanics are identical; commit cost is O(change) by
   * construction (log records), resolution O(checkpoint + CkptEvery), and
@@ -437,58 +446,57 @@ object SnapshotLake extends LakeCheckpoints {
 
 
   /** Read a snapshot: the pinned `version`, or the latest at resolution
-    * time. The returned plan holds the manifest's explicit file list, so
-    * commits landing AFTER this call change nothing the reader sees —
-    * the isolation property the directory-listing lake lacks. */
+    * time, through the connector scan. The plan holds the manifest's
+    * explicit file list, so commits landing AFTER this call change
+    * nothing the reader sees — the isolation property the
+    * directory-listing lake lacks. The columns are [[schemaOf]]'s: with
+    * `mergeSchema` (the q156 schema-on-read contract) a column some
+    * files predate reads NULL there; a DECLARED schema (an `evolve`
+    * commit at-or-below the version) names the columns, their order and
+    * types, null-fills files written before it, and surfaces renamed
+    * columns under their logical names. An empty version reads zero rows
+    * under the schema the lake last had. Live deletion vectors drop their
+    * keys' rows during the scan. */
   def read(spark: SparkSession, root: String,
            version: Option[Long] = None,
            mergeSchema: Boolean = false): DataFrame = {
     val v = version.orElse(currentVersion(root)).getOrElse(
       throw new IllegalStateException(s"no committed version at $root"))
-    val st = resolve(root, v)._1
-    val rel = st.files
-    if (rel.isEmpty)
-      // an EMPTY table is a legal state — a delete-all, or an append
-      // whose rows all filtered away (zero-row files never commit, see
-      // [[indexAndCount]]): zero rows under the schema the lake last
-      // had (declared, or inherited from the nearest ancestor version
-      // that listed files)
-      return spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        nullableized(schemaOf(spark, root, Some(v), mergeSchema)))
-    // mergeSchema = schema-on-read evolution (the q156 contract on the
-    // manifest lake): commits may add columns; older files surface them
-    // as NULL, and a version pinned BEFORE the column landed never sees
-    // it — schema history rides version history for free.
-    // A DECLARED schema (an `evolve` commit at-or-below v) goes further:
-    // the read is FORCED through mergeSchema (files written before and
-    // after the evolution coexist in one listing) and then aligned to
-    // the declared column set/order/types — `ALTER TABLE ADD COLUMN`
-    // becomes visible before any new-column file exists, old files
-    // null-fill, and a version pinned before the evolve never sees it.
-    val decl = st.schemaB64.map(b => nullableized(decodeSchema(b)))
-    // files are requested under their PHYSICAL names (identity when the
-    // lake is unmapped) and surfaced under the declared logical names
-    val base = applyDeletes(spark, root, v,
-      readListing(spark, root, rel, mergeSchema,
-        userSchema = decl.map(physSchemaOf)))
-    decl.map(alignMapped(base, _)).getOrElse(base)
+    GraftLakeSource.frame(spark, root, schemaOf(spark, root, Some(v), mergeSchema), Some(v))
   }
 
-  /** Declared schemas apply all-nullable at read time: pre-evolution
-    * files null-fill added columns, so nothing stricter can hold. */
-  private def nullableized(s: StructType): StructType =
-    StructType(s.fields.map(_.copy(nullable = true)))
+  /** Files `rel` — of version `v`, or staged beside it — through the
+    * connector scan under `schema` (version `v`'s by default), with `v`'s
+    * deletion vectors applied when `deletes`. A rewrite that carries the
+    * vectors forward materializes its files without them. */
+  private def readSubset(spark: SparkSession, root: String, v: Option[Long],
+                         rel: Seq[String], deletes: Boolean,
+                         schema: Option[StructType] = None): DataFrame =
+    GraftLakeSource.frame(spark, root,
+      schema.getOrElse(schemaOf(spark, root, v)), v,
+      Some(GraftLakeFileSet(rel, deletes)))
+
+  /** The inclusive `preds` as one row condition over `schema`'s columns,
+    * each bound cast to its column's type — what a pruned read, a
+    * metadata count and a predicate delete apply row by row. */
+  private def rangeCondition(schema: StructType,
+                             preds: Seq[FileStats.Range]): Column = {
+    import org.apache.spark.sql.functions.{col, lit}
+    preds.flatMap { p =>
+      val typed = (s: String) => lit(s).cast(schema(p.col).dataType)
+      p.lo.map(col(p.col) >= typed(_)) ++ p.hi.map(col(p.col) <= typed(_))
+    }.reduceOption(_ && _).getOrElse(lit(true))
+  }
 
   /** The LOGICAL schema of version `v` without opening every file — the
-    * one schema rule behind the connector's `load` and its append check,
-    * and the columns and types [[read]] infers:
+    * one schema rule behind every read, the connector's `load` and its
+    * append check:
     *
     *   - a DECLARED schema (an evolve or auto-merging commit at-or-below
     *     `v`) answers with ZERO file opens — names/types/metadata
     *     stripped to the read shape;
-    *   - an undeclared version gets exactly [[read]]'s inference, which is
-    *     Spark's parquet inference over the listing SORTED BY PATH:
+    *   - an undeclared version gets Spark's parquet inference over the
+    *     listing SORTED BY PATH:
     *     without `mergeSchema` the footer of the smallest plain path (and,
     *     on a hive-partitioned listing, of the smallest partitioned path,
     *     with the partition columns every leaf dir encodes); with
@@ -529,8 +537,8 @@ object SnapshotLake extends LakeCheckpoints {
     val st = resolve(root, v)._1
     st.schemaB64 match {
       case Some(b) =>
-        // the exact shape read()'s alignMapped emits: logical names,
-        // declared types, all-nullable, no metadata
+        // the read shape: logical names, declared types, all-nullable
+        // (files written before the declaration null-fill), no metadata
         StructType(decodeSchema(b).fields.map(f =>
           org.apache.spark.sql.types.StructField(f.name, f.dataType,
             nullable = true)))
@@ -603,7 +611,7 @@ object SnapshotLake extends LakeCheckpoints {
       }
     } yield prev.copy(firstPlain = firstPlain)
 
-  /** [[read]]'s inference over `files` from the fewest footers that
+  /** Spark's inference over `files` from the fewest footers that
     * determine it: the smallest file per leaf dir — every partition path
     * stays represented — and, without `mergeSchema`, only the smallest
     * plain file, the one footer Spark's non-merging inference opens. */
@@ -638,33 +646,6 @@ object SnapshotLake extends LakeCheckpoints {
       if (have(f.name)) col(f.name).cast(f.dataType).as(f.name)
       else lit(null).cast(f.dataType).as(f.name)
     }: _*)
-  }
-
-  /** [[alignTo]]'s column-mapping twin for a PHYSICAL-space frame (one
-    * read straight off the files): each declared field resolves its
-    * PHYSICAL column, casts to the declared type, and surfaces under
-    * its LOGICAL name; physically-absent columns null-fill. Identical
-    * to alignTo on an unmapped schema. */
-  private[graft] def alignMapped(df: DataFrame, decl: StructType): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val have = df.columns.toSet
-    df.select(decl.fields.toSeq.map { f =>
-      val p = physNameOf(f)
-      if (have(p)) col(p).cast(f.dataType).as(f.name)
-      else lit(null).cast(f.dataType).as(f.name)
-    }: _*)
-  }
-
-  /** [[readListing]] aligned to the version's declared schema when one
-    * exists — every REWRITE path (compact / merge / deleteMatching)
-    * reads through this, so an evolved lake's mixed-schema listing
-    * materializes the declared shape instead of tripping the union. */
-  private def readDeclared(spark: SparkSession, root: String, v: Long,
-                           rel: Seq[String]): DataFrame = {
-    val decl = resolve(root, v)._1.schemaB64
-      .map(b => nullableized(decodeSchema(b)))
-    val df = readListing(spark, root, rel, userSchema = decl.map(physSchemaOf))
-    decl.map(alignMapped(df, _)).getOrElse(df)
   }
 
   private def encodeSchema(s: StructType): String =
@@ -721,11 +702,6 @@ object SnapshotLake extends LakeCheckpoints {
   private[graft] def mappingOf(decl: StructType): Map[String, String] =
     decl.fields.iterator.map(f => f.name -> physNameOf(f))
       .filter { case (l, p) => l != p }.toMap
-
-  /** The declared schema with every field under its physical name — the
-    * schema a reader must REQUEST from the files. */
-  private[graft] def physSchemaOf(decl: StructType): StructType =
-    StructType(decl.fields.map(f => f.copy(name = physNameOf(f))))
 
   /** Stamp every unstamped field with its current name as physical —
     * the mapping-enablement step (the names files already use). */
@@ -823,11 +799,7 @@ object SnapshotLake extends LakeCheckpoints {
     commitLoop(root) { head =>
       val cur = head.getOrElse(throw new IllegalStateException(
         s"nothing to evolve at $root (no committed version)"))
-      val before = declaredSchema(root, Some(cur)).getOrElse {
-        val fs = files(root, cur)
-        if (fs.isEmpty) new StructType()
-        else readListing(spark, root, fs, mergeSchema = true).schema
-      }
+      val before = declaredOrInferred(spark, root, cur)
       // continuity is PHYSICAL: a renamed column survives under its
       // physical name (metadata-only), while on an unmapped schema the
       // physical name IS the logical name — the historical rule exactly
@@ -864,18 +836,21 @@ object SnapshotLake extends LakeCheckpoints {
     }
   }
 
-  /** The head declared schema, or the merged inferred one when no
-    * evolve commit has declared any — the base a mapping DDL stamps. */
-  private def currentDeclaredOrInferred(spark: SparkSession,
-                                        root: String): StructType = {
-    val cur = currentVersion(root).getOrElse(throw new IllegalStateException(
-      s"no committed version at $root — nothing to alter"))
-    declaredSchema(root, Some(cur)).getOrElse {
-      val fs = files(root, cur)
-      if (fs.isEmpty) new StructType()
-      else readListing(spark, root, fs, mergeSchema = true).schema
+  /** Version `v`'s declared schema, or the merged inferred one when no
+    * evolve commit has declared any — what an evolution must keep. */
+  private def declaredOrInferred(spark: SparkSession, root: String,
+                                 v: Long): StructType =
+    declaredSchema(root, Some(v)).getOrElse {
+      if (files(root, v).isEmpty) new StructType()
+      else schemaOf(spark, root, Some(v), mergeSchema = true)
     }
-  }
+
+  /** The head's [[declaredOrInferred]] schema — the base a mapping DDL
+    * stamps. */
+  private def currentDeclaredOrInferred(spark: SparkSession,
+                                        root: String): StructType =
+    declaredOrInferred(spark, root, currentVersion(root).getOrElse(
+      throw new IllegalStateException(s"no committed version at $root — nothing to alter")))
 
   /** `ALTER TABLE … RENAME COLUMN` as a METADATA-ONLY commit (Delta's
     * column-mapping rename): enables the mapping if needed (stamping
@@ -920,8 +895,9 @@ object SnapshotLake extends LakeCheckpoints {
       StructType(base.fields.filterNot(_.name == name)), allowMissing = true)
   }
 
-  /** Read the data files of one manifest listing (or any subset of one).
-    * Files of partitioned commits ([[appendPartitioned]],
+  /** Spark's parquet read of a listing, behind [[schemaOf]]'s footer
+    * inference only (rows are read by the connector). Files of
+    * partitioned commits ([[appendPartitioned]],
     * `data/commit=<uuid>/<p=v>/...`) read through basePath-anchored
     * partition discovery, which re-attaches the hive-encoded partition
     * columns (plus the synthetic commit marker, dropped) from the
@@ -932,18 +908,9 @@ object SnapshotLake extends LakeCheckpoints {
     * same contract as mergeSchema evolution, and what keeps partition
     * discovery from ever seeing conflicting directory structures. */
   private def readListing(spark: SparkSession, root: String, rel: Seq[String],
-                          mergeSchema: Boolean = false,
-                          userSchema: Option[StructType] = None): DataFrame = {
+                          mergeSchema: Boolean = false): DataFrame = {
     val (part, plain) = rel.partition(_.startsWith("data/commit="))
-    // A DECLARED schema reads as a USER-SPECIFIED schema, not through
-    // mergeSchema inference: StructType.merge refuses INT vs BIGINT
-    // footers, while the parquet readers natively WIDEN a narrower
-    // physical type into the requested column (and null-fill a missing
-    // one) — exactly the two shapes schema evolution produces.
-    def reader = {
-      val r = spark.read.option("mergeSchema", mergeSchema.toString)
-      userSchema.fold(r)(r.schema)
-    }
+    def reader = spark.read.option("mergeSchema", mergeSchema.toString)
     val sides = Seq(
       if (part.isEmpty) None
       else Some(reader.option("basePath", Paths.get(root, "data").toString)
@@ -958,90 +925,13 @@ object SnapshotLake extends LakeCheckpoints {
     * path segments (`data/commit=<uuid>/p1=v1/p2=v2/part-*.parquet` →
     * Seq(p1, p2)); empty for plain listings. */
   private def partColsOf(rel: Seq[String]): Seq[String] =
-    rel.find(_.startsWith("data/commit=")).map { f =>
-      f.split('/').drop(2).dropRight(1)
-        .map(seg => seg.substring(0, seg.indexOf('='))).toSeq
-    }.getOrElse(Seq.empty)
-
-  private val NullPart = "__HIVE_DEFAULT_PARTITION__"
-
-  /** Partition columns of a LISTING whose every encoded value parses
-    * numerically (the null sentinel aside, which discovery maps to NULL
-    * without affecting the column's type) — the same merge-across-
-    * partitions rule Spark's partition type inference applies, computed
-    * once per listing so every file of a column compares the same way.
-    * Deciding numericness per VALUE instead (the old shape) let a
-    * string-typed column with one numeric-looking dir ("25" next to
-    * "abc") compare numerically in [[wholeMatch]]/[[FileStats.mayMatch]]
-    * while the re-applied row predicate compared as string — advisory in
-    * [[readPruned]], but a correctness input in [[deleteMatching]] and
-    * [[fastCountWhere]]. */
-  private def pathNumericCols(rel: Seq[String]): Set[String] = {
-    val vals = rel.filter(_.startsWith("data/commit=")).flatMap { f =>
-      f.split('/').drop(2).dropRight(1).iterator.filter(_.contains('=')).map { seg =>
-        val i = seg.indexOf('=')
-        // vote on the DECODED value — predicates carry unescaped
-        // literals, so '1%2E5' must vote as the string it decodes to
-        seg.substring(0, i) ->
-          graft.sources.GraftLakeScan.unescapePath(seg.substring(i + 1))
-      }
-    }
-    vals.groupMap(_._1)(_._2).collect {
-      case (c, vs) if vs.forall(v =>
-        v == NullPart || scala.util.Try(v.toDouble).isSuccess) => c
-    }.toSet
-  }
-
-  /** Path-encoded partition ranges for a whole listing, numericness
-    * decided listing-wide ([[pathNumericCols]]) — the form the DSv2
-    * connector composes with the stats sidecars. */
-  private[graft] def pathRangeIndex(rel: Seq[String])
-      : Map[String, Map[String, FileStats.ColRange]] = {
-    // an unpartitioned listing has no path tuples at all — skip the
-    // O(files) map construction (at a million files it's measurable)
-    if (!rel.exists(_.startsWith("data/commit="))) return Map.empty
-    val nc = pathNumericCols(rel)
-    rel.map(f => f -> pathRangesOf(f, nc)).toMap
-  }
-
-  /** The hive partition tuple a file's path encodes, as EXACT ranges: a
-    * partition value is both min and max of its column for every row of
-    * the file — so partition pruning and stats pruning compose through
-    * the one [[FileStats.mayMatch]] mechanism, in [[readPruned]] and in
-    * [[merge]]'s candidate targeting alike. Values are the writer's
-    * hive-encoded strings; a column compares numerically only when the
-    * WHOLE listing's values do (`numericCols`, from [[pathNumericCols]])
-    * — matching partition discovery's merged type inference, so the
-    * metadata comparison and the re-applied row predicate always agree.
-    * The null partition (`__HIVE_DEFAULT_PARTITION__`) keeps its
-    * sentinel string form — range preds may then prune the file, which
-    * stays exact because the re-applied row filter rejects NULL values
-    * anyway. */
-  private def pathRangesOf(rel: String,
-                           numericCols: Set[String]): Map[String, FileStats.ColRange] =
-    if (!rel.startsWith("data/commit=")) Map.empty
-    else rel.split('/').drop(2).dropRight(1).iterator.filter(_.contains('='))
-      .map { seg =>
-        val i = seg.indexOf('=')
-        val c = seg.substring(0, i)
-        // DECODE hive's %xx escaping before building the range:
-        // predicates compare unescaped literals ('a:b', not 'a%3Ab'),
-        // and deleteMatching/fastCountWhere consume these ranges as
-        // correctness inputs, not just pruning advice
-        val v = graft.sources.GraftLakeScan.unescapePath(seg.substring(i + 1))
-        // a real partition value is the value of EVERY row in the file
-        // (zero nulls by construction — null rows land under the
-        // sentinel dir instead, whose null count is the row count, i.e.
-        // unknown here: conservative)
-        c -> FileStats.ColRange(v, v,
-          numeric = v != NullPart && numericCols.contains(c),
-          nulls = if (v == NullPart) None else Some(0L))
-      }.toMap
+    rel.find(isPartitioned).fold(Seq.empty[String])(
+      graft.sources.GraftLakeScan.partTupleOf(_).map(_._1))
 
   /** Merge-on-read DELETE: commit `keys` (one column, named for the
     * delete key) as key-tombstone files — NO data file is rewritten, the
     * write cost is O(deleted keys) however many terabytes hold them, and
-    * every reader of this version on anti-joins the tombstones out until
+    * every read of this version on drops the tombstoned keys' rows until
     * [[compact]] materializes them away (clearing the vector). The
     * inverse trade of [[merge]]'s copy-on-write: cheap writes, a read
     * tax — Delta/Iceberg deletion vectors in key form. Tombstone-wins
@@ -1106,7 +996,8 @@ object SnapshotLake extends LakeCheckpoints {
 
   private val lastDataDirMillis = new java.util.concurrent.atomic.AtomicLong
 
-  /** A fresh plain commit directory, `data/t<epoch millis as 12 hex
+  /** A fresh plain commit directory — of an append, a rewrite, or a
+    * streaming sink's epoch — `data/t<epoch millis as 12 hex
     * digits>-<uuid>`: the names sort in write order, and after every
     * earlier form of data directory (random-UUID hex, `commit=<uuid>`,
     * `stream-<id>-e<N>`), so the files of a solo append always sort after
@@ -1205,33 +1096,10 @@ object SnapshotLake extends LakeCheckpoints {
   }
 
   /** The key-tombstone (deletion-vector) files live in version `v`, if
-    * any — merge-on-read state the readers must anti-join away. */
+    * any — merge-on-read state the connector scan probes each row's key
+    * against. */
   def deletesOf(root: String, v: Long): Seq[String] =
     resolve(root, v)._1.deletes
-
-  /** Anti-join version `v`'s live tombstones (if any) out of `df` — the
-    * merge-on-read read cost every reader of that version pays until a
-    * compaction materializes the deletes away. The tombstone relation's
-    * single column names the delete key. */
-  private def applyDeletes(spark: SparkSession, root: String, v: Long,
-                           df: DataFrame): DataFrame = {
-    val ds = deletesOf(root, v)
-    if (ds.isEmpty) df
-    else {
-      import org.apache.spark.sql.functions.col
-      val tomb = spark.read.parquet(ds.map(f => Paths.get(root, f).toString): _*)
-      val k = tomb.columns.head
-      // the tombstone key column carries its PHYSICAL name; a frame
-      // already aligned to the declared (logical) shape — the rewrite
-      // paths' readDeclared — anti-joins under the logical name instead
-      val joinKey =
-        if (df.columns.contains(k)) k
-        else columnMapping(root, Some(v)).collectFirst {
-          case (l, p) if p == k && df.columns.contains(l) => l
-        }.getOrElse(k)
-      df.join(tomb.select(col(k).as(joinKey)).distinct(), Seq(joinKey), "left_anti")
-    }
-  }
 
   /** Newest live version whose commit carries idempotence tag `tag`, if
     * any — the probe [[appendOnce]]/[[mergeOnce]] (and [[merge]]'s
@@ -1508,10 +1376,10 @@ object SnapshotLake extends LakeCheckpoints {
     * `data/commit=<uuid>/<p1=v1>/.../part-*.parquet`, so every file's
     * partition tuple is recorded by its manifest path at commit time —
     * no extra manifest field — and readers re-attach the partition
-    * columns via basePath discovery ([[readListing]]). [[readPruned]]
-    * and [[merge]]'s candidate targeting compose partition-level pruning
-    * (exact ranges synthesized from the path tuple, [[pathRangesOf]])
-    * with the min/max sidecar index — the first pruning level every real
+    * columns from each file's path. [[readPruned]] and [[merge]]'s
+    * candidate targeting compose partition-level pruning (exact ranges
+    * synthesized from the path tuple by the [[LakeIndex]]) with the
+    * min/max sidecar index — the first pruning level every real
     * lake query uses, ahead of file statistics. Rewrites (merge /
     * compact / compactSmall) preserve the partitioning; a Z-order
     * rewrite trades it for Morton clustering, storing the partition
@@ -1588,8 +1456,7 @@ object SnapshotLake extends LakeCheckpoints {
     // the rewrite MATERIALIZES the base version's tombstones (the
     // merge-on-read debt is paid here, once) — and preserves the lake's
     // hive partitioning when it has one
-    val materialized = applyDeletes(spark, root, baseV,
-      readDeclared(spark, root, baseV, baseFiles)).repartition(partitions)
+    val materialized = read(spark, root, Some(baseV)).repartition(partitions)
     val rewritten =
       writeData(materialized, root, partCols = partColsOf(baseFiles)).files
     commitLoop(root, beforeAttempt = onBeforeCommit) { head =>
@@ -1675,9 +1542,11 @@ object SnapshotLake extends LakeCheckpoints {
     val baseV = currentVersion(root).getOrElse(
       throw new IllegalStateException(s"nothing to compact at $root"))
     val baseFiles = files(root, baseV)
-    val small = baseFiles.filter(f => Files.size(Paths.get(root, f)) < minBytes)
+    val idx = LakeIndex.of(root, baseV)
+    val small = baseFiles.filter(idx.length(_) < minBytes)
     if (small.size <= 1) return baseV
-    val packed = readListing(spark, root, small).repartition(partitions)
+    val packed = readSubset(spark, root, Some(baseV), small, deletes = false)
+      .repartition(partitions)
     val rewritten =
       writeData(packed, root, index, partCols = partColsOf(baseFiles)).files
     commitLoop(root) { head =>
@@ -1706,8 +1575,7 @@ object SnapshotLake extends LakeCheckpoints {
       throw new IllegalStateException(s"nothing to compact at $root"))
     val baseFiles = files(root, baseV)
     val baseDeletes = deletesOf(root, baseV)
-    val base = applyDeletes(spark, root, baseV, // materialize, as compact()
-      readDeclared(spark, root, baseV, baseFiles))
+    val base = read(spark, root, Some(baseV)) // materialize, as compact()
     val rewritten = writeData(
       base.withColumn("__z", ZOrder.interleave(col(colA), col(colB)))
         .repartitionByRange(nFiles, col("__z"))
@@ -1722,61 +1590,33 @@ object SnapshotLake extends LakeCheckpoints {
   }
 
   /** A snapshot read whose file listing was pruned by an index: `df`
-    * scans only `kept` of `total` manifest files, and — because pruning
-    * is conservative and the caller re-applies the predicate — returns
-    * exactly the rows the full read would. */
+    * scans only `kept` of `total` manifest files and, with the predicate
+    * applied row by row, holds exactly the full read's matching rows. */
   final case class PrunedScan(df: DataFrame, kept: Int, total: Int)
 
   /** Range-pruned snapshot read: resolve the manifest of `version` (or
     * latest), drop every file whose commit-time min/max index proves it
     * cannot satisfy ALL of `preds`, and scan the survivors. On a
     * partitioned lake the file's path-encoded partition tuple joins the
-    * prune as exact ranges ([[pathRangesOf]]) — partition pruning and
-    * stats pruning compose in the one conservative mechanism, partition
-    * level first in effect because its ranges are the tightest. The
-    * driver does O(commit dirs) sidecar reads against the
-    * already-resolved listing — at 100 TB this listing-level skip is
-    * what turns a point-ish query on a million-file table from a
-    * footer-open storm into a handful of file reads (Iceberg's manifest
-    * filtering). The returned frame has the predicates APPLIED
-    * (row-level), so the result is exactly the full scan's — pruning is
-    * never a correctness input. */
+    * prune as exact ranges — partition pruning and stats pruning compose
+    * in the one conservative mechanism of the version's [[LakeIndex]],
+    * partition level first in effect because its ranges are the
+    * tightest. At 100 TB this listing-level skip is what turns a
+    * point-ish query on a million-file table from a footer-open storm
+    * into a handful of file reads (Iceberg's manifest filtering). The
+    * returned frame has the predicates APPLIED (row-level), so the
+    * result is exactly the full scan's: the pruning only decides which
+    * files the scan opens. */
   def readPruned(spark: SparkSession, root: String,
                  preds0: Seq[FileStats.Range],
                  version: Option[Long] = None): PrunedScan = {
     val v = version.orElse(currentVersion(root)).getOrElse(
       throw new IllegalStateException(s"no committed version at $root"))
-    // sidecars, paths and raw file columns all speak PHYSICAL names —
-    // one translation up front covers the prune AND the re-applied row
-    // predicate (identity on an unmapped lake)
-    val preds = physPredsAt(root, Some(v), preds0)
-    val all = files(root, v)
-    val statsByFile: Map[String, Map[String, FileStats.ColRange]] =
-      all.map(f => f.substring(0, f.lastIndexOf('/'))).distinct
-        .flatMap(dir => FileStats.readStatsSidecar(root, dir)).toMap
-    val numCols = pathNumericCols(all)
-    val kept = all.filter { f =>
-      FileStats.mayMatch(
-        statsByFile.getOrElse(f, Map.empty) ++ pathRangesOf(f, numCols), preds)
-    }
-    if (kept.isEmpty) // provably-empty result still needs the schema
-      return PrunedScan(read(spark, root, Some(v)).limit(0), 0, all.size)
-    val df0 = readListing(spark, root, kept)
-    import org.apache.spark.sql.functions.{col, lit}
-    val filtered = preds.foldLeft(df0) { (d, p) =>
-      val typed = (s: String) => lit(s).cast(d.schema(p.col).dataType)
-      val lo = p.lo.map(col(p.col) >= typed(_))
-      val hi = p.hi.map(col(p.col) <= typed(_))
-      (lo ++ hi).foldLeft(d)(_ filter _)
-    }
-    val deleted = applyDeletes(spark, root, v, filtered)
-    // a mapped lake's pruned read surfaces the declared logical shape,
-    // exactly like the full read
-    val decl = declaredSchema(root, Some(v))
-    val out =
-      if (decl.exists(isMapped)) alignMapped(deleted, nullableized(decl.get))
-      else deleted
-    PrunedScan(out, kept.size, all.size)
+    // the index speaks PHYSICAL names; the frame, LOGICAL ones
+    val idx = LakeIndex.of(root, v)
+    val kept = idx.prune(physPredsAt(root, Some(v), preds0))
+    val df = readSubset(spark, root, Some(v), kept, deletes = true)
+    PrunedScan(df.filter(rangeCondition(df.schema, preds0)), kept.size, idx.files.size)
   }
 
   /** Point-lookup snapshot read through the per-file bloom index on
@@ -1788,35 +1628,16 @@ object SnapshotLake extends LakeCheckpoints {
   def readPointLookup(spark: SparkSession, root: String, col0: String,
                       values: Seq[String],
                       version: Option[Long] = None): PrunedScan = {
+    import org.apache.spark.sql.functions.{col, lit}
     val v = version.orElse(currentVersion(root)).getOrElse(
       throw new IllegalStateException(s"no committed version at $root"))
-    // bloom sidecar files are named for the PHYSICAL column, and the raw
-    // listing's columns are physical too (identity on an unmapped lake)
-    val col = columnMapping(root, Some(v)).getOrElse(col0, col0)
-    val all = files(root, v)
-    val blooms = all.map(f => f.substring(0, f.lastIndexOf('/'))).distinct
-      .flatMap(dir => FileStats.readBloomSidecar(root, dir, col)).toMap
-    val kept = all.filter { f =>
-      blooms.get(f).forall(bf => values.exists(bf.mightContainString))
-    }
-    if (kept.isEmpty)
-      return PrunedScan(read(spark, root, Some(v)).limit(0), 0, all.size)
-    val df0 = readListing(spark, root, kept)
-    import org.apache.spark.sql.functions.{col => c}
-    import org.apache.spark.sql.types._
-    val typed: Seq[Any] = df0.schema(col).dataType match {
-      case LongType => values.map(_.toLong)
-      case IntegerType => values.map(_.toInt)
-      case DoubleType => values.map(_.toDouble)
-      case _ => values // string keys probe as-is
-    }
-    val deleted = applyDeletes(spark, root, v,
-      df0.filter(c(col).isInCollection(typed)))
-    val decl = declaredSchema(root, Some(v))
-    val out =
-      if (decl.exists(isMapped)) alignMapped(deleted, nullableized(decl.get))
-      else deleted
-    PrunedScan(out, kept.size, all.size)
+    // bloom sidecar files are named for the PHYSICAL column
+    val idx = LakeIndex.of(root, v)
+    val kept = idx.bloomKeep(
+      Seq(columnMapping(root, Some(v)).getOrElse(col0, col0) -> values), idx.files)
+    val df = readSubset(spark, root, Some(v), kept, deletes = true)
+    val typed = values.map(lit(_).cast(df.schema(col0).dataType))
+    PrunedScan(df.filter(col(col0).isin(typed: _*)), kept.size, idx.files.size)
   }
 
   /** Copy-on-write MERGE (upsert + optional tombstone delete) keyed on
@@ -1862,7 +1683,7 @@ object SnapshotLake extends LakeCheckpoints {
     val baseV = currentVersion(root).getOrElse(
       throw new IllegalStateException(s"nothing to merge into at $root"))
     val baseFiles = files(root, baseV)
-    val touched = candidateFiles(spark, root, baseFiles, key, updates)
+    val touched = candidateFiles(spark, root, LakeIndex.of(root, baseV), baseFiles, key, updates)
     val upKeys = updates.select(col(key)).distinct()
     val newRows = deleteCol match {
       case None => updates
@@ -1870,7 +1691,7 @@ object SnapshotLake extends LakeCheckpoints {
     }
     val survivors =
       if (touched.isEmpty) newRows
-      else readDeclared(spark, root, baseV, touched)
+      else readSubset(spark, root, Some(baseV), touched, deletes = false)
         .join(hint(upKeys), Seq(key), "left_anti")
         .unionByName(newRows)
     // a partitioned lake's rewrite stays partitioned (updates must carry
@@ -1892,8 +1713,8 @@ object SnapshotLake extends LakeCheckpoints {
   }
 
   /** Files of `fileList` that MAY contain a key of `keys` (any column
-    * set containing `key`), per the commit-time min/max index AND the
-    * path-encoded partition tuple (a merge keyed on a partition column
+    * set containing `key`), per `idx`'s ranges — the commit-time min/max
+    * index AND the path-encoded partition tuple (a merge keyed on a partition column
     * targets exactly the matching partitions' files): one pass over
     * `keys` against the tiny broadcast stats relation (string ranges
     * compare lexically — only numeric-keyed files join the numeric
@@ -1901,20 +1722,15 @@ object SnapshotLake extends LakeCheckpoints {
     * `key` stats are always candidates. The keys are never collected to
     * the driver. */
   private[graft] def candidateFiles(spark: SparkSession, root: String,
-                             fileList: Seq[String], key: String,
+                             idx: LakeIndex, fileList: Seq[String], key: String,
                              keys: DataFrame): Seq[String] = {
     import org.apache.spark.sql.functions.{col, not}
-    // sidecar/path metadata keys PHYSICAL names; `key` names the column
-    // in the (logical) `keys` relation — translate for the stats side only
+    // index ranges key PHYSICAL names; `key` names the column in the
+    // (logical) `keys` relation — translate for the stats side only
     val physKey = columnMapping(root).getOrElse(key, key)
-    val stats = fileList.map(f => f.substring(0, f.lastIndexOf('/'))).distinct
-      .flatMap(dir => FileStats.readStatsSidecar(root, dir)).toMap
-    val numCols = pathNumericCols(fileList)
-    val ranges = fileList.map(f =>
-      f -> (stats.getOrElse(f, Map.empty) ++ pathRangesOf(f, numCols))).toMap
-    val (ranged, blind) = fileList.partition(f => ranges(f).contains(physKey))
+    val (ranged, blind) = fileList.partition(f => idx.composed(f).contains(physKey))
     val statsRows = ranged.map { f =>
-      val r = ranges(f)(physKey); (f, r.min, r.max, r.numeric)
+      val r = idx.composed(f)(physKey); (f, r.min, r.max, r.numeric)
     }
     val candidates: Seq[String] =
       if (statsRows.isEmpty) Seq.empty
@@ -1965,7 +1781,7 @@ object SnapshotLake extends LakeCheckpoints {
     *     carried-over files never enter this join, so a copy-on-write
     *     merge that touched 0.1% of files diffs 0.1% of the table (the
     *     Delta CDF trick). Each side is its version's LOGICAL relation —
-    *     that version's tombstones are anti-joined out first — so a
+    *     that version's tombstoned keys are dropped first — so a
     *     pre-range delete materialized by an in-range compaction cancels
     *     instead of surfacing as a false delete.
     *   - A [[deleteWhere]] inside the range changes NO file, so its
@@ -1989,12 +1805,11 @@ object SnapshotLake extends LakeCheckpoints {
     val removed = (from -- to).toSeq.sorted
     val added = (to -- from).toSeq.sorted
     val carried = (from intersect to).toSeq.sorted
-    val schema = readListing(spark, root, files(root, toV)).limit(0)
-    val cols = schema.columns.toSeq
+    val schema = schemaOf(spark, root, Some(toV))
+    val cols = schema.fieldNames.toSeq
+    // each side is its version's LOGICAL relation: that version's vector applies
     def side(fs: Seq[String], v: Long) =
-      if (fs.isEmpty) schema
-      else applyDeletes(spark, root, v, // the version's LOGICAL relation
-        readListing(spark, root, fs))
+      readSubset(spark, root, Some(v), fs, deletes = true, Some(schema))
     val pre = side(removed, fromV)
       .select(col(key).as("_k"), struct(cols.map(col): _*).as("_pre"))
     val post = side(added, toV)
@@ -2027,9 +1842,9 @@ object SnapshotLake extends LakeCheckpoints {
       }
     }
     def carriedHits(delta: DataFrame, tpe: String) = {
-      val cand = candidateFiles(spark, root, carried, key, delta)
+      val cand = candidateFiles(spark, root, LakeIndex.of(root, toV), carried, key, delta)
       if (cand.isEmpty) fileDiff.limit(0)
-      else readListing(spark, root, cand)
+      else readSubset(spark, root, Some(toV), cand, deletes = false, Some(schema))
         .join(delta, Seq(key), "left_semi")
         .withColumn("_change_type", lit(tpe))
         .select((cols.map(col) :+ col("_change_type")): _*)
@@ -2294,9 +2109,10 @@ object SnapshotLake extends LakeCheckpoints {
     *     predicate are carried verbatim (zero IO);
     *   - files EVERY row of which provably matches are dropped from the
     *     manifest with NO rewrite — the "drop a whole partition by
-    *     metadata" fast path (provable only when min ≥ lo, max ≤ hi AND
-    *     the harvested null count is zero, because a NULL row never
-    *     matches a range predicate and must survive);
+    *     metadata" fast path ([[LakeIndex.wholeMatch]]: provable only
+    *     when min ≥ lo, max ≤ hi AND the harvested null count is zero,
+    *     because a NULL row never matches a range predicate and must
+    *     survive);
     *   - overlapping files are rewritten keeping the rows that do NOT
     *     match (NULL-safe: a NULL predicate value survives).
     *
@@ -2312,34 +2128,26 @@ object SnapshotLake extends LakeCheckpoints {
                      preds: Seq[FileStats.Range],
                      index: IndexSpec = IndexSpec.none): DeleteResult = {
     require(preds.nonEmpty, "deleteMatching needs at least one predicate")
-    import org.apache.spark.sql.functions.{coalesce, col, lit, not}
+    import org.apache.spark.sql.functions.{coalesce, lit, not}
     val baseV = currentVersion(root).getOrElse(
       throw new IllegalStateException(s"nothing to delete from at $root"))
     val baseFiles = files(root, baseV)
-    // the metadata proofs (mayMatch / wholeMatch) consult physical-keyed
-    // sidecars; the row-level rewrite below filters the DECLARED
-    // (logical) relation — each side gets the predicate in its own space
+    // the metadata proofs consult the physical-keyed index; the row-level
+    // rewrite below filters the DECLARED (logical) relation — each side
+    // gets the predicate in its own space
     val physPreds = physPredsAt(root, Some(baseV), preds)
-    val stats = baseFiles.map(f => f.substring(0, f.lastIndexOf('/'))).distinct
-      .flatMap(dir => FileStats.readStatsSidecar(root, dir)).toMap
-    val numCols = pathNumericCols(baseFiles)
-    val ranges = baseFiles.map(f =>
-      f -> (stats.getOrElse(f, Map.empty) ++ pathRangesOf(f, numCols))).toMap
-    val candidates = baseFiles.filter(f => FileStats.mayMatch(ranges(f), physPreds))
-    val dropped = candidates.filter(f => wholeMatch(ranges(f), physPreds))
+    val idx = LakeIndex.of(root, baseV)
+    val candidates = idx.prune(physPreds)
+    val whole = LakeIndex.boundFilters(physPreds)
+    val dropped = candidates.filter(f => whole.forall(LakeIndex.wholeMatch(idx.composed(f), _)))
     val rewriteSet = candidates.filterNot(dropped.toSet)
     val rewritten: Seq[String] =
       if (rewriteSet.isEmpty) Nil
       else {
-        val d0 = readDeclared(spark, root, baseV, rewriteSet)
-        val conj = preds.map { p =>
-          val typed = (s: String) => lit(s).cast(d0.schema(p.col).dataType)
-          (p.lo.map(col(p.col) >= typed(_)) ++ p.hi.map(col(p.col) <= typed(_)))
-            .reduce(_ && _)
-        }.reduce(_ && _)
+        val d0 = readSubset(spark, root, Some(baseV), rewriteSet, deletes = false)
         // survivors = rows NOT matching; NULL-valued rows never match a
         // range predicate, so they must survive (coalesce, not plain NOT)
-        val survivors = d0.filter(not(coalesce(conj, lit(false))))
+        val survivors = d0.filter(not(coalesce(rangeCondition(d0.schema, preds), lit(false))))
         writeData(survivors, root, index, partCols = partColsOf(baseFiles)).files
       }
     val committed = commitLoop(root) { head =>
@@ -2352,24 +2160,6 @@ object SnapshotLake extends LakeCheckpoints {
       dropped.size, rewriteSet.size)
   }
 
-  /** True iff EVERY row of a file provably satisfies ALL of `preds`:
-    * each predicate column has a harvested range lying INSIDE the
-    * predicate's bounds and a known-ZERO null count (a NULL row never
-    * matches a range predicate, so unknown or non-zero nulls veto the
-    * proof). The witness behind [[deleteMatching]]'s whole-file drop
-    * and [[fastCountWhere]]'s metadata-counted files. */
-  private def wholeMatch(ranges: Map[String, FileStats.ColRange],
-                         preds: Seq[FileStats.Range]): Boolean =
-    preds.forall { p =>
-      ranges.get(p.col).exists { r =>
-        def le(a: String, b: String) =
-          if (r.numeric) a.toDouble <= b.toDouble
-          else FileStats.utf8Cmp(a, b) <= 0
-        r.nulls.contains(0L) &&
-          p.lo.forall(lo => le(lo, r.min)) && p.hi.forall(hi => le(r.max, hi))
-      }
-    }
-
   /** A pruning-based predicate count's cost breakdown: `rows` is exact;
     * `metadataFiles` were counted from their `_rows.json` entry without
     * being opened (provably all-matching), `scannedFiles` were actually
@@ -2379,54 +2169,36 @@ object SnapshotLake extends LakeCheckpoints {
                               scannedFiles: Int, prunedFiles: Int)
 
   /** Exact `SELECT count(*) WHERE <conjunction of ranges>` by PRUNING
-    * ARITHMETIC — the Iceberg/Snowflake trick: files provably disjoint
-    * from the predicate contribute nothing, files provably ALL-matching
-    * ([[wholeMatch]]: range inside bounds, zero nulls) contribute their
-    * sidecar row count WITHOUT being opened, and only the boundary-
-    * overlap files are scanned with the predicate applied. On a
-    * range-ingested 100 TB table a time-band count opens the two edge
-    * files and metadata-counts the interior — however wide the band.
-    * A whole-matching file without a rows-sidecar entry downgrades to a
-    * scan (correct, just slower); live key tombstones make any
-    * metadata count inexact ⇒ `None`, the caller scans. */
+    * ARITHMETIC — the Iceberg/Snowflake trick, run as the connector's
+    * filtered-count pushdown ([[graft.sources.GraftLakeCountScan]]):
+    * files provably disjoint from the predicate contribute nothing, files
+    * provably ALL-matching ([[LakeIndex.wholeMatch]]: range inside
+    * bounds, zero nulls) contribute their sidecar row count WITHOUT being
+    * opened, and only the boundary-overlap files are scanned with the
+    * predicate applied. On a range-ingested 100 TB table a time-band
+    * count opens the two edge files and metadata-counts the interior —
+    * however wide the band. A whole-matching file without a rows-sidecar
+    * entry downgrades to a scan (correct, just slower). `None` — the
+    * caller scans — when live key tombstones make any metadata count
+    * inexact, or when a predicate column's type is one the pushdown
+    * cannot evaluate exactly (anything but integral and string
+    * columns). */
   def fastCountWhere(spark: SparkSession, root: String,
-                     preds0: Seq[FileStats.Range],
+                     preds: Seq[FileStats.Range],
                      version: Option[Long] = None): Option[CountWhere] = {
-    require(preds0.nonEmpty, "fastCountWhere needs at least one predicate")
-    import org.apache.spark.sql.functions.{col, lit}
+    require(preds.nonEmpty, "fastCountWhere needs at least one predicate")
+    import org.apache.spark.sql.functions.{count, lit}
     val v = version.orElse(currentVersion(root)).getOrElse(return None)
-    // both consumers — the sidecar metadata AND the boundary files'
-    // raw columns — speak physical names (identity when unmapped)
-    val preds = physPredsAt(root, Some(v), preds0)
-    val st = resolve(root, v)._1
-    if (st.deletes.nonEmpty) return None
-    val dirs = st.files.map(f => f.substring(0, f.lastIndexOf('/'))).distinct
-    val stats = dirs.flatMap(dir => FileStats.readStatsSidecar(root, dir)).toMap
-    val rowsBy = dirs.flatMap(dir => FileStats.readRowsSidecar(root, dir)).toMap
-    val numCols = pathNumericCols(st.files)
-    val ranges = st.files.map(f =>
-      f -> (stats.getOrElse(f, Map.empty) ++ pathRangesOf(f, numCols))).toMap
-    // a known-ZERO-row file can contribute nothing: prunable regardless
-    // of its (necessarily absent) ranges. New commits never contain one
-    // (zero-row files are dropped at write, see [[indexAndCount]]); this
-    // guard covers lakes written before that invariant.
-    val candidates = st.files.filter(f =>
-      !rowsBy.get(f).contains(0L) && FileStats.mayMatch(ranges(f), preds))
-    val (whole, partial) = candidates.partition(f =>
-      wholeMatch(ranges(f), preds) && rowsBy.contains(f))
-    val scanned =
-      if (partial.isEmpty) 0L
-      else {
-        val d0 = readListing(spark, root, partial)
-        preds.foldLeft(d0) { (d, p) =>
-          val typed = (s: String) => lit(s).cast(d.schema(p.col).dataType)
-          val lo = p.lo.map(col(p.col) >= typed(_))
-          val hi = p.hi.map(col(p.col) <= typed(_))
-          (lo ++ hi).foldLeft(d)(_ filter _)
-        }.count()
-      }
-    Some(CountWhere(whole.map(rowsBy).sum + scanned, whole.size,
-      partial.size, st.files.size - candidates.size))
+    if (deletesOf(root, v).nonEmpty) return None
+    val df = spark.read.format("graftlake").option("exactPushdown", "true")
+      .option("versionAsOf", v.toString).load(root)
+    val counted = df.filter(rangeCondition(df.schema, preds)).agg(count(lit(1)))
+    counted.queryExecution.optimizedPlan.collectFirst {
+      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
+          if r.scan.isInstanceOf[graft.sources.GraftLakeCountScan] =>
+        r.scan.asInstanceOf[graft.sources.GraftLakeCountScan]
+    }.map(scan => CountWhere(counted.collect().head.getLong(0),
+      scan.metadataFiles, scan.scannedFiles, scan.prunedFiles))
   }
 
   /** METADATA-ONLY row count of version `v` (default: head) — `SELECT
@@ -2434,46 +2206,27 @@ object SnapshotLake extends LakeCheckpoints {
     * live files: zero data-file opens however large the table (the
     * Delta/Iceberg numRecords path). `None` — and the caller falls back
     * to a real scan — when any live file predates the sidecar or the
-    * version holds live key tombstones (their anti-join victims are not
+    * version holds live key tombstones (the rows they hide are not
     * countable from metadata). */
   def fastCount(root: String, version: Option[Long] = None): Option[Long] = {
     val v = version.orElse(currentVersion(root)).getOrElse(return None)
     val st = resolve(root, v)._1
     if (st.deletes.nonEmpty) return None
-    val rows = st.files.map(f => f.substring(0, f.lastIndexOf('/'))).distinct
-      .flatMap(dir => FileStats.readRowsSidecar(root, dir)).toMap
+    val rows = LakeIndex.exactRows(root, st.files)
     if (st.files.forall(rows.contains)) Some(st.files.map(rows).sum) else None
   }
 
   /** METADATA-ONLY exact (min, max) of `col` at version `v` — the fold
-    * of every live file's harvested range (sidecar or path-encoded
-    * partition tuple). Exact only when EVERY live file carries a range
-    * for the column (a file without stats could hold the true extreme)
-    * and the version has no live tombstones (an anti-joined row could BE
-    * the extreme) — `None` otherwise, and the caller scans. */
+    * of every live file's range in the version's [[LakeIndex]] (sidecar
+    * or path-encoded partition tuple). Exact only when EVERY live file
+    * carries a range for the column (a file without stats could hold the
+    * true extreme) and the version has no live tombstones (a hidden row
+    * could BE the extreme) — `None` otherwise, and the caller scans. */
   def statsRange(root: String, col0: String,
                  version: Option[Long] = None): Option[FileStats.ColRange] = {
     val v = version.orElse(currentVersion(root)).getOrElse(return None)
-    val col = columnMapping(root, Some(v)).getOrElse(col0, col0)
-    val st = resolve(root, v)._1
-    if (st.deletes.nonEmpty) return None
-    val stats = st.files.map(f => f.substring(0, f.lastIndexOf('/'))).distinct
-      .flatMap(dir => FileStats.readStatsSidecar(root, dir)).toMap
-    val numCols = pathNumericCols(st.files)
-    val rs = st.files.map(f =>
-      (stats.getOrElse(f, Map.empty) ++ pathRangesOf(f, numCols)).get(col))
-    if (rs.exists(_.isEmpty)) None
-    else rs.flatten.reduceOption { (a, b) =>
-      require(a.numeric == b.numeric, s"mixed numeric/string stats for $col")
-      // numCmp, not toDouble: two exact INT64 bounds above 2^53 can tie
-      // in double, and this fold's answer IS the metadata-only MIN/MAX
-      def lt(x: String, y: String) =
-        if (a.numeric) FileStats.numCmp(x, y) < 0
-        else FileStats.utf8Cmp(x, y) < 0
-      FileStats.ColRange(if (lt(b.min, a.min)) b.min else a.min,
-        if (lt(a.max, b.max)) b.max else a.max, a.numeric,
-        for (x <- a.nulls; y <- b.nulls) yield x + y)
-    }
+    if (deletesOf(root, v).nonEmpty) None
+    else LakeIndex.of(root, v).range(columnMapping(root, Some(v)).getOrElse(col0, col0))
   }
 
   /** CHECK-constrained append — Delta's table constraints on the commit
@@ -2563,15 +2316,8 @@ object SnapshotLake extends LakeCheckpoints {
   /** The audit view of a staged batch: exactly its rows, read from the
     * staged files (production readers still see nothing). Union with
     * [[read]] for the post-publish preview. */
-  def readStaged(spark: SparkSession, root: String, staged: Staged): DataFrame = {
-    val df = readListing(spark, root, staged.files)
-    // staged files carry physical names like any write — surface the
-    // declared logical shape on a mapped lake (raw otherwise: unchanged)
-    declaredSchema(root) match {
-      case Some(d) if isMapped(d) => alignMapped(df, nullableized(d))
-      case _ => df
-    }
-  }
+  def readStaged(spark: SparkSession, root: String, staged: Staged): DataFrame =
+    readFiles(spark, root, staged.files)
 
   /** Publish an audited staged batch as a normal append commit — same
     * CAS loop, O(change) record. With `tag`, publication is exactly-once
@@ -2628,13 +2374,19 @@ object SnapshotLake extends LakeCheckpoints {
     (r.op, r.add, r.remove, r.addDel)
   }
 
-  /** Read an explicit subset of one version's files — e.g. a commit's
-    * added files ([[commitChange]]) or a staged batch. Partitioned
-    * commits re-attach their path-encoded columns, mixed listings union
-    * by name. */
+  /** Read an explicit set of lake files — e.g. a commit's added files
+    * ([[commitChange]]) or a staged batch — with no deletion vector
+    * applied. Partitioned files carry their path-encoded columns. The
+    * columns are the head's declared schema (logical names) when the
+    * lake declares one, else the files' own inference. */
   def readFiles(spark: SparkSession, root: String,
-                rel: Seq[String]): DataFrame =
-    readListing(spark, root, rel)
+                rel: Seq[String]): DataFrame = {
+    val head = currentVersion(root)
+    val schema = head.filter(v => declaredSchema(root, Some(v)).isDefined || rel.isEmpty)
+      .map(v => schemaOf(spark, root, Some(v)))
+      .getOrElse(footerInference(spark, root, rel, mergeSchema = false).schema)
+    readSubset(spark, root, head, rel, deletes = false, Some(schema))
+  }
 
   /** Drop manifests older than the newest `keepVersions`, then delete
     * every data file under `data/` that no RETAINED manifest references

@@ -485,8 +485,7 @@ object LakeFixtures {
       def stagedRange(st: SnapshotLake.Staged): (Double, Double) = {
         // zero-row part files harvest no range — skip them (they hold no
         // key to audit); at least one staged file must carry rows
-        val rs = st.files.map(f => f.substring(0, f.lastIndexOf('/'))).distinct
-          .flatMap(dir => FileStats.readStatsSidecar(root, dir))
+        val rs = graft.etl.LakeIndex.statsOf(root, st.files)
           .collect { case (f, cols) if st.files.contains(f) => cols.get("o_orderkey") }
           .flatten
         require(rs.nonEmpty, "staged batch must carry at least one keyed row")

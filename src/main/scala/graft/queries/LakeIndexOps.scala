@@ -98,6 +98,13 @@ import graft.model.Tables
   * construction so the oracle can hold exact equality. The file-count
   * evidence (kept < total) is FileStatsSpec's territory; here the oracle
   * pins that pruning never changes an answer.
+  *
+  * The lake has one reader. The [[SnapshotLake]] calls of q219–q237
+  * (`read`, `readPruned`, `readPointLookup`, `fastCountWhere`, and the
+  * rewrites' materializations) are wrappers over the same `graftlake`
+  * connector scan that q238 onward load through
+  * `spark.read.format("graftlake")` and the catalog; both prune from one
+  * per-version [[graft.etl.LakeIndex]].
   */
 object LakeIndexOps {
 
@@ -114,12 +121,9 @@ object LakeIndexOps {
     * stats; a general reader falls back to a scan when one doesn't). */
   private def statsBounds(root: String, c: String,
                           version: Option[Long] = None): (Long, Long) = {
-    val v = version.orElse(SnapshotLake.currentVersion(root)).get
-    val live = SnapshotLake.files(root, v)
-    val dirs = live.map(f => f.substring(0, f.lastIndexOf('/'))).distinct
-    val rs = dirs.flatMap(dir => FileStats.readStatsSidecar(root, dir).collect {
-      case (f, cols) if live.contains(f) && cols.contains(c) => cols(c)
-    })
+    val idx = graft.etl.LakeIndex.of(root,
+      version.orElse(SnapshotLake.currentVersion(root)).get)
+    val rs = idx.files.flatMap(idx.composed(_).get(c))
     require(rs.nonEmpty, s"no harvested stats for $c at $root")
     (rs.map(_.min.toDouble.toLong).min, rs.map(_.max.toDouble.toLong).max)
   }
@@ -800,7 +804,7 @@ object LakeIndexOps {
     //    physical plan's only source is the one-row GraftLakeAggScan, no
     //    data file is opened (Delta/Iceberg's numRecords fast path via
     //    the standard SupportsPushDownAggregates contract). q232 is the
-    //    native-API twin; this proves the same metadata answers through
+    //    SnapshotLake-API twin; this proves the same metadata answers through
     //    spark.read.format(...).agg(...) with Spark's own partial-agg
     //    rewrite on top. `metadata_only` is resolved from the planned
     //    scan itself — the query fails loudly if the pushdown regresses
@@ -977,7 +981,7 @@ object LakeIndexOps {
     //    evidence counts resolve from the planned GraftLakeCountScan
     //    itself and the post-delete head answers 0 from zero opened
     //    files — both legs exact under the oracle, same literals as
-    //    q237's native fastCountWhere.
+    //    q237's fastCountWhere (a wrapper over this same count scan).
     Q("q243_dsv2_filtered_count",
       """WITH m AS (SELECT max(o_orderkey) AS mx FROM orders),
         |pre AS (

@@ -182,7 +182,7 @@ class GraftLakeCatalog extends TableCatalog
     val schema =
       if (SnapshotLake.currentVersion(root).isEmpty)
         declaredSchema(ident).getOrElse(new StructType())
-      else SnapshotLake.read(SparkSession.active, root, v).schema
+      else SnapshotLake.schemaOf(SparkSession.active, root, v)
     new GraftLakeTable(root, schema, versionAsOf = v)
   }
 
@@ -275,7 +275,7 @@ class GraftLakeCatalog extends TableCatalog
         evolved.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     } else {
       val cur = SnapshotLake.declaredSchema(root)
-        .getOrElse(SnapshotLake.read(spark, root).schema)
+        .getOrElse(SnapshotLake.schemaOf(spark, root))
       SnapshotLake.evolveSchema(spark, root, applyChanges(cur, changes))
     }
     load(ident, None)
@@ -395,12 +395,8 @@ final class GraftLakeMetaTable(root: String, kind: String,
       org.apache.spark.sql.connector.catalog.TableCapability.BATCH_READ)
 
   private def inventory(v: Long): Seq[(String, Long, Option[Long])] = {
-    val live = SnapshotLake.files(root, v)
-    val rowsBy = live.map(f => f.substring(0, f.lastIndexOf('/'))).distinct
-      .flatMap(dir => graft.etl.FileStats.readRowsSidecar(root, dir)).toMap
-    live.map(f => (f,
-      java.nio.file.Files.size(java.nio.file.Paths.get(root, f)),
-      rowsBy.get(f)))
+    val idx = graft.etl.LakeIndex.of(root, v)
+    idx.files.map(f => (f, idx.length(f), idx.rows.get(f)))
   }
 
   private def rows(): Array[InternalRow] = kind match {
@@ -425,12 +421,11 @@ final class GraftLakeMetaTable(root: String, kind: String,
       val inv = inventory(v)
       val spark = SparkSession.active
       // an emptied version (delete-all) still has a detail row: the
-      // declared schema if one exists, else no schema to report —
-      // read() would throw on the empty listing
+      // declared schema if one exists, else no schema to report
       val schemaStr = SnapshotLake.declaredSchema(root, Some(v))
         .map(_.simpleString).getOrElse {
           if (inv.isEmpty) ""
-          else SnapshotLake.read(spark, root, Some(v)).schema.simpleString
+          else SnapshotLake.schemaOf(spark, root, Some(v)).simpleString
         }
       Array(new GenericInternalRow(Array[Any](
         UTF8String.fromString(root), v, inv.size.toLong,

@@ -6,7 +6,7 @@ import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionRead
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.etl.{FileStats, SnapshotLake}
+import graft.etl.{LakeIndex, SnapshotLake}
 
 /** The connector's CHANGE DATA FEED surface — Delta's `readChangeFeed`
   * through the standard reader APIs, batch and streaming:
@@ -26,10 +26,10 @@ import graft.etl.{FileStats, SnapshotLake}
   * any other connector scan — the plan shape is independent of table
   * size, the property that makes the feed usable at 100 TB:
   *
-  *   - an APPEND commit's changes ARE its added files: each becomes an
-  *     input partition whose `_change_type` ('insert') and
-  *     `_commit_version` ride as constant vectors (the hive-partition
-  *     mechanism), zero decode cost, no extra state on disk;
+  *   - an APPEND commit's changes ARE its added files: each file's
+  *     `_change_type` ('insert') and `_commit_version` ride as constant
+  *     vectors (the hive-partition mechanism), zero decode cost, no extra
+  *     state on disk;
   *   - a CHANGE commit (merge / delete / overwrite / restore / COW
   *     rewrite) reads its MATERIALIZED feed (`_cdc/v=<N>/`, written at
   *     commit time on a [[SnapshotLake.enableCdf]]-enabled lake — the
@@ -41,8 +41,9 @@ import graft.etl.{FileStats, SnapshotLake}
   *   - physical-only (compact) and metadata-only (evolve) commits feed
   *     zero changes.
   *
-  * Both paths share [[GraftLakeReaderFactory]], so column pruning and
-  * whole-stage codegen behave exactly as on a plain scan. The streaming
+  * Both paths share [[GraftLakeReaderFactory]] and the snapshot scan's
+  * task packing ([[GraftLakeScan.pack]]), so column pruning, whole-stage
+  * codegen and task counts behave exactly as on a plain scan. The streaming
   * form hands these same partitions to the micro-batch machinery one
   * version range at a time ([[GraftLakeMicroBatchStream]] with
   * `cdf = true`), where `skipChangeCommits` degrades the feed to
@@ -60,27 +61,20 @@ object GraftLakeCdf {
       StructField(ChangeTypeCol, StringType, nullable = false),
       StructField(CommitVersionCol, LongType, nullable = false)))
 
-  /** The input partitions of version `v`'s change batch (see class doc
-    * for the per-op shapes). Lazily materializes a change commit's feed
+  /** The files of version `v`'s change batch, as the scans pack them
+    * (see class doc for the per-op shapes). Lazily materializes a change commit's feed
     * when its write-time materialization is missing — idempotent, and
     * it throws with the enablement hint when CDF was never enabled. */
   private[sources] def partitions(root: String, rootAbs: String, v: Long,
                                   skipChangeCommits: Boolean)
       : Seq[GraftLakeInputPartition] = {
-    // file lengths from the commit-time `_bytes.json` sidecars (one
-    // cached parse per commit dir), stat-on-demand only for pre-sidecar
-    // commits — same contract as the snapshot scan path: planning a
-    // version range never issues O(files) stat/HEAD calls
-    def sizes(files: Seq[String]): String => Long = {
-      val bytes = files.map(f => f.substring(0, f.lastIndexOf('/')))
-        .distinct.flatMap(d => FileStats.readBytesSidecar(root, d)).toMap
-      f => bytes.getOrElse(f,
-        java.nio.file.Files.size(java.nio.file.Paths.get(root, f)))
-    }
+    // file lengths from the commit-time `_bytes.json` sidecars — same
+    // contract as the snapshot scan path: planning a version range never
+    // issues O(files) stat/HEAD calls
     val (op, add) = SnapshotLake.commitChange(root, v)
     op match {
       case "append" =>
-        val size = sizes(add)
+        val size = LakeIndex.lengths(root, add)
         add.map { f =>
           GraftLakeInputPartition(s"$rootAbs/$f", size(f),
             GraftLakeScan.partTupleOf(f) ++ Seq(
@@ -92,7 +86,7 @@ object GraftLakeCdf {
       case _ if skipChangeCommits => Nil
       case _ =>
         val feed = SnapshotLake.materializeCdc(SparkSession.active, root, v)
-        val size = sizes(feed)
+        val size = LakeIndex.lengths(root, feed)
         feed.map { f =>
           GraftLakeInputPartition(s"$rootAbs/$f", size(f),
             // _change_type is a DATA column of the materialized files
@@ -147,8 +141,8 @@ final class GraftLakeCdfScan(root: String, rootAbs: String,
     val hi = endV.getOrElse(head)
     require(hi <= head,
       s"endingVersion $hi is beyond the head version $head of $root")
-    (startV to hi).flatMap(v =>
-      GraftLakeCdf.partitions(root, rootAbs, v, skipChangeCommits)).toArray
+    GraftLakeScan.pack(SparkSession.active, (startV to hi).flatMap(v =>
+      GraftLakeCdf.partitions(root, rootAbs, v, skipChangeCommits))).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

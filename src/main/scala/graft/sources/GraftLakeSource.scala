@@ -28,7 +28,7 @@ import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.etl.{FileStats, SnapshotLake}
+import graft.etl.{FileStats, LakeIndex, SnapshotLake}
 
 /** DataSource V2 connector for the snapshot lake —
   * `spark.read.format("graftlake").option("path", root)` — the
@@ -41,9 +41,9 @@ import graft.etl.{FileStats, SnapshotLake}
   *     standard reader API.
   *   - **Filter pushdown → FILE pruning**: range/equality filters reach
   *     [[GraftLakeScanBuilder.pushFilters]], are converted to
-  *     [[FileStats.Range]]s, and prune the file list through the same
-  *     conservative `mayMatch` every native reader uses — composed with
-  *     the path-encoded partition tuples of hive-partitioned commits, so
+  *     [[FileStats.Range]]s, and prune the file list through the
+  *     version's [[LakeIndex]] — stats ranges composed with the
+  *     path-encoded partition tuples of hive-partitioned commits, so
   *     partition pruning and stats pruning fire through one mechanism
   *     (the q227 property through the standard API). By default ALL
   *     filters are reported back as residual (`pushedFilters()` is
@@ -68,13 +68,16 @@ import graft.etl.{FileStats, SnapshotLake}
   *     through the row-based path — each task loads the version's
   *     tombstone key set (the per-task analog of Delta's per-file DV
   *     read; the vector is O(deleted keys) between compactions by the
-  *     [[SnapshotLake.deleteWhere]] contract) and filters rows during
-  *     the scan, equal by construction to the native reader's anti-join.
+  *     [[SnapshotLake.deleteWhere]] contract) and drops every row whose
+  *     key it holds during the scan. This is the lake's only deletion-
+  *     vector read: [[SnapshotLake]]'s readers and rewrites all scan
+  *     through this connector.
   *   - Input partitions packed like the built-in file scan's: the kept
   *     files fill tasks up to `FilePartition.maxSplitBytes`, each file
   *     costing its length plus `spark.sql.files.openCostInBytes`, so a
   *     day of small commit files reads in a few tasks and a large file
-  *     still gets a task of its own ([[GraftLakeScan.pack]]).
+  *     still gets a task of its own ([[GraftLakeScan.pack]]). Stream and
+  *     change-feed scans pack the same way.
   *     Locality-free on object storage, as Delta/Iceberg connectors
   *     plan.
   *
@@ -134,8 +137,8 @@ class GraftLakeSource extends TableProvider with DataSourceRegister {
     // at a million files the full-listing construction IS the planning
     // wall, the ManifestCeiling measurement's first finding)
     SnapshotLake.schemaOf(SparkSession.active, root, versionOf(options),
-      // opt-in schema-on-read evolution, the native reader's q156
-      // contract: the scan null-fills a column any one file predates
+      // opt-in schema-on-read evolution, the q156 contract: the scan
+      // null-fills a column any one file predates
       mergeSchema = options.getBoolean("mergeSchema", false))
   }
 
@@ -155,6 +158,18 @@ class GraftLakeSource extends TableProvider with DataSourceRegister {
 }
 
 object GraftLakeSource {
+  /** The lake's one read entry: a DataFrame over `root` through this
+    * connector's scan, pinned to `version` (the head when None), under
+    * `schema`. With a `fileSet` the scan reads exactly those files
+    * instead of the version's listing — the private form behind
+    * [[SnapshotLake]]'s pruned reads and its rewrites' materializations. */
+  private[graft] def frame(spark: SparkSession, root: String, schema: StructType,
+                           version: Option[Long],
+                           fileSet: Option[GraftLakeFileSet] = None)
+      : org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.graftlake.TableFrame(spark,
+      new GraftLakeTable(root, schema, version, fileSet = fileSet))
+
   /** The version pin the reader options select: `versionAsOf` directly,
     * or `timestampAsOf` ("yyyy-MM-dd HH:mm:ss[.SSS]" or ISO-8601; a
     * zoneless string reads in the SESSION timezone, exactly as SQL
@@ -192,9 +207,17 @@ object GraftLakeSource {
     }
 }
 
+/** An explicit file subset for a scan to read instead of its version's
+  * listing — files need not be live at that version (a change feed's
+  * removed side, a staged batch) — and whether the version's deletion
+  * vectors apply to it (a rewrite that carries the vectors reads its
+  * files without them). */
+private[graft] final case class GraftLakeFileSet(files: Seq[String], deletes: Boolean)
+
 final class GraftLakeTable(root: String, schema: StructType,
                            versionAsOf: Option[Long] = None,
-                           cdf: Boolean = false)
+                           cdf: Boolean = false,
+                           fileSet: Option[GraftLakeFileSet] = None)
     extends Table with SupportsRead with SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDelete
     with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns
@@ -240,12 +263,7 @@ final class GraftLakeTable(root: String, schema: StructType,
     * and Spark reports the delete as unsupported rather than running a
     * wrong one. */
   private def rangesOf(filters: Array[Filter]): Option[Seq[FileStats.Range]] = {
-    def s(v: Any): Option[String] = v match {
-      case null => None
-      case _: Long | _: Int | _: Double | _: Float | _: Short | _: Byte |
-           _: String => Some(v.toString)
-      case _ => None
-    }
+    def s(v: Any): Option[String] = GraftLakeScan.statString(v)
     val converted = filters.toSeq.map {
       case EqualTo(a, v) => s(v).map(x => Some(FileStats.Range(a, Some(x), Some(x))))
       case GreaterThanOrEqual(a, v) => s(v).map(x => Some(FileStats.Range(a, Some(x), None)))
@@ -292,19 +310,23 @@ final class GraftLakeTable(root: String, schema: StructType,
   }
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     val theRoot = Option(options.get("path")).getOrElse(root)
+    // startingTimestamp = a stream or change feed begins with the first
+    // commit published AT or after the instant (Delta's inclusive
+    // contract): strictly-earlier commits are history the reader
+    // declares seen
+    val startV = Option(options.get("startingVersion")).map(_.toLong)
+      .orElse(Option(options.get("startingTimestamp")).map { s =>
+        SnapshotLake.versionAsOfTimestamp(theRoot,
+          GraftLakeSource.parseInstantMillis(s) - 1L)
+          .map(_ + 1L).getOrElse(1L)
+      }).getOrElse(1L)
     // the change-data-feed relation plans per-VERSION change batches
     // instead of a snapshot file set — see [[GraftLakeCdf]]
     if (cdf) return new GraftLakeCdfScanBuilder(theRoot, schema,
-      startV = Option(options.get("startingVersion")).map(_.toLong)
-        .orElse(Option(options.get("startingTimestamp")).map { s =>
-          SnapshotLake.versionAsOfTimestamp(theRoot,
-            GraftLakeSource.parseInstantMillis(s) - 1L)
-            .map(_ + 1L).getOrElse(1L)
-        }).getOrElse(1L),
+      startV = startV,
       // endingTimestamp = the latest commit published AT or before the
-      // instant (Delta's inclusive contract, the mirror of
-      // startingTimestamp above), resolved through the same
-      // session-timezone parse
+      // instant (the mirror of startingTimestamp above), resolved
+      // through the same session-timezone parse
       endV = Option(options.get("endingVersion")).map(_.toLong)
         .orElse(Option(options.get("endingTimestamp")).map { s =>
           SnapshotLake.versionAsOfTimestamp(theRoot,
@@ -317,24 +339,13 @@ final class GraftLakeTable(root: String, schema: StructType,
       maxVersionsPerTrigger = Option(options.get("maxVersionsPerTrigger"))
         .map(_.toLong),
       hconf = GraftLakeConf.session())
-    new GraftLakeScanBuilder(
-      Option(options.get("path")).getOrElse(root),
+    new GraftLakeScanBuilder(theRoot,
       // the table's already-resolved pin wins: a timestampAsOf option was
       // mapped to a version ONCE at table construction, and re-resolving
       // it here could land on a commit that arrived since — a schema/data
       // mismatch on an evolved lake
-      versionAsOf.orElse(GraftLakeSource.resolvePin(
-        Option(options.get("path")).getOrElse(root), options)), schema,
-      // startingTimestamp = the stream begins with the first commit
-      // published AT or after the instant (Delta's inclusive contract):
-      // strictly-earlier commits are history the reader declares seen
-      startingVersion = Option(options.get("startingVersion")).map(_.toLong)
-        .orElse(Option(options.get("startingTimestamp")).map { s =>
-          val r = Option(options.get("path")).getOrElse(root)
-          SnapshotLake.versionAsOfTimestamp(r,
-            GraftLakeSource.parseInstantMillis(s) - 1L)
-            .map(_ + 1L).getOrElse(1L)
-        }).getOrElse(1L),
+      versionAsOf.orElse(GraftLakeSource.resolvePin(theRoot, options)), schema,
+      startingVersion = startV,
       skipChangeCommits = Option(options.get("skipChangeCommits"))
         .exists(_.toBoolean),
       maxVersionsPerTrigger = Option(options.get("maxVersionsPerTrigger"))
@@ -350,7 +361,8 @@ final class GraftLakeTable(root: String, schema: StructType,
       // counterfactual (PlanShapeSpec pins that the column stats change
       // a join decision the size-only estimate gets wrong)
       reportColStats = Option(options.get("columnStats"))
-        .forall(_.toBoolean))
+        .forall(_.toBoolean),
+      fileSet = fileSet)
   }
 
   /** Batch writes via the V1 fallback (`V1_BATCH_WRITE`) — the whole
@@ -450,7 +462,8 @@ final class GraftLakeScanBuilder(root: String, version: Option[Long],
                                  maxFilesPerTrigger: Option[Long] = None,
                                  maxBytesPerTrigger: Option[Long] = None,
                                  reportColStats: Boolean = true,
-                                 fileOnlyRuntimeFilter: Boolean = false)
+                                 fileOnlyRuntimeFilter: Boolean = false,
+                                 fileSet: Option[GraftLakeFileSet] = None)
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns with SupportsPushDownAggregates {
 
@@ -468,9 +481,14 @@ final class GraftLakeScanBuilder(root: String, version: Option[Long],
     * builder — pushed filters, pruned columns, aggregates — is LOGICAL.
     * Ranges/probes/exact filters translate here at the push boundary;
     * the scan translates its read schemas; `readSchema()` stays logical. */
+  private lazy val pinned: Option[Long] =
+    version.orElse(SnapshotLake.currentVersion(root))
+  /** The scanned version's file index (empty before the first commit,
+    * which only a file-set read can scan). */
+  private lazy val idx: LakeIndex =
+    pinned.fold(LakeIndex.empty(root))(LakeIndex.of(root, _))
   private lazy val colMap: Map[String, String] =
-    SnapshotLake.columnMapping(root,
-      version.orElse(SnapshotLake.currentVersion(root)))
+    SnapshotLake.columnMapping(root, pinned)
   private def phys(c: String): String = colMap.getOrElse(c, c)
   private def physFilter(f: Filter): Filter =
     if (colMap.isEmpty) f
@@ -511,14 +529,6 @@ final class GraftLakeScanBuilder(root: String, version: Option[Long],
     }
   }
 
-  /** Physical columns that some file of the scanned version carries as a
-    * hive path tuple: their ranges are the encoded path strings, not
-    * sidecar numbers. Resolved only when a temporal literal is pushed. */
-  private lazy val pathCols: Set[String] =
-    version.orElse(SnapshotLake.currentVersion(root)).fold(Set.empty[String]) { v =>
-      GraftLakeSidecarIndex.of(root, v, SnapshotLake.files(root, v)).pathCols
-    }
-
   /** Convert prunable conjuncts to index ranges. GreaterThan/LessThan
     * prune as their inclusive forms — a SUPERSET range, conservative by
     * construction. Literals that prune: integral, floating and string
@@ -543,15 +553,10 @@ final class GraftLakeScanBuilder(root: String, version: Option[Long],
     * COUNT push down to the metadata+boundary hybrid), trading the
     * columnar decode path for file skips and metadata counts. */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    def s(v: Any): Option[String] = v match {
-      case null => None
-      case _: Long | _: Int | _: Double | _: Float | _: Short | _: Byte |
-           _: String => Some(v.toString)
-      case _ => None
-    }
+    def s(v: Any): Option[String] = GraftLakeScan.statString(v)
     def bound(a: String, v: Any): Option[String] =
       GraftLakeScan.temporalStat(v) match {
-        case Some(n) => if (pathCols(phys(a))) None else Some(n.toString)
+        case Some(n) => if (idx.pathCols(phys(a))) None else Some(n.toString)
         case None => s(v)
       }
     ranges = filters.toSeq.flatMap {
@@ -603,29 +608,21 @@ final class GraftLakeScanBuilder(root: String, version: Option[Long],
     * scan. Refused whenever metadata can't answer EXACTLY: any pushed
     * or residual filter, a GROUP BY, live deletion vectors, a file
     * without sidecar coverage, or a non-numeric column (parquet footer
-    * binary stats may be truncated; numeric stats are exact). */
+    * binary stats may be truncated; numeric stats are exact). A file-set
+    * read never pushes: the metadata answers cover the whole version. */
   override def pushAggregation(aggregation: Aggregation): Boolean = {
-    if (aggregation.groupByExpressions.nonEmpty) return false
+    if (aggregation.groupByExpressions.nonEmpty || fileSet.isDefined) return false
     if (exact.nonEmpty) return pushFilteredCount(aggregation)
     if (ranges.nonEmpty || residual.nonEmpty) return false
-    val v = version.orElse(SnapshotLake.currentVersion(root))
-      .getOrElse(return false)
+    val v = pinned.getOrElse(return false)
     if (SnapshotLake.deletesOf(root, v).nonEmpty) return false
-    if (SnapshotLake.files(root, v).exists(_.startsWith("data/commit=")))
-      return false
+    if (idx.files.exists(_.startsWith("data/commit="))) return false
 
     def numericField(c: String): Option[StructField] =
       fullSchema.fields.find(_.name == c).filter(f => f.dataType match {
         case LongType | IntegerType | DoubleType | FloatType => true
         case _ => false
       })
-    def parse(dt: DataType, s: String): Any = dt match {
-      case LongType => try s.toLong catch { case _: NumberFormatException => s.toDouble.toLong }
-      case IntegerType => try s.toInt catch { case _: NumberFormatException => s.toDouble.toInt }
-      case DoubleType => s.toDouble
-      case FloatType => s.toFloat
-      case other => throw new IllegalStateException(other.toString)
-    }
     def nameOf(e: org.apache.spark.sql.connector.expressions.Expression): Option[String] =
       e match {
         case nr: NamedReference if nr.fieldNames.length == 1 =>
@@ -644,7 +641,7 @@ final class GraftLakeScanBuilder(root: String, version: Option[Long],
             totalRows.map(n => StructField("count_lit", LongType, nullable = false) -> n)
           case e => for {
             col <- nameOf(e)
-            r <- SnapshotLake.statsRange(root, col, Some(v))
+            r <- idx.range(phys(col))
             nulls <- r.nulls
             n <- totalRows
           } yield StructField(s"count_$col", LongType, nullable = false) -> (n - nulls)
@@ -652,13 +649,15 @@ final class GraftLakeScanBuilder(root: String, version: Option[Long],
         case m: Min => for {
           col <- nameOf(m.column)
           f <- numericField(col)
-          r <- SnapshotLake.statsRange(root, col, Some(v))
-        } yield StructField(s"min_$col", f.dataType, nullable = true) -> parse(f.dataType, r.min)
+          r <- idx.range(phys(col))
+          b <- GraftLakeScan.catalystBound(r.min, f.dataType, isMin = true)
+        } yield StructField(s"min_$col", f.dataType, nullable = true) -> b
         case m: Max => for {
           col <- nameOf(m.column)
           f <- numericField(col)
-          r <- SnapshotLake.statsRange(root, col, Some(v))
-        } yield StructField(s"max_$col", f.dataType, nullable = true) -> parse(f.dataType, r.max)
+          r <- idx.range(phys(col))
+          b <- GraftLakeScan.catalystBound(r.max, f.dataType, isMin = false)
+        } yield StructField(s"max_$col", f.dataType, nullable = true) -> b
         case _: AggregateFunc => None
       }
     if (cols.exists(_.isEmpty)) return false
@@ -672,13 +671,15 @@ final class GraftLakeScanBuilder(root: String, version: Option[Long],
     * reachable only in `exactPushdown` mode (Spark pushes an aggregate
     * only when every filter was accepted as pushed):
     *
-    *   - files provably DISJOINT from the predicate ranges contribute
-    *     nothing and are never opened;
+    *   - files provably DISJOINT from the predicate ranges (by the
+    *     version's [[LakeIndex]]), or known to hold zero rows,
+    *     contribute nothing and are never opened;
     *   - files EVERY row of which provably matches every filter (bounds
     *     strictly inside the predicate — bound-min > v proves true-min
     *     > v even if footer bounds are outer approximations — and zero
-    *     harvested nulls) contribute their `_rows.json` count WITHOUT
-    *     being opened;
+    *     harvested nulls, [[LakeIndex.wholeMatch]]) contribute their
+    *     `_rows.json` count WITHOUT being opened — read at plan time
+    *     ([[LakeIndex.exactRows]]), since the count is the answer;
     *   - the boundary files become counting partitions: each reader
     *     decodes ONLY the filter columns, counts the matching rows, and
     *     emits one row; Spark's final aggregate (partial-pushdown
@@ -698,33 +699,25 @@ final class GraftLakeScanBuilder(root: String, version: Option[Long],
       case _ => false
     }
     if (nCounts.isEmpty || nCounts.exists(!_)) return false
-    val v = version.orElse(SnapshotLake.currentVersion(root))
-      .getOrElse(return false)
+    val v = pinned.getOrElse(return false)
     if (SnapshotLake.deletesOf(root, v).nonEmpty) return false
-
-    val all = SnapshotLake.files(root, v)
     val rootAbs = java.nio.file.Paths.get(root).toAbsolutePath.toString
-    val dirs = all.map(f => f.substring(0, f.lastIndexOf('/'))).distinct
-    val sidecars = dirs.flatMap(dir => FileStats.readStatsSidecar(root, dir)).toMap
-    val rowsBy = dirs.flatMap(dir => FileStats.readRowsSidecar(root, dir)).toMap
-    val pathIdx = SnapshotLake.pathRangeIndex(all)
-    val stats = all.map(f =>
-      f -> (sidecars.getOrElse(f, Map.empty) ++ pathIdx.getOrElse(f, Map.empty))).toMap
-    val candidates = all.filter(f => FileStats.mayMatch(stats(f), ranges))
+    val pruned = idx.prune(ranges)
+    val rowsBy = LakeIndex.exactRows(root, pruned)
+    val candidates = pruned.filterNot(f => rowsBy.get(f).contains(0L))
     // the metadata proofs and the boundary readers both work in file
     // (physical) name space — the accepted filters translate once here
     val physExact = exact.map(physFilter)
     val (whole, boundary) = candidates.partition(f =>
       rowsBy.contains(f) &&
-        physExact.forall(GraftLakeCountScan.wholeMatch(stats(f), _)))
+        physExact.forall(LakeIndex.wholeMatch(idx.composed(f), _)))
     val filterCols = StructType(exact.flatMap(GraftLakeCountScan.colOf).distinct
       .flatMap(c => fullSchema.fields.find(_.name == c))
       .map(f => f.copy(name = phys(f.name))))
     val parts = boundary.map(f => GraftLakeInputPartition(s"$rootAbs/$f",
-      java.nio.file.Files.size(java.nio.file.Paths.get(root, f)),
-      GraftLakeScan.partTupleOf(f)))
+      idx.length(f), GraftLakeScan.partTupleOf(f)))
     countPushed = Some(new GraftLakeCountScan(nCounts.size,
-      whole.map(rowsBy).sum, whole.size, all.size - candidates.size,
+      whole.map(rowsBy).sum, whole.size, idx.files.size - candidates.size,
       parts, physExact, filterCols, GraftLakeConf.session()))
     true
   }
@@ -736,63 +729,35 @@ final class GraftLakeScanBuilder(root: String, version: Option[Long],
   }
 
   private def buildFileScan(): Scan = {
-    val spark = SparkSession.active
-    val v = version.orElse(SnapshotLake.currentVersion(root)).getOrElse(
-      throw new IllegalStateException(s"no committed version at $root"))
-    val all = SnapshotLake.files(root, v)
+    val base = fileSet.fold {
+      if (pinned.isEmpty) throw new IllegalStateException(s"no committed version at $root")
+      idx.files
+    }(_.files)
     val rootAbs = java.nio.file.Paths.get(root).toAbsolutePath.toString
-    // the flattened sidecar index of THIS version — memoized: a version's
-    // file list and sidecars are immutable, and rebuilding the
-    // million-entry maps was most of the residual per-plan driver time
-    // in the ManifestCeiling measurement
-    val idx = GraftLakeSidecarIndex.of(root, v, all)
-    val stats = idx.composed
-    val keptByRange =
-      if (ranges.isEmpty) all
-      else all.filter(f => FileStats.mayMatch(stats(f), ranges))
-    // bloom level: files whose bloom disproves EVERY probed key drop;
-    // a file without a bloom sidecar is conservatively kept
-    val kept =
-      if (bloomProbes.isEmpty) keptByRange
-      else {
-        val dirs = keptByRange.map(f => f.substring(0, f.lastIndexOf('/')))
-          .distinct
-        val byCol = bloomProbes.map(_._1).distinct.map { c =>
-          c -> dirs.flatMap(dir =>
-            FileStats.readBloomSidecar(root, dir, c)).toMap
-        }.toMap
-        keptByRange.filter { f =>
-          bloomProbes.forall { case (c, vals) =>
-            byCol(c).get(f).forall(bf => vals.exists(bf.mightContainString))
-          }
-        }
-      }
-    // file lengths from the commit-time `_bytes.json` sidecars;
-    // stat-on-demand only for pre-sidecar files
-    val lengths = kept.map(f => f -> idx.bytes.getOrElse(f,
-      java.nio.file.Files.size(java.nio.file.Paths.get(root, f)))).toMap
+    // range level, then bloom level: a file whose bloom disproves EVERY
+    // probed key drops; a file without a bloom sidecar is kept
+    val kept = idx.bloomKeep(bloomProbes, idx.prune(ranges, base))
+    val lengths = kept.map(f => f -> idx.length(f)).toMap
     // live deletion vectors: ship the tombstone FILES (path + length +
     // key column), not their keys — each reader task loads the set
-    val dvRel = SnapshotLake.deletesOf(root, v)
+    val dvRel = pinned.filter(_ => fileSet.forall(_.deletes))
+      .fold(Seq.empty[String])(SnapshotLake.deletesOf(root, _))
     val dv =
       if (dvRel.isEmpty) None
       else {
-        val keyField = spark.read
+        val keyField = SparkSession.active.read
           .parquet(dvRel.map(f => s"$rootAbs/$f"): _*).schema.fields.head
         Some(GraftLakeDv(
           dvRel.map(f => (s"$rootAbs/$f",
             java.nio.file.Files.size(java.nio.file.Paths.get(root, f)))),
           keyField))
       }
-    val ndvBy =
-      if (!reportColStats) Map.empty[String, Map[String, Long]]
-      else idx.ndv
-    val scan = new GraftLakeScan(root, rootAbs, kept, all.size, required,
-      fullSchema, ranges, stats, lengths, dv, GraftLakeConf.session(),
+    val scan = new GraftLakeScan(root, rootAbs, kept, base.size, required,
+      fullSchema, ranges, idx, lengths, dv, GraftLakeConf.session(),
       startingVersion, skipChangeCommits, maxVersionsPerTrigger,
       exact.map(physFilter), // readers evaluate in file (physical) space
-      v, idx.statCols, idx.rows,
-      maxFilesPerTrigger, maxBytesPerTrigger, reportColStats, ndvBy, colMap,
+      pinned.getOrElse(-1L),
+      maxFilesPerTrigger, maxBytesPerTrigger, reportColStats, colMap,
       fileOnlyRuntimeFilter)
     onBuild(scan)
     scan
@@ -803,29 +768,29 @@ final class GraftLakeScanBuilder(root: String, version: Option[Long],
   * (the split range and, on object storage, the saved HEAD request),
   * and the constants its rows carry — the hive partition tuple its path
   * encodes (raw encoded values, decoded into constant vectors on the
-  * executor) plus any metadata constant such as `_file`. The streaming
-  * and change-feed scans plan each file as an input partition of its
-  * own; the snapshot scan packs files into [[GraftLakePackedPartition]]s. */
+  * executor) plus any metadata constant such as `_file`. Every file
+  * scan packs these into [[GraftLakePackedPartition]]s; only the
+  * filtered-count scan plans one boundary file per partition. */
 final case class GraftLakeInputPartition(absPath: String, length: Long,
                                          partVals: Seq[(String, String)])
     extends InputPartition
 
-/** Several lake files one task reads one after another — the snapshot
-  * scan's input partition ([[GraftLakeScan.pack]]). */
+/** Several lake files one task reads one after another — the input
+  * partition of every file scan ([[GraftLakeScan.pack]]). */
 final case class GraftLakePackedPartition(files: Seq[GraftLakeInputPartition])
     extends InputPartition
 
 /** The live tombstone vector of the scanned version: file list (path,
   * length) plus the key column. Each reader task materializes the key
-  * set once — O(deleted keys) work per task, the merge-on-read tax the
-  * native reader pays as an anti-join, cleared by compaction. */
+  * set once — O(deleted keys) work per task, the merge-on-read tax,
+  * cleared by compaction. */
 final case class GraftLakeDv(paths: Seq[(String, Long)], keyField: StructField)
 
 final class GraftLakeScan(root: String, rootAbs: String,
                           kept: Seq[String], total: Int,
                           required: StructType, fullSchema: StructType,
                           ranges: Seq[FileStats.Range],
-                          stats: Map[String, Map[String, FileStats.ColRange]],
+                          idx: LakeIndex,
                           lengths: Map[String, Long],
                           dv: Option[GraftLakeDv],
                           hconf: Broadcast[SerializableConfiguration],
@@ -834,12 +799,9 @@ final class GraftLakeScan(root: String, rootAbs: String,
                           maxVersionsPerTrigger: Option[Long] = None,
                           exact: Array[Filter] = Array.empty,
                           resolvedVersion: Long = -1L,
-                          sidecarCols: Set[String] = Set.empty,
-                          rowsBy: Map[String, Long] = Map.empty,
                           maxFilesPerTrigger: Option[Long] = None,
                           maxBytesPerTrigger: Option[Long] = None,
                           reportColStats: Boolean = true,
-                          ndvBy: Map[String, Map[String, Long]] = Map.empty,
                           colMap: Map[String, String] = Map.empty,
                           fileOnlyRuntimeFilter: Boolean = false)
     extends Scan with Batch with SupportsRuntimeFiltering
@@ -873,7 +835,7 @@ final class GraftLakeScan(root: String, rootAbs: String,
     * IndexSpec re-harvest expects); a dropped column's physical key has
     * no logical name and passes through. */
   private[sources] def statsColumns: Seq[String] =
-    sidecarCols.toSeq.map(c => logicalOf.getOrElse(c, c)).sorted
+    idx.statCols.toSeq.map(c => logicalOf.getOrElse(c, c)).sorted
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String =
@@ -893,8 +855,8 @@ final class GraftLakeScan(root: String, rootAbs: String,
     *     by the same 99%;
     *   - `numRows`: sum of the pruned files' `_rows.json` counts, exact
     *     when every kept file has sidecar coverage (an upper bound while
-    *     deletion vectors are live — statistics are estimates, the DV
-    *     anti-join only shrinks the result).
+    *     deletion vectors are live — statistics are estimates, the
+    *     tombstone probe only shrinks the result).
     *
     * Costs ZERO extra I/O: both inputs were already in hand from
     * planning the scan. */
@@ -902,8 +864,8 @@ final class GraftLakeScan(root: String, rootAbs: String,
     val files = liveFiles
     val bytes = files.iterator.map(f => lengths.getOrElse(f, 0L)).sum
     val rows: Option[Long] =
-      if (rowsBy.nonEmpty && files.forall(rowsBy.contains))
-        Some(files.iterator.map(rowsBy).sum)
+      if (idx.rows.nonEmpty && files.forall(idx.rows.contains))
+        Some(files.iterator.map(idx.rows).sum)
       else None
     val cs = if (reportColStats) buildColumnStats(files)
              else new java.util.HashMap[NamedReference, ColumnStatistics]()
@@ -952,7 +914,7 @@ final class GraftLakeScan(root: String, rootAbs: String,
     val bd = (s: String) => new java.math.BigDecimal(s)
     fullSchema.fields.foreach { f =>
       val pn = phys(f.name) // sidecars key physical names
-      val per = files.map(fp => stats.getOrElse(fp, Map.empty).get(pn))
+      val per = files.map(fp => idx.composed(fp).get(pn))
       if (per.forall(_.isDefined)) {
         val rs = per.map(_.get)
         val numeric = rs.forall(_.numeric)
@@ -965,7 +927,7 @@ final class GraftLakeScan(root: String, rootAbs: String,
         val nulls: Option[Long] =
           if (rs.forall(_.nulls.isDefined)) Some(rs.iterator.map(_.nulls.get).sum)
           else None
-        val perNdv = files.map(fp => ndvBy.get(fp).flatMap(_.get(pn)))
+        val perNdv = files.map(fp => idx.ndv.get(fp).flatMap(_.get(pn)))
         val ndv: Option[Long] =
           if (perNdv.forall(_.isDefined)) {
             val vals = perNdv.map(_.get)
@@ -1016,7 +978,7 @@ final class GraftLakeScan(root: String, rootAbs: String,
     * the build side's key set to the scan at EXECUTION time, after the
     * dimension is materialized; files whose sidecar range disproves
     * every key are dropped before any task launches. Same conservative
-    * `mayMatch` as planning-time pruning, and the keys are re-checked
+    * [[LakeIndex.mayMatch]] as planning-time pruning, and the keys are re-checked
     * row-level by the join itself, so this can only skip I/O, never
     * change an answer. */
   override def filterAttributes(): Array[NamedReference] =
@@ -1026,18 +988,12 @@ final class GraftLakeScan(root: String, rootAbs: String,
     // `_file` (when projected) lets the row-level rewrite machinery
     // narrow the scan to exactly the matched GROUPS at runtime.
     (if (fileOnlyRuntimeFilter) Set("_file")
-     else stats.valuesIterator.flatMap(_.keysIterator)
-       .map(c => logicalOf.getOrElse(c, c)).toSet + "_file")
+     else (idx.statCols ++ idx.pathCols)
+       .map(c => logicalOf.getOrElse(c, c)) + "_file")
       .intersect(required.fieldNames.toSet).toArray
       .map(org.apache.spark.sql.connector.expressions.Expressions.column)
   override def filter(filters: Array[Filter]): Unit = {
-    def str(v: Any): Option[String] = v match {
-      case null => None
-      case _: Long | _: Int | _: Double | _: Float | _: Short | _: Byte |
-           _: String => Some(v.toString)
-      case u: UTF8String => Some(u.toString)
-      case _ => None
-    }
+    def str(v: Any): Option[String] = GraftLakeScan.statString(v)
     // Per filter: a pre-computed [min,max] HULL of the build-side key
     // set (one comparison per file), refined per-value only when the
     // set is small — a million-key build side costs one pass to take
@@ -1065,12 +1021,10 @@ final class GraftLakeScan(root: String, rootAbs: String,
               if (numeric) Ordering.by((s: String) => s.toDouble)
               else (a0: String, b0: String) => FileStats.utf8Cmp(a0, b0)
             val hull = FileStats.Range(pa, Some(keys.min(ord)), Some(keys.max(ord)))
-            (f: String) => {
-              val fr = stats.getOrElse(f, Map.empty)
-              FileStats.mayMatch(fr, Seq(hull)) &&
+            (f: String) =>
+              idx.mayMatch(f, Seq(hull)) &&
                 (keys.length > 4096 || keys.exists(k =>
-                  FileStats.mayMatch(fr, Seq(FileStats.Range(pa, Some(k), Some(k))))))
-            }
+                  idx.mayMatch(f, Seq(FileStats.Range(pa, Some(k), Some(k))))))
           }
         }
       case _ => (_: String) => true // unknown runtime-filter shape prunes nothing
@@ -1174,97 +1128,6 @@ private[graft] object GraftLakeConf {
   }
 }
 
-/** The flattened sidecar index of one lake VERSION — stats ranges
-  * (composed with path-encoded partition tuples), row counts, byte
-  * sizes, NDVs, and the sets of stats-indexed and path-tuple columns —
-  * memoized per (root, version) under soft references: a version's file
-  * list and its commit dirs' sidecars are immutable once visible, and
-  * rebuilding these maps dominated the residual per-plan driver time at
-  * a million files (ManifestCeiling). The first scan of a version pays
-  * the build; every later scan of it plans from the cached maps. */
-private[sources] final case class GraftLakeSidecarIndex(
-    stats: Map[String, Map[String, FileStats.ColRange]],
-    composed: Map[String, Map[String, FileStats.ColRange]],
-    rows: Map[String, Long],
-    bytes: Map[String, Long],
-    ndv: Map[String, Map[String, Long]],
-    statCols: Set[String],
-    pathCols: Set[String])
-
-private[sources] object GraftLakeSidecarIndex {
-  private val cache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long),
-    java.lang.ref.SoftReference[(SnapshotLake.VersionFp, GraftLakeSidecarIndex)]]()
-
-  /** The NEWEST version's index per root, held STRONGLY (one slot per
-    * root, replaced when a newer version is planned) — Delta keeps the
-    * current Snapshot pinned per DeltaLog for the same reason: the
-    * active table's planning state must not depend on GC policy.
-    * Building a million-file index allocates enough garbage that the
-    * collector clears the SoftReference it just filled — measured at
-    * the 10,000-commit-dir ceiling as warm planning ≈ cold (the index
-    * rebuilt per query, 15 s). Older versions (time travel) stay
-    * soft-only: bounded memory, the MRU version is what repeats. */
-  private val strongMru = new java.util.concurrent.ConcurrentHashMap[
-    String, (Long, SnapshotLake.VersionFp, GraftLakeSidecarIndex)]()
-
-  // a delete-and-recreate detected by SnapshotLake's resolve fingerprint
-  // drops this cache's entries for the root too — commit-dir names can
-  // recur across recreations, so a stale index could mis-prune
-  SnapshotLake.onLakeRecreated { root =>
-    val it = cache.keys()
-    while (it.hasMoreElements) {
-      val k = it.nextElement()
-      if (k._1 == root) cache.remove(k)
-    }
-    strongMru.remove(root)
-    ()
-  }
-
-  def of(root: String, v: Long, all: Seq[String]): GraftLakeSidecarIndex = {
-    val k = (root, v)
-    // the same version-file fingerprint resolve() validates with: a
-    // recreated lake at this root can never be served the old index
-    val fp = SnapshotLake.versionFingerprint(root, v)
-    Option(strongMru.get(root)) match {
-      case Some((mv, f, idx)) if mv == v && fp.contains(f) => return idx
-      case _ => ()
-    }
-    Option(cache.get(k)).flatMap(r => Option(r.get())) match {
-      case Some((f, idx)) if fp.contains(f) =>
-        fp.foreach { f2 =>
-          strongMru.merge(root, (v, f2, idx),
-            (old, nw) => if (nw._1 >= old._1) nw else old)
-        }
-        idx
-      case _ =>
-        val dirs = all.map(f => f.substring(0, f.lastIndexOf('/'))).distinct
-        val sidecars = dirs.flatMap(d => FileStats.readStatsSidecar(root, d)).toMap
-        val pathIdx = SnapshotLake.pathRangeIndex(all)
-        // unpartitioned lakes (empty path index) skip the per-file map
-        // merge — at a million files the O(files) allocation is real time
-        val composed: Map[String, Map[String, FileStats.ColRange]] =
-          if (pathIdx.isEmpty) sidecars.withDefaultValue(Map.empty)
-          else all.map(f => f -> (sidecars.getOrElse(f, Map.empty) ++
-            pathIdx.getOrElse(f, Map.empty))).toMap
-            .withDefaultValue(Map.empty) // same no-stats default as above
-        val idx = GraftLakeSidecarIndex(
-          sidecars, composed,
-          dirs.flatMap(d => FileStats.readRowsSidecar(root, d)).toMap,
-          dirs.flatMap(d => FileStats.readBytesSidecar(root, d)).toMap,
-          dirs.flatMap(d => FileStats.readNdvSidecar(root, d)).toMap,
-          sidecars.valuesIterator.flatMap(_.keysIterator).toSet,
-          pathIdx.valuesIterator.flatMap(_.keysIterator).toSet)
-        fp.foreach { f =>
-          cache.put(k, new java.lang.ref.SoftReference((f, idx)))
-          strongMru.merge(root, (v, f, idx),
-            (old, nw) => if (nw._1 >= old._1) nw else old)
-        }
-        idx
-    }
-  }
-}
-
 object GraftLakeScan {
   private val NullPart = "__HIVE_DEFAULT_PARTITION__"
 
@@ -1274,6 +1137,16 @@ object GraftLakeScan {
     * INT32 `DATE` value (epoch days) — the inverse of the conversion
     * Spark applied when it translated the Catalyst literal into the
     * filter. None for any other literal. */
+  /** A filter literal in the string form the stats sidecars and path
+    * tuples compare against: numbers and strings (Spark's or Catalyst's
+    * UTF8 form); None for anything else, which then prunes nothing. */
+  private[sources] def statString(v: Any): Option[String] = v match {
+    case null => None
+    case _: Long | _: Int | _: Double | _: Float | _: Short | _: Byte |
+         _: String | _: UTF8String => Some(v.toString)
+    case _ => None
+  }
+
   private[sources] def temporalStat(v: Any): Option[Long] = v match {
     case t: java.sql.Timestamp => Some(DateTimeUtils.fromJavaTimestamp(t))
     case i: java.time.Instant => Some(DateTimeUtils.instantToMicros(i))
@@ -1285,8 +1158,8 @@ object GraftLakeScan {
 
   /** A sidecar bound (its decimal string form — possibly a double-form
     * string like "5.0" after a cross-row-group merge) as the CATALYST
-    * INTERNAL value of the column's type, the representation
-    * `transformV2Stats` stores straight into a ColumnStat: Int days for
+    * INTERNAL value of the column's type — what a metadata-only MIN/MAX
+    * emits and what `transformV2Stats` stores straight into a ColumnStat: Int days for
     * dates, Long micros for timestamps, the boxed primitive otherwise.
     * Integral bounds round OUTWARD (floor the min, ceil the max) so a
     * double-merged bound can only widen, never narrow — conservative for
@@ -1349,7 +1222,7 @@ object GraftLakeScan {
 
   /** The hive partition tuple a relative lake path encodes, raw (still
     * path-escaped): `data/commit=<uuid>/p=v/part-x.parquet` → [(p, v)]. */
-  private[sources] def partTupleOf(rel: String): Seq[(String, String)] =
+  private[graft] def partTupleOf(rel: String): Seq[(String, String)] =
     if (!rel.startsWith("data/commit=")) Nil
     else rel.split('/').drop(2).dropRight(1).toSeq.filter(_.contains('='))
       .map { seg =>
@@ -1377,8 +1250,8 @@ object GraftLakeScan {
 
   /** One hive-encoded partition value as the Catalyst-internal constant
     * the column vector carries, converted to the column's RESOLVED type
-    * (the connector's schema came from the native read's partition
-    * discovery, so the types are discovery's own). */
+    * (the connector's schema came from [[SnapshotLake.schemaOf]]'s
+    * footer inference, so the types are partition discovery's own). */
   private[sources] def catalystPartValue(raw: String, dt: DataType): Any = {
     val v = unescapePath(raw)
     if (v == NullPart) null
@@ -1448,10 +1321,8 @@ final class GraftLakeReaderFactory(required: StructType,
                                    exact: Array[Filter] = Array.empty,
                                    fullSchema: StructType = new StructType())
     extends PartitionReaderFactory {
-  private def filesOf(p: InputPartition): Seq[GraftLakeInputPartition] = p match {
-    case packed: GraftLakePackedPartition => packed.files
-    case file: GraftLakeInputPartition => Seq(file)
-  }
+  private def filesOf(p: InputPartition): Seq[GraftLakeInputPartition] =
+    p.asInstanceOf[GraftLakePackedPartition].files
   // columnar is the default path; a live tombstone vector or accepted
   // exact filters need row-level work during the scan, so those read
   // row-based
@@ -1517,12 +1388,13 @@ final class GraftLakeColumnarReader(p: GraftLakeInputPartition,
 }
 
 /** The row path, used only when the scanned version carries live key
-  * tombstones: the same vectorized decode iterated row-wise, each row
-  * probed against the version's tombstone key set (loaded once per
-  * task) and surviving rows emitted through a bound projection in the
-  * required column order. Equal by construction to the native reader's
-  * anti-join; compaction clears the vector and the scan goes columnar
-  * again. */
+  * tombstones or the scan accepted exact filters: the same vectorized
+  * decode iterated row-wise, each row probed against the version's
+  * tombstone key set (loaded once per task) and the exact filters, and
+  * surviving rows emitted through a bound projection in the required
+  * column order. A row whose key is NULL survives, as under an
+  * anti-join on the key; compaction clears the vector and the scan goes
+  * columnar again. */
 final class GraftLakeRowReader(p: GraftLakeInputPartition,
                                required: StructType,
                                dv: Option[GraftLakeDv], conf: Configuration,
@@ -1706,48 +1578,6 @@ object GraftLakeCountScan {
     case LessThanOrEqual(a, _) => Some(a)
     case org.apache.spark.sql.sources.IsNotNull(a) => Some(a)
     case _ => None
-  }
-
-  /** True iff EVERY row of a file provably satisfies `f`, from its
-    * harvested/path-derived range: bounds strictly inside the predicate
-    * plus a known-ZERO null count. Sound even for outer-approximation
-    * bounds (bound-min ≤ true-min, so bound-min > v proves
-    * true-min > v), and STRICTNESS-aware — the inclusive superset
-    * ranges mayMatch prunes with would over-claim for `>`/`<`. */
-  private[sources] def wholeMatch(stats: Map[String, FileStats.ColRange],
-                                  f: Filter): Boolean = {
-    def chk(a: String, v: Any)(test: (Int, Int) => Boolean): Boolean =
-      stats.get(a).exists { r =>
-        r.nulls.contains(0L) && {
-          val lit = v.toString
-          // Exact-precision compare: Double collapses longs beyond 2^53
-          // to equal values, which could wrongly PROVE a whole-file
-          // match (a metadata count of rows the predicate rejects).
-          // BigDecimal keeps full precision for integral and decimal
-          // stat encodings alike; an unparseable bound (NaN/Infinity)
-          // proves nothing — the file falls back to boundary scanning.
-          def c(x: String): Option[Int] =
-            if (r.numeric)
-              try Some(new java.math.BigDecimal(x)
-                .compareTo(new java.math.BigDecimal(lit)))
-              catch { case _: NumberFormatException => None }
-            else Some(FileStats.utf8Cmp(x, lit))
-          (c(r.min), c(r.max)) match {
-            case (Some(mn), Some(mx)) => test(mn, mx)
-            case _ => false
-          }
-        }
-      }
-    f match {
-      case EqualTo(a, v) => chk(a, v)((mn, mx) => mn == 0 && mx == 0)
-      case GreaterThan(a, v) => chk(a, v)((mn, _) => mn > 0)
-      case GreaterThanOrEqual(a, v) => chk(a, v)((mn, _) => mn >= 0)
-      case LessThan(a, v) => chk(a, v)((_, mx) => mx < 0)
-      case LessThanOrEqual(a, v) => chk(a, v)((_, mx) => mx <= 0)
-      case org.apache.spark.sql.sources.IsNotNull(a) =>
-        stats.get(a).exists(_.nulls.contains(0L))
-      case _ => false
-    }
   }
 
   /** Compile one accepted exact filter to a row predicate with Spark's

@@ -6,7 +6,7 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, 
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.etl.SnapshotLake
+import graft.etl.{LakeIndex, SnapshotLake}
 
 /** Stream offset = the newest lake version this stream has FULLY
   * emitted, plus (under file-granular admission control) how many
@@ -76,7 +76,10 @@ object GraftLakeOffset {
   *     window, like every incremental reader.
   *
   * Batches read through the same vectorized reader factory as batch
-  * scans (column pruning included — `required` is the pruned schema).
+  * scans (column pruning included — `required` is the pruned schema),
+  * their files packed into tasks by the batch scan's rule
+  * ([[GraftLakeScan.pack]]) with lengths from the commits' `_bytes.json`
+  * sidecars, so planning a batch stats no data file.
   */
 final class GraftLakeMicroBatchStream(root: String, rootAbs: String,
                                       required: StructType,
@@ -160,10 +163,10 @@ final class GraftLakeMicroBatchStream(root: String, rootAbs: String,
     while (!full && v < head &&
         maxVersionsPerTrigger.forall(n => versions < math.max(1L, n))) {
       val add = emittable(v + 1, strict = false)
+      val size = LakeIndex.lengths(root, add)
       var i = p
       while (!full && i < add.size) {
-        val sz = java.nio.file.Files.size(
-          java.nio.file.Paths.get(root, add(i.toInt)))
+        val sz = size(add(i.toInt))
         val wouldExceed =
           maxFilesPerTrigger.exists(n => files + 1 > math.max(1L, n)) ||
             maxBytesPerTrigger.exists(b => bytes + sz > b)
@@ -186,24 +189,27 @@ final class GraftLakeMicroBatchStream(root: String, rootAbs: String,
     // CDF mode: each version's CHANGE batch — append files as constant
     // 'insert' partitions, change commits' materialized feeds — whole
     // versions only (the ctor refuses file-granular caps with cdf)
-    if (cdf)
-      return ((s.version + 1) to e.version).flatMap(v =>
-        GraftLakeCdf.partitions(root, rootAbs, v, skipChangeCommits)).toArray
-    // versions (s.version, e.version] fully, plus the first e.part files
-    // of e.version+1; s.part files of s.version+1 were already emitted.
-    // Deterministic in (start, end]: add lists are immutable and ordered,
-    // so a restarted batch re-reads byte-identical input.
-    val last = if (e.part > 0L) e.version + 1 else e.version
-    ((s.version + 1) to last).flatMap { v =>
-      val add = emittable(v, strict = true)
-      val from = if (v == s.version + 1) s.part else 0L
-      val until = if (v == e.version + 1) e.part else add.size.toLong
-      add.slice(from.toInt, until.toInt).map { f =>
-        GraftLakeInputPartition(s"$rootAbs/$f",
-          java.nio.file.Files.size(java.nio.file.Paths.get(root, f)),
-          GraftLakeScan.partTupleOf(f) :+ ("_file" -> f))
+    val files =
+      if (cdf)
+        ((s.version + 1) to e.version).flatMap(v =>
+          GraftLakeCdf.partitions(root, rootAbs, v, skipChangeCommits))
+      else {
+        // versions (s.version, e.version] fully, plus the first e.part
+        // files of e.version+1; s.part files of s.version+1 were already
+        // emitted. Deterministic in (start, end]: add lists are immutable
+        // and ordered, so a restarted batch re-reads byte-identical input.
+        val last = if (e.part > 0L) e.version + 1 else e.version
+        ((s.version + 1) to last).flatMap { v =>
+          val add = emittable(v, strict = true)
+          val from = if (v == s.version + 1) s.part else 0L
+          val until = if (v == e.version + 1) e.part else add.size.toLong
+          val slice = add.slice(from.toInt, until.toInt)
+          val size = LakeIndex.lengths(root, slice)
+          slice.map(f => GraftLakeInputPartition(s"$rootAbs/$f", size(f),
+            GraftLakeScan.partTupleOf(f) :+ ("_file" -> f)))
+        }
       }
-    }.toArray
+    GraftLakeScan.pack(org.apache.spark.sql.SparkSession.active, files).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -261,8 +267,11 @@ final class GraftLakeStreamingWrite(root: String, rootAbs: String,
       schema.fields.map(f => f.copy(name = m.getOrElse(f.name, f.name))))
   }
 
+  // called once per epoch: each epoch writes a fresh time-ordered data
+  // dir, so a streamed commit sorts after every earlier commit of the lake
+  // and schemaOf inherits version v−1's inference as for a plain append
   override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    GraftLakeStreamWriterFactory(rootAbs, physSchema, queryId, hconf)
+    GraftLakeStreamWriterFactory(rootAbs, SnapshotLake.newDataDir(), physSchema, queryId, hconf)
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val files = messages.toSeq.collect { case m: GraftLakeFilesMsg => m.files }.flatten
@@ -285,17 +294,17 @@ final class GraftLakeStreamingWrite(root: String, rootAbs: String,
 }
 
 final case class GraftLakeStreamWriterFactory(
-    rootAbs: String, schema: org.apache.spark.sql.types.StructType,
+    rootAbs: String, relDir: String, schema: org.apache.spark.sql.types.StructType,
     queryId: String, hconf: Broadcast[SerializableConfiguration])
     extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
       : org.apache.spark.sql.connector.write.DataWriter[org.apache.spark.sql.catalyst.InternalRow] =
-    new GraftLakeDataWriter(rootAbs,
-      // epoch-deterministic DIRECTORY, attempt-unique FILE name: a
-      // replayed epoch (or a speculative attempt) never collides with
-      // a live writer, and only committed messages' names are linked
-      s"data/stream-$queryId-e$epochId",
-      f"part-$partitionId%05d-t$taskId.parquet", schema, hconf.value.value)
+    new GraftLakeDataWriter(rootAbs, relDir,
+      // attempt-unique FILE name, carrying the epoch it belongs to: a
+      // replayed epoch (or a speculative attempt) never collides with a
+      // live writer, and only committed messages' names are linked
+      f"stream-$queryId-e$epochId-part-$partitionId%05d-t$taskId.parquet",
+      schema, hconf.value.value)
 }
 
 /** Task-side parquet writer over InternalRow — lazily opened so a

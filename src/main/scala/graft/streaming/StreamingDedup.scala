@@ -326,15 +326,18 @@ object StreamingDedup {
         } finally s.close()
       }
       if (batchDirs.nonEmpty) {
-        val tmp = java.nio.file.Files
-          .createTempDirectory("graft-dedup-compact").resolve("stage")
-        spark.table(t).filter(col("b") < upToBatch)
-          .drop("b").write.parquet(tmp.toString)
-        withDynamicPartitionOverwrite(spark) {
-          spark.read.parquet(tmp.toString)
-            .withColumn("b", lit(-1L))
-            .write.mode("overwrite").insertInto(t)
-        }
+        // staged beside the tables it rewrites, and gone once the
+        // archive partition holds the rows
+        val tmp = Paths.get(stateRoot, s"_compact-stage-${java.util.UUID.randomUUID()}")
+        try {
+          spark.table(t).filter(col("b") < upToBatch)
+            .drop("b").write.parquet(tmp.toString)
+          withDynamicPartitionOverwrite(spark) {
+            spark.read.parquet(tmp.toString)
+              .withColumn("b", lit(-1L))
+              .write.mode("overwrite").insertInto(t)
+          }
+        } finally graft.etl.Scratch.rm(tmp)
         // the archive partition now holds every consolidated row; the
         // per-batch source partitions are dead weight — drop them from
         // the CATALOG first (dynamic-partition inserts registered them;

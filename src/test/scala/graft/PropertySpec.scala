@@ -105,7 +105,7 @@ object PureProperties extends Properties("graft.pure") {
 
   property("stats sidecar round-trips adversarial names and values") = Prop.forAll(
     Gen.listOfN(2, nasty), nasty, nasty) { (colNames, mn, mx) =>
-    val root = java.nio.file.Files.createTempDirectory("prop-sidecar").toString
+    val root = graft.TestSpark.tempDir("prop-sidecar").toString
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(root, "data/c0"))
     val stats = Map("data/c0/part-0.parquet" ->

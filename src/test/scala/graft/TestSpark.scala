@@ -14,6 +14,19 @@ object TestSpark {
   lazy val spark: SparkSession = Sessions.local("16")
   val Sf = "/root/testdata/sf0.001"
 
+  /** This run's temp root under `java.io.tmpdir`, deleted recursively by
+    * one JVM exit hook: every spec's lakes, checkpoints and staging dirs
+    * live under it, so a test run leaves `/tmp` as it found it. */
+  private lazy val runRoot: java.nio.file.Path = {
+    val r = java.nio.file.Files.createTempDirectory("graft-test-run-")
+    Runtime.getRuntime.addShutdownHook(new Thread(() => graft.etl.Scratch.rm(r)))
+    r
+  }
+
+  /** A fresh directory under this run's temp root. */
+  def tempDir(prefix: String): java.nio.file.Path =
+    java.nio.file.Files.createTempDirectory(runRoot, prefix)
+
   /** True iff some scan in the plan string carries a NON-empty
     * PartitionFilters list naming the `year` partition column — the one
     * place the fragile plan-string parsing lives (plan formats shift

@@ -14,7 +14,7 @@ class BucketedJoinSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("equal-bucketed fact tables sort-merge join without a shuffle") {
-    val dir = Files.createTempDirectory("graft-bucketed").toString
+    val dir = graft.TestSpark.tempDir("graft-bucketed").toString
     val li = graft.model.Tables.lineitem(spark, TestSpark.Sf)
       .select("l_orderkey", "l_extendedprice", "l_discount")
     val ord = graft.model.Tables.orders(spark, TestSpark.Sf)

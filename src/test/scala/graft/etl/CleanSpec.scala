@@ -167,7 +167,7 @@ class CleanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("a day-partitioned batch write shuffles once; a whole-table clean hashes all seven keys") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-clean").resolve("lake").toString
+    val dir = graft.TestSpark.tempDir("graft-clean").resolve("lake").toString
     val plan = writePlan(dir) {
       PartitionedLake.append(Clean.cleanEvents(Clean.partitionByDay("ts")(dirtyEvents)), dir)
     }

@@ -17,7 +17,7 @@ class ColumnMappingSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private def freshDir(): String =
-    Files.createTempDirectory("graft-colmap").toString + "/lake"
+    graft.TestSpark.tempDir("graft-colmap").toString + "/lake"
 
   /** Two indexed half-range commits of (k, v, tag). */
   private def seed(root: String): Unit = {
@@ -133,7 +133,7 @@ class ColumnMappingSpec extends AnyFunSuite {
     s.conf.set("spark.sql.catalog.graft_cmt",
       classOf[graft.sources.GraftLakeCatalog].getName)
     s.conf.set("spark.sql.catalog.graft_cmt.warehouse",
-      Files.createTempDirectory("graft-cmt-wh").toString)
+      graft.TestSpark.tempDir("graft-cmt-wh").toString)
     val root = freshDir()
     seed(root)
     val tbl = "graft_cmt.lakes.cm_sql"
@@ -181,7 +181,7 @@ class ColumnMappingSpec extends AnyFunSuite {
     SnapshotLake.append(s.range(5000, 5010)
       .select(col("id").as("key"), (col("id") * 2).as("v"),
         lit("s").as("tag")).coalesce(1), srcRoot, SnapshotLake.IndexSpec.none)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-cm-ckpt").toString
+    val ckpt = graft.TestSpark.tempDir("graft-cm-ckpt").toString
     val q = s.readStream.format("graftlake").load(srcRoot)
       .writeStream.format("graftlake")
       .option("path", root).option("checkpointLocation", ckpt)

@@ -17,7 +17,7 @@ class CommitRecordSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def newRoot(name: String = "lake"): String =
-    Files.createTempDirectory("graft-record-spec").toString + "/" + name
+    graft.TestSpark.tempDir("graft-record-spec").toString + "/" + name
 
   /** `n` rows `(k, n)` from `from`, in ONE file. */
   private def kn(from: Long, n: Int): DataFrame =

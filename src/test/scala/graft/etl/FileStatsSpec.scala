@@ -19,7 +19,7 @@ class FileStatsSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def newRoot(): String =
-    Files.createTempDirectory("graft-fstats-spec").toString + "/lake"
+    graft.TestSpark.tempDir("graft-fstats-spec").toString + "/lake"
 
   /** (k, grp, v): k dense [lo, hi) as ONE file per append, so manifest
     * file counts are deterministic. */

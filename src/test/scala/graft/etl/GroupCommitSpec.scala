@@ -21,7 +21,7 @@ class GroupCommitSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def newRoot(): String =
-    Files.createTempDirectory("graft-group-spec").toString + "/lake"
+    graft.TestSpark.tempDir("graft-group-spec").toString + "/lake"
 
   /** A publisher that parks `ms` per conditional publish — the
     * object-store window group commit exists to amortize. */

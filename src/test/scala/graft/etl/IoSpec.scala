@@ -16,7 +16,7 @@ class IoSpec extends AnyFunSuite {
   test("CSV stage round-trip preserves rows and timestamp values under an explicit schema") {
     val events = graft.model.Tables.events(spark, TestSpark.Sf)
       .select("event_id", "ts", "user_id", "event_type", "value")
-    val dir = Files.createTempDirectory("graft-csv").toString + "/stage"
+    val dir = graft.TestSpark.tempDir("graft-csv").toString + "/stage"
     Csv.write(events, dir)
     val back = Csv.read(spark, dir, graft.streaming.StreamingJobs.eventsSchema)
     assert(back.count() == events.count())

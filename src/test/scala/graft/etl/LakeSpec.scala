@@ -15,7 +15,7 @@ class LakeSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private def freshDir(): String =
-    Files.createTempDirectory("graft-lake").toString
+    graft.TestSpark.tempDir("graft-lake").toString
 
   private lazy val events =
     graft.etl.Clean.cleanEvents(graft.model.Tables.events(spark, TestSpark.Sf))

@@ -16,7 +16,7 @@ class SnapshotLakeSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def newRoot(): String =
-    Files.createTempDirectory("graft-snap-spec").toString + "/lake"
+    graft.TestSpark.tempDir("graft-snap-spec").toString + "/lake"
 
   private def rows(root: String, v: Option[Long] = None): Set[Long] =
     SnapshotLake.read(spark, root, v)
@@ -777,7 +777,7 @@ class SnapshotLakeSpec extends AnyFunSuite {
   test("vacuum victim ordering is ascending by version (probe-safety contract)") {
     val names = Vector("v12.json", "v3.ckpt.json", "v10.ickpt.json",
       "v3.json", "v10.json", "v2.json", "v12.ckpt.json")
-    val dir = Files.createTempDirectory("graft-vac-order")
+    val dir = graft.TestSpark.tempDir("graft-vac-order")
     val paths = names.map(dir.resolve)
     val ordered = SnapshotLake.ascendingByVersion(paths)
       .map(_.getFileName.toString)

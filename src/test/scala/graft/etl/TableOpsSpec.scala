@@ -17,7 +17,7 @@ class TableOpsSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def newRoot(prefix: String): String =
-    Files.createTempDirectory(prefix).toString + "/lake"
+    graft.TestSpark.tempDir(prefix).toString + "/lake"
 
   private def rows(root: String, v: Option[Long] = None): Set[Long] =
     SnapshotLake.read(spark, root, v)

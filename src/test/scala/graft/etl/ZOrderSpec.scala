@@ -41,7 +41,7 @@ class ZOrderSpec extends AnyFunSuite {
   }
 
   test("two-dim box intersects fewer files under z-order than 1-d sort") {
-    val work = Files.createTempDirectory("graft-zorder-cmp").toString
+    val work = graft.TestSpark.tempDir("graft-zorder-cmp").toString
     val raw = graft.model.Tables.lineitem(spark, TestSpark.Sf)
       .select("l_suppkey", "l_partkey")
     val files = 16

@@ -22,7 +22,7 @@ class IncrementalSpec extends AnyFunSuite {
   private lazy val events = Tables.events(spark, TestSpark.Sf)
 
   test("batch1 ∪ batch2 over a moving watermark equals one full-scan clean") {
-    val dir = Files.createTempDirectory("graft-inc").toString
+    val dir = graft.TestSpark.tempDir("graft-inc").toString
     val lake = s"$dir/lake"
     val inc = Incremental(dir)
 
@@ -49,7 +49,7 @@ class IncrementalSpec extends AnyFunSuite {
   }
 
   test("watermark +1s boundary drops same-second stragglers (extract.py:51-53)") {
-    val dir = Files.createTempDirectory("graft-inc").toString
+    val dir = graft.TestSpark.tempDir("graft-inc").toString
     val inc = Incremental(dir)
     inc.writeState(Timestamp.valueOf("2024-01-01 10:00:00"))
     val schema = graft.streaming.StreamingJobs.eventsSchema
@@ -65,7 +65,7 @@ class IncrementalSpec extends AnyFunSuite {
   }
 
   test("empty batch short-circuits: no lake write, no state advance") {
-    val dir = Files.createTempDirectory("graft-inc").toString
+    val dir = graft.TestSpark.tempDir("graft-inc").toString
     val lake = s"$dir/lake"
     val inc = Incremental(dir)
     val w = Timestamp.valueOf("2999-01-01 00:00:00") // beyond all data
@@ -77,7 +77,7 @@ class IncrementalSpec extends AnyFunSuite {
   }
 
   test("a batch is one write: ≤ 2 jobs when non-empty, ≤ 4 when empty") {
-    val dir = Files.createTempDirectory("graft-inc").toString
+    val dir = graft.TestSpark.tempDir("graft-inc").toString
     val lake = s"$dir/lake"
     val inc = Incremental(dir)
     val (full, fullTasks) = TestSpark.jobsAndTasks { assert(inc.runBatch(events, lake) > 0) }
@@ -97,7 +97,7 @@ class IncrementalSpec extends AnyFunSuite {
   }
 
   test("an empty batch into an existing lake changes no data file and keeps the state") {
-    val dir = Files.createTempDirectory("graft-inc").toString
+    val dir = graft.TestSpark.tempDir("graft-inc").toString
     val lake = s"$dir/lake"
     val inc = Incremental(dir)
     assert(inc.runBatch(events, lake) > 0)
@@ -110,7 +110,7 @@ class IncrementalSpec extends AnyFunSuite {
   }
 
   test("a failing write rethrows and leaves the state file as it was") {
-    val dir = Files.createTempDirectory("graft-inc").toString
+    val dir = graft.TestSpark.tempDir("graft-inc").toString
     val lake = java.nio.file.Paths.get(dir, "lake")
     Files.writeString(lake, "not a directory") // the lake root is a regular file
     val inc = Incremental(dir)
@@ -123,7 +123,7 @@ class IncrementalSpec extends AnyFunSuite {
   }
 
   test("first run (no state) extracts everything") {
-    val dir = Files.createTempDirectory("graft-inc").toString
+    val dir = graft.TestSpark.tempDir("graft-inc").toString
     val inc = Incremental(dir)
     assert(inc.readState().isEmpty)
     assert(inc.extract(events, "ts").count() == events.count())

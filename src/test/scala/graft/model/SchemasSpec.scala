@@ -48,7 +48,7 @@ class SchemasSpec extends AnyFunSuite {
     val expect = sample.select("event_id", "ts").collect()
       .map(r => (r.getLong(0), r.getTimestamp(1))).toMap
 
-    val base = java.nio.file.Files.createTempDirectory("graft-events-enc").toString
+    val base = graft.TestSpark.tempDir("graft-events-enc").toString
     // legacy: TIMESTAMP(NANOS) surfaces as LongType nanos under nanosAsLong
     sample.withColumn("ts", unix_micros(col("ts")) * 1000L)
       .write.parquet(s"$base/nanos/events.parquet")
@@ -71,7 +71,7 @@ class SchemasSpec extends AnyFunSuite {
   test("a non-equivalent events.ts encoding is still hard drift") {
     import org.apache.spark.sql.functions._
     val cols = Seq("event_id", "ts", "user_id", "event_type", "value", "props")
-    val dir = java.nio.file.Files.createTempDirectory("graft-events-bad").toString
+    val dir = graft.TestSpark.tempDir("graft-events-bad").toString
     Tables.events(spark, TestSpark.Sf).limit(5)
       .withColumn("ts", date_format(col("ts"), "yyyy-MM-dd HH:mm:ss"))
       .select(cols.map(col): _*)

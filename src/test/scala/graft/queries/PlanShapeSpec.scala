@@ -293,8 +293,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // trigger and shuffling nothing.
     import org.apache.spark.sql.functions.{col, lit, xxhash64}
     import spark.implicits._
-    val stateRoot = java.nio.file.Files
-      .createTempDirectory("graft-probe-shape").toString
+    val stateRoot = graft.TestSpark.tempDir("graft-probe-shape").toString
     val docs = graft.model.Tables.documents(spark, TestSpark.Sf)
       .select("doc_id", "text", "lang", "source", "n_chars")
     // two real batches through the actual per-batch entry point
@@ -335,7 +334,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // size-based JoinSelection rule fires on its own.
     import org.apache.spark.sql.functions.{col, concat, lit}
     import graft.etl.SnapshotLake
-    val dir = java.nio.file.Files.createTempDirectory("graft-scanstats").toString
+    val dir = graft.TestSpark.tempDir("graft-scanstats").toString
     val dimRoot = s"$dir/dim"
     val factRoot = s"$dir/fact"
     SnapshotLake.append(spark.range(0, 100)
@@ -397,7 +396,7 @@ class PlanShapeSpec extends AnyFunSuite {
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.functions.{col, concat, lit}
     import graft.etl.SnapshotLake
-    val dir = java.nio.file.Files.createTempDirectory("graft-colstats").toString
+    val dir = graft.TestSpark.tempDir("graft-colstats").toString
     val dimRoot = s"$dir/dim"
     val factRoot = s"$dir/fact"
     for (i <- 0 until 4) // interleaved: every file spans ~the full range
@@ -463,7 +462,7 @@ class PlanShapeSpec extends AnyFunSuite {
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.functions.col
     import graft.etl.{FileStats, SnapshotLake}
-    val dir = java.nio.file.Files.createTempDirectory("graft-ndvslack").toString
+    val dir = graft.TestSpark.tempDir("graft-ndvslack").toString
     val idx = SnapshotLake.IndexSpec(Seq("k"), None, ndvCols = Seq("k"))
     def seed(root: String): Seq[String] = {
       SnapshotLake.append(

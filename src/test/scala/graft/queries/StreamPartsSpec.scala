@@ -15,7 +15,7 @@ class StreamPartsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private def dirOfBytes(n: Int): String = {
-    val d = Files.createTempDirectory("graft-streamparts")
+    val d = graft.TestSpark.tempDir("graft-streamparts")
     Files.write(d.resolve("blob.bin"), new Array[Byte](n))
     d.toString
   }

@@ -126,7 +126,7 @@ class DashboardSpec extends AnyFunSuite {
     }
 
   test("folds keep Spark's nulls: null prices, supplier names and priorities") {
-    val dir = java.nio.file.Files.createTempDirectory("dash-nulls").toString
+    val dir = graft.TestSpark.tempDir("dash-nulls").toString
     def write(name: String, rows: Seq[Row]): Unit =
       spark.createDataFrame(rows.asJava, Schemas.byName(name))
         .coalesce(1).write.parquet(s"$dir/$name.parquet")

@@ -163,7 +163,7 @@ class ReportSpec extends AnyFunSuite {
   }
 
   test("report sink writes the reference's key scheme") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-report").toString
+    val dir = graft.TestSpark.tempDir("graft-report").toString
     val date = LocalDate.of(2000, 6, 15)
     val p = Report.save("<html></html>", dir, date)
     assert(p.getFileName.toString == "daily-report-2000-06-15.html")

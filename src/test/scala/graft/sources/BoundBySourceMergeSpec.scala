@@ -20,7 +20,7 @@ class BoundBySourceMergeSpec extends AnyFunSuite {
 
   private def seeded(tag: String): (String, String) = {
     val s = spark
-    val root = Files.createTempDirectory(s"graft-nbs-$tag").toString + "/lake"
+    val root = graft.TestSpark.tempDir(s"graft-nbs-$tag").toString + "/lake"
     val idx = SnapshotLake.IndexSpec(Seq("k"), None)
     for (i <- 0 until 4) // four disjoint key-range files
       SnapshotLake.append(s.range(i * 1000L, (i + 1) * 1000L)
@@ -29,7 +29,7 @@ class BoundBySourceMergeSpec extends AnyFunSuite {
     s.conf.set("spark.sql.catalog.graft_nbs",
       classOf[GraftLakeCatalog].getName)
     s.conf.set("spark.sql.catalog.graft_nbs.warehouse",
-      Files.createTempDirectory("graft-nbs-wh").toString)
+      graft.TestSpark.tempDir("graft-nbs-wh").toString)
     val tbl = s"graft_nbs.ns.$tag"
     s.sql(s"CREATE TABLE IF NOT EXISTS $tbl USING graftlake LOCATION '$root'")
     (root, tbl)

@@ -18,13 +18,13 @@ class GraftLakeCatalogSpec extends AnyFunSuite {
     s.conf.set("spark.sql.catalog.graft_cat",
       classOf[GraftLakeCatalog].getName)
     s.conf.set("spark.sql.catalog.graft_cat.warehouse",
-      Files.createTempDirectory("graft-cat-wh").toString)
+      graft.TestSpark.tempDir("graft-cat-wh").toString)
     s
   }
   import spark.implicits._
 
   private def buildLake(): String = {
-    val root = Files.createTempDirectory("graft-cat-lake").toString + "/lake"
+    val root = graft.TestSpark.tempDir("graft-cat-lake").toString + "/lake"
     val idx = SnapshotLake.IndexSpec(Seq("x"), None)
     (0 until 4).foreach { i =>
       SnapshotLake.append(
@@ -37,7 +37,7 @@ class GraftLakeCatalogSpec extends AnyFunSuite {
 
   test("ALTER TABLE ADD COLUMN / widening ALTER COLUMN TYPE commit schema evolution; other shapes refuse") {
     // four one-file commits with y deliberately INT (widening target)
-    val root = Files.createTempDirectory("graft-cat-ev").toString + "/lake"
+    val root = graft.TestSpark.tempDir("graft-cat-ev").toString + "/lake"
     val idx = SnapshotLake.IndexSpec(Seq("x"), None)
     (0 until 4).foreach { i =>
       SnapshotLake.append(
@@ -118,7 +118,7 @@ class GraftLakeCatalogSpec extends AnyFunSuite {
   }
 
   test("TIMESTAMP AS OF resolves the newest commit at-or-before the instant; a pre-table instant refuses") {
-    val root = Files.createTempDirectory("graft-cat-ts").toString + "/lake"
+    val root = graft.TestSpark.tempDir("graft-cat-ts").toString + "/lake"
     SnapshotLake.append(Seq((1L, 10L)).toDF("x", "y"), root) // v1
     Thread.sleep(1200) // manifest mtimes carry second-class granularity
     val between = java.time.Instant.now()

@@ -21,7 +21,7 @@ class GraftLakeCdfSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def newDir(tag: String): String =
-    Files.createTempDirectory(s"graft-cdf-$tag").toString
+    graft.TestSpark.tempDir(s"graft-cdf-$tag").toString
 
   private def kv(lo: Int, hi: Int) =
     (lo until hi).map(i => (i.toLong, s"v$i")).toDF("k", "v")
@@ -149,7 +149,7 @@ class GraftLakeCdfSpec extends AnyFunSuite {
           b.scan
       }.collectFirst { case s: GraftLakeCdfScan => s }.get
       val parts = scan.planInputPartitions()
-        .map(_.asInstanceOf[GraftLakeInputPartition])
+        .flatMap(_.asInstanceOf[GraftLakePackedPartition].files)
       assert(parts.exists(_.absPath.endsWith(v1File)),
         "the hidden file still plans (its size came from the sidecar)")
       assert(parts.map(_.length).forall(_ > 0L))

@@ -21,7 +21,7 @@ class GraftLakePackedReadSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private def newRoot(): String =
-    Files.createTempDirectory("graft-packed").toString + "/lake"
+    graft.TestSpark.tempDir("graft-packed").toString + "/lake"
 
   /** Rows (k, s, p) for keys [lo, hi): `p` is one of four strings. */
   private def rows(lo: Long, hi: Long): DataFrame =

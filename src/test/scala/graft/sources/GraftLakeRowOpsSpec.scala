@@ -20,7 +20,7 @@ class GraftLakeRowOpsSpec extends AnyFunSuite {
     s.conf.set("spark.sql.catalog.graft_cat",
       classOf[GraftLakeCatalog].getName)
     s.conf.set("spark.sql.catalog.graft_cat.warehouse",
-      Files.createTempDirectory("graft-rowops-wh").toString)
+      graft.TestSpark.tempDir("graft-rowops-wh").toString)
     s
   }
   import spark.implicits._
@@ -28,7 +28,7 @@ class GraftLakeRowOpsSpec extends AnyFunSuite {
   private var n = 0
   /** Four one-file key-range commits registered as a catalog table. */
   private def table(): (String, String) = {
-    val root = Files.createTempDirectory("graft-rowops").toString + "/lake"
+    val root = graft.TestSpark.tempDir("graft-rowops").toString + "/lake"
     val idx = SnapshotLake.IndexSpec(Seq("x"), None)
     (0 until 4).foreach { i =>
       SnapshotLake.append(

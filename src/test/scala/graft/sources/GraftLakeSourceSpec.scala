@@ -20,7 +20,7 @@ class GraftLakeSourceSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def newRoot(): String =
-    Files.createTempDirectory("graft-dsv2").toString + "/lake"
+    graft.TestSpark.tempDir("graft-dsv2").toString + "/lake"
 
   /** Four one-file key-range commits with stats on x. */
   private def buildLake(): String = {
@@ -439,17 +439,17 @@ class GraftLakeSourceSpec extends AnyFunSuite {
     val big = "9007199254740993"
     val st = Map("k" -> FileStats.ColRange(big, big, numeric = true,
       nulls = Some(0L)))
-    assert(!GraftLakeCountScan.wholeMatch(st, EqualTo("k", 9007199254740992L)),
+    assert(!graft.etl.LakeIndex.wholeMatch(st, EqualTo("k", 9007199254740992L)),
       "Double compare would wrongly PROVE every row equals 2^53")
-    assert(GraftLakeCountScan.wholeMatch(st, EqualTo("k", 9007199254740993L)))
-    assert(GraftLakeCountScan.wholeMatch(st, GreaterThan("k", 9007199254740992L)),
+    assert(graft.etl.LakeIndex.wholeMatch(st, EqualTo("k", 9007199254740993L)))
+    assert(graft.etl.LakeIndex.wholeMatch(st, GreaterThan("k", 9007199254740992L)),
       "full precision must still prove the strict bound 2^53+1 > 2^53")
-    assert(!GraftLakeCountScan.wholeMatch(st, LessThanOrEqual("k", 9007199254740992L)))
+    assert(!graft.etl.LakeIndex.wholeMatch(st, LessThanOrEqual("k", 9007199254740992L)))
     // an unparseable numeric bound proves nothing (falls back to a scan)
     // rather than throwing or over-claiming
     val nan = Map("f" -> FileStats.ColRange("NaN", "NaN", numeric = true,
       nulls = Some(0L)))
-    assert(!GraftLakeCountScan.wholeMatch(nan, EqualTo("f", 1.0d)))
+    assert(!graft.etl.LakeIndex.wholeMatch(nan, EqualTo("f", 1.0d)))
   }
 
   test("exact filters accepted by a scan used as a micro-batch STREAM reach the streaming readers") {
@@ -489,7 +489,7 @@ class GraftLakeSourceSpec extends AnyFunSuite {
     // nothing of the new files — formerly a NoSuchElementException at
     // plan time, or worse, stale min/max on colliding commit-dir names)
     val s = spark
-    val dir = Files.createTempDirectory("graft-sidx-recreate").toString
+    val dir = graft.TestSpark.tempDir("graft-sidx-recreate").toString
     val root = s"$dir/lake"
     import org.apache.spark.sql.functions.{lit, sum}
     def build(mark: Long): Unit =
@@ -510,16 +510,16 @@ class GraftLakeSourceSpec extends AnyFunSuite {
   test("sidecar-index MRU slot: strong hit by identity, newer version replaces it, older pinned reads stay soft") {
     val root = buildLake() // v1..v4, stats on x
     val f4 = SnapshotLake.files(root, 4L)
-    val idx4 = GraftLakeSidecarIndex.of(root, 4L, f4)
-    assert(GraftLakeSidecarIndex.of(root, 4L, f4) eq idx4,
+    val idx4 = graft.etl.LakeIndex.of(root, 4L)
+    assert(graft.etl.LakeIndex.of(root, 4L) eq idx4,
       "re-planning the newest version is a strong MRU hit (same instance)")
     // planning an OLDER version (a pinned time-travel read) must answer
     // without displacing the newest version from the strong slot
     val f2 = SnapshotLake.files(root, 2L)
-    val idx2 = GraftLakeSidecarIndex.of(root, 2L, f2)
+    val idx2 = graft.etl.LakeIndex.of(root, 2L)
     assert(idx2.rows.keySet.size < idx4.rows.keySet.size,
       "the older version's index covers fewer commit dirs")
-    assert(GraftLakeSidecarIndex.of(root, 4L, f4) eq idx4,
+    assert(graft.etl.LakeIndex.of(root, 4L) eq idx4,
       "an older pinned read leaves the newest version pinned strongly")
     // a newer version replaces the MRU slot and carries the new stats
     SnapshotLake.append(
@@ -530,9 +530,9 @@ class GraftLakeSourceSpec extends AnyFunSuite {
           col("id").cast("string")).as("s")).coalesce(1),
       root, SnapshotLake.IndexSpec(Seq("x"), None)) // v5
     val f5 = SnapshotLake.files(root, 5L)
-    val idx5 = GraftLakeSidecarIndex.of(root, 5L, f5)
+    val idx5 = graft.etl.LakeIndex.of(root, 5L)
     assert(idx5 ne idx4)
-    assert(GraftLakeSidecarIndex.of(root, 5L, f5) eq idx5,
+    assert(graft.etl.LakeIndex.of(root, 5L) eq idx5,
       "the newer version now owns the strong slot")
     val newFile = (f5.toSet -- f4.toSet).head
     assert(idx5.composed(newFile).get("x").exists(_.min == "100"),
@@ -549,7 +549,7 @@ class GraftLakeSourceSpec extends AnyFunSuite {
 
   /** `df` written as one parquet file; returns the file. */
   private def parquetFile(df: DataFrame): java.nio.file.Path = {
-    val dir = Files.createTempDirectory("graft-parquet").resolve("b")
+    val dir = graft.TestSpark.tempDir("graft-parquet").resolve("b")
     df.coalesce(1).write.parquet(dir.toString)
     Files.list(dir).filter(_.toString.endsWith(".parquet")).findFirst().get()
   }

@@ -20,7 +20,7 @@ class GraftLakeStreamSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def newDir(tag: String): String =
-    Files.createTempDirectory(s"graft-mbs-$tag").toString
+    graft.TestSpark.tempDir(s"graft-mbs-$tag").toString
 
   private def kv(lo: Int, hi: Int) =
     (lo until hi).map(i => (i.toLong, s"v$i")).toDF("k", "v")

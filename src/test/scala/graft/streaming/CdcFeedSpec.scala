@@ -17,7 +17,7 @@ class CdcFeedSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def newRoot(tag: String): String =
-    Files.createTempDirectory(s"graft-cdcfeed-$tag").toString + "/lake"
+    graft.TestSpark.tempDir(s"graft-cdcfeed-$tag").toString + "/lake"
 
   private def kv(lo: Int, hi: Int) =
     (lo until hi).map(i => (i.toLong, s"v$i")).toDF("k", "v")

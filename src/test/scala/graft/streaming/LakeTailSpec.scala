@@ -18,7 +18,7 @@ class LakeTailSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def newRoot(tag: String): String =
-    Files.createTempDirectory(s"graft-tail-$tag").toString + "/lake"
+    graft.TestSpark.tempDir(s"graft-tail-$tag").toString + "/lake"
 
   private def kv(lo: Int, hi: Int) =
     (lo until hi).map(i => (i.toLong, s"v$i")).toDF("k", "v")

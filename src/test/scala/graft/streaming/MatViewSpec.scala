@@ -17,7 +17,7 @@ class MatViewSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def newRoot(tag: String): String =
-    Files.createTempDirectory(s"graft-mv-$tag").toString + "/lake"
+    graft.TestSpark.tempDir(s"graft-mv-$tag").toString + "/lake"
 
   private def rows(lo: Int, hi: Int, grp: Int => String, v: Int => Long) =
     (lo until hi).map(i => (i.toLong, grp(i), v(i))).toDF("k", "g", "cents")

@@ -13,7 +13,7 @@ class SessionizeSpec extends AnyFunSuite {
 
   test("streamed sessionization equals the batch q46 result") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-sess").toString
+    val dir = graft.TestSpark.tempDir("graft-sess").toString
     graft.model.Tables.events(spark, TestSpark.Sf)
       .filter(col("ts").isNotNull)
       .select("user_id", "ts", "event_id")

@@ -17,7 +17,7 @@ class StreamingSpec extends AnyFunSuite {
     * read them with an explicit schema (the raw testdata file carries
     * TIMESTAMP(NANOS); see Tables.events). */
   private lazy val eventsDir: String = {
-    val dir = Files.createTempDirectory("graft-stream-src").toString
+    val dir = graft.TestSpark.tempDir("graft-stream-src").toString
     graft.model.Tables.events(spark, TestSpark.Sf)
       .select("event_id", "ts", "user_id", "event_type", "value")
       .write.mode("overwrite").parquet(dir)
@@ -49,7 +49,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("toLake drains the stream exactly-once into the partitioned lake") {
-    val work = Files.createTempDirectory("graft-stream-lake").toString
+    val work = graft.TestSpark.tempDir("graft-stream-lake").toString
     val lake = s"$work/lake"
 
     def drain(): Unit = {
@@ -104,7 +104,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("stream-static enrich picks up a refreshed dim across a checkpointed restart") {
     import java.sql.Timestamp
-    val work = Files.createTempDirectory("graft-stream-enrich").toString
+    val work = graft.TestSpark.tempDir("graft-stream-enrich").toString
     val src = s"$work/src"
     val dim = s"$work/dim"
     val cp = s"$work/cp"
@@ -154,7 +154,7 @@ class StreamingSpec extends AnyFunSuite {
     // REAL production writer on the same checkpoint: it must resume at
     // batch 1 — never re-reading batch 0's files — and complete the tail,
     // leaving the lake bit-equal to the batch oracle.
-    val work = Files.createTempDirectory("graft-stream-recover").toString
+    val work = graft.TestSpark.tempDir("graft-stream-recover").toString
     val src = s"$work/src"
     val lake = s"$work/lake"
     val cp = s"$work/cp"
@@ -199,7 +199,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("left-outer stream join emits unmatched rows only after the watermark passes") {
     import java.sql.Timestamp
-    val work = Files.createTempDirectory("graft-stream-outer").toString
+    val work = graft.TestSpark.tempDir("graft-stream-outer").toString
     val src = s"$work/src"
     def ts(minute: Int) = Timestamp.valueOf(f"2024-01-01 10:$minute%02d:00")
     def write(rows: Seq[(Long, Timestamp, Long, String, Double)], file: String): Unit = {
@@ -267,7 +267,7 @@ class StreamingSpec extends AnyFunSuite {
     // 4 files + maxFilesPerTrigger=1 → the drain MUST cross ≥4 micro-batch
     // boundaries, so agreement with the batch sketch proves the fold is
     // split-invariant, not just correct on a single batch
-    val dir = Files.createTempDirectory("graft-kmv-stream").toString
+    val dir = graft.TestSpark.tempDir("graft-kmv-stream").toString
     graft.model.Tables.events(spark, TestSpark.Sf)
       .select("event_id", "ts", "user_id", "event_type", "value")
       .repartition(4).write.mode("overwrite").parquet(dir)
@@ -348,7 +348,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("expiring KMV variant retires a day's state once the watermark passes its end-of-day") {
     import java.sql.Timestamp
-    val work = Files.createTempDirectory("graft-kmv-expire").toString
+    val work = graft.TestSpark.tempDir("graft-kmv-expire").toString
     val src = s"$work/src"
     import spark.implicits._
     def write(rows: Seq[(Long, Timestamp, Long, String, Double)]): Unit = {
@@ -389,7 +389,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming KMV sketch resumes from its checkpoint after a mid-drain crash, state intact") {
     val k = 64
-    val work = Files.createTempDirectory("graft-kmv-recover").toString
+    val work = graft.TestSpark.tempDir("graft-kmv-recover").toString
     val src = s"$work/src"
     val cp = s"$work/cp"
     graft.model.Tables.events(spark, TestSpark.Sf)
@@ -431,7 +431,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("suppression guard re-resolves the erasure ledger per micro-batch (mid-stream erasure takes effect)") {
     import org.apache.spark.sql.types._
-    val work = Files.createTempDirectory("graft-suppress").toString
+    val work = graft.TestSpark.tempDir("graft-suppress").toString
     val srcDir = s"$work/src"; val ledgerDir = s"$work/ledger"
     val out = s"$work/out"; val cp = s"$work/cp"
     import spark.implicits._
@@ -503,7 +503,7 @@ class StreamingSpec extends AnyFunSuite {
     val root = java.nio.file.Paths.get(dir)
     Files.createDirectories(root)
     while (i * chunk <= mx) {
-      val tmp = Files.createTempDirectory("graft-sdedup-chunk")
+      val tmp = graft.TestSpark.tempDir("graft-sdedup-chunk")
       docs.filter(col("doc_id") >= i.toLong * chunk &&
           col("doc_id") < (i.toLong + 1) * chunk)
         .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
@@ -535,7 +535,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming near-dedup is batch-split independent and equals the batch policy") {
-    val work = Files.createTempDirectory("graft-sdedup").toString
+    val work = graft.TestSpark.tempDir("graft-sdedup").toString
     val docs = dedupCorpus
     stageChunks(docs, s"$work/src", 4)
 
@@ -556,7 +556,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming near-dedup resumes from its checkpoint and replays a batch idempotently") {
-    val work = Files.createTempDirectory("graft-sdedup-resume").toString
+    val work = graft.TestSpark.tempDir("graft-sdedup-resume").toString
     val docs = dedupCorpus
     val src = s"$work/src"
     // phase 1: only chunks 0-1 exist; drain them
@@ -585,7 +585,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("dedup state compaction archives old batches without changing any decision") {
-    val work = Files.createTempDirectory("graft-sdedup-compact").toString
+    val work = graft.TestSpark.tempDir("graft-sdedup-compact").toString
     val docs = dedupCorpus
     def slice(lo: Long, hi: Long) =
       docs.filter(col("doc_id") >= lo && col("doc_id") < hi)
@@ -599,7 +599,15 @@ class StreamingSpec extends AnyFunSuite {
     // must stay (the replay horizon)
     val overwriteModeBefore =
       spark.conf.get("spark.sql.sources.partitionOverwriteMode")
+    def stateEntries(): Set[String] = {
+      import scala.jdk.CollectionConverters._
+      val s = Files.list(java.nio.file.Paths.get(s"$work/a"))
+      try s.iterator().asScala.map(_.getFileName.toString).toSet finally s.close()
+    }
+    val entriesBefore = stateEntries()
     StreamingDedup.compactState(spark, s"$work/a", 2L)
+    assert(stateEntries() == entriesBefore,
+      "the compaction's staging dir must be deleted once the archive is written")
     assert(spark.conf.get("spark.sql.sources.partitionOverwriteMode") ==
       overwriteModeBefore,
       "the dynamic-overwrite mode must be scoped, not left on the session")
@@ -638,7 +646,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming near-dedup through the snapshot lake: exactly-once across checkpoint replay and manifest commits") {
     import graft.etl.SnapshotLake
-    val work = Files.createTempDirectory("graft-sdedup-lake").toString
+    val work = graft.TestSpark.tempDir("graft-sdedup-lake").toString
     val docs = dedupCorpus
     val src = s"$work/src"; val state = s"$work/st"
     val lake = s"$work/lake"; val cp = s"$work/cp"
@@ -692,7 +700,7 @@ class StreamingSpec extends AnyFunSuite {
     import graft.etl.SnapshotLake
     import graft.streaming.CdcApply
     import spark.implicits._
-    val work = Files.createTempDirectory("graft-cdc-spec").toString
+    val work = graft.TestSpark.tempDir("graft-cdc-spec").toString
     val lake = s"$work/lake"; val src = s"$work/src"; val cp = s"$work/cp"
     Files.createDirectories(java.nio.file.Paths.get(src))
     val idx = SnapshotLake.IndexSpec(Seq("k"), None)
@@ -701,7 +709,7 @@ class StreamingSpec extends AnyFunSuite {
       lake, idx)
 
     def stage(n: Int, rows: Seq[(Long, String, Boolean)]): Unit = {
-      val tmp = Files.createTempDirectory("graft-cdc-spec-slice")
+      val tmp = graft.TestSpark.tempDir("graft-cdc-spec-slice")
       rows.toDF("k", "v", "__del").coalesce(1)
         .write.mode("overwrite").parquet(tmp.toString)
       val l = Files.list(tmp)
@@ -744,7 +752,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming near-dedup ingest builds the data-skipping index per commit, and pruned reads ride it") {
     import graft.etl.{FileStats, SnapshotLake}
-    val work = Files.createTempDirectory("graft-sdedup-idx").toString
+    val work = graft.TestSpark.tempDir("graft-sdedup-idx").toString
     val docs = dedupCorpus
     val src = s"$work/src"
     val lake = s"$work/lake"
