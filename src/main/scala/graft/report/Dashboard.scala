@@ -4,7 +4,7 @@ import java.time.LocalDate
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, RelationalGroupedDataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -16,14 +16,15 @@ import graft.model.Tables
   *
   * The reference re-executes the whole script per UI interaction — about
   * fifteen aggregate queries over one filtered view. Here a filter change
-  * ([[Dashboard.open]]) is ONE Spark action: the slice's per-day and
-  * per-(supplier, priority) groups, each with its exact cent sum and line
-  * count, are collected together as one union. Their number is bounded by
-  * the days in range and the dimension sizes, not by the fact table. Every
-  * aggregate chart is a fold of those groups on the driver, returned as a
-  * local DataFrame whose collect runs no Spark job (asserted by
-  * DashboardSpec); only [[rawHead]] reads the slice again. At 100 TB the
-  * two group-bys stay the whole distributed cost of a filter change.
+  * ([[Dashboard.open]]) is ONE Spark action over ONE scan of the slice:
+  * a grouping-sets aggregate collects its per-day and per-(supplier,
+  * priority) groups, each with its exact cent sum and line count. Their
+  * number is bounded by the days in range and the dimension sizes, not by
+  * the fact table. Every aggregate chart is a fold of those groups on the
+  * driver, returned as a local DataFrame whose collect runs no Spark job
+  * (asserted by DashboardSpec); only [[rawHead]] reads the slice again. At
+  * 100 TB that one aggregate stays the whole distributed cost of a filter
+  * change.
   *
   * Filters mirror the reference's sidebar exactly: inclusive date range
   * (P8), supplier IN-list, priority IN-list (P9) — ref dashboard.py:98-109.
@@ -191,7 +192,9 @@ object Dashboard {
 
   /** Open a session: join the fact to its dimensions, keep the columns the
     * charts read, apply the sidebar filters, and collect the slice's
-    * per-day and per-(supplier, priority) groups in one action. */
+    * per-day and per-(supplier, priority) groups in one action: one scan
+    * grouped by the sets `(date)` and `(s_name, s_nationkey, s_acctbal,
+    * o_orderpriority)`, whose rows `grouping(date)` tells apart. */
   def open(spark: SparkSession, sfDir: String, f: Filters): Dashboard = {
     val joined = Tables.lineitem(spark, sfDir)
       .select("l_orderkey", "l_suppkey", "l_shipdate", "l_extendedprice", "l_discount")
@@ -205,12 +208,11 @@ object Dashboard {
     val withSup = f.suppliers.fold(dated)(xs => dated.filter(col("s_name").isin(xs: _*)))
     val slice = f.priorities.fold(withSup)(xs => withSup.filter(col("o_orderpriority").isin(xs: _*)))
 
-    def sums(g: RelationalGroupedDataset) = g.agg(sum(cents(rev)).as("rc"), count(lit(1)).as("n"))
-    val byDay = sums(slice.groupBy(to_date(col("l_shipdate")).as("date")))
-    val byCell = sums(slice.groupBy("s_name", "s_nationkey", "s_acctbal", "o_orderpriority"))
-    // the date filter drops null ship dates, so only a cell row has a null date
-    val (dayRows, cellRows) = byDay.unionByName(byCell, allowMissingColumns = true).collect()
-      .toSeq.partition(r => !r.isNullAt(r.fieldIndex("date")))
+    val cellKeys = Seq("s_name", "s_nationkey", "s_acctbal", "o_orderpriority").map(col)
+    val (cellRows, dayRows) = slice.withColumn("date", to_date(col("l_shipdate")))
+      .groupingSets(Seq(Seq(col("date")), cellKeys), col("date") +: cellKeys: _*)
+      .agg(grouping("date").as("cell"), sum(cents(rev)).as("rc"), count(lit(1)).as("n"))
+      .collect().toSeq.partition(_.getAs[Byte]("cell") == 1)
     def rc(r: Row) = Option(r.getAs[java.lang.Long]("rc")).map(_.longValue)
     new Dashboard(slice,
       dayRows.map(r => Day(r.getAs[java.sql.Date]("date").toLocalDate, rc(r), r.getAs[Long]("n"))),

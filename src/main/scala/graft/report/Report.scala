@@ -2,7 +2,7 @@ package graft.report
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.etl.PartitionedLake
@@ -16,9 +16,10 @@ import graft.model.Tables
   * the day's S3 prefix by hand (generate_report.py:32) and reads only it;
   * [[daySlice]] does the same — it reads the `year=Y/month=M/day=D`
   * directory alone, so a report never lists the rest of the lake. The
-  * report is then ONE Spark action: the whole-day, per-supplier and
-  * per-priority aggregates of the slice are collected together as a
-  * union of at most a few hundred rows, which [[fold]] turns into
+  * report is then ONE Spark action over ONE scan of that directory: the
+  * slice, joined once to `supplier` and `orders`, feeds one grouping-sets
+  * aggregate whose sets are the whole day, each supplier and each
+  * priority — at most a few hundred rows, which [[fold]] turns into
   * [[ReportMetrics]] on the driver; the template renders there too.
   *
   * All money rides as exact integer cents (order-independent at any
@@ -134,23 +135,37 @@ object Report {
         (round(col("rc") / col("n_tx")) / 100.0).as("avg_tx"))
       .orderBy(col("rc").desc, col("name"))
 
-  /** Run the full report job for one date in ONE Spark action: the
-    * whole-day totals, the per-supplier and the per-priority aggregates
-    * of the day slice are collected as one union — at most one row per
-    * supplier plus one per priority plus one — and [[fold]]ed on the
-    * driver. */
+  /** Run the full report job for one date in ONE Spark action over one
+    * scan of the day slice. The slice is LEFT joined to `supplier` and
+    * `orders` (both keyed by primary keys, so no line is duplicated), and
+    * one aggregate groups it by the sets `()`, `(has_s, s_name)` and
+    * `(has_o, o_orderpriority)`, where `has_s`/`has_o` flag a matched
+    * key: the day set counts every line, and the keyed sets keep the
+    * inner joins' meaning once [[fold]] drops their unmatched groups.
+    * Each set's rows are told apart by `grouping_id()`; at most one row
+    * per supplier plus one per priority plus one (none for an empty day,
+    * whose plan Spark folds to an empty relation). */
   def metrics(spark: SparkSession, sfDir: String, date: LocalDate): ReportMetrics = {
-    val slice = daySlice(spark, sfDir, date)
-    val rows = dayTotals(slice).select(lit(0), lit(null).cast("string"), col("rc"), col("n_tx"))
-      .union(bySupplier(spark, sfDir, slice)
-        .select(lit(1), col("s_name"), col("rc"), col("n_tx")))
-      .union(byPriority(spark, sfDir, slice)
-        .select(lit(2), col("o_orderpriority"), col("rc"), lit(0L)))
-      .collect().groupBy(_.getInt(0)).withDefaultValue(Array.empty[Row])
-    val day = rows(0).head
-    fold(date, day.getLong(2), day.getLong(3),
-      rows(1).toSeq.map(r => (r.getString(1), r.getLong(2), r.getLong(3))),
-      rows(2).toSeq.map(r => (r.getString(1), r.getLong(2))))
+    val joined = daySlice(spark, sfDir, date)
+      .join(broadcast(Tables.supplier(spark, sfDir).select("s_suppkey", "s_name")),
+        col("l_suppkey") === col("s_suppkey"), "left_outer")
+      .join(Tables.orders(spark, sfDir).select("o_orderkey", "o_orderpriority"),
+        col("l_orderkey") === col("o_orderkey"), "left_outer")
+      .select(col("s_suppkey").isNotNull.as("has_s"), col("s_name"),
+        col("o_orderkey").isNotNull.as("has_o"), col("o_orderpriority"), cents(rev).as("c"))
+    // rows are (has_s, s_name, has_o, o_orderpriority, g, rc, n), where g is
+    // grouping_id() over the four keys, the first key its high bit
+    val (dayId, supplierId, priorityId) = (15L, 3L, 12L)
+    val rows = joined
+      .groupingSets(Seq(Nil, Seq(col("has_s"), col("s_name")),
+        Seq(col("has_o"), col("o_orderpriority"))),
+        col("has_s"), col("s_name"), col("has_o"), col("o_orderpriority"))
+      .agg(grouping_id().as("g"), sum("c").as("rc"), count(lit(1)).as("n"))
+      .collect().toSeq.groupBy(_.getLong(4)).withDefaultValue(Nil)
+    val day = rows(dayId).headOption
+    fold(date, day.filterNot(_.isNullAt(5)).fold(0L)(_.getLong(5)), day.fold(0L)(_.getLong(6)),
+      rows(supplierId).filter(_.getBoolean(0)).map(r => (r.getString(1), r.getLong(5), r.getLong(6))),
+      rows(priorityId).filter(_.getBoolean(2)).map(r => (r.getString(3), r.getLong(5))))
   }
 
   /** Spark's `round(x)` on a double: HALF_UP on the shortest decimal

@@ -23,6 +23,19 @@ object TestSpark {
     r
   }
 
+  /** A child of the shared session (`newSession()`: same SparkContext and
+    * cache, its own SQL conf, catalogs, temp views and query listeners)
+    * with `confs` set. Suites run concurrently on the shared session, so
+    * a conf a test needs goes here, never on [[spark]]. */
+  def child(confs: (String, String)*): SparkSession = {
+    val s = spark.newSession()
+    confs.foreach { case (k, v) => s.conf.set(k, v) }
+    s
+  }
+
+  /** `body` on a [[child]] session with `confs` set. */
+  def withConf[T](confs: (String, String)*)(body: SparkSession => T): T = body(child(confs: _*))
+
   /** A fresh directory under this run's temp root. */
   def tempDir(prefix: String): java.nio.file.Path =
     java.nio.file.Files.createTempDirectory(runRoot, prefix)

@@ -129,11 +129,9 @@ class ColumnMappingSpec extends AnyFunSuite {
   }
 
   test("SQL DDL + connector: RENAME/DROP COLUMN, filters pruning through the mapping") {
-    val s = spark
-    s.conf.set("spark.sql.catalog.graft_cmt",
-      classOf[graft.sources.GraftLakeCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_cmt.warehouse",
-      graft.TestSpark.tempDir("graft-cmt-wh").toString)
+    val s = TestSpark.child(
+      "spark.sql.catalog.graft_cmt" -> classOf[graft.sources.GraftLakeCatalog].getName,
+      "spark.sql.catalog.graft_cmt.warehouse" -> TestSpark.tempDir("graft-cmt-wh").toString)
     val root = freshDir()
     seed(root)
     val tbl = "graft_cmt.lakes.cm_sql"

@@ -209,17 +209,15 @@ class PlanShapeSpec extends AnyFunSuite {
     // (~KiB) -> broadcast. The flip can ONLY come from the statistics.
     val table = Extended.cboStatsTable(spark, TestSpark.Sf)
 
-    val off = spark.newSession()
-    off.conf.set("spark.sql.cbo.enabled", "false")
-    off.conf.set("spark.sql.autoBroadcastJoinThreshold", (16 * 1024).toString)
-    val pOff = Extended.cboJoin(off, table).queryExecution.executedPlan.toString
+    val pOff = TestSpark.withConf("spark.sql.cbo.enabled" -> "false",
+      "spark.sql.autoBroadcastJoinThreshold" -> (16 * 1024).toString)(off =>
+      Extended.cboJoin(off, table).queryExecution.executedPlan.toString)
     assert(!pOff.contains("BroadcastHashJoin"),
       s"without CBO the file-size estimate must exceed the threshold:\n$pOff")
 
-    val on = spark.newSession()
-    on.conf.set("spark.sql.cbo.enabled", "true")
-    on.conf.set("spark.sql.autoBroadcastJoinThreshold", (16 * 1024).toString)
-    val pOn = Extended.cboJoin(on, table).queryExecution.executedPlan.toString
+    val pOn = TestSpark.withConf("spark.sql.cbo.enabled" -> "true",
+      "spark.sql.autoBroadcastJoinThreshold" -> (16 * 1024).toString)(on =>
+      Extended.cboJoin(on, table).queryExecution.executedPlan.toString)
     assert(pOn.contains("BroadcastHashJoin"),
       s"with CBO the stats-based estimate must broadcast the filtered side:\n$pOn")
   }
@@ -254,8 +252,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // still flip it. This is the manual override every tuning guide
     // reaches for when statistics mislead the planner.
     import org.apache.spark.sql.functions.col
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val s2 = TestSpark.child("spark.sql.autoBroadcastJoinThreshold" -> "-1")
     val li = graft.model.Tables.lineitem(s2, TestSpark.Sf)
       .select("l_orderkey", "l_extendedprice")
     val ord = graft.model.Tables.orders(s2, TestSpark.Sf)
@@ -305,10 +302,8 @@ class PlanShapeSpec extends AnyFunSuite {
     // broadcast corpus would hide a missing bucket spec — and at scale
     // the corpus side could never broadcast anyway); child session — no
     // shared-conf race with suites running concurrently
-    val noBroadcast = spark.newSession()
-    noBroadcast.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val probe = graft.streaming.StreamingDedup
-      .crossCandidates(noBroadcast, stateRoot, 1L)
+    val probe = TestSpark.withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(
+      graft.streaming.StreamingDedup.crossCandidates(_, stateRoot, 1L))
     val p = probe.queryExecution.executedPlan.toString
     assert(!p.contains("Exchange"),
       s"the bucketed probe must plan with zero shuffle exchanges:\n$p")
@@ -354,11 +349,10 @@ class PlanShapeSpec extends AnyFunSuite {
     // reported size must NOT broadcast — proving the decision came from
     // the scan's statistics, not from some other default (child session —
     // no shared-conf race with suites running concurrently)
-    val lowThreshold = spark.newSession()
-    lowThreshold.conf.set("spark.sql.autoBroadcastJoinThreshold", "64")
-    val p2 = lowThreshold.read.format("graftlake").load(factRoot)
-      .join(lowThreshold.read.format("graftlake").load(dimRoot), "k")
-      .queryExecution.executedPlan.toString
+    val p2 = TestSpark.withConf("spark.sql.autoBroadcastJoinThreshold" -> "64")(lowThreshold =>
+      lowThreshold.read.format("graftlake").load(factRoot)
+        .join(lowThreshold.read.format("graftlake").load(dimRoot), "k")
+        .queryExecution.executedPlan.toString)
     assert(!p2.contains("BroadcastHashJoin"),
       s"stats above the threshold must refuse the auto-broadcast:\n$p2")
     // the estimate itself: exact numRows from the rows sidecars, bytes
@@ -411,9 +405,8 @@ class PlanShapeSpec extends AnyFunSuite {
       .select((col("id") % 40000).as("k"), col("id").as("v")).coalesce(4),
       factRoot, SnapshotLake.IndexSpec(Seq("k"), None))
 
-    val s = spark.newSession()
-    s.conf.set("spark.sql.cbo.enabled", "true")
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", (64 * 1024).toString)
+    val s = TestSpark.child("spark.sql.cbo.enabled" -> "true",
+      "spark.sql.autoBroadcastJoinThreshold" -> (64 * 1024).toString)
     val fact = s.read.format("graftlake").load(factRoot)
     def planWith(opts: (String, String)*): String = {
       val dim = opts.foldLeft(s.read.format("graftlake")) {

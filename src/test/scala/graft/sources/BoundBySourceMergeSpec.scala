@@ -16,7 +16,9 @@ import graft.etl.SnapshotLake
   * rewrite stands (Spark's own behavior). Results hash-equal either way
   * — the rule is a file-I/O lever, never a correctness input. */
 class BoundBySourceMergeSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
+  private lazy val spark = TestSpark.child(
+    "spark.sql.catalog.graft_nbs" -> classOf[GraftLakeCatalog].getName,
+    "spark.sql.catalog.graft_nbs.warehouse" -> TestSpark.tempDir("graft-nbs-wh").toString)
 
   private def seeded(tag: String): (String, String) = {
     val s = spark
@@ -26,10 +28,6 @@ class BoundBySourceMergeSpec extends AnyFunSuite {
       SnapshotLake.append(s.range(i * 1000L, (i + 1) * 1000L)
         .select(col("id").as("k"), (col("id") * 2).as("v"))
         .coalesce(1), root, idx)
-    s.conf.set("spark.sql.catalog.graft_nbs",
-      classOf[GraftLakeCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_nbs.warehouse",
-      graft.TestSpark.tempDir("graft-nbs-wh").toString)
     val tbl = s"graft_nbs.ns.$tag"
     s.sql(s"CREATE TABLE IF NOT EXISTS $tbl USING graftlake LOCATION '$root'")
     (root, tbl)

@@ -13,14 +13,9 @@ import graft.etl.SnapshotLake
   * the connector's pruning intact; external tables survive DROP;
   * managed tables own their data. */
 class GraftLakeCatalogSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = TestSpark.spark
-    s.conf.set("spark.sql.catalog.graft_cat",
-      classOf[GraftLakeCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_cat.warehouse",
-      graft.TestSpark.tempDir("graft-cat-wh").toString)
-    s
-  }
+  private lazy val spark = TestSpark.child(
+    "spark.sql.catalog.graft_cat" -> classOf[GraftLakeCatalog].getName,
+    "spark.sql.catalog.graft_cat.warehouse" -> TestSpark.tempDir("graft-cat-wh").toString)
   import spark.implicits._
 
   private def buildLake(): String = {

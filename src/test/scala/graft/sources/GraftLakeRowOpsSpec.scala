@@ -15,14 +15,9 @@ import graft.etl.SnapshotLake
   * conflict fence, and every statement's result equals its SQL
   * semantics exactly. */
 class GraftLakeRowOpsSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = TestSpark.spark
-    s.conf.set("spark.sql.catalog.graft_cat",
-      classOf[GraftLakeCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_cat.warehouse",
-      graft.TestSpark.tempDir("graft-rowops-wh").toString)
-    s
-  }
+  private lazy val spark = TestSpark.child(
+    "spark.sql.catalog.graft_cat" -> classOf[GraftLakeCatalog].getName,
+    "spark.sql.catalog.graft_cat.warehouse" -> TestSpark.tempDir("graft-rowops-wh").toString)
   import spark.implicits._
 
   private var n = 0

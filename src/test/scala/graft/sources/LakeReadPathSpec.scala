@@ -18,13 +18,7 @@ import graft.etl.{FileStats, SnapshotLake}
   * and a streamed commit after plain appends keeps schema inference
   * incremental. */
 class LakeReadPathSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = TestSpark.spark
-    s.conf.set("spark.sql.catalog.graft_readpath", classOf[GraftLakeCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_readpath.warehouse",
-      TestSpark.tempDir("graft-readpath-wh").toString)
-    s
-  }
+  private lazy val spark = TestSpark.spark
 
   private val idx = SnapshotLake.IndexSpec(Seq("k"), Some("k"))
 
@@ -121,10 +115,15 @@ class LakeReadPathSpec extends AnyFunSuite {
 
   test("a catalog SELECT plans only a connector scan") {
     val root = lake("catalog")
-    spark.sql(s"CREATE TABLE graft_readpath.ns.t USING graftlake LOCATION '$root'")
-    val df = spark.sql("SELECT k, v FROM graft_readpath.ns.t WHERE k >= 30")
-    assert(df.count() == 10L)
-    assertConnectorOnly("catalog SELECT", executed(df), root)
+    TestSpark.withConf(
+        "spark.sql.catalog.graft_readpath" -> classOf[GraftLakeCatalog].getName,
+        "spark.sql.catalog.graft_readpath.warehouse" ->
+          TestSpark.tempDir("graft-readpath-wh").toString) { s =>
+      s.sql(s"CREATE TABLE graft_readpath.ns.t USING graftlake LOCATION '$root'")
+      val df = s.sql("SELECT k, v FROM graft_readpath.ns.t WHERE k >= 30")
+      assert(df.count() == 10L)
+      assertConnectorOnly("catalog SELECT", executed(df), root)
+    }
   }
 
   test("stream and change-feed scans over 64 small files plan fewer tasks than files") {
