@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+import org.apache.spark.sql.types.{BooleanType, IntegerType, StringType, StructField, StructType}
 
 /** The partitioned parquet lake — the reference's whole output side
   * (ref: pipeline/ETL/load.py:50-56 `wr.s3.to_parquet(dataset=True,
@@ -141,18 +141,48 @@ object PartitionedLake {
   def lakeRoot(sfDir: String): String =
     s"data/lake/${sfDir.replaceAll("[^A-Za-z0-9.]+", "_").replaceAll("^_|_$", "")}"
 
+  /** The lineitem lake's data schema, the one definition [[ensureLineitemLake]]
+    * writes in and [[readDay]] readers pass: `lineitem`'s columns, then
+    * the daily report's two dimension attributes, each after a flag that
+    * its key matched — `has_s`, `s_name` (from `supplier`) and `has_o`,
+    * `o_orderpriority` (from `orders`). A flag tells an unmatched key
+    * (false, attribute null) from a matched dimension row whose attribute
+    * is null (true, null). Every column is nullable, as parquet reads
+    * every column back. */
+  def lineitemLakeSchema(spark: SparkSession, sfDir: String): StructType =
+    StructType(graft.model.Tables.lineitem(spark, sfDir).schema.fields ++ Seq(
+      StructField("has_s", BooleanType), StructField("s_name", StringType),
+      StructField("has_o", BooleanType), StructField("o_orderpriority", StringType)))
+
   /** Build (once) the `year/month/day`-partitioned lineitem lake derived
-    * from `sfDir`, returning its root. Cached on disk via Spark's own
+    * from `sfDir`, returning its root. Each line is LEFT joined once, here,
+    * to `supplier` and to `orders` (both by primary key, so no line is
+    * duplicated or dropped) and carries [[lineitemLakeSchema]]'s dimension
+    * columns: the reference denormalizes at extract time
+    * (pipeline/ETL/extract.py:86-109), so a daily report groups one day
+    * directory and reads no dimension. Cached on disk via Spark's own
     * `_SUCCESS` commit marker; rebuilt only if a previous attempt never
-    * committed. One file per day-partition (`repartition` by (year, month)
-    * keeps writer tasks aligned with directories — no small-file spray).
+    * committed. The lake is therefore derived from three PATH-IMMUTABLE
+    * inputs — `lineitem`, `supplier` and `orders` under `sfDir` (see
+    * [[graft.model.Tables.load]]): a writer that rewrites any of them in
+    * place must also delete [[lakeRoot]]. One file per day-partition
+    * (`repartition` by (year, month) keeps writer tasks aligned with
+    * directories — no small-file spray).
     */
   def ensureLineitemLake(spark: SparkSession, sfDir: String): String = synchronized {
-    val root = s"${lakeRoot(sfDir)}/lineitem"
+    val root = s"${lakeRoot(sfDir)}/lineitem_denorm"
     if (!Files.exists(Paths.get(root, "_SUCCESS"))) {
-      val src = graft.model.Tables.lineitem(spark, sfDir)
+      import graft.model.Tables
+      val wide = Tables.lineitem(spark, sfDir)
+        .join(broadcast(Tables.supplier(spark, sfDir).select("s_suppkey", "s_name")),
+          col("l_suppkey") === col("s_suppkey"), "left_outer")
+        .join(Tables.orders(spark, sfDir).select("o_orderkey", "o_orderpriority"),
+          col("l_orderkey") === col("o_orderkey"), "left_outer")
+        .withColumn("has_s", col("s_suppkey").isNotNull)
+        .withColumn("has_o", col("o_orderkey").isNotNull)
+        .select(lineitemLakeSchema(spark, sfDir).fieldNames.map(col): _*)
       overwrite(
-        withPartitionCols(src, "l_shipdate").repartition(col("year"), col("month")),
+        withPartitionCols(wide, "l_shipdate").repartition(col("year"), col("month")),
         root)
     }
     root
@@ -207,7 +237,8 @@ object PartitionedLake {
 
   /** One day of the lake, read from [[dayDir]] alone: the root is never
     * listed, so the cost is one directory listing whatever the lake's
-    * history. `dataSchema` is the files' schema; `year`/`month`/`day`
+    * history. `dataSchema` is the files' schema (for the lineitem lake,
+    * [[lineitemLakeSchema]]); `year`/`month`/`day`
     * are appended as `IntegerType` (`basePath` keeps them as columns), so
     * no footer-inference job runs and the result has [[read]]'s schema.
     * A day with no directory is an empty local relation with that schema

@@ -13,6 +13,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   - `events`                → incremental / streaming-shaped table
   *   - `documents`/`embeddings`→ LLM-pipeline extension tables
   *
+  * The tables stay normalized here; the reference's denormalization is
+  * restated where its report reads it: the day-partitioned lineitem lake
+  * ([[graft.etl.PartitionedLake.ensureLineitemLake]]) joins each line to
+  * its `supplier` name and `orders` priority once, when it is built.
+  *
   * Every reader is a plain parquet scan: Catalyst handles column pruning,
   * predicate pushdown, and (for partitioned layouts written by
   * [[graft.etl.PartitionedLake]]) partition pruning. At 100 TB the same
@@ -45,8 +50,12 @@ object Tables {
     * rewrites a base-table path in place (e.g. an in-place ScaleLake run
     * with out == src, or a fixture regenerating data at the same path)
     * MUST call [[invalidate]] on that dir first, or readers will serve a
-    * stale listing / fail on deleted files. Entries of stopped sessions
-    * are evicted on the next load so the memo never pins DataFrames of a
+    * stale listing / fail on deleted files. The same rule covers what is
+    * derived from a dir: the day-partitioned lineitem lake
+    * ([[graft.etl.PartitionedLake.ensureLineitemLake]]) is built once from
+    * `lineitem`, `supplier` and `orders`, so rewriting any of the three
+    * also means deleting that lake. Entries of stopped sessions are
+    * evicted on the next load so the memo never pins DataFrames of a
     * dead session. */
   private val loaded = new graft.etl.Memo[(SparkSession, String, String), DataFrame]
 

@@ -6,7 +6,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.etl.PartitionedLake
-import graft.model.Tables
 
 /** The daily-report pipeline (ref: pipeline/report-lambda/
   * generate_report.py): read exactly one day's partition from the lake,
@@ -15,12 +14,16 @@ import graft.model.Tables
   * Spark restatement of the Lambda (SURVEY §3.2): the reference builds
   * the day's S3 prefix by hand (generate_report.py:32) and reads only it;
   * [[daySlice]] does the same — it reads the `year=Y/month=M/day=D`
-  * directory alone, so a report never lists the rest of the lake. The
-  * report is then ONE Spark action over ONE scan of that directory: the
-  * slice, joined once to `supplier` and `orders`, feeds one grouping-sets
-  * aggregate whose sets are the whole day, each supplier and each
-  * priority — at most a few hundred rows, which [[fold]] turns into
-  * [[ReportMetrics]] on the driver; the template renders there too.
+  * directory alone, so a report never lists the rest of the lake. Like
+  * the reference's extract (pipeline/ETL/extract.py:86-109), the lake is
+  * denormalized when it is built: every line already carries its
+  * supplier's `s_name` and its order's `o_orderpriority`
+  * ([[PartitionedLake.lineitemLakeSchema]]), so no report reads a
+  * dimension. The report is then ONE Spark action over ONE scan of that
+  * directory: one grouping-sets aggregate whose sets are the whole day,
+  * each supplier and each priority — at most a few hundred rows, which
+  * [[fold]] turns into [[ReportMetrics]] on the driver; the template
+  * renders there too.
   *
   * All money rides as exact integer cents (order-independent at any
   * partition count); the fee model is the reference's 2%-of-revenue on
@@ -59,35 +62,32 @@ object Report {
   private def rev = col("l_extendedprice") * (lit(1) - col("l_discount"))
 
   /** The day slice: the lake's `year=Y/month=M/day=D` directory read
-    * alone ([[PartitionedLake.readDay]]) with `lineitem`'s schema — no
-    * other day is listed or read, and a day without data is an empty
-    * slice. */
+    * alone ([[PartitionedLake.readDay]]) with the lake's schema
+    * ([[PartitionedLake.lineitemLakeSchema]]: `lineitem`'s columns plus
+    * `has_s`, `s_name`, `has_o`, `o_orderpriority`) — no other day is
+    * listed or read, and a day without data is an empty slice. */
   def daySlice(spark: SparkSession, sfDir: String, date: LocalDate): DataFrame =
     PartitionedLake.readDay(spark, PartitionedLake.ensureLineitemLake(spark, sfDir), date,
-      Tables.lineitem(spark, sfDir).schema)
+      PartitionedLake.lineitemLakeSchema(spark, sfDir))
 
   /** (rc, n_tx): the day's revenue cents and line count, one row. */
   private def dayTotals(slice: DataFrame): DataFrame =
     slice.agg(coalesce(sum(cents(rev)), lit(0L)).as("rc"), count(lit(1)).as("n_tx"))
 
-  /** (s_name, rc, n_tx) over slice ⋈ broadcast `supplier`. */
-  private def bySupplier(spark: SparkSession, sfDir: String, slice: DataFrame): DataFrame =
-    slice
-      .join(broadcast(Tables.supplier(spark, sfDir)), col("l_suppkey") === col("s_suppkey"))
-      .groupBy("s_name")
+  /** (s_name, rc, n_tx) over the slice's lines with a matched supplier. */
+  private def bySupplier(slice: DataFrame): DataFrame =
+    slice.filter(col("has_s")).groupBy("s_name")
       .agg(sum(cents(rev)).as("rc"), count(lit(1)).as("n_tx"))
 
-  /** (o_orderpriority, rc) over slice ⋈ `orders`. */
-  private def byPriority(spark: SparkSession, sfDir: String, slice: DataFrame): DataFrame =
-    slice
-      .join(Tables.orders(spark, sfDir).select("o_orderkey", "o_orderpriority"),
-        col("l_orderkey") === col("o_orderkey"))
-      .groupBy("o_orderpriority")
-      .agg(sum(cents(rev)).as("rc"))
+  /** (o_orderpriority, rc) over the slice's lines with a matched order. */
+  private def byPriority(slice: DataFrame): DataFrame =
+    slice.filter(col("has_o")).groupBy("o_orderpriority").agg(sum(cents(rev)).as("rc"))
 
   /** Single-row scalar-metrics plan (the CORRECTNESS-gated face of the
-    * report, q44). Deterministic ties: best/worst break on
-    * (revenue, name) exactly like q18. [[metrics]] computes the same
+    * report, q44). Best/worst are the supplier groups with the highest
+    * and lowest (revenue, name), a null name ranking below every name, so
+    * a revenue tie breaks on the name exactly like q18, and each name
+    * comes with its own group's revenue. [[metrics]] computes the same
     * values by [[fold]]; ReportSpec keeps the two equal. */
   def metricsDF(spark: SparkSession, sfDir: String, date: LocalDate): DataFrame =
     metricsDFFrom(spark, sfDir, date, daySlice(spark, sfDir, date))
@@ -95,13 +95,14 @@ object Report {
   /** Same plan over a caller-supplied slice. */
   def metricsDFFrom(spark: SparkSession, sfDir: String, date: LocalDate,
                     slice: DataFrame): DataFrame = {
-    val tieKey = concat(format_string("%020d", col("rc")), col("s_name"))
-    val bestWorst = bySupplier(spark, sfDir, slice)
-      .agg(
-        coalesce(max_by(col("s_name"), tieKey), lit("n/a")).as("best_truck"),
-        coalesce(max("rc"), lit(0L)).as("best_rc"),
-        coalesce(min_by(col("s_name"), tieKey), lit("n/a")).as("worst_truck"),
-        coalesce(min("rc"), lit(0L)).as("worst_rc"))
+    // a struct orders field by field with nulls first, as the fold does
+    val key = struct(col("rc"), col("s_name"))
+    def named(group: String) =
+      when(col(group).isNull, lit("n/a")).otherwise(col(s"$group.s_name"))
+    val bestWorst = bySupplier(slice)
+      .agg(max(key).as("best"), min(key).as("worst"))
+      .select(named("best").as("best_truck"), coalesce(col("best.rc"), lit(0L)).as("best_rc"),
+        named("worst").as("worst_truck"), coalesce(col("worst.rc"), lit(0L)).as("worst_rc"))
 
     val fees = perPaymentDF(spark, sfDir, slice)
       .agg(coalesce(sum("fee_cents"), lit(0L)).as("fee_c"))
@@ -123,40 +124,36 @@ object Report {
   /** Per-payment-method revenue + processing fee (2% on card-like methods,
     * group-level rounding like the reference's per-method cost dict). */
   def perPaymentDF(spark: SparkSession, sfDir: String, slice: DataFrame): DataFrame =
-    byPriority(spark, sfDir, slice).select(
+    byPriority(slice).select(
       col("o_orderpriority").as("method"), col("rc"),
       when(lower(col("o_orderpriority")).contains("urgent"), round(col("rc") * 0.02).cast("long"))
         .otherwise(0L).as("fee_cents"))
 
   /** Per-truck revenue table (ref generate_report.py:92-96). */
   def perTruckDF(spark: SparkSession, sfDir: String, slice: DataFrame): DataFrame =
-    bySupplier(spark, sfDir, slice)
+    bySupplier(slice)
       .select(col("s_name").as("name"), (col("rc") / 100.0).as("revenue"), col("n_tx"),
         (round(col("rc") / col("n_tx")) / 100.0).as("avg_tx"))
       .orderBy(col("rc").desc, col("name"))
 
   /** Run the full report job for one date in ONE Spark action over one
-    * scan of the day slice. The slice is LEFT joined to `supplier` and
-    * `orders` (both keyed by primary keys, so no line is duplicated), and
-    * one aggregate groups it by the sets `()`, `(has_s, s_name)` and
-    * `(has_o, o_orderpriority)`, where `has_s`/`has_o` flag a matched
-    * key: the day set counts every line, and the keyed sets keep the
-    * inner joins' meaning once [[fold]] drops their unmatched groups.
-    * Each set's rows are told apart by `grouping_id()`; at most one row
-    * per supplier plus one per priority plus one (none for an empty day,
-    * whose plan Spark folds to an empty relation). */
+    * scan of the day slice and no dimension read. One aggregate groups the
+    * slice's own columns by the sets `()`, `(has_s, s_name)` and
+    * `(has_o, o_orderpriority)`, where `has_s`/`has_o` flag a key that
+    * matched when the lake was built: the day set counts every line, and
+    * the keyed sets keep the inner joins' meaning once [[fold]] drops
+    * their unmatched groups. Each set's rows are told apart by
+    * `grouping_id()`; at most one row per supplier plus one per priority
+    * plus one (none for an empty day, whose plan Spark folds to an empty
+    * relation). */
   def metrics(spark: SparkSession, sfDir: String, date: LocalDate): ReportMetrics = {
-    val joined = daySlice(spark, sfDir, date)
-      .join(broadcast(Tables.supplier(spark, sfDir).select("s_suppkey", "s_name")),
-        col("l_suppkey") === col("s_suppkey"), "left_outer")
-      .join(Tables.orders(spark, sfDir).select("o_orderkey", "o_orderpriority"),
-        col("l_orderkey") === col("o_orderkey"), "left_outer")
-      .select(col("s_suppkey").isNotNull.as("has_s"), col("s_name"),
-        col("o_orderkey").isNotNull.as("has_o"), col("o_orderpriority"), cents(rev).as("c"))
+    val lines = daySlice(spark, sfDir, date)
+      .select(col("has_s"), col("s_name"), col("has_o"), col("o_orderpriority"),
+        cents(rev).as("c"))
     // rows are (has_s, s_name, has_o, o_orderpriority, g, rc, n), where g is
     // grouping_id() over the four keys, the first key its high bit
     val (dayId, supplierId, priorityId) = (15L, 3L, 12L)
-    val rows = joined
+    val rows = lines
       .groupingSets(Seq(Nil, Seq(col("has_s"), col("s_name")),
         Seq(col("has_o"), col("o_orderpriority"))),
         col("has_s"), col("s_name"), col("has_o"), col("o_orderpriority"))
@@ -176,15 +173,17 @@ object Report {
   /** The report from its grouped rows, computed as [[metricsDFFrom]],
     * [[perTruckDF]] and [[perPaymentDF]] compute it: `dayCents`/`nTx`
     * are the whole day, `suppliers` the (name, cents, lines) and
-    * `priorities` the (method, cents) groups of the inner joins. */
+    * `priorities` the (method, cents) groups of the matched lines. A null
+    * name or method is a group of its own and sorts first, as in Spark. */
   def fold(date: LocalDate, dayCents: Long, nTx: Long,
            suppliers: Seq[(String, Long, Long)],
            priorities: Seq[(String, Long)]): ReportMetrics = {
-    val byKey = Ordering.by[(String, Long, Long), (Long, String)] { case (n, c, _) => (c, n) }
+    val byKey = Ordering.by[(String, Long, Long), (Long, Option[String])] {
+      case (n, c, _) => (c, Option(n)) }
     val best = suppliers.maxOption(byKey)
     val worst = suppliers.minOption(byKey)
     val fees = priorities.map { case (m, c) =>
-      (m, c, if (m.toLowerCase.contains("urgent")) roundHalfUp(c * 0.02) else 0L)
+      (m, c, if (Option(m).exists(_.toLowerCase.contains("urgent"))) roundHalfUp(c * 0.02) else 0L)
     }
     val feeC = fees.map(_._3).sum
     ReportMetrics(
@@ -194,9 +193,9 @@ object Report {
       bestTruck = best.fold("n/a")(_._1), bestRevenue = best.fold(0L)(_._2) / 100.0,
       worstTruck = worst.fold("n/a")(_._1), worstRevenue = worst.fold(0L)(_._2) / 100.0,
       totalFees = feeC / 100.0, netRevenue = (dayCents - feeC) / 100.0,
-      perTruck = suppliers.sortBy { case (n, c, _) => (-c, n) }.map { case (n, c, k) =>
+      perTruck = suppliers.sortBy { case (n, c, _) => (-c, Option(n)) }.map { case (n, c, k) =>
         TruckRow(n, c / 100.0, k, roundHalfUp(c.toDouble / k) / 100.0) },
-      perPayment = fees.sortBy(_._1).map { case (m, c, f) => PaymentRow(m, c / 100.0, f / 100.0) })
+      perPayment = fees.sortBy(f => Option(f._1)).map { case (m, c, f) => PaymentRow(m, c / 100.0, f / 100.0) })
   }
 
   /** Driver-side HTML render (ref generate_report.py:160-387). */

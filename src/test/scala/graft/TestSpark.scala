@@ -85,4 +85,39 @@ object TestSpark {
     } finally sc.removeSparkListener(listener)
     (jobs.get, tasks.get)
   }
+
+  /** The executed plans of the queries `body` runs on `s`. A session's
+    * listener sees only that session's queries, and its calls arrive late
+    * but in order, so the body's are those between a start and an end
+    * marker query: earlier queries of `s` may still arrive after the
+    * listener is registered. */
+  def executedPlans(s: SparkSession)(body: => Unit): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
+    def marker() = s"marker_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    val (start, end) = (marker(), marker())
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkPlan)]
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        val name = qe.analyzed.schema.fieldNames.find(n => n == start || n == end).getOrElse("")
+        seen.add(name -> qe.executedPlan)
+        if (name == end) drained.countDown()
+      }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def runMarker(name: String): Unit = {
+      s.range(1).select(org.apache.spark.sql.functions.lit(1).as(name)).collect(); ()
+    }
+    s.listenerManager.register(listener)
+    try {
+      runMarker(start)
+      body
+      runMarker(end)
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the listener bus never delivered the end marker")
+    } finally s.listenerManager.unregister(listener)
+    seen.asScala.toSeq.dropWhile(_._1 != start).drop(1).takeWhile(_._1 != end).map(_._2)
+  }
 }

@@ -85,31 +85,18 @@ class LakeReadPathSpec extends AnyFunSuite {
 
   test("a compaction materializes its base through the connector scan") {
     val root = lake("compact")
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-                             ns: Long): Unit = { plans.add(qe.executedPlan); () }
-      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-                             e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      SnapshotLake.compact(spark, root)
-      // listener calls arrive on the listener bus: wait for the write's
-      val deadline = System.currentTimeMillis() + 60000L
-      def mine: Seq[SparkPlan] = {
-        import scala.jdk.CollectionConverters._
-        plans.asScala.toSeq.filter(p => leaves(p).exists {
-          case b: BatchScanExec => b.table.name().startsWith(s"graftlake:$root")
-          case f: FileSourceScanExec =>
-            f.relation.location.rootPaths.exists(_.toString.contains(root))
-          case _ => false
-        })
-      }
-      while (mine.isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(50)
-      assert(mine.nonEmpty, "the compaction's write must have run a query over the lake")
-      mine.foreach(assertConnectorOnly("compaction", _, root))
-    } finally spark.listenerManager.unregister(listener)
+    // bracketed by marker queries: a listener call for the fixture
+    // appends' own queries (their bloom sidecars scan an appended file
+    // with Spark's parquet scan) can arrive after registration
+    val plans = TestSpark.executedPlans(spark) { SnapshotLake.compact(spark, root) }
+    val mine = plans.filter(p => leaves(p).exists {
+      case b: BatchScanExec => b.table.name().startsWith(s"graftlake:$root")
+      case f: FileSourceScanExec =>
+        f.relation.location.rootPaths.exists(_.toString.contains(root))
+      case _ => false
+    })
+    assert(mine.nonEmpty, "the compaction's write must have run a query over the lake")
+    mine.foreach(assertConnectorOnly("compaction", _, root))
     assert(SnapshotLake.read(spark, root).count() == 40L)
   }
 
