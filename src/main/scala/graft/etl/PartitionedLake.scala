@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BooleanType, IntegerType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{BooleanType, DateType, IntegerType, StringType, StructField, StructType}
 
 /** The partitioned parquet lake — the reference's whole output side
   * (ref: pipeline/ETL/load.py:50-56 `wr.s3.to_parquet(dataset=True,
@@ -141,6 +141,23 @@ object PartitionedLake {
   def lakeRoot(sfDir: String): String =
     s"data/lake/${sfDir.replaceAll("[^A-Za-z0-9.]+", "_").replaceAll("^_|_$", "")}"
 
+  /** `root`, after running `write(root)` unless an earlier write
+    * committed there. Spark's `_SUCCESS` commit marker is the cache: a
+    * build that never committed is redone, and a committed one is never
+    * checked against its inputs (they are path-immutable, see
+    * [[graft.model.Tables.load]]). One lock for every such build, so
+    * concurrent callers never race the check. */
+  def buildOnce(root: String)(write: String => Unit): String = synchronized {
+    if (!Files.exists(Paths.get(root, "_SUCCESS"))) write(root)
+    root
+  }
+
+  /** Write `df` partitioned by the `year/month/day` of `tsCol`, one file
+    * per day (`repartition` by (year, month) keeps writer tasks aligned
+    * with directories — no small-file spray). */
+  private def overwriteByDay(df: DataFrame, tsCol: String, root: String): Unit =
+    overwrite(withPartitionCols(df, tsCol).repartition(col("year"), col("month")), root)
+
   /** The lineitem lake's data schema, the one definition [[ensureLineitemLake]]
     * writes in and [[readDay]] readers pass: `lineitem`'s columns, then
     * the daily report's two dimension attributes, each after a flag that
@@ -154,38 +171,69 @@ object PartitionedLake {
       StructField("has_s", BooleanType), StructField("s_name", StringType),
       StructField("has_o", BooleanType), StructField("o_orderpriority", StringType)))
 
-  /** Build (once) the `year/month/day`-partitioned lineitem lake derived
-    * from `sfDir`, returning its root. Each line is LEFT joined once, here,
-    * to `supplier` and to `orders` (both by primary key, so no line is
-    * duplicated or dropped) and carries [[lineitemLakeSchema]]'s dimension
-    * columns: the reference denormalizes at extract time
-    * (pipeline/ETL/extract.py:86-109), so a daily report groups one day
-    * directory and reads no dimension. Cached on disk via Spark's own
-    * `_SUCCESS` commit marker; rebuilt only if a previous attempt never
-    * committed. The lake is therefore derived from three PATH-IMMUTABLE
+  /** The ship-date leaf's root, beside the day lake under [[lakeRoot]]. */
+  def lineitemByShipRoot(sfDir: String): String = s"${lakeRoot(sfDir)}/lineitem_by_ship"
+
+  /** The ship-date leaf's schema: the dashboard's columns of the
+    * denormalized fact, typed as the base tables' pinned schemas
+    * ([[graft.model.Schemas]]) type them, plus `l_shipday`, the `DATE` of
+    * `l_shipdate` and the leaf's clustering key. Parquet pushes `DATE`
+    * predicates down to its footer statistics but not `TIMESTAMP_NTZ`
+    * ones (`l_shipdate`'s type), so a date range prunes files and row
+    * groups only through `l_shipday`. Every column is nullable, as parquet
+    * reads every column back; a reader passes this schema and runs no
+    * inference job. */
+  val lineitemByShipSchema: StructType = {
+    import graft.model.Schemas
+    val fields = (Seq(Schemas.lineitem, Schemas.supplier, Schemas.orders).flatMap(_.fields) :+
+      StructField("l_shipday", DateType)).map(f => f.name -> f).toMap
+    StructType(Seq("l_orderkey", "l_shipdate", "l_shipday", "l_extendedprice", "l_discount",
+      "s_name", "s_nationkey", "s_acctbal", "o_orderpriority").map(fields))
+  }
+
+  /** Build (once each) the two leaves of the lineitem lake derived from
+    * `sfDir`, returning the day lake's root. Both take their rows from one
+    * join: each line LEFT joined to `supplier` and to `orders` (both by
+    * primary key, so no line is duplicated or dropped) — the reference
+    * denormalizes at extract time (pipeline/ETL/extract.py:86-109), so
+    * neither the daily report nor a dashboard filter change reads a
+    * dimension.
+    *   - `lineitem_denorm`: every line in [[lineitemLakeSchema]],
+    *     `year/month/day`-partitioned with one file per day; a report
+    *     reads one day directory.
+    *   - `lineitem_by_ship` ([[lineitemByShipRoot]]): the lines that
+    *     matched both dimensions (the inner join) in
+    *     [[lineitemByShipSchema]], range-partitioned into 16 files and
+    *     sorted by ship day (`l_shipday`), so a date range prunes files
+    *     and row groups by their footer statistics; the dashboard reads
+    *     it.
+    * Each leaf is cached on disk by its own `_SUCCESS` marker
+    * ([[buildOnce]]), so a lake built before one leaf existed gains it
+    * on the next call. The leaves are derived from three PATH-IMMUTABLE
     * inputs — `lineitem`, `supplier` and `orders` under `sfDir` (see
     * [[graft.model.Tables.load]]): a writer that rewrites any of them in
-    * place must also delete [[lakeRoot]]. One file per day-partition
-    * (`repartition` by (year, month) keeps writer tasks aligned with
-    * directories — no small-file spray).
+    * place must also delete [[lakeRoot]].
     */
-  def ensureLineitemLake(spark: SparkSession, sfDir: String): String = synchronized {
-    val root = s"${lakeRoot(sfDir)}/lineitem_denorm"
-    if (!Files.exists(Paths.get(root, "_SUCCESS"))) {
-      import graft.model.Tables
-      val wide = Tables.lineitem(spark, sfDir)
-        .join(broadcast(Tables.supplier(spark, sfDir).select("s_suppkey", "s_name")),
-          col("l_suppkey") === col("s_suppkey"), "left_outer")
-        .join(Tables.orders(spark, sfDir).select("o_orderkey", "o_orderpriority"),
-          col("l_orderkey") === col("o_orderkey"), "left_outer")
-        .withColumn("has_s", col("s_suppkey").isNotNull)
-        .withColumn("has_o", col("o_orderkey").isNotNull)
-        .select(lineitemLakeSchema(spark, sfDir).fieldNames.map(col): _*)
-      overwrite(
-        withPartitionCols(wide, "l_shipdate").repartition(col("year"), col("month")),
-        root)
+  def ensureLineitemLake(spark: SparkSession, sfDir: String): String = {
+    import graft.model.Tables
+    def wide = Tables.lineitem(spark, sfDir)
+      .join(broadcast(Tables.supplier(spark, sfDir)
+        .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")),
+        col("l_suppkey") === col("s_suppkey"), "left_outer")
+      .join(Tables.orders(spark, sfDir).select("o_orderkey", "o_orderpriority"),
+        col("l_orderkey") === col("o_orderkey"), "left_outer")
+      .withColumn("has_s", col("s_suppkey").isNotNull)
+      .withColumn("has_o", col("o_orderkey").isNotNull)
+    def in(df: DataFrame, schema: StructType) = df.select(schema.fieldNames.map(col): _*)
+    buildOnce(lineitemByShipRoot(sfDir)) { root =>
+      val inner = wide.where(col("has_s") && col("has_o"))
+        .withColumn("l_shipday", to_date(col("l_shipdate")))
+      ZOrder.writeClustered(in(inner, lineitemByShipSchema), col("l_shipday"),
+        files = 16, root)
     }
-    root
+    buildOnce(s"${lakeRoot(sfDir)}/lineitem_denorm") { root =>
+      overwriteByDay(in(wide, lineitemLakeSchema(spark, sfDir)), "l_shipdate", root)
+    }
   }
 
   /** Build (once) the micros-typed, day-partitioned events lake derived
@@ -199,16 +247,10 @@ object PartitionedLake {
     * parquet footer (`PushedFilters`) and — paired with [[sinceDay]] /
     * [[upToDay]] — at the file listing (`PartitionFilters`), which is the
     * entire "re-aggregate only the delta" story at 100 TB. */
-  def ensureEventsLake(spark: SparkSession, sfDir: String): String = synchronized {
-    val root = s"${lakeRoot(sfDir)}/events"
-    if (!Files.exists(Paths.get(root, "_SUCCESS"))) {
-      val src = graft.model.Tables.events(spark, sfDir)
-      overwrite(
-        withPartitionCols(src, "ts").repartition(col("year"), col("month")),
-        root)
+  def ensureEventsLake(spark: SparkSession, sfDir: String): String =
+    buildOnce(s"${lakeRoot(sfDir)}/events") { root =>
+      overwriteByDay(graft.model.Tables.events(spark, sfDir), "ts", root)
     }
-    root
-  }
 
   import org.apache.spark.sql.Column
 

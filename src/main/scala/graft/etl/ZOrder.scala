@@ -1,7 +1,5 @@
 package graft.etl
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
@@ -37,27 +35,28 @@ object ZOrder {
         .bitwiseOR(shiftleft(shiftright(b, i).bitwiseAND(lit(1L)), 2 * i + 1))
     }.reduce(_.bitwiseOR(_))
 
+  /** Write `df` range-partitioned on `key` into `files` roughly equal
+    * files, each sorted by `key`: every file and row group then covers
+    * one narrow band of `key`, so a predicate on it prunes by the parquet
+    * footers' min/max. `key` is a write-time ordering only — unless it is
+    * a stored column, it is not part of the stored schema. */
+  def writeClustered(df: DataFrame, key: Column, files: Int, root: String): Unit =
+    df.repartitionByRange(files, key).sortWithinPartitions(key)
+      .write.mode("overwrite").parquet(root)
+
   /** Write `df` laid out along the Z-curve of (`colA`, `colB`) into
-    * `files` roughly equal files. The z value is a write-time ordering
-    * key only — it is dropped from the stored schema. */
+    * `files` roughly equal files ([[writeClustered]] on the interleaved
+    * value). */
   def write(df: DataFrame, colA: String, colB: String, files: Int,
             root: String): Unit =
-    df.withColumn("__z", interleave(col(colA), col(colB)))
-      .repartitionByRange(files, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-      .write.mode("overwrite").parquet(root)
+    writeClustered(df, interleave(col(colA), col(colB)), files, root)
 
   /** Build (once per sf dir) the Z-ordered lineitem lake keyed on
     * (l_suppkey, l_partkey) — the two independent scan dimensions the
-    * star queries filter on. Committed via Spark's `_SUCCESS` marker,
-    * same contract as PartitionedLake.ensureLineitemLake. */
+    * star queries filter on. Cached by its `_SUCCESS` marker
+    * ([[PartitionedLake.buildOnce]]). */
   def ensureZorderedLineitem(spark: SparkSession, sfDir: String): String =
-    synchronized { // parallel test suites must not race the _SUCCESS check
-      val root = s"${PartitionedLake.lakeRoot(sfDir)}/lineitem_zorder"
-      if (!Files.exists(Paths.get(root, "_SUCCESS")))
-        write(graft.model.Tables.lineitem(spark, sfDir),
-          "l_suppkey", "l_partkey", files = 16, root)
-      root
+    PartitionedLake.buildOnce(s"${PartitionedLake.lakeRoot(sfDir)}/lineitem_zorder") {
+      write(graft.model.Tables.lineitem(spark, sfDir), "l_suppkey", "l_partkey", files = 16, _)
     }
 }

@@ -14,9 +14,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   - `documents`/`embeddings`→ LLM-pipeline extension tables
   *
   * The tables stay normalized here; the reference's denormalization is
-  * restated where its report reads it: the day-partitioned lineitem lake
+  * restated where its report and dashboard read it: the lineitem lake
   * ([[graft.etl.PartitionedLake.ensureLineitemLake]]) joins each line to
-  * its `supplier` name and `orders` priority once, when it is built.
+  * its `supplier` and `orders` attributes once, when it is built, into a
+  * day-partitioned leaf for the report and a ship-date-clustered leaf for
+  * the dashboard.
   *
   * Every reader is a plain parquet scan: Catalyst handles column pruning,
   * predicate pushdown, and (for partitioned layouts written by
@@ -51,10 +53,12 @@ object Tables {
     * with out == src, or a fixture regenerating data at the same path)
     * MUST call [[invalidate]] on that dir first, or readers will serve a
     * stale listing / fail on deleted files. The same rule covers what is
-    * derived from a dir: the day-partitioned lineitem lake
-    * ([[graft.etl.PartitionedLake.ensureLineitemLake]]) is built once from
-    * `lineitem`, `supplier` and `orders`, so rewriting any of the three
-    * also means deleting that lake. Entries of stopped sessions are
+    * derived from a dir: both leaves of the lineitem lake
+    * ([[graft.etl.PartitionedLake.ensureLineitemLake]]: the report's day
+    * lake and the dashboard's ship-date leaf) are built once from
+    * `lineitem`, `supplier` and `orders` under
+    * [[graft.etl.PartitionedLake.lakeRoot]], so rewriting any of the three
+    * also means deleting that root. Entries of stopped sessions are
     * evicted on the next load so the memo never pins DataFrames of a
     * dead session. */
   private val loaded = new graft.etl.Memo[(SparkSession, String, String), DataFrame]

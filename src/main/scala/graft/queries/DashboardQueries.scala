@@ -33,7 +33,9 @@ object DashboardQueries {
     }
 
   /** The filtered session slice as a DuckDB CTE — the oracle twin of
-    * Dashboard.open's join + sidebar filters. */
+    * Dashboard.open's slice. Dashboard.open reads the lake's
+    * denormalized ship-date leaf; the oracle joins the base tables
+    * itself, so it also checks how the leaf was built. */
   private val sliceCte =
     s"""slice AS (
        |  SELECT l.l_shipdate, l.l_extendedprice, l.l_discount,

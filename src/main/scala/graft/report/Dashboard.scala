@@ -9,10 +9,19 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.model.Tables
+import graft.etl.PartitionedLake
 
 /** The interactive-dashboard session (ref: pipeline/dashboard.py, SURVEY
   * §3.3): one filtered view of the fact table shared by every chart query.
+  *
+  * The reference's dashboard reads a lake denormalized at extract time
+  * (pipeline/ETL/extract.py:86-109); so does this one. The slice is read
+  * from the lineitem lake's ship-date leaf
+  * ([[graft.etl.PartitionedLake.ensureLineitemLake]]): the lines that
+  * match a supplier and an order, carrying the columns the charts read,
+  * range-clustered by ship day. A filter change joins nothing and
+  * broadcasts nothing, and its date range reads only the files that
+  * overlap it.
   *
   * The reference re-executes the whole script per UI interaction — about
   * fifteen aggregate queries over one filtered view. Here a filter change
@@ -22,9 +31,9 @@ import graft.model.Tables
   * number is bounded by the days in range and the dimension sizes, not by
   * the fact table. Every aggregate chart is a fold of those groups on the
   * driver, returned as a local DataFrame whose collect runs no Spark job
-  * (asserted by DashboardSpec); only [[rawHead]] reads the slice again. At
-  * 100 TB that one aggregate stays the whole distributed cost of a filter
-  * change.
+  * (asserted by DashboardSpec); only [[rawHead]] reads the slice again,
+  * and only its newest days. At 100 TB that one aggregate stays the whole
+  * distributed cost of a filter change.
   *
   * Filters mirror the reference's sidebar exactly: inclusive date range
   * (P8), supplier IN-list, priority IN-list (P9) — ref dashboard.py:98-109.
@@ -122,11 +131,24 @@ final class Dashboard private (
       .sortBy(d => (d.rc, d.date.toEpochDay))(Ordering.Tuple2(centsDesc, Ordering.Long))
       .take(k).map(d => Row(d.date, money(d.rc), d.n)))
 
-  /** Raw explorer page (ref :342): one ordered-limit action over the
-    * slice. */
-  def rawHead(k: Int): DataFrame =
-    slice.select("l_orderkey", "l_shipdate", "s_name", "o_orderpriority")
-      .orderBy(col("l_shipdate").desc, col("l_orderkey")).limit(k)
+  /** Raw explorer page (ref :342): the slice's `k` newest lines, by
+    * `l_shipdate` descending then `l_orderkey`. The day groups say how
+    * many lines each day holds, so the newest days that together hold
+    * `k` lines (all days, if the slice holds fewer) are known before any
+    * read: one ordered-limit action over the slice from the oldest of
+    * them on, which prunes the leaf to those days' files. Whole days are
+    * kept, so ties fall exactly as over the whole slice. An empty slice
+    * is a local empty frame (no job). */
+  def rawHead(k: Int): DataFrame = {
+    def page(lines: DataFrame) = lines.select("l_orderkey", "l_shipdate", "s_name", "o_orderpriority")
+    val newest = days.sortBy(-_.date.toEpochDay)
+    val held = newest.scanLeft(0L)(_ + _.n).tail
+    newest.lift(held.indexWhere(_ >= k)).orElse(newest.lastOption) match {
+      case None => local(page(slice).schema, Nil)
+      case Some(cutoff) => page(slice.where(col("l_shipday") >= lit(cutoff.date)))
+        .orderBy(col("l_shipdate").desc, col("l_orderkey")).limit(k)
+    }
+  }
 
   /** The session holds no cached data and nothing to release; callers may
     * still scope a session with it. */
@@ -190,26 +212,27 @@ object Dashboard {
   private val TopDaysSchema = schema(("date", DateType, true), ("revenue", DoubleType, true),
     ("n_tx", LongType, false))
 
-  /** Open a session: join the fact to its dimensions, keep the columns the
-    * charts read, apply the sidebar filters, and collect the slice's
-    * per-day and per-(supplier, priority) groups in one action: one scan
-    * grouped by the sets `(date)` and `(s_name, s_nationkey, s_acctbal,
-    * o_orderpriority)`, whose rows `grouping(date)` tells apart. */
+  /** Open a session over the lake's ship-date leaf
+    * ([[PartitionedLake.ensureLineitemLake]]): lines already joined to
+    * their supplier and order, read with its declared schema, so a filter
+    * change runs no join and no inference job. The date range is a
+    * predicate on the leaf's `DATE` column `l_shipday`, which prunes its
+    * files and row groups by their footer statistics. The supplier and
+    * priority IN-lists apply to the leaf's columns, and the slice's
+    * per-day and per-(supplier, priority) groups are collected in one
+    * action: one scan grouped by the sets `(date)` and `(s_name,
+    * s_nationkey, s_acctbal, o_orderpriority)`, whose rows
+    * `grouping(date)` tells apart. */
   def open(spark: SparkSession, sfDir: String, f: Filters): Dashboard = {
-    val joined = Tables.lineitem(spark, sfDir)
-      .select("l_orderkey", "l_suppkey", "l_shipdate", "l_extendedprice", "l_discount")
-      .join(broadcast(Tables.supplier(spark, sfDir)
-        .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")),
-        col("l_suppkey") === col("s_suppkey"))
-      .join(Tables.orders(spark, sfDir).select("o_orderkey", "o_orderpriority"),
-        col("l_orderkey") === col("o_orderkey"))
-    val dated = joined.filter(
-      to_date(col("l_shipdate")).between(lit(f.from.toString), lit(f.to.toString)))
+    PartitionedLake.ensureLineitemLake(spark, sfDir)
+    val dated = spark.read.schema(PartitionedLake.lineitemByShipSchema)
+      .parquet(PartitionedLake.lineitemByShipRoot(sfDir))
+      .where(col("l_shipday").between(lit(f.from), lit(f.to)))
     val withSup = f.suppliers.fold(dated)(xs => dated.filter(col("s_name").isin(xs: _*)))
     val slice = f.priorities.fold(withSup)(xs => withSup.filter(col("o_orderpriority").isin(xs: _*)))
 
     val cellKeys = Seq("s_name", "s_nationkey", "s_acctbal", "o_orderpriority").map(col)
-    val (cellRows, dayRows) = slice.withColumn("date", to_date(col("l_shipdate")))
+    val (cellRows, dayRows) = slice.withColumnRenamed("l_shipday", "date")
       .groupingSets(Seq(Seq(col("date")), cellKeys), col("date") +: cellKeys: _*)
       .agg(grouping("date").as("cell"), sum(cents(rev)).as("rc"), count(lit(1)).as("n"))
       .collect().toSeq.partition(_.getAs[Byte]("cell") == 1)

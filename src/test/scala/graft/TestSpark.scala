@@ -50,18 +50,32 @@ object TestSpark {
     "PartitionFilters: \\[([^\\]]*)\\]".r.findAllMatchIn(plan)
       .exists(_.group(1).contains("year"))
 
-  /** (jobs, tasks) the body's actions launch. The listener counts only
-    * jobs of a job group of this call's own — suites share the session
-    * and run concurrently — and a marker job in a second group drains
-    * the listener bus: events arrive in order, so once the marker's
-    * start is seen every job of the body has been counted. */
+  /** (jobs, tasks) the body's actions launch. */
   def jobsAndTasks(body: => Unit): (Int, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val (jobs, tasks, _) = cost(body)
+    (jobs, tasks)
+  }
+
+  /** Rows the body's tasks read from their input files (the tasks'
+    * `inputMetrics.recordsRead`): what the scans kept after file and row
+    * group pruning. */
+  def inputRecords(body: => Unit): Long = cost(body)._3
+
+  /** (jobs, tasks, input records) of the body's actions. The listener
+    * counts only jobs of a job group of this call's own — suites share
+    * the session and run concurrently — and a marker job in a second
+    * group drains the listener bus: events arrive in order, so once the
+    * marker's start is seen every job and task end of the body has been
+    * counted. */
+  private def cost(body: => Unit): (Int, Int, Long) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
     val sc = spark.sparkContext
     val group = s"cost-${java.util.UUID.randomUUID()}"
     val marker = s"$group-drained"
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val tasks = new java.util.concurrent.atomic.AtomicInteger
+    val records = new java.util.concurrent.atomic.AtomicLong
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val drained = new java.util.concurrent.CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
@@ -69,9 +83,14 @@ object TestSpark {
           case Some(`group`) =>
             jobs.incrementAndGet()
             tasks.addAndGet(e.stageInfos.map(_.numTasks).sum)
-            ()
+            e.stageIds.foreach(stages.add)
           case Some(`marker`) => drained.countDown()
           case _ => ()
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null) {
+          records.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+          ()
         }
     }
     sc.addSparkListener(listener)
@@ -83,7 +102,7 @@ object TestSpark {
       assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS),
         "the listener bus never delivered the marker job")
     } finally sc.removeSparkListener(listener)
-    (jobs.get, tasks.get)
+    (jobs.get, tasks.get, records.get)
   }
 
   /** The executed plans of the queries `body` runs on `s`. A session's

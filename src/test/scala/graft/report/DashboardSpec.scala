@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.etl.{PartitionedLake, Scratch}
 import graft.model.{Schemas, Tables}
 
 /** The dashboard session: filters apply everywhere, charts agree with the
@@ -52,11 +53,14 @@ class DashboardSpec extends AnyFunSuite {
   }
 
   /** Jobs of a whole session — `open`, the nine aggregate charts and
-    * `rawHead` — at this suite's data: 7 measured (4 for `open`'s join
-    * stages and one grouping-sets aggregate, 3 for `rawHead`); `open` as
-    * a union of two group-bys ran 7, and a session over a cached slice
-    * with one Catalyst plan per chart ran ~41. */
-  private val SessionJobBudget = 7
+    * `rawHead` — at this suite's data: 3 measured (2 for `open`'s one
+    * grouping-sets aggregate over the ship-date leaf, its shuffle stage
+    * and its result, and 1 for `rawHead`'s ordered limit). Joining the
+    * fact to its dimensions per filter change ran 7 (4 for `open`, 3 for
+    * `rawHead`); `open` as a union of two group-bys ran 7 by itself, and a
+    * session over a cached slice with one Catalyst plan per chart ran
+    * ~41. */
+  private val SessionJobBudget = 3
 
   test("a filter change is one grouping action; aggregate charts run no job") {
     import org.apache.spark.sql.execution.columnar.InMemoryRelation
@@ -140,12 +144,87 @@ class DashboardSpec extends AnyFunSuite {
     write("lineitem", Seq(
       line(10, 1, 100.0, 1), line(11, 2, 50.5, 1), line(12, 3, null, 1),
       line(10, 3, null, 2), line(11, 3, null, 2), // a day whose every price is null
-      line(12, 2, 20.25, 3), line(11, 1, 7.0, 3)))
+      line(12, 2, 20.25, 3), line(11, 1, 7.0, 3),
+      line(99, 1, 8.0, 3), line(10, 42, 9.0, 3))) // no order 99, no supplier 42
     try {
-      assert(Tables.lineitem(spark, dir).count() == 7)
+      assert(Tables.lineitem(spark, dir).count() == 9)
       assertChartsEqual(dir, Dashboard.Filters(day(1996, 3, 1), day(1996, 3, 31)),
         Seq("1-URGENT", "2-HIGH"), nonEmpty = true)
-    } finally Tables.invalidate(dir)
+    } finally {
+      Tables.invalidate(dir)
+      Scratch.rm(java.nio.file.Paths.get(PartitionedLake.lakeRoot(dir)))
+    }
+  }
+
+  private val RawCols = Seq("l_orderkey", "l_shipdate", "s_name", "o_orderpriority")
+
+  /** `rawHead(k)` against the ordered limit over the base tables' joined
+    * slice: the same schema and the same rows in order. Lines that tie on
+    * (`l_shipdate`, `l_orderkey`) may come in either order, and the last
+    * tied group may be cut at any of its members, so rows compare as
+    * multisets per key and the cut group as a sub-multiset. */
+  private def assertRawHead(f: Dashboard.Filters, k: Int): Seq[Row] = {
+    val want = CatalystCharts.slice(spark, TestSpark.Sf, f).select(RawCols.map(col): _*)
+      .orderBy(col("l_shipdate").desc, col("l_orderkey")).limit(k)
+    val got = Dashboard.open(spark, TestSpark.Sf, f).rawHead(k)
+    assert(got.schema == want.schema, s"rawHead schema for $f")
+    val (g, w) = (got.collect().toSeq, want.collect().toSeq)
+    def key(r: Row) = (r.get(1), r.get(0))
+    assert(g.map(key) == w.map(key), s"rawHead($k) keys for $f")
+    def byKey(rows: Seq[Row]) = rows.groupBy(key).view.mapValues(_.map(_.toString).sorted).toMap
+    val (wantByKey, cut) = (byKey(w), w.lastOption.map(key))
+    byKey(g).foreach { case (kk, rows) =>
+      if (cut.contains(kk)) {
+        val tied = CatalystCharts.slice(spark, TestSpark.Sf, f).select(RawCols.map(col): _*)
+          .collect().toSeq.filter(key(_) == kk).map(_.toString)
+        assert(rows.diff(tied).isEmpty, s"rawHead($k) rows of the cut key $kk for $f")
+      } else assert(rows == wantByKey(kk), s"rawHead($k) rows of $kk for $f")
+    }
+    g
+  }
+
+  for ((label, f, k, shape) <- Seq[(String, Dashboard.Filters, Int, Seq[Row] => Boolean)](
+      ("fewer lines than k", Dashboard.Filters(day(1998, 3, 1), day(1998, 3, 3)), 1000,
+        rows => rows.nonEmpty && rows.size < 1000),
+      ("k spans several days", Dashboard.Filters(day(1995, 1, 1), day(2001, 12, 31)), 60,
+        rows => rows.size == 60 && rows.map(_.get(1).toString.take(10)).distinct.size > 3),
+      ("a sliver with supplier and priority IN-lists",
+        Dashboard.Filters(day(1996, 1, 1), day(1998, 12, 31),
+          Some(Seq("Supplier#000000001", "Supplier#000000004", "Supplier#000000007")),
+          Some(Seq("2-HIGH", "5-LOW"))), 10,
+        rows => rows.size == 10)))
+    test(s"rawHead equals the base tables' ordered limit: $label") {
+      val rows = assertRawHead(f, k)
+      assert(shape(rows), s"the case's rows: $rows")
+    }
+
+  test("rawHead of an empty slice is empty, with its schema, and runs no job") {
+    val f = Dashboard.Filters(day(2010, 1, 1), day(2010, 12, 31))
+    val raw = Dashboard.open(spark, TestSpark.Sf, f).rawHead(10)
+    val (jobs, _) = TestSpark.jobsAndTasks { assert(raw.collect().isEmpty); () }
+    assert(jobs == 0, s"an empty rawHead ran $jobs jobs")
+    assert(raw.schema == CatalystCharts.slice(spark, TestSpark.Sf, f).select(RawCols.map(col): _*).schema)
+  }
+
+  test("the ship-date leaf holds exactly the lines joined to a supplier and an order") {
+    PartitionedLake.ensureLineitemLake(spark, TestSpark.Sf)
+    val leaf = spark.read.parquet(PartitionedLake.lineitemByShipRoot(TestSpark.Sf))
+    val cols = PartitionedLake.lineitemByShipSchema.fieldNames.toSeq
+    assert(leaf.columns.toSeq == cols)
+    val joined = Tables.lineitem(spark, TestSpark.Sf)
+      .join(Tables.supplier(spark, TestSpark.Sf), col("l_suppkey") === col("s_suppkey"))
+      .join(Tables.orders(spark, TestSpark.Sf), col("l_orderkey") === col("o_orderkey"))
+      .withColumn("l_shipday", to_date(col("l_shipdate")))
+      .select(cols.map(col): _*)
+    assert(leaf.count() == joined.count() && leaf.count() > 0)
+    assert(leaf.exceptAll(joined).isEmpty && joined.exceptAll(leaf).isEmpty)
+  }
+
+  test("an unfiltered whole-range rawHead reads at most a quarter of the leaf") {
+    val d = Dashboard.open(spark, TestSpark.Sf, Dashboard.Filters(day(1990, 1, 1), day(2010, 12, 31)))
+    val leafRows = spark.read.parquet(PartitionedLake.lineitemByShipRoot(TestSpark.Sf)).count()
+    val read = TestSpark.inputRecords { d.rawHead(50).collect(); () }
+    assert(read > 0 && read * 4 <= leafRows, s"rawHead(50) read $read of the leaf's $leafRows rows")
   }
 }
 

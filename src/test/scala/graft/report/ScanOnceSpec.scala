@@ -12,9 +12,9 @@ import graft.TestSpark
 import graft.etl.PartitionedLake
 
 /** A report and a dashboard filter change each run one action that reads
-  * its slice's files once: one file scan of the input in the executed
-  * plan, and at most one of each dimension table (none for a report,
-  * whose lake carries its dimension columns). */
+  * its slice's files once: one file scan of its lake leaf in the executed
+  * plan, and no scan of a base table (the lake carries the dimension
+  * columns). */
 class ScanOnceSpec extends AnyFunSuite {
 
   /** Every file scan a plan runs, through adaptive stages and subqueries;
@@ -50,17 +50,18 @@ class ScanOnceSpec extends AnyFunSuite {
     }
   }
 
-  test("a dashboard filter change scans lineitem once, each dimension at most once") {
+  test("a dashboard filter change scans the ship-date leaf once, no base table") {
     val f = Dashboard.Filters(LocalDate.of(1995, 1, 1), LocalDate.of(2001, 12, 31),
       priorities = Some(Seq("1-URGENT", "2-HIGH")))
     TestSpark.withConf() { s =>
-      Dashboard.open(s, TestSpark.Sf, f) // resolves the base tables
+      Dashboard.open(s, TestSpark.Sf, f) // resolves the base tables and builds the lake
+      val leaf = new Path(PartitionedLake.lineitemByShipRoot(TestSpark.Sf)).getName
       val plans = TestSpark.executedPlans(s) { Dashboard.open(s, TestSpark.Sf, f); () }
       assert(plans.size == 1, s"a filter change ran ${plans.size} queries")
       val scans = scansByRoot(plans.head)
-      assert(scans.get("lineitem.parquet").contains(1), s"lineitem scans: $scans\n${plans.head}")
-      assert(scans.getOrElse("supplier.parquet", 0) <= 1 && scans.getOrElse("orders.parquet", 0) <= 1,
-        s"dimension scans: $scans\n${plans.head}")
+      assert(scans == Map(leaf -> 1), s"file scans: $scans\n${plans.head}")
+      assert(Seq("lineitem.parquet", "supplier.parquet", "orders.parquet").forall(!scans.contains(_)),
+        s"base-table scans: $scans\n${plans.head}")
     }
   }
 }
