@@ -5,8 +5,7 @@ import java.util.Base64
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
@@ -27,10 +26,13 @@ import org.apache.spark.util.sketch.BloomFilter
   * that makes the commit visible — so any reader that can resolve a file
   * can resolve its index, with no change to the CAS commit protocol:
   *
-  *   - MIN/MAX per (file, column), harvested from the parquet FOOTERS the
-  *     writer already maintains — a metadata-only pass, no data read, and
-  *     distributed over the executors (O(files) footer opens, once at
-  *     commit time instead of once per query per reader).
+  *   - MIN/MAX and null count per (file, column), read by each writing
+  *     task from the parquet FOOTER it has just closed ([[metaOf]]) and
+  *     returned with the file's name — no data read and no second job:
+  *     the commit links the files and writes the sidecars from what the
+  *     tasks reported (Delta's writer stats tracker and Iceberg's writer
+  *     `Metrics` collect file stats in the writing task for the same
+  *     reason).
   *   - BLOOM per (file, key column), for point lookups min/max can't
   *     serve on high-cardinality keys. This one costs a column-pruned
   *     scan of the NEW files only — the same build cost Delta documents
@@ -59,7 +61,7 @@ object FileStats {
   final case class ColRange(min: String, max: String, numeric: Boolean,
                             nulls: Option[Long] = None)
 
-  /** Compare two harvested string bounds the way the footer min/max were
+  /** Compare two footer string bounds the way the footer min/max were
     * COMPUTED — unsigned UTF-8 byte order (parquet BINARY/UTF8, the same
     * ordering Spark and DuckDB give UTF8String comparisons). Java's
     * `String.compareTo` is UTF-16 code-unit order, which DIVERGES for
@@ -69,87 +71,67 @@ object FileStats {
     * value is U+10000 has a byte-order max ABOVE a predicate
     * lo = U+E000 but a UTF-16 max below it, and the file would be
     * silently dropped while its row matches. Byte-wise unsigned compare
-    * restores the harvest's own ordering, keeping the prune conservative
+    * restores the footer's own ordering, keeping the prune conservative
     * for any code point. */
   private[graft] def utf8Cmp(a: String, b: String): Int =
     java.util.Arrays.compareUnsigned(
       a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
       b.getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
-  // ── footer harvest ──────────────────────────────────────────────────
+  // ── footer stats ────────────────────────────────────────────────────
 
-  /** Everything one footer pass yields for one file: min/max per
-    * harvested column, plus the file's total row count (all row
-    * groups) — so a commit needing both stats AND row counts (bloom
-    * sizing, manifest `addedRows`) opens each footer exactly once. */
+  /** Everything one footer yields for one file: min/max per indexed
+    * column, plus the file's total row count (all row groups) — so a
+    * commit needing both stats AND row counts (bloom sizing, manifest
+    * `addedRows`) gets them from the footer its writer just closed. */
   final case class FileMeta(ranges: Map[String, ColRange], rows: Long)
 
-  /** Read min/max for `cols` AND the row count from the footers of
-    * `relFiles` (paths relative to `root`) in one Spark job of up to 32
-    * tasks — one footer open per file total, never one per purpose, and
-    * never a driver loop over the footers. The footers open with the
-    * session's Hadoop conf, broadcast once per harvest
-    * ([[graft.sources.GraftLakeConf]]), not a conf built per file.
-    * Columns a footer lacks statistics for are absent (⇒ never pruned
-    * on). */
-  def harvest(spark: SparkSession, root: String, relFiles: Seq[String],
-              cols: Seq[String]): Map[String, FileMeta] = {
-    val rootAbs = Paths.get(root).toAbsolutePath.toString
-    val colSet = cols.toSet
-    val hconf = graft.sources.GraftLakeConf.session(spark)
-    spark.sparkContext
-      .parallelize(relFiles, math.max(1, math.min(relFiles.size, 32)))
-      .map { rel =>
-        val in = HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(s"$rootAbs/$rel"), hconf.value.value)
-        val reader = ParquetFileReader.open(in)
-        try {
-          val ranges = scala.collection.mutable.Map.empty[String, ColRange]
-          // Per-column null totals, accumulated across EVERY row group —
-          // independently of the range merge, because an all-null chunk
-          // contributes no min/max yet its nulls must still count (they
-          // are exactly the rows a whole-file range proof would lose).
-          // One chunk without the field poisons the column to unknown
-          // (None), the conservative direction.
-          val nulls = scala.collection.mutable.Map.empty[String, Option[Long]]
-          var rows = 0L
-          for (block <- reader.getFooter.getBlocks.asScala) {
-            rows += block.getRowCount
-            for (chunk <- block.getColumns.asScala) {
-              val name = chunk.getPath.toDotString
-              if (colSet.contains(name)) {
-                val st = chunk.getStatistics
-                val chunkNulls =
-                  if (st != null && st.isNumNullsSet) Some(st.getNumNulls)
-                  else None
-                nulls(name) = (nulls.getOrElse(name, Some(0L)), chunkNulls) match {
-                  case (Some(a), Some(b)) => Some(a + b)
-                  case _ => None
-                }
-                // hasNonNullValue ⇔ the min/max are real values; an all-null
-                // or stats-less chunk contributes no range (conservative).
-                // Safety note for BINARY: parquet-mr's chunk-level Statistics
-                // are EXACT-OR-ABSENT — oversized string min/max are dropped
-                // entirely (truncation exists only in column indexes, which
-                // this reader never consults) — so a harvested string range
-                // can never understate the file and cause a false prune.
-                if (st != null && st.hasNonNullValue) {
-                  val pt = chunk.getPrimitiveType
-                  rangeOf(pt.getPrimitiveTypeName, st.genericGetMin, st.genericGetMax)
-                    .map(inMicros(pt, _)).foreach { r =>
-                    ranges(name) = ranges.get(name).fold(r)(merge(_, r))
-                  }
-                }
+  /** Min/max and null count for `cols`, and the row count, of the file
+    * whose footer this is — called by the writing task on the footer it
+    * has just written ([[graft.sources.GraftLakeDataWriter]]), so no
+    * commit opens a footer again. Columns the footer lacks statistics
+    * for are absent (⇒ never pruned on). */
+  def metaOf(footer: ParquetMetadata, cols: Set[String]): FileMeta = {
+    val ranges = scala.collection.mutable.Map.empty[String, ColRange]
+    // Per-column null totals, accumulated across EVERY row group —
+    // independently of the range merge, because an all-null chunk
+    // contributes no min/max yet its nulls must still count (they are
+    // exactly the rows a whole-file range proof would lose). One chunk
+    // without the field poisons the column to unknown (None), the
+    // conservative direction.
+    val nulls = scala.collection.mutable.Map.empty[String, Option[Long]]
+    var rows = 0L
+    for (block <- footer.getBlocks.asScala) {
+      rows += block.getRowCount
+      for (chunk <- block.getColumns.asScala) {
+        val name = chunk.getPath.toDotString
+        if (cols.contains(name)) {
+          val st = chunk.getStatistics
+          val chunkNulls =
+            if (st != null && st.isNumNullsSet) Some(st.getNumNulls) else None
+          nulls(name) = (nulls.getOrElse(name, Some(0L)), chunkNulls) match {
+            case (Some(a), Some(b)) => Some(a + b)
+            case _ => None
+          }
+          // hasNonNullValue ⇔ the min/max are real values; an all-null or
+          // stats-less chunk contributes no range (conservative). Safety
+          // note for BINARY: parquet-mr's chunk-level Statistics are
+          // EXACT-OR-ABSENT — oversized string min/max are dropped entirely
+          // (truncation exists only in column indexes, which this reader
+          // never consults) — so a string range can never understate the
+          // file and cause a false prune.
+          if (st != null && st.hasNonNullValue) {
+            val pt = chunk.getPrimitiveType
+            rangeOf(pt.getPrimitiveTypeName, st.genericGetMin, st.genericGetMax)
+              .map(inMicros(pt, _)).foreach { r =>
+                ranges(name) = ranges.get(name).fold(r)(merge(_, r))
               }
-            }
           }
-          val withNulls = ranges.toMap.map { case (c, r) =>
-            c -> r.copy(nulls = nulls.getOrElse(c, None))
-          }
-          rel -> FileMeta(withNulls, rows)
-        } finally reader.close()
+        }
       }
-      .collect().toMap
+    }
+    FileMeta(ranges.toMap.map { case (c, r) => c -> r.copy(nulls = nulls.getOrElse(c, None)) },
+      rows)
   }
 
   private def rangeOf(tpe: PrimitiveTypeName, min: Any,
@@ -181,7 +163,7 @@ object FileStats {
       case _ => r
     }
 
-  /** Numeric compare of two harvested bound strings WITHOUT a lossy
+  /** Numeric compare of two footer bound strings WITHOUT a lossy
     * Double round-trip: BigDecimal on the original strings, so an INT64
     * bound above 2^53 keeps its exact value through every cross-row-group
     * merge (a Double fold could round a true max DOWN, making two
@@ -201,7 +183,7 @@ object FileStats {
     if (a.numeric) // keep the ORIGINAL strings — no precision ever lost
       ColRange(if (numCmp(a.min, b.min) <= 0) a.min else b.min,
         if (numCmp(a.max, b.max) >= 0) a.max else b.max, numeric = true)
-    else // string bounds combine under the harvest's own UTF-8 byte order
+    else // string bounds combine under the footer's own UTF-8 byte order
       ColRange(if (utf8Cmp(a.min, b.min) <= 0) a.min else b.min,
         if (utf8Cmp(a.max, b.max) >= 0) a.max else b.max, numeric = false)
   }
@@ -235,17 +217,24 @@ object FileStats {
 
   def writeStatsSidecar(root: String,
                         stats: Map[String, Map[String, ColRange]]): Unit =
-    stats.groupBy { case (rel, _) => commitDirOf(rel) }.foreach {
-      case (dir, perFile) =>
-        val json = perFile.toSeq.sortBy(_._1).map { case (rel, cols) =>
-          val fields = cols.toSeq.sortBy(_._1).map { case (c, r) =>
-            val nf = r.nulls.map(n => s""","nulls":$n""").getOrElse("")
-            s""""${esc(c)}":{"min":"${esc(r.min)}","max":"${esc(r.max)}","num":${r.numeric}$nf}"""
-          }.mkString(",")
-          s""""${esc(rel.substring(rel.lastIndexOf('/') + 1))}":{$fields}"""
-        }.mkString("{", ",", "}")
-        Files.writeString(Paths.get(root, dir, "_stats.json"), json)
-        ()
+    writeSidecar(root, "_stats.json", stats.map { case (rel, cols) =>
+      rel -> cols.toSeq.sortBy(_._1).map { case (c, r) =>
+        val nf = r.nulls.map(n => s""","nulls":$n""").getOrElse("")
+        s""""${esc(c)}":{"min":"${esc(r.min)}","max":"${esc(r.max)}","num":${r.numeric}$nf}"""
+      }.mkString("{", ",", "}")
+    })
+
+  /** One sidecar `name` per commit dir of the files in `perFile` (paths
+    * relative to `root`): a JSON object from each bare file name to its
+    * JSON `value`. */
+  private def writeSidecar(root: String, name: String,
+                           perFile: Iterable[(String, String)]): Unit =
+    perFile.groupBy { case (rel, _) => commitDirOf(rel) }.foreach { case (dir, entries) =>
+      val json = entries.toSeq.sortBy(_._1).map { case (rel, value) =>
+        s""""${esc(rel.substring(rel.lastIndexOf('/') + 1))}":$value"""
+      }.mkString("{", ",", "}")
+      Files.writeString(Paths.get(root, dir, name), json)
+      ()
     }
 
   // ── parsed-sidecar cache ────────────────────────────────────────────
@@ -332,22 +321,15 @@ object FileStats {
   // ── row-count sidecar (metadata-only aggregates) ────────────────────
 
   /** Per-file ROW COUNTS as a commit-dir sidecar (`_rows.json`) — written
-    * by every [[SnapshotLake]] commit from the same footer pass that
-    * already produced the manifest's `addedRows`, so it costs nothing
+    * by every [[SnapshotLake]] commit from the same task-reported footer
+    * stats that produce the manifest's `addedRows`, so it costs nothing
     * extra. This is what makes `SELECT count(*)` a METADATA-ONLY query at
     * any version ([[SnapshotLake.fastCount]]): the Delta/Iceberg
     * numRecords trick — at 100 TB a full count opens zero data files.
     * Commits from before this sidecar existed read back absent, and every
     * metadata-only consumer falls back to a real scan (conservative). */
   def writeRowsSidecar(root: String, rows: Map[String, Long]): Unit =
-    rows.groupBy { case (rel, _) => commitDirOf(rel) }.foreach {
-      case (dir, perFile) =>
-        val json = perFile.toSeq.sortBy(_._1).map { case (rel, n) =>
-          s""""${esc(rel.substring(rel.lastIndexOf('/') + 1))}":$n"""
-        }.mkString("{", ",", "}")
-        Files.writeString(Paths.get(root, dir, "_rows.json"), json)
-        ()
-    }
+    writeSidecar(root, "_rows.json", rows.map { case (rel, n) => rel -> n.toString })
 
   /** Row counts of one commit dir, keyed by manifest-relative path;
     * empty when the commit carries no `_rows.json`. */
@@ -372,25 +354,7 @@ object FileStats {
     * reason). Pre-sidecar commits read back absent and the planner
     * falls back to stat-on-demand, per file. */
   def writeBytesSidecar(root: String, bytes: Map[String, Long]): Unit =
-    bytes.groupBy { case (rel, _) => commitDirOf(rel) }.foreach {
-      case (dir, perFile) =>
-        writeBytesSidecarInto(Paths.get(root, dir), perFile.map {
-          case (rel, n) => rel.substring(rel.lastIndexOf('/') + 1) -> n
-        })
-    }
-
-  /** The same sidecar written straight into `dir` with BARE file names
-    * as keys — for builders that stage a directory elsewhere and rename
-    * it into place (the CDC materializer), where the final
-    * manifest-relative prefix isn't the staging path. */
-  def writeBytesSidecarInto(dir: java.nio.file.Path,
-                            sizes: Map[String, Long]): Unit = {
-    val json = sizes.toSeq.sortBy(_._1).map { case (name, n) =>
-      s""""${esc(name)}":$n"""
-    }.mkString("{", ",", "}")
-    Files.writeString(dir.resolve("_bytes.json"), json)
-    ()
-  }
+    writeSidecar(root, "_bytes.json", bytes.map { case (rel, n) => rel -> n.toString })
 
   /** Byte sizes of one commit dir, keyed by manifest-relative path;
     * empty when the commit predates the sidecar. */
@@ -408,7 +372,7 @@ object FileStats {
   // ── range pruning ───────────────────────────────────────────────────
 
   /** An inclusive range predicate on one column; `None` bounds are open.
-    * Values compare numerically when the harvested stats are numeric,
+    * Values compare numerically when the footer stats are numeric,
     * lexically for strings (parquet BINARY/UTF8 ordering — the same
     * ordering the footer min/max were computed under). */
   final case class Range(col: String, lo: Option[String], hi: Option[String])
@@ -457,14 +421,7 @@ object FileStats {
       val abs = new java.net.URI(uri).getPath // input_file_name is a URI
       abs.stripPrefix(rootAbs).stripPrefix("/") -> b64
     }
-    byRel.groupBy { case (rel, _) => commitDirOf(rel) }.foreach {
-      case (dir, entries) =>
-        val json = entries.sortBy(_._1).map { case (rel, b64) =>
-          s""""${esc(rel.substring(rel.lastIndexOf('/') + 1))}":"$b64""""
-        }.mkString("{", ",", "}")
-        Files.writeString(Paths.get(root, dir, s"_bloom_$col.json"), json)
-        ()
-    }
+    writeSidecar(root, s"_bloom_$col.json", byRel.map { case (rel, b64) => rel -> s""""$b64"""" })
   }
 
   // ── ndv sidecars (planner column statistics) ────────────────────────
@@ -498,16 +455,9 @@ object FileStats {
       val rel = abs.stripPrefix(rootAbs).stripPrefix("/")
       rel -> cols.zipWithIndex.map { case (c, i) => c -> r.getLong(i + 1) }.toMap
     }
-    byRel.groupBy { case (rel, _) => commitDirOf(rel) }.foreach {
-      case (dir, entries) =>
-        val json = entries.sortBy(_._1).map { case (rel, m) =>
-          val fields = m.toSeq.sortBy(_._1)
-            .map { case (c, n) => s""""${esc(c)}":$n""" }.mkString(",")
-          s""""${esc(rel.substring(rel.lastIndexOf('/') + 1))}":{$fields}"""
-        }.mkString("{", ",", "}")
-        Files.writeString(Paths.get(root, dir, "_ndv.json"), json)
-        ()
-    }
+    writeSidecar(root, "_ndv.json", byRel.map { case (rel, m) =>
+      rel -> m.toSeq.sortBy(_._1).map { case (c, n) => s""""${esc(c)}":$n""" }.mkString("{", ",", "}")
+    })
   }
 
   /** NDVs of one commit dir, keyed by manifest-relative path; empty when

@@ -8,7 +8,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.types.{StructField, StructType}
 
-import graft.sources.{GraftLakeFileSet, GraftLakeSource}
+import graft.sources.{GraftLakeDataWriter, GraftLakeFileSet, GraftLakeSource}
 
 /** Snapshot-isolated lake commits — the manifest/version protocol a
   * multi-writer 100 TB lake needs (VERDICT r10 item 2). The plain
@@ -58,7 +58,7 @@ import graft.sources.{GraftLakeFileSet, GraftLakeSource}
   *
   * On top of the commit protocol sits the maintenance/index layer built
   * round 11: commit-time file statistics and bloom sidecars with pruned
-  * readers ([[IndexSpec]]/[[readPruned]]/[[readPointLookup]], harvest in
+  * readers ([[IndexSpec]]/[[readPruned]]/[[readPointLookup]], stats in
   * [[FileStats]], pruning through the per-version [[LakeIndex]]),
   * Z-order and small-file-selective compaction
   * ([[compactZOrder]]/[[compactSmall]]), index-targeted copy-on-write
@@ -974,24 +974,23 @@ object SnapshotLake extends LakeCheckpoints {
     * `data/commit=<uuid>/<p1=v1>/.../part-*.parquet`, the commit marker
     * itself hive-encoded so ONE basePath-anchored scan covers every
     * commit of the lake (the marker column is synthesized by partition
-    * discovery and dropped by readers). Returns the written files with
-    * their row total, not yet in any manifest. */
+    * discovery and dropped by readers). One Spark job of the lake's file
+    * writer ([[graft.sources.GraftLakeDataWriter]]) writes them, and its
+    * tasks report each file with its row count and index stats, so the
+    * commit lists no directory and opens no footer. Returns the written
+    * files with their row total, not yet in any manifest. */
   private def writeData(df0: DataFrame, root: String,
                         index: IndexSpec = IndexSpec.none,
                         declare: Option[StructType] = None,
                         partCols: Seq[String] = Nil): Staged = {
     val m = declare.map(mappingOf).getOrElse(columnMapping(root))
+    val idx = physicalIndex(index, m)
     val df = toPhysical(df0, root, declare)
     val sub = if (partCols.isEmpty) newDataDir() else s"data/commit=${UUID.randomUUID()}"
-    val dir = Paths.get(root, sub)
-    df.write.mode("overwrite").partitionBy(partCols.map(c => m.getOrElse(c, c)): _*)
-      .parquet(dir.toString)
-    val s = Files.walk(dir)
-    val rel =
-      try s.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet"))
-        .map(p => s"$sub/${dir.relativize(p)}").toVector.sorted
-      finally s.close()
-    indexAndCount(df.sparkSession, root, rel, index, m)
+    val written = GraftLakeDataWriter.write(df,
+      Paths.get(root).toAbsolutePath.toString, sub,
+      partCols.map(c => m.getOrElse(c, c)), idx.statsCols)
+    indexAndCount(df.sparkSession, root, written, idx)
   }
 
   private val lastDataDirMillis = new java.util.concurrent.atomic.AtomicLong
@@ -1010,16 +1009,32 @@ object SnapshotLake extends LakeCheckpoints {
     f"data/t$t%012x-${UUID.randomUUID()}"
   }
 
-  /** The shared post-write pass: ONE distributed footer harvest
-    * (executor-parallel, never a driver loop) yields both the min/max
-    * ranges and the per-file row counts; index sidecars land in the
-    * commit's directories BEFORE the manifest link that makes the files
-    * visible, so a reader that resolves a file always resolves its index
-    * too. Pre-manifest crash ⇒ sidecars are swept with their orphan dir
-    * by vacuum, like the data files themselves. */
+  /** `index` under the files' PHYSICAL column names: index columns
+    * arrive logical, and the sidecars key physical, so renames never
+    * invalidate an index. */
+  private[graft] def physicalIndex(index: IndexSpec, mapping: Map[String, String]): IndexSpec =
+    if (mapping.isEmpty) index
+    else index.copy(
+      statsCols = index.statsCols.map(c => mapping.getOrElse(c, c)),
+      bloomCol = index.bloomCol.map(c => mapping.getOrElse(c, c)),
+      ndvCols = index.ndvCols.map(c => mapping.getOrElse(c, c)))
+
+  /** The shared post-write pass over `reported`, the files the writer
+    * tasks reported with their footer stats (`index` in physical names),
+    * staged in path order:
+    * the min/max, row-count and byte-size sidecars come from those
+    * reports and cost no Spark job; only a requested bloom or NDV index
+    * scans the new files. Sidecars land in the commit's directories
+    * BEFORE the manifest link that makes the files visible, so a reader
+    * that resolves a file always resolves its index too. Pre-manifest
+    * crash ⇒ sidecars are swept with their orphan dir by vacuum, like the
+    * data files themselves. The writer never creates a zero-row file, so
+    * none can enter a commit (the Delta/Iceberg invariant). */
   private def indexAndCount(spark: SparkSession, root: String,
-                            rel: Seq[String], index0: IndexSpec,
-                            mapping: Map[String, String] = Map.empty): Staged = {
+                            reported: Seq[(String, FileStats.FileMeta)],
+                            index: IndexSpec): Staged = {
+    val written = reported.sortBy(_._1)
+    val rel = written.map(_._1)
     // a path must read back from the record's array parser, which splits
     // on `,`: hive escaping keeps `,` in a partition value, so such a
     // file set is refused before any link
@@ -1027,41 +1042,15 @@ object SnapshotLake extends LakeCheckpoints {
       throw new IllegalArgumentException(s"cannot commit partition value " +
         s"'$seg': a manifest path may not contain any of ${Unrecordable.mkString(" ")}")
     }
-    // index columns arrive LOGICAL; the files carry PHYSICAL names, and
-    // the sidecars key physical (renames then never invalidate an index)
-    val index =
-      if (mapping.isEmpty) index0
-      else index0.copy(
-        statsCols = index0.statsCols.map(c => mapping.getOrElse(c, c)),
-        bloomCol = index0.bloomCol.map(c => mapping.getOrElse(c, c)),
-        ndvCols = index0.ndvCols.map(c => mapping.getOrElse(c, c)))
-    val meta0 = FileStats.harvest(spark, root, rel, index.statsCols)
-    // ZERO-ROW files never enter a commit (the Delta/Iceberg invariant):
-    // a delete/compact rewrite routinely leaves empty output partitions,
-    // and an empty file is pure liability at scale — it carries no
-    // min/max to prune on (a statless file must conservatively be
-    // SCANNED by [[fastCountWhere]] and every planned scan), so each one
-    // costs a wasted file-open per query forever. Deleted here, before
-    // the manifest link, so they were never visible to any reader.
-    // (Surfaced by the 100× hash-verified leg: q237/q243's post-delete
-    // head carried one empty rewrite partition and mis-classed it.)
-    val (rel2, zeroRow) = rel.partition(f => meta0.get(f).forall(_.rows > 0L))
-    zeroRow.foreach { f =>
-      val p = Paths.get(root, f)
-      Files.deleteIfExists(p)
-      Files.deleteIfExists(p.resolveSibling("." + p.getFileName + ".crc"))
-    }
-    val meta = meta0 -- zeroRow
     if (index.statsCols.nonEmpty)
-      FileStats.writeStatsSidecar(root,
-        meta.map { case (f, m) => f -> m.ranges })
-    // row counts ride EVERY commit (the footer pass already produced
-    // them for the manifest's addedRows) — the metadata-only count
-    // ([[fastCount]]) needs each live file's entry to answer
-    FileStats.writeRowsSidecar(root, meta.map { case (f, m) => f -> m.rows })
+      FileStats.writeStatsSidecar(root, written.map { case (f, m) => f -> m.ranges }.toMap)
+    // row counts ride EVERY commit (the writers reported them for the
+    // manifest's addedRows) — the metadata-only count ([[fastCount]])
+    // needs each live file's entry to answer
+    FileStats.writeRowsSidecar(root, written.map { case (f, m) => f -> m.rows }.toMap)
     // byte sizes too: O(new files) stat calls HERE instead of O(live
     // files) per planned scan (a million HEADs on object storage)
-    FileStats.writeBytesSidecar(root, rel2.map(f =>
+    FileStats.writeBytesSidecar(root, rel.map(f =>
       f -> java.nio.file.Files.size(Paths.get(root, f))).toMap)
     index.bloomCol.foreach { c =>
       // sized from footer row counts (no counting scan) unless the
@@ -1071,13 +1060,12 @@ object SnapshotLake extends LakeCheckpoints {
       // the caller who knows the multiplicity can halve the index cost.
       // Undersizing degrades fpp, never correctness.
       val expected = index.bloomExpected.getOrElse(
-        math.max(1L, meta.values.foldLeft(0L)((a, m) => math.max(a, m.rows))))
-      FileStats.buildBloomSidecars(spark, root, rel2, c,
-        expected, index.bloomFpp)
+        math.max(1L, written.foldLeft(0L)((a, m) => math.max(a, m._2.rows))))
+      FileStats.buildBloomSidecars(spark, root, rel, c, expected, index.bloomFpp)
     }
     if (index.ndvCols.nonEmpty)
-      FileStats.buildNdvSidecars(spark, root, rel2, index.ndvCols)
-    Staged(rel2, meta.values.map(_.rows).sum)
+      FileStats.buildNdvSidecars(spark, root, rel, index.ndvCols)
+    Staged(rel, written.map(_._2.rows).sum)
   }
 
   /** What to index at commit time: footer min/max for `statsCols`, a
@@ -1155,7 +1143,7 @@ object SnapshotLake extends LakeCheckpoints {
 
   /** MEASUREMENT hook ([[graft.ManifestCeiling]]): commit a pre-listed
     * file set through the normal CAS/checkpoint path without the data
-    * write or footer harvest — what lets a synthetic million-file
+    * write — what lets a synthetic million-file
     * manifest exercise resolution/pruning/planning at a scale no local
     * data generation could reach. Sidecars are the caller's job. */
   private[graft] def commitSynthetic(root: String, rel: Seq[String],
@@ -1421,21 +1409,21 @@ object SnapshotLake extends LakeCheckpoints {
   /** Exactly-once commit of PRE-WRITTEN data files through the
     * group-commit coalescer — for writers that landed their parquet
     * through their own distributed path (the connector's streaming SINK:
-    * executors write task files, the driver commits the epoch). The
-    * sidecar index + row-count harvest for `rel` stays this caller's own
-    * distributed footer pass, and only the tagged manifest link
-    * coalesces — N streaming queries epoch-committing the same table
-    * land under shared multi-tag links ([[GroupCommit]]) instead of
-    * racing the head once per epoch. Replay semantics are
-    * [[appendOnce]]'s: an existing tag wins and the caller's files stay
-    * unreferenced orphans for [[vacuum]]. An empty `rel` commits an
-    * empty tagged version — a no-data epoch still advances exactly-once
-    * state. */
+    * executors write task files, the driver commits the epoch). `written`
+    * is what those tasks reported — each file with its footer stats,
+    * `index` in physical names — so the sidecars cost no job, and only
+    * the tagged manifest link coalesces — N streaming queries
+    * epoch-committing the same table land under shared multi-tag links
+    * ([[GroupCommit]]) instead of racing the head once per epoch. Replay
+    * semantics are [[appendOnce]]'s: an existing tag wins and the
+    * caller's files stay unreferenced orphans for [[vacuum]]. An empty
+    * `written` commits an empty tagged version — a no-data epoch still
+    * advances exactly-once state. */
   def commitStreamedFilesGrouped(spark: SparkSession, root: String,
-                                 rel: Seq[String], tag: String,
+                                 written: Seq[(String, FileStats.FileMeta)], tag: String,
                                  index: IndexSpec = IndexSpec.none): Long = {
     findTag(root, checkTag(tag)).getOrElse { // bad tags fail before enqueue
-      val w = indexAndCount(spark, root, rel, index, columnMapping(root))
+      val w = indexAndCount(spark, root, written, index)
       GroupCommit.commit(root, w.files, w.rows, Some(tag))
     }
   }
@@ -1482,8 +1470,8 @@ object SnapshotLake extends LakeCheckpoints {
     * commit half of Spark's group-based (copy-on-write) row-level
     * operations (SQL UPDATE / MERGE INTO / rewrite-shape DELETE through
     * the connector): the executors already wrote the affected groups'
-    * post-state rows; this harvests the sidecar indexes for the new
-    * files (one distributed footer pass) and commits `removed` out /
+    * post-state rows and reported their stats; this writes the sidecar
+    * indexes for the new files from those reports and commits `removed` out /
     * `added` in under the same serializable-writer fence every
     * rewriting commit checks ([[abortIfRemoved]]) — a racing rewrite of
     * any replaced file aborts rather than resurrecting stale rows.
@@ -1492,7 +1480,7 @@ object SnapshotLake extends LakeCheckpoints {
     * version the caller's scan resolved. */
   private[graft] def commitReplace(spark: SparkSession, root: String,
                                    baseV: Long, removed: Seq[String],
-                                   added: Seq[String], op: String,
+                                   added: Seq[(String, FileStats.FileMeta)], op: String,
                                    index: IndexSpec = IndexSpec.none): Long = {
     val w = indexAndCount(spark, root, added, index)
     commitLoop(root) { head =>
@@ -1563,7 +1551,7 @@ object SnapshotLake extends LakeCheckpoints {
     * on the manifest lake: the rewrite range-partitions + sorts by the
     * Morton interleave ([[ZOrder.interleave]]), so every output file
     * covers a small rectangle of the two-dimension key space and the
-    * commit-time min/max index (harvested on BOTH dims) prunes on either
+    * commit-time min/max index (kept on BOTH dims) prunes on either
     * dimension or a box of both. Same reconcile/CAS semantics as
     * [[compact]]; racing appends survive un-clustered until the next
     * optimize pass — eventual clustering, the production contract. */
@@ -1942,20 +1930,16 @@ object SnapshotLake extends LakeCheckpoints {
           "SnapshotLake.enableCdf(root, key) first; change commits made " +
           "before enablement have no feed (the Delta contract)"))
       val changes = changeFeed(spark, root, v - 1, v, key)
-      val tmp = Paths.get(root, "_cdc", s".tmp-${UUID.randomUUID()}")
-      changes.write.mode("overwrite").parquet(tmp.toString)
+      val tmpRel = s"_cdc/.tmp-${UUID.randomUUID()}"
+      val tmp = Paths.get(root, tmpRel)
+      // a change-free version writes no file, and still gets its (empty) dir
+      Files.createDirectories(tmp)
+      val parts = GraftLakeDataWriter.write(changes,
+        Paths.get(root).toAbsolutePath.toString, tmpRel).map(_._1)
       // byte-size sidecar rides INSIDE the staged dir, atomic with the
       // rename: CDF planning resolves feed-file lengths from it instead
       // of a per-file stat (HEAD on object storage), same as data commits
-      locally {
-        val s = Files.list(tmp)
-        val parts = try s.iterator().asScala
-          .filter(_.toString.endsWith(".parquet")).toVector
-        finally s.close()
-        FileStats.writeBytesSidecarInto(tmp,
-          parts.map(p => p.getFileName.toString -> Files.size(p)).toMap)
-      }
-      // drop the write's _SUCCESS marker etc.: only parquet parts matter
+      FileStats.writeBytesSidecar(root, parts.map(f => f -> Files.size(Paths.get(root, f))).toMap)
       try Files.move(tmp, cdcDir(root, v),
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
       catch {
@@ -1964,9 +1948,7 @@ object SnapshotLake extends LakeCheckpoints {
              _: java.nio.file.FileSystemException =>
           // a racer won: keep theirs (content is a pure function of the
           // immutable log, so both outputs are equivalent), drop ours
-          val s = Files.walk(tmp)
-          val all = try s.iterator().asScala.toVector finally s.close()
-          all.sortBy(-_.getNameCount).foreach(Files.deleteIfExists(_))
+          Scratch.rm(tmp)
       }
       cdcFiles(root, v).getOrElse(throw new IllegalStateException(
         s"CDC materialization of $root v$v produced no directory"))
@@ -2272,9 +2254,8 @@ object SnapshotLake extends LakeCheckpoints {
     * the quarantine side is diagnostic data); a crash between them
     * leaves the clean commit live and the dirty rows re-derivable from
     * the source. When no row violates, the quarantine write yields zero
-    * rows (known from the footer pass, no counting scan) and no
-    * quarantine version is committed — the empty files are vacuum-
-    * reapable orphans. */
+    * rows (known from the writer's reports, no counting scan), writes no
+    * file, and no quarantine version is committed. */
   def appendExpect(df: DataFrame, root: String, quarantineRoot: String,
                    expectations: Seq[(String, org.apache.spark.sql.Column)],
                    index: IndexSpec = IndexSpec.none): Expected = {
@@ -2294,9 +2275,9 @@ object SnapshotLake extends LakeCheckpoints {
   /** A write-audit-publish staging handle — and what every data write
     * returns: data files (and their index sidecars) that exist on disk
     * but appear in NO manifest, invisible to every reader until a commit
-    * links them in, plus their total row count (from the footer pass
-    * that harvested the index — the record's `addedRows` and bloom
-    * sizing never cost a second footer open). */
+    * links them in, plus their total row count (from the footer stats
+    * the writer tasks reported — the record's `addedRows` and bloom
+    * sizing never cost a footer open). */
   final case class Staged(files: Seq[String], rows: Long)
 
   /** WRITE-AUDIT-PUBLISH stage 1 (Iceberg's WAP pattern): write `df`'s

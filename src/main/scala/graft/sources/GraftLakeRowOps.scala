@@ -1,5 +1,7 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.expressions.NamedReference
@@ -23,14 +25,14 @@ import graft.etl.SnapshotLake
   *      untouched files never even scan for the rewrite.
   *   2. The rewrite query computes the POST-state of every row in the
   *      affected files (updated + copied rows; merge inserts union in),
-  *      and the executors write them through the same task-file writer
-  *      as the streaming sink.
+  *      and the executors write them through the lake's one file writer
+  *      ([[GraftLakeDataWriter]]), each task reporting its files' stats.
   *   3. The driver commits ONE version replacing exactly the files the
   *      scan read with the files the tasks wrote
   *      ([[SnapshotLake.commitReplace]]) — under the serializable-writer
   *      fence, so a racing rewrite of any replaced file aborts instead
   *      of resurrecting stale rows, and with the lake's sidecar stats
-  *      re-harvested for the replacement files.
+  *      written for the replacement files from what the tasks reported.
   *
   * The composition with [[GraftLakeTable]]'s `SupportsDelete` is
   * Delta's: a DELETE whose predicate maps onto inclusive ranges runs
@@ -57,7 +59,6 @@ final class GraftLakeRowLevelOperation(root: String, fullSchema: StructType,
     * main one; any other shape is ambiguous and must fail loudly rather
     * than risk `commitReplace` removing files nobody rewrote. */
   private[sources] def mainScan: GraftLakeScan = {
-    import scala.jdk.CollectionConverters._
     val all = builtScans.asScala.toSeq
     require(all.nonEmpty, "the row-level operation committed without a scan")
     all.filter(_.wasFileGroupFiltered) match {
@@ -94,7 +95,11 @@ final class GraftLakeRowLevelOperation(root: String, fullSchema: StructType,
         override def toBatch: BatchWrite =
           new GraftLakeReplaceWrite(root,
             java.nio.file.Paths.get(root).toAbsolutePath.toString,
-            info.schema(), cmd, () => mainScan, GraftLakeConf.session())
+            info.schema(), cmd, () => mainScan,
+            // every scan of this operation indexes the same columns; the
+            // writers need them before runtime filtering marks the main one
+            () => builtScans.asScala.headOption.fold(Seq.empty[String])(_.statsColumns),
+            GraftLakeConf.session())
       }
     }
 
@@ -102,19 +107,21 @@ final class GraftLakeRowLevelOperation(root: String, fullSchema: StructType,
 }
 
 /** The replace-groups batch write: task files land under one rewrite
-  * commit directory, the commit swaps (scanned files → written files)
-  * in one manifest version. An aborted write leaves only
-  * vacuum-reapable orphans. */
+  * commit directory, each reported with its footer stats, and the commit
+  * swaps (scanned files → written files) in one manifest version. An
+  * aborted write leaves only vacuum-reapable orphans. */
 final class GraftLakeReplaceWrite(root: String, rootAbs: String,
                                   schema: StructType,
                                   cmd: RowLevelOperation.Command,
                                   scanOf: () => GraftLakeScan,
+                                  statsColsOf: () => Seq[String],
                                   hconf: Broadcast[SerializableConfiguration])
     extends BatchWrite {
   private val commitDir = SnapshotLake.newDataDir()
+  private lazy val statsCols = statsColsOf()
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    GraftLakeReplaceWriterFactory(rootAbs, commitDir, schema, hconf)
+    GraftLakeWriterFactory(rootAbs, commitDir, "", schema, statsCols, hconf)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val scan = scanOf()
@@ -125,19 +132,9 @@ final class GraftLakeReplaceWrite(root: String, rootAbs: String,
     }
     SnapshotLake.commitReplace(SparkSession.active, root,
       scan.version, scan.currentFiles, added, op,
-      SnapshotLake.IndexSpec(scan.statsColumns, None))
+      SnapshotLake.IndexSpec(statsCols, None))
     ()
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = ()
-}
-
-final case class GraftLakeReplaceWriterFactory(rootAbs: String, dir: String,
-                                               schema: StructType,
-                                               hconf: Broadcast[SerializableConfiguration])
-    extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long)
-      : org.apache.spark.sql.connector.write.DataWriter[org.apache.spark.sql.catalyst.InternalRow] =
-    new GraftLakeDataWriter(rootAbs, dir,
-      f"part-$partitionId%05d-t$taskId.parquet", schema, hconf.value.value)
 }

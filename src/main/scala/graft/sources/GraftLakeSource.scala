@@ -367,10 +367,11 @@ final class GraftLakeTable(root: String, schema: StructType,
 
   /** Batch writes via the V1 fallback (`V1_BATCH_WRITE`) — the whole
     * input lands through [[SnapshotLake.append]]/[[SnapshotLake.overwrite]]
-    * on the driver-side plan, which distributes the actual parquet write
-    * and sidecar harvest itself and serializes only the manifest CAS:
-    * exactly the shape Spark's own JDBC v2 connector uses, with the
-    * lake's snapshot-isolation and index guarantees intact.
+    * on the driver-side plan: one job of the lake's file writer
+    * ([[GraftLakeDataWriter]]), whose tasks report each file's footer
+    * stats, then only the manifest CAS, which runs no job — exactly the
+    * shape Spark's own JDBC v2 connector uses, with the lake's
+    * snapshot-isolation and index guarantees intact.
     * `.option("statsCols", "a,b")` / `.option("bloomCol", "k")` request
     * commit-time sidecar indexes. */
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
@@ -388,26 +389,20 @@ final class GraftLakeWriteBuilder(root: String,
     extends WriteBuilder with SupportsTruncate {
   private var overwriteAll = false
   override def truncate(): WriteBuilder = { overwriteAll = true; this }
+  private def idx = SnapshotLake.IndexSpec(
+    Option(options.get("statsCols")).toSeq.flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty),
+    Option(options.get("bloomCol")).map(_.trim).filter(_.nonEmpty))
   override def build(): Write = new V1Write {
     /** The streaming sink (`df.writeStream.format("graftlake")`) — see
       * [[GraftLakeStreamingWrite]]. */
-    override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
-      val idx = SnapshotLake.IndexSpec(
-        Option(options.get("statsCols")).toSeq
-          .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty),
-        Option(options.get("bloomCol")).map(_.trim).filter(_.nonEmpty))
+    override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite =
       new GraftLakeStreamingWrite(root,
         java.nio.file.Paths.get(root).toAbsolutePath.toString,
         writeSchema, idx, queryId, GraftLakeConf.session())
-    }
     override def toInsertableRelation: InsertableRelation =
       new InsertableRelation {
         override def insert(data: org.apache.spark.sql.DataFrame,
                             overwrite: Boolean): Unit = {
-          val idx = SnapshotLake.IndexSpec(
-            Option(options.get("statsCols")).toSeq
-              .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty),
-            Option(options.get("bloomCol")).map(_.trim).filter(_.nonEmpty))
           val replacing = overwriteAll || overwrite
           val autoMerge = options.getBoolean("mergeSchema", false)
           // schema enforcement lives HERE: supportsExternalMetadata
@@ -1093,12 +1088,12 @@ final class GraftLakeAggScan(schema: StructType, row: Seq[Any])
 
 final case class GraftLakeAggPartition(values: Seq[Any]) extends InputPartition
 
-/** The task-side Hadoop conf every connector reader/writer and the
-  * commit-time footer harvest use: the session conf plus the SQLConf keys
-  * ParquetReadSupport / ParquetToSparkSchemaConverter /
-  * ParquetWriteSupport resolve from it — set explicitly like
-  * ParquetFileFormat does on both of its paths. Broadcast once per scan,
-  * write or harvest, as `FileSourceScanExec` does: a factory carries only
+/** The task-side Hadoop conf every connector reader and lake writer
+  * uses: the session conf plus the SQLConf keys ParquetReadSupport /
+  * ParquetToSparkSchemaConverter / ParquetWriteSupport resolve from it,
+  * and the session's parquet codec — set explicitly like
+  * ParquetFileFormat does on both of its paths. Broadcast once per scan
+  * or write, as `FileSourceScanExec` does: a factory carries only
   * the broadcast handle, and an executor deserializes the conf once
   * instead of every task deserializing its own copy. */
 private[graft] object GraftLakeConf {
@@ -1116,7 +1111,11 @@ private[graft] object GraftLakeConf {
     c.setBoolean(SQLConf.PARQUET_FIELD_ID_READ_ENABLED.key, sc.parquetFieldIdReadEnabled)
     c.setBoolean(SQLConf.IGNORE_MISSING_PARQUET_FIELD_ID.key,
       sc.ignoreMissingParquetFieldId)
-    // write side (the streaming sink's ParquetWriteSupport)
+    // write side (the lake writer's ParquetWriteSupport, and its codec as
+    // ParquetFileFormat resolves it from the session)
+    c.set(org.apache.parquet.hadoop.ParquetOutputFormat.COMPRESSION,
+      org.apache.spark.sql.execution.datasources.parquet.ParquetOptions
+        .getParquetCompressionCodecName(sc.parquetCompressionCodec))
     c.setBoolean(SQLConf.PARQUET_WRITE_LEGACY_FORMAT.key, sc.writeLegacyParquetFormat)
     c.set(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key,
       sc.parquetOutputTimestampType.toString)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, 
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.etl.{LakeIndex, SnapshotLake}
+import graft.etl.{FileStats, LakeIndex, SnapshotLake}
 
 /** Stream offset = the newest lake version this stream has FULLY
   * emitted, plus (under file-granular admission control) how many
@@ -221,21 +221,21 @@ final class GraftLakeMicroBatchStream(root: String, rootAbs: String,
   override def stop(): Unit = ()
 }
 
-/** One epoch-task's contribution: the task file it wrote (empty for a
-  * zero-row partition — no file is even created) plus its row count. */
-final case class GraftLakeFilesMsg(files: Seq[String], rows: Long)
+/** One writer task's files (none for a zero-row task: no file is even
+  * created), each with the stats its writer read off the footer of the
+  * file it had just closed. */
+final case class GraftLakeFilesMsg(files: Seq[(String, FileStats.FileMeta)])
     extends org.apache.spark.sql.connector.write.WriterCommitMessage
 
 /** The connector's streaming SINK — `df.writeStream
   * .format("graftlake")` — the write half of the streaming story:
   * executors write their epoch-task parquet files straight into the
-  * lake's data area through Spark's own [[org.apache.spark.sql
-  * .execution.datasources.parquet.ParquetWriteSupport]] (the same
-  * encoder the built-in sink uses), and the DRIVER turns each epoch's
-  * commit messages into ONE tagged manifest commit
+  * lake's data area through the lake's one file writer
+  * ([[GraftLakeDataWriter]]), and the DRIVER turns each epoch's commit
+  * messages into ONE tagged manifest commit
   * ([[graft.etl.SnapshotLake.commitStreamedFilesGrouped]]) — sidecar
-  * indexes harvested like any commit (`.option("statsCols", ...)` /
-  * `.option("bloomCol", ...)` work).
+  * indexes from the stats the tasks reported, like any commit
+  * (`.option("statsCols", ...)` / `.option("bloomCol", ...)` work).
   *
   * Exactly-once: the epoch tag is `stream-<queryId>-e<epochId>`
   * (queryId = the checkpoint-stable streaming query id) — a
@@ -256,22 +256,21 @@ final class GraftLakeStreamingWrite(root: String, rootAbs: String,
   import org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory
 
   // files must land under PHYSICAL column names (the column-mapping
-  // invariant every reader relies on); resolved once at write
-  // construction — the stream's analyzed schema is of this moment's
-  // logical names. Identity on unmapped lakes, or before the first commit.
-  private val physSchema: org.apache.spark.sql.types.StructType = {
-    val m = if (SnapshotLake.currentVersion(root).isEmpty) Map.empty[String, String]
-            else SnapshotLake.columnMapping(root)
-    if (m.isEmpty) schema
-    else org.apache.spark.sql.types.StructType(
-      schema.fields.map(f => f.copy(name = m.getOrElse(f.name, f.name))))
-  }
+  // invariant every reader relies on), and their index keys physical too;
+  // resolved once at write construction — the stream's analyzed schema is
+  // of this moment's logical names. Identity on unmapped lakes, or before
+  // the first commit.
+  private val mapping = SnapshotLake.columnMapping(root)
+  private val physSchema = org.apache.spark.sql.types.StructType(
+    schema.fields.map(f => f.copy(name = mapping.getOrElse(f.name, f.name))))
+  private val physIndex = SnapshotLake.physicalIndex(index, mapping)
 
   // called once per epoch: each epoch writes a fresh time-ordered data
   // dir, so a streamed commit sorts after every earlier commit of the lake
   // and schemaOf inherits version v−1's inference as for a plain append
   override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    GraftLakeStreamWriterFactory(rootAbs, SnapshotLake.newDataDir(), physSchema, queryId, hconf)
+    GraftLakeWriterFactory(rootAbs, SnapshotLake.newDataDir(), s"stream-$queryId-",
+      physSchema, physIndex.statsCols, hconf)
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val files = messages.toSeq.collect { case m: GraftLakeFilesMsg => m.files }.flatten
@@ -283,7 +282,7 @@ final class GraftLakeStreamingWrite(root: String, rootAbs: String,
     // RTT case CommitContention phase 5 prices.
     SnapshotLake.commitStreamedFilesGrouped(
       org.apache.spark.sql.SparkSession.active, root, files,
-      s"stream-$queryId-e$epochId", index)
+      s"stream-$queryId-e$epochId", physIndex)
     ()
   }
 
@@ -293,69 +292,184 @@ final class GraftLakeStreamingWrite(root: String, rootAbs: String,
     ()
 }
 
-final case class GraftLakeStreamWriterFactory(
-    rootAbs: String, relDir: String, schema: org.apache.spark.sql.types.StructType,
-    queryId: String, hconf: Broadcast[SerializableConfiguration])
-    extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
-      : org.apache.spark.sql.connector.write.DataWriter[org.apache.spark.sql.catalyst.InternalRow] =
+/** The connector's writer factory, for batch row-level rewrites and for
+  * sink epochs: each task's files are named by an attempt-unique stem
+  * (carrying the epoch, for a sink), so a replayed epoch or a speculative
+  * attempt never collides with a live writer, and only committed
+  * messages' files are linked. */
+final case class GraftLakeWriterFactory(
+    rootAbs: String, relDir: String, prefix: String,
+    schema: org.apache.spark.sql.types.StructType, statsCols: Seq[String],
+    hconf: Broadcast[SerializableConfiguration])
+    extends org.apache.spark.sql.connector.write.DataWriterFactory
+    with org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
+  override def createWriter(partitionId: Int, taskId: Long): GraftLakeDataWriter =
+    new GraftLakeDataWriter(rootAbs, relDir, f"${prefix}part-$partitionId%05d-t$taskId",
+      schema, hconf.value.value, statsCols)
+  override def createWriter(partitionId: Int, taskId: Long, epochId: Long): GraftLakeDataWriter =
     new GraftLakeDataWriter(rootAbs, relDir,
-      // attempt-unique FILE name, carrying the epoch it belongs to: a
-      // replayed epoch (or a speculative attempt) never collides with a
-      // live writer, and only committed messages' names are linked
-      f"stream-$queryId-e$epochId-part-$partitionId%05d-t$taskId.parquet",
-      schema, hconf.value.value)
+      f"${prefix}e$epochId-part-$partitionId%05d-t$taskId", schema, hconf.value.value, statsCols)
 }
 
-/** Task-side parquet writer over InternalRow — lazily opened so a
-  * zero-row partition writes nothing at all. */
-final class GraftLakeDataWriter(rootAbs: String, relDir: String,
-                                fileName: String,
+/** The lake's one file writer: a task-side parquet writer over
+  * InternalRow through Spark's own `ParquetWriteSupport` (the encoder the
+  * built-in parquet sink uses, so the files carry the same schema and
+  * key-value metadata), with the session's codec and parquet sizes from
+  * the broadcast conf ([[GraftLakeConf]]). Files open lazily, so a
+  * zero-row task writes nothing at all. Each file is named
+  * `<stem>-c<n>.parquet` — the stem is attempt-unique, so a retried or
+  * speculative attempt never collides with a live one.
+  *
+  * With `partCols` the rows are laid out as Spark's dynamic-partition
+  * writer does: a new file under `<p1=v1>/.../` whenever the partition
+  * tuple changes (callers sort each task's rows by it), the directory
+  * names built by the same hive escaping (`ExternalCatalogUtils`, null
+  * and empty → `__HIVE_DEFAULT_PARTITION__`) from the values cast to
+  * string in the session time zone, and the partition columns left out
+  * of the files.
+  *
+  * On commit the writer reports every file with its
+  * [[FileStats.FileMeta]] — row count, and min/max and null count of
+  * `statsCols` — read from the footer of the file it had just closed,
+  * so a commit never opens the footers it links. */
+final class GraftLakeDataWriter(rootAbs: String, relDir: String, stem: String,
                                 schema: org.apache.spark.sql.types.StructType,
-                                conf: org.apache.hadoop.conf.Configuration)
+                                conf: org.apache.hadoop.conf.Configuration,
+                                statsCols: Seq[String] = Nil,
+                                partCols: Seq[String] = Nil)
     extends org.apache.spark.sql.connector.write.DataWriter[org.apache.spark.sql.catalyst.InternalRow] {
+  import org.apache.parquet.hadoop.{ParquetOutputFormat, ParquetWriter}
   import org.apache.spark.sql.catalyst.InternalRow
-  import org.apache.spark.sql.connector.write.WriterCommitMessage
+  import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+  import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, UnsafeProjection, UnsafeRow}
   import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
+  import org.apache.spark.sql.types.{StringType, StructType}
 
-  private var rows = 0L
-  private var writer: org.apache.parquet.hadoop.ParquetWriter[InternalRow] = _
+  private val partIdx = partCols.map(schema.fieldIndex)
+  private val dataIdx = schema.indices.filterNot(partIdx.contains)
+  private def bound(i: Int) = BoundReference(i, schema(i).dataType, schema(i).nullable)
+  private lazy val partKey = UnsafeProjection.create(partIdx.map(bound))
+  private lazy val dataRow = UnsafeProjection.create(dataIdx.map(bound))
+  // each partition value as a string, as Spark's partitioned writer casts it
+  private lazy val partStrings = partIdx.zipWithIndex.map { case (i, j) =>
+    Cast(BoundReference(j, schema(i).dataType, nullable = true), StringType,
+      Some(org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone))
+  }
+  private val cols = statsCols.toSet
+  private lazy val fileConf = {
+    val c = new org.apache.hadoop.conf.Configuration(conf)
+    ParquetWriteSupport.setSchema(StructType(dataIdx.map(schema(_))), c)
+    c
+  }
+
+  private var files = Vector.empty[(String, FileStats.FileMeta)]
+  private var cur: ParquetWriter[InternalRow] = _
+  private var curRel: String = _
+  private var curKey: UnsafeRow = _
 
   private final class RowWriterBuilder(path: org.apache.hadoop.fs.Path)
-      extends org.apache.parquet.hadoop.ParquetWriter.Builder[InternalRow, RowWriterBuilder](path) {
+      extends ParquetWriter.Builder[InternalRow, RowWriterBuilder](path) {
     override def self(): RowWriterBuilder = this
     override def getWriteSupport(c: org.apache.hadoop.conf.Configuration)
         : org.apache.parquet.hadoop.api.WriteSupport[InternalRow] =
       new ParquetWriteSupport
   }
 
-  private def open(): Unit = {
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(rootAbs, relDir))
-    val c = new org.apache.hadoop.conf.Configuration(conf)
-    ParquetWriteSupport.setSchema(schema, c)
-    writer = new RowWriterBuilder(
-      new org.apache.hadoop.fs.Path(s"$rootAbs/$relDir/$fileName"))
+  private def open(sub: String): Unit = {
+    curRel = f"$relDir/$sub$stem-c${files.size}%03d.parquet"
+    val path = java.nio.file.Paths.get(rootAbs, curRel)
+    java.nio.file.Files.createDirectories(path.getParent)
+    val c = fileConf
+    // the sizes ParquetOutputFormat would take from the conf for the
+    // built-in writer; the builder's own defaults ignore the conf
+    cur = new RowWriterBuilder(new org.apache.hadoop.fs.Path(path.toString))
       .withConf(c)
-      .withCompressionCodec(
-        org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
+      .withCompressionCodec(ParquetOutputFormat.getCompression(c))
+      .withRowGroupSize(ParquetOutputFormat.getLongBlockSize(c))
+      .withPageSize(ParquetOutputFormat.getPageSize(c))
+      .withDictionaryPageSize(ParquetOutputFormat.getDictionaryPageSize(c))
+      .withDictionaryEncoding(ParquetOutputFormat.getEnableDictionary(c))
+      .withWriterVersion(ParquetOutputFormat.getWriterVersion(c))
+      .withValidation(ParquetOutputFormat.getValidation(c))
+      .withPageWriteChecksumEnabled(ParquetOutputFormat.getPageWriteChecksumEnabled(c))
       .build()
   }
 
-  override def write(record: InternalRow): Unit = {
-    if (writer == null) open()
-    writer.write(record)
-    rows += 1
+  private def closeFile(): Unit = if (cur != null) {
+    val w = cur
+    close()
+    files :+= curRel -> FileStats.metaOf(w.getFooter, cols)
   }
 
-  override def commit(): WriterCommitMessage = {
-    if (writer != null) writer.close()
-    GraftLakeFilesMsg(if (rows > 0) Seq(s"$relDir/$fileName") else Nil, rows)
+  private def dirOf(key: UnsafeRow): String =
+    partCols.zip(partStrings).map { case (c, e) =>
+      ExternalCatalogUtils.getPartitionPathString(c,
+        Option(e.eval(key)).map(_.toString).orNull)
+    }.mkString("", "/", "/")
+
+  override def write(record: InternalRow): Unit =
+    if (partIdx.isEmpty) {
+      if (cur == null) open("")
+      cur.write(record)
+    } else {
+      val key = partKey(record)
+      if (cur == null || key != curKey) {
+        closeFile()
+        curKey = key.copy()
+        open(dirOf(curKey))
+      }
+      cur.write(dataRow(record))
+    }
+
+  override def commit(): GraftLakeFilesMsg = {
+    closeFile()
+    GraftLakeFilesMsg(files)
   }
 
-  override def abort(): Unit = close()
+  /** Best effort: this attempt's files are never linked, so they are
+    * only clutter until vacuum's orphan sweep. */
+  override def abort(): Unit = {
+    try close() catch { case scala.util.control.NonFatal(_) => () }
+    (files.map(_._1) ++ Option(curRel)).foreach(f =>
+      java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(rootAbs, f)))
+  }
 
-  override def close(): Unit = {
-    if (writer != null) { writer.close(); writer = null }
+  override def close(): Unit =
+    if (cur != null) { val w = cur; cur = null; w.close() }
+}
+
+object GraftLakeDataWriter {
+  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.catalyst.InternalRow
+
+  /** Write `df` under `relDir` (relative to `rootAbs`) through one
+    * [[GraftLakeDataWriter]] per task, in ONE Spark job, and return every
+    * written file with its reported stats. The plan runs
+    * under its own SQL execution id, so query listeners see the write; the
+    * writers share one broadcast conf of `df`'s session. With `partCols`
+    * each task's rows are first sorted by them, as Spark's
+    * dynamic-partition writer sorts, so each task writes one file per
+    * partition tuple. Only the files of the attempts whose results the
+    * job returns are reported. */
+  def write(df: DataFrame, rootAbs: String, relDir: String,
+            partCols: Seq[String] = Nil,
+            statsCols: Seq[String] = Nil): Seq[(String, FileStats.FileMeta)] = {
+    val laid =
+      if (partCols.isEmpty) df
+      else df.sortWithinPartitions(partCols.map(org.apache.spark.sql.functions.col): _*)
+    val qe = laid.queryExecution
+    val schema = qe.optimizedPlan.schema
+    val hconf = GraftLakeConf.session(laid.sparkSession)
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some("graftlake write")) {
+      laid.sparkSession.sparkContext.runJob(qe.toRdd,
+        (ctx: org.apache.spark.TaskContext, rows: Iterator[InternalRow]) => {
+          val w = new GraftLakeDataWriter(rootAbs, relDir,
+            f"part-${ctx.partitionId}%05d-t${ctx.taskAttemptId}", schema,
+            hconf.value.value, statsCols, partCols)
+          try { rows.foreach(w.write); w.commit().files }
+          catch { case t: Throwable => w.abort(); throw t }
+          finally w.close()
+        }).toSeq.flatten
+    }
   }
 }

@@ -102,7 +102,8 @@ class CommitRecordSpec extends AnyFunSuite {
         Seq("lake" -> Pin("compact", 13, Nil, 0, 1, 10, 0, 0, false))),
       ("commitReplace", () => {
         val v = head(lake)
-        val add = SnapshotLake.stageAppend(kn(40, 2), lake).files
+        val add = graft.sources.GraftLakeDataWriter.write(kn(40, 2),
+          Paths.get(lake).toAbsolutePath.toString, SnapshotLake.newDataDir())
         SnapshotLake.commitReplace(spark, lake, v,
           SnapshotLake.files(lake, v).take(1), add, "update")
       }, Seq("lake" -> Pin("update", 14, Nil, 2, 1, 1, 0, 0, false))),
@@ -148,6 +149,8 @@ class CommitRecordSpec extends AnyFunSuite {
     val root = newRoot()
     SnapshotLake.append(kn(0, 4), root)
     val staged = SnapshotLake.stageAppend(kn(10, 1), root)
+    val written = graft.sources.GraftLakeDataWriter.write(kn(11, 1),
+      Paths.get(root).toAbsolutePath.toString, SnapshotLake.newDataDir())
     val dirs = dataDirs(root)
     for (t <- badTags) {
       val writers: Seq[(String, () => Any)] = Seq(
@@ -157,7 +160,7 @@ class CommitRecordSpec extends AnyFunSuite {
         "merge" -> (() => SnapshotLake.merge(spark, root, kn(1, 1), "k", tag = Some(t))),
         "mergeOnce" -> (() => SnapshotLake.mergeOnce(spark, root, kn(1, 1), "k", t)),
         "commitStreamedFilesGrouped" -> (() =>
-          SnapshotLake.commitStreamedFilesGrouped(spark, root, staged.files, t)))
+          SnapshotLake.commitStreamedFilesGrouped(spark, root, written, t)))
       for ((name, w) <- writers) {
         intercept[IllegalArgumentException](w())
         assert(SnapshotLake.currentVersion(root).contains(1L), s"$name committed tag '$t'")

@@ -29,29 +29,83 @@ class FileStatsSpec extends AnyFunSuite {
 
   private val idx = SnapshotLake.IndexSpec(Seq("k", "grp"), Some("k"))
 
-  test("harvested footer min/max equal the true per-file ranges") {
-    val root = newRoot()
-    SnapshotLake.append(
-      df(0, 100).repartitionByRange(2, col("k")).sortWithinPartitions("k"),
-      root, idx)
-    val live = SnapshotLake.files(root, 1L)
-    assert(live.size == 2)
-    val stats = live.map(f => f.substring(0, f.lastIndexOf('/'))).distinct
-      .flatMap(d => FileStats.readStatsSidecar(root, d)).toMap
-    assert(stats.keySet == live.toSet)
-    for (f <- live) {
-      val actual = spark.read.parquet(Paths.get(root, f).toString)
-        .agg(min("k"), max("k"), min("grp"), max("grp")).head
-      val kR = stats(f)("k")
-      assert(kR.numeric && kR.min.toDouble.toLong == actual.getLong(0) &&
-        kR.max.toDouble.toLong == actual.getLong(1))
-      val gR = stats(f)("grp")
-      assert(!gR.numeric && gR.min == actual.getString(2) &&
-        gR.max == actual.getString(3))
+  /** Every file of `root`'s head version: its reported row count, and
+    * the min, max and null count of each of `cols`, against a Spark
+    * aggregate over that file alone. Returns the files' row-group counts. */
+  private def checkReported(root: String, cols: Seq[String], what: String): Seq[Int] = {
+    val live = SnapshotLake.files(root, SnapshotLake.currentVersion(root).get)
+    assert(live.nonEmpty, what)
+    val dirs = live.map(f => f.substring(0, f.lastIndexOf('/'))).distinct
+    val stats = dirs.flatMap(d => FileStats.readStatsSidecar(root, d)).toMap
+    val rows = dirs.flatMap(d => FileStats.readRowsSidecar(root, d)).toMap
+    live.map { f =>
+      val path = Paths.get(root, f).toString
+      val aggs = count(lit(1)) +: cols.flatMap { c =>
+        val v = if (c == "ts") unix_micros(col(c)) else col(c)
+        Seq(min(v).cast("string"), max(v).cast("string"),
+          sum(when(col(c).isNull, 1L).otherwise(0L)))
+      }
+      val want = spark.read.parquet(path).agg(aggs.head, aggs.tail: _*).head
+      assert(rows(f) == want.getLong(0), s"$what $f rows")
+      cols.zipWithIndex.foreach { case (c, i) =>
+        val (lo, hi, nulls) = (want.getString(1 + 3 * i), want.getString(2 + 3 * i),
+          want.getLong(3 + 3 * i))
+        val got = stats.get(f).flatMap(_.get(c))
+        if (lo == null) assert(got.isEmpty, s"$what $f $c: an all-null column has no range")
+        else {
+          val r = got.getOrElse(fail(s"$what $f $c: no reported range"))
+          def same(a: String, b: String) =
+            if (r.numeric) FileStats.numCmp(a, b) == 0 else a == b
+          assert(same(r.min, lo) && same(r.max, hi), s"$what $f $c: $r vs [$lo, $hi]")
+          assert(r.nulls.contains(nulls), s"$what $f $c: $r vs $nulls nulls")
+        }
+      }
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(path), new org.apache.hadoop.conf.Configuration())
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      try reader.getFooter.getBlocks.size finally reader.close()
     }
-    // the two range-sorted files partition the key space
-    val ranges = live.map(f => (stats(f)("k").min.toDouble, stats(f)("k").max.toDouble)).sorted
-    assert(ranges.head._2 < ranges.last._1)
+  }
+
+  test("writer-reported stats equal per-file aggregates on every write path") {
+    // several row groups per file (a small block size), a column whose
+    // first row groups are all null, a supplementary-plane string, and
+    // both timestamp units
+    Seq("TIMESTAMP_MICROS", "TIMESTAMP_MILLIS").foreach { unit =>
+      val wh = graft.TestSpark.tempDir("graft-fstats-wh").toString
+      val sess = TestSpark.child("parquet.block.size" -> "4096",
+        "spark.sql.parquet.outputTimestampType" -> unit,
+        "spark.sql.catalog.graft_cat" -> classOf[graft.sources.GraftLakeCatalog].getName,
+        "spark.sql.catalog.graft_cat.warehouse" -> wh)
+      val data = sess.range(0, 3000).select(col("id").as("k"),
+        concat(lit("s\uD800\uDC00"), (col("id") % 97).cast("string")).as("s"),
+        when(col("id") % 1000 >= 400, col("id")).as("n"),
+        timestamp_millis(lit(1704067200000L) + col("id") * 1001L).as("ts"))
+      val cols = Seq("k", "s", "n", "ts")
+      val index = SnapshotLake.IndexSpec(cols, None)
+      val plain = newRoot()
+      SnapshotLake.append(data.repartition(2, col("k")).sortWithinPartitions("k"), plain, index)
+      val parted = newRoot()
+      SnapshotLake.appendPartitioned(data.coalesce(1).withColumn("p", col("k") % 2), parted,
+        Seq("p"), index)
+      val sunk = newRoot()
+      val q = sess.readStream.format("graftlake").load(plain).writeStream
+        .format("graftlake").option("path", sunk).option("statsCols", cols.mkString(","))
+        .option("checkpointLocation", graft.TestSpark.tempDir("graft-fstats-cp").toString)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      assert(q.awaitTermination(120000), "sink drain must finish")
+      val rewritten = newRoot()
+      SnapshotLake.append(data.coalesce(1), rewritten, index)
+      val t = s"graft_cat.ns.fstats_${unit.toLowerCase}"
+      sess.sql(s"CREATE TABLE $t USING graftlake LOCATION '$rewritten'")
+      sess.sql(s"DELETE FROM $t WHERE k % 7 = 0")
+      assert(SnapshotLake.history(rewritten).last.op == "delete")
+      val groups = Seq("append" -> plain, "appendPartitioned" -> parted,
+        "sink epoch" -> sunk, "row-level rewrite" -> rewritten).map { case (what, root) =>
+        what -> checkReported(root, cols, s"$unit $what")
+      }
+      assert(groups.forall(_._2.exists(_ > 1)), s"several row groups per file: $groups")
+    }
   }
 
   test("range-pruned read keeps fewer files and returns exactly the full scan's rows") {

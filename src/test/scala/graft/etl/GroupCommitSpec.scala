@@ -4,8 +4,6 @@ import java.nio.file.Files
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
-import scala.jdk.CollectionConverters._
-
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -294,14 +292,8 @@ class GroupCommitSpec extends AnyFunSuite {
     // connector-sink shape (executors write, driver commits)
     val n = 4
     val rels = (0 until n).map { t =>
-      val sub = f"data/epoch-q$t"
-      Seq(t * 10L, t * 10L + 1).toDF("x").repartition(1)
-        .write.parquet(java.nio.file.Paths.get(root, sub).toString)
-      val s = Files.list(java.nio.file.Paths.get(root, sub))
-      try s.iterator().asScala
-        .map(_.getFileName.toString).filter(_.endsWith(".parquet"))
-        .map(f => s"$sub/$f").toVector
-      finally s.close()
+      graft.sources.GraftLakeDataWriter.write(Seq(t * 10L, t * 10L + 1).toDF("x").repartition(1),
+        java.nio.file.Paths.get(root).toAbsolutePath.toString, f"data/epoch-q$t")
     }
     SnapshotLake.setPublisher(root, slowPublisher(50))
     try {

@@ -11,7 +11,8 @@ import graft.TestSpark
 
 /** Model-based lake test: seeded random sequences of lake operations run
   * against the lake and against an in-memory model of what each version
-  * must hold. After every operation the head version is read three ways
+  * must hold. Every sequence holds a connector append and a partitioned
+  * append with a null partition value. After every operation the head version is read three ways
   * — [[SnapshotLake.read]], a `versionAsOf` connector load, and a
   * [[SnapshotLake.readPruned]] key band (which re-applies its filter) —
   * and each must equal the model; after every sequence every version is
@@ -36,7 +37,8 @@ class LakeModelSpec extends AnyFunSuite {
 
   private sealed trait Op
   private final case class Append(n: Int) extends Op
-  private final case class AppendPartitioned(n: Int) extends Op
+  private final case class AppendPartitioned(n: Int, nullPart: Boolean = false) extends Op
+  private final case class ConnectorAppend(n: Int) extends Op
   private final case class DeleteWhere(pick: Int) extends Op
   private final case class Merge(pick: Int) extends Op
   private case object Compact extends Op
@@ -46,7 +48,8 @@ class LakeModelSpec extends AnyFunSuite {
 
   private val opGen: Gen[Op] = Gen.frequency(
     3 -> Gen.choose(1, 4).map(Append(_)),
-    2 -> Gen.choose(1, 4).map(AppendPartitioned(_)),
+    2 -> Gen.choose(1, 4).flatMap(n => Gen.oneOf(false, true).map(AppendPartitioned(n, _))),
+    2 -> Gen.choose(1, 4).map(ConnectorAppend(_)),
     2 -> Gen.choose(0, 1000).map(DeleteWhere(_)),
     2 -> Gen.choose(0, 1000).map(Merge(_)),
     1 -> Gen.const(Compact),
@@ -56,8 +59,8 @@ class LakeModelSpec extends AnyFunSuite {
 
   private val seqGen: Gen[Seq[Op]] = for {
     first <- Gen.oneOf(Append(3), AppendPartitioned(3))
-    rest <- Gen.listOfN(7, opGen)
-  } yield first +: rest
+    rest <- Gen.listOfN(6, opGen)
+  } yield first +: AppendPartitioned(2, nullPart = true) +: ConnectorAppend(2) +: rest
 
   /** A frame's rows as (k → id-keyed values), ids resolved through the
     * model's names; partition values compare as longs whatever type
@@ -142,9 +145,17 @@ class LakeModelSpec extends AnyFunSuite {
           val rs = fresh(n)
           SnapshotLake.append(frame(rs), root, idx)
           m = m.copy(rows = m.rows ++ rs.map(r => r("k") -> r))
-        case AppendPartitioned(n) =>
-          val rs = fresh(n)
+        case AppendPartitioned(n, nullPart) =>
+          // the first row's partition value null: its dir is hive's default
+          val rs = fresh(n).zipWithIndex.map { case (r, i) =>
+            if (nullPart && i == 0) r - "p" else r
+          }
           SnapshotLake.appendPartitioned(frame(rs), root, Seq(m.nameOf("p")), idx)
+          m = m.copy(rows = m.rows ++ rs.map(r => r("k") -> r))
+        case ConnectorAppend(n) =>
+          val rs = fresh(n)
+          frame(rs).write.format("graftlake").mode("append").option("statsCols", m.nameOf("k"))
+            .save(root)
           m = m.copy(rows = m.rows ++ rs.map(r => r("k") -> r))
         case DeleteWhere(pk) =>
           val ks = pick(pk, m.visible.keys.toSeq, 2)
