@@ -48,6 +48,10 @@ import graft.etl.SnapshotLake
   * [filesPerCommit]]"`. Prints one line per configuration; numbers
   * land in SCALE.md next to the manifest ceiling table. */
 object CommitContention {
+  /** The schema the synthetic lakes' first commit declares: their
+    * staged files are empty and never read. */
+  private val SyntheticSchema = Some(org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("k", org.apache.spark.sql.types.LongType))))
 
   private def stagedRels(tag: String, perProc: Int,
                          filesPerCommit: Int): IndexedSeq[Seq[String]] =
@@ -78,7 +82,7 @@ object CommitContention {
     }
     val t0 = System.nanoTime()
     rels.foreach(rel =>
-      SnapshotLake.commitSynthetic(root, rel, fpc.toLong))
+      SnapshotLake.commitSynthetic(root, rel, fpc.toLong, SyntheticSchema))
     val wall = (System.nanoTime() - t0) / 1e9
     println(f"DONE lost=${SnapshotLake.casLost.get}%d wall=$wall%.3f")
     Console.out.flush()
@@ -124,7 +128,7 @@ object CommitContention {
         pool.execute { () =>
           start.await()
           staged(t).foreach(rel =>
-            SnapshotLake.commitSynthetic(root, rel, filesPerCommit.toLong))
+            SnapshotLake.commitSynthetic(root, rel, filesPerCommit.toLong, SyntheticSchema))
           done.countDown()
         }
       }
@@ -361,7 +365,7 @@ object CommitContention {
           pool.execute { () =>
             start.await()
             staged(t).foreach(rel => SnapshotLake.commitSyntheticGrouped(
-              root, rel, filesPerCommit.toLong))
+              root, rel, filesPerCommit.toLong, schema = SyntheticSchema))
             done.countDown()
           }
         }

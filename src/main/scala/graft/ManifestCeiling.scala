@@ -64,9 +64,10 @@ object ManifestCeiling {
       r.get
     }
 
-    // one real 1-row parquet as the hardlink template
-    spark.range(1).select(col("id").as("k"))
-      .coalesce(1).write.parquet(work.resolve("tpl").toString)
+    // one real 1-row parquet as the hardlink template, whose schema the
+    // lake's first commit declares
+    val tplRows = spark.range(1).select(col("id").as("k"))
+    tplRows.coalesce(1).write.parquet(work.resolve("tpl").toString)
     val tpl = {
       val s = Files.list(work.resolve("tpl"))
       try s.filter(_.toString.endsWith(".parquet")).findFirst().get
@@ -91,7 +92,7 @@ object ManifestCeiling {
         FileStats.writeRowsSidecar(root, rel.map(_ -> 1L).toMap)
         FileStats.writeBytesSidecar(root,
           rel.map(_ -> Files.size(tpl)).toMap)
-        SnapshotLake.commitSynthetic(root, rel, perCommit.toLong)
+        SnapshotLake.commitSynthetic(root, rel, perCommit.toLong, Some(tplRows.schema))
       }
     }
     println(f"CEILING   of which checkpoint writes   " +
@@ -133,18 +134,6 @@ object ManifestCeiling {
       val cand = SnapshotLake.candidateFiles(spark, root,
         graft.etl.LakeIndex.of(root, head), SnapshotLake.files(root, head), "k", keys)
       require(cand.size == 10, s"candidates=${cand.size}")
-    }
-    // the inferred-schema memo's measured win (VERDICT r17 ask 1): an
-    // undeclared lake infers its read schema from one footer per commit
-    // dir — O(dirs) file opens, paid per LOAD without the memo (the
-    // "~15 s of every warm plan" at the 10,000-dir ceiling). Cold row =
-    // the honest inference cost; warm row = the memo hit every later
-    // load of the same version rides.
-    timed("schemaOf inference (cold)") {
-      SnapshotLake.schemaOf(spark, root)
-    }
-    timed("schemaOf memo (warm)", 3) {
-      SnapshotLake.schemaOf(spark, root)
     }
     timed("connector point-filter planning") {
       val q = spark.read.format("graftlake").load(root)

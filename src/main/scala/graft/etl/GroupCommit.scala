@@ -39,9 +39,12 @@ import java.util.concurrent.locks.ReentrantLock
   * every member's idempotence tag (`tagList` — Delta's
   * multi-`txn`-action commit), already-committed tags ride the
   * existing version, and a same-tag duplicate inside one batch
-  * commits exactly one member's files. DML / schema-declaring commits
-  * keep their solo paths: a rewrite's serializable fence must observe
-  * ITS OWN read set.
+  * commits exactly one member's files. Each member's rows must fit the
+  * schema at the leader's head — on an empty lake, the one the batch's
+  * first member declares — or that member alone fails, its files left
+  * as orphans for vacuum. DML and auto-merging commits keep their solo
+  * paths: a rewrite's serializable fence must observe ITS OWN read
+  * set.
   *
   * Scope: coalescing is per-JVM by design — cross-process writers
   * still race the CAS link, which phase 3 proved collapse-free. A
@@ -65,6 +68,7 @@ private[graft] object GroupCommit {
   private val MaxBatch = 256
 
   private final class Pending(val add: Seq[String], val rows: Long,
+                              val admitted: Option[SnapshotLake.Admitted],
                               val tag: Option[String]) {
     val done = new CompletableFuture[java.lang.Long]()
   }
@@ -78,8 +82,9 @@ private[graft] object GroupCommit {
     private val queue = new ConcurrentLinkedQueue[Pending]
     private val leader = new ReentrantLock
 
-    def commit(add: Seq[String], rows: Long, tag: Option[String]): Long = {
-      val p = new Pending(add, rows, tag)
+    def commit(add: Seq[String], rows: Long, admitted: Option[SnapshotLake.Admitted],
+               tag: Option[String]): Long = {
+      val p = new Pending(add, rows, admitted, tag)
       queue.add(p)
       while (!p.done.isDone) {
         if (leader.tryLock()) {
@@ -128,7 +133,20 @@ private[graft] object GroupCommit {
             .flatMap(t => SnapshotLake.findTag(root, t).map(t -> _)).toMap
           val (riders, rest) = remaining.partition(_.tag.exists(known.contains))
           riders.foreach(p => { p.done.complete(known(p.tag.get)); () })
-          remaining = rest
+          val cur = SnapshotLake.currentVersion(root)
+          // the schema rule per member, at this attempt's head: the first
+          // member that declares (an empty lake) sets the schema the rest
+          // must fit; a member that does not fit fails alone
+          var lake =
+            if (rest.forall(_.admitted.isEmpty)) None
+            else cur.map(v => SnapshotLake.schemaAt(root, Some(v)))
+          remaining = rest.filter { p =>
+            p.admitted.forall { a =>
+              try { SnapshotLake.declareOn(root, lake, a).foreach(d => lake = Some(d)); true }
+              catch { case e: IllegalArgumentException =>
+                p.done.completeExceptionally(e); false }
+            }
+          }
           if (remaining.nonEmpty) {
             // in-batch same-tag duplicates: the first occurrence
             // commits its files, later ones piggyback on the version
@@ -137,11 +155,11 @@ private[graft] object GroupCommit {
             val seen = scala.collection.mutable.Set.empty[String]
             val (committers, piggy) =
               remaining.partition(_.tag.forall(seen.add))
-            val cur = SnapshotLake.currentVersion(root)
             val v = cur.getOrElse(0L) + 1
             if (SnapshotLake.tryCommit(root, v, SnapshotLake.Change("append",
                 cur.getOrElse(0L), committers.iterator.map(_.rows).sum,
-                committers.flatMap(_.add), tags = committers.flatMap(_.tag)))) {
+                committers.flatMap(_.add), schema = if (cur.isEmpty) lake else None,
+                tags = committers.flatMap(_.tag)))) {
               links.incrementAndGet()
               (committers ++ piggy).foreach(p => { p.done.complete(v); () })
               remaining = Vector.empty
@@ -159,10 +177,13 @@ private[graft] object GroupCommit {
   private val committers = new ConcurrentHashMap[String, Committer]
 
   /** Commit pre-written data files through the group path. Returns the
-    * committed version (shared with every coalesced co-member). A
+    * committed version (shared with every coalesced co-member).
+    * `admitted` is the member's schema admission (None: files of no
+    * declared schema, the measurement hooks). A
     * `tag` makes the member exactly-once ([[SnapshotLake.appendOnceGrouped]]):
     * an already-committed tag rides the existing version instead. */
   private[etl] def commit(root: String, add: Seq[String], rows: Long,
+                          admitted: Option[SnapshotLake.Admitted],
                           tag: Option[String] = None): Long =
-    committers.computeIfAbsent(root, new Committer(_)).commit(add, rows, tag)
+    committers.computeIfAbsent(root, new Committer(_)).commit(add, rows, admitted, tag)
 }

@@ -97,7 +97,7 @@ trait LakeCheckpoints {
 
   /** The resolved snapshot of one version: its full file listing, its
     * live key-tombstone (deletion-vector) files (both in commit order),
-    * and the DECLARED schema if an `evolve` commit set one — base64 of
+    * and its DECLARED schema (None only on a lake that predates them) — base64 of
     * the StructType JSON, so the hand-rolled record parsers never meet a
     * quote or brace from inside a schema. */
   private[etl] final case class LakeState(files: Vector[String],

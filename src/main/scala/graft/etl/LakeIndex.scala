@@ -135,7 +135,7 @@ object LakeIndex {
     Option(cache.get(k)).flatMap(r => Option(r.get())) match {
       case Some((f, idx)) if fp.contains(f) => keep(idx); idx
       case _ =>
-        val idx = build(root, SnapshotLake.files(root, v))
+        val idx = build(root, SnapshotLake.files(root, v), numericCols(root, v))
         fp.foreach(f => cache.put(k, new java.lang.ref.SoftReference((f, idx))))
         keep(idx)
         idx
@@ -153,9 +153,9 @@ object LakeIndex {
       read: (String, String) => Map[String, A]): Map[String, A] =
     files.map(dirOf).distinct.flatMap(read(root, _)).toMap
 
-  private def build(root: String, all: Seq[String]): LakeIndex = {
+  private def build(root: String, all: Seq[String], numeric: => Set[String]): LakeIndex = {
     val sidecars = statsOf(root, all)
-    val pathIdx = pathRangeIndex(all)
+    val pathIdx = pathRangeIndex(all, numeric)
     // unpartitioned lakes (empty path index) skip the per-file map
     // merge — at a million files the O(files) allocation is real time
     val composed: Map[String, Map[String, FileStats.ColRange]] =
@@ -239,22 +239,15 @@ object LakeIndex {
     }
   }
 
-  /** Partition columns of a LISTING whose every encoded value parses
-    * numerically (the null sentinel aside, which discovery maps to NULL
-    * without affecting the column's type) — the same merge-across-
-    * partitions rule Spark's partition type inference applies, computed
-    * once per listing so every file of a column compares the same way.
-    * Deciding numericness per VALUE instead let a string-typed column
-    * with one numeric-looking dir ("25" next to "abc") compare
-    * numerically in [[wholeMatch]]/[[FileStats.mayMatch]] while the
-    * re-applied row predicate compared as string. */
-  private def pathNumericCols(rel: Seq[String]): Set[String] =
-    // vote on the DECODED value — predicates carry unescaped literals,
-    // so '1%2E5' must vote as the string it decodes to
-    rel.flatMap(decodedTuple).groupMap(_._1)(_._2).collect {
-      case (c, vs) if vs.forall(v =>
-        v == NullPart || scala.util.Try(v.toDouble).isSuccess) => c
-    }.toSet
+  /** Physical names of version `v`'s numeric columns: a path-encoded
+    * partition value compares as a number exactly when its column's
+    * declared type is one, so the metadata comparison and the re-applied
+    * row predicate always agree. */
+  private def numericCols(root: String, v: Long): Set[String] =
+    SnapshotLake.declaredSchema(root, Some(v)).fold(Set.empty[String])(_.fields.collect {
+      case f if f.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType] =>
+        SnapshotLake.physNameOf(f)
+    }.toSet)
 
   /** The hive partition tuple `rel`'s path encodes, values decoded from
     * hive's %xx escaping: predicates compare unescaped literals ('a:b',
@@ -265,23 +258,21 @@ object LakeIndex {
       c -> graft.sources.GraftLakeScan.unescapePath(raw)
     }
 
-  /** Path-encoded partition ranges for a whole listing, numericness
-    * decided listing-wide ([[pathNumericCols]]). */
-  private def pathRangeIndex(rel: Seq[String])
+  /** Path-encoded partition ranges for a whole listing, `numeric` naming
+    * the columns that compare as numbers ([[numericCols]]). */
+  private def pathRangeIndex(rel: Seq[String], numeric: => Set[String])
       : Map[String, Map[String, FileStats.ColRange]] = {
     // an unpartitioned listing has no path tuples at all — skip the
     // O(files) map construction (at a million files it's measurable)
     if (!rel.exists(_.startsWith("data/commit="))) return Map.empty
-    val nc = pathNumericCols(rel)
+    val nc = numeric
     rel.map(f => f -> pathRangesOf(f, nc)).toMap
   }
 
   /** The hive partition tuple a file's path encodes, as EXACT ranges: a
     * partition value is both min and max of its column for every row of
-    * the file. A column compares numerically only when the WHOLE listing's values do
-    * — matching partition discovery's merged type inference, so the
-    * metadata comparison and the re-applied row predicate always agree.
-    * The null partition (`__HIVE_DEFAULT_PARTITION__`) keeps its
+    * the file, compared as a number when its column's declared type is
+    * numeric. The null partition (`__HIVE_DEFAULT_PARTITION__`) keeps its
     * sentinel string form — range preds may then prune the file, which
     * stays exact because the re-applied row filter rejects NULL values
     * anyway. */

@@ -306,11 +306,6 @@ object SnapshotLake extends LakeCheckpoints {
       val k = si.nextElement()
       if (k._1 == root) segCache.remove(k)
     }
-    val sc = schemaOfCache.keys()
-    while (sc.hasMoreElements) {
-      val k = sc.nextElement()
-      if (k._1 == root) schemaOfCache.remove(k)
-    }
     FileStats.invalidateRoot(root)
     recreateHooks.forEach(h => h(root))
   }
@@ -449,20 +444,16 @@ object SnapshotLake extends LakeCheckpoints {
     * time, through the connector scan. The plan holds the manifest's
     * explicit file list, so commits landing AFTER this call change
     * nothing the reader sees — the isolation property the
-    * directory-listing lake lacks. The columns are [[schemaOf]]'s: with
-    * `mergeSchema` (the q156 schema-on-read contract) a column some
-    * files predate reads NULL there; a DECLARED schema (an `evolve`
-    * commit at-or-below the version) names the columns, their order and
-    * types, null-fills files written before it, and surfaces renamed
-    * columns under their logical names. An empty version reads zero rows
-    * under the schema the lake last had. Live deletion vectors drop their
-    * keys' rows during the scan. */
+    * directory-listing lake lacks. The columns are [[schemaOf]]'s: the
+    * version's declared schema names the columns, their order and types,
+    * null-fills files written before a column was added, and surfaces
+    * renamed columns under their logical names. An empty version reads
+    * zero rows under the schema the lake last had. Live deletion vectors
+    * drop their keys' rows during the scan. */
   def read(spark: SparkSession, root: String,
-           version: Option[Long] = None,
-           mergeSchema: Boolean = false): DataFrame = {
-    val v = version.orElse(currentVersion(root)).getOrElse(
-      throw new IllegalStateException(s"no committed version at $root"))
-    GraftLakeSource.frame(spark, root, schemaOf(spark, root, Some(v), mergeSchema), Some(v))
+           version: Option[Long] = None): DataFrame = {
+    val v = versionOf(root, version)
+    GraftLakeSource.frame(spark, root, schemaOf(root, Some(v)), Some(v))
   }
 
   /** Files `rel` — of version `v`, or staged beside it — through the
@@ -473,7 +464,7 @@ object SnapshotLake extends LakeCheckpoints {
                          rel: Seq[String], deletes: Boolean,
                          schema: Option[StructType] = None): DataFrame =
     GraftLakeSource.frame(spark, root,
-      schema.getOrElse(schemaOf(spark, root, v)), v,
+      schema.getOrElse(schemaOf(root, v)), v,
       Some(GraftLakeFileSet(rel, deletes)))
 
   /** The inclusive `preds` as one row condition over `schema`'s columns,
@@ -488,174 +479,39 @@ object SnapshotLake extends LakeCheckpoints {
     }.reduceOption(_ && _).getOrElse(lit(true))
   }
 
-  /** The LOGICAL schema of version `v` without opening every file — the
-    * one schema rule behind every read, the connector's `load` and its
-    * append check:
-    *
-    *   - a DECLARED schema (an evolve or auto-merging commit at-or-below
-    *     `v`) answers with ZERO file opens — names/types/metadata
-    *     stripped to the read shape;
-    *   - an undeclared version gets Spark's parquet inference over the
-    *     listing SORTED BY PATH:
-    *     without `mergeSchema` the footer of the smallest plain path (and,
-    *     on a hive-partitioned listing, of the smallest partitioned path,
-    *     with the partition columns every leaf dir encodes); with
-    *     `mergeSchema` the union of the footers in path order, one per
-    *     leaf dir (files of one commit directory share a write, hence a
-    *     schema). On a lake whose commits wrote different column sets the
-    *     non-merging schema is therefore that of the commit whose data
-    *     dir sorts first. Plain commit dirs are named in write order
-    *     ([[newDataDir]]), so on a lake this library wrote the rule is:
-    *     the first commit (the oldest one with live plain files) names
-    *     the schema — declare a schema, or read with `mergeSchema`, to
-    *     change it.
-    *
-    * The inference is INCREMENTAL: an undeclared version whose record
-    * only adds plain files inherits version v−1's cached inference when
-    * the grown listing provably infers the same — without `mergeSchema`,
-    * when no added path sorts before the footer v−1 was read from (zero
-    * footer opens); with it, when the additions are one leaf dir whose
-    * footer equals v−1's schema (one footer open). A commit-by-commit
-    * writer or reader then pays O(change), never O(history): a solo
-    * append's time-ordered dir always sorts last, and racing writers can
-    * miss the inheritance for one version at worst. It falls
-    * back to the footers of the whole listing on a cold cache (first call
-    * in this JVM, or a soft reference the GC cleared), when that proof
-    * fails (an added path sorts first, or the additions bring other
-    * columns), and on a record that removes files, adds hive-partitioned
-    * files (a new partition value can change a partition column's
-    * inferred type) or is a legacy full-state record. (A record that
-    * declares a schema makes its version declared: no inference at all.)
-    * At a million files the full-listing DataFrame construction this
-    * replaces was ~95% of the planning wall in the ManifestCeiling
-    * measurement. */
-  def schemaOf(spark: SparkSession, root: String,
-               version: Option[Long] = None,
-               mergeSchema: Boolean = false): StructType = {
-    val v = version.orElse(currentVersion(root)).getOrElse(
+  /** `version`, or the head when None; fails when `root` has no commit. */
+  private def versionOf(root: String, version: Option[Long]): Long =
+    version.orElse(currentVersion(root)).getOrElse(
       throw new IllegalStateException(s"no committed version at $root"))
-    val st = resolve(root, v)._1
-    st.schemaB64 match {
-      case Some(b) =>
-        // the read shape: logical names, declared types, all-nullable
-        // (files written before the declaration null-fill), no metadata
-        StructType(decodeSchema(b).fields.map(f =>
-          org.apache.spark.sql.types.StructField(f.name, f.dataType,
-            nullable = true)))
-      case None =>
-        if (st.files.isEmpty) {
-          // an empty undeclared version inherits its shape from the
-          // nearest ancestor that still lists files — delete-all leaves
-          // a table with zero rows, never a table with no schema. (A
-          // declared schema would have carried in st.schemaB64 above.)
-          var pv = v - 1
-          while (pv >= 1L && versionExists(root, pv)) {
-            if (resolve(root, pv)._1.files.nonEmpty)
-              return schemaOf(spark, root, Some(pv), mergeSchema)
-            pv -= 1
-          }
-          throw new IllegalStateException(
-            s"version $v of $root lists no files and no ancestor does")
-        }
-        // A version's schema is immutable, so the inference caches under
-        // the same version-file fingerprint every other (root, version)
-        // cache validates with.
-        cachedInference(root, v, mergeSchema).getOrElse {
-          val inf = inheritedInference(spark, root, v, mergeSchema)
-            .getOrElse(footerInference(spark, root, st.files, mergeSchema))
-          versionFingerprint(root, v).foreach(f => schemaOfCache.put(
-            (root, v, mergeSchema), new java.lang.ref.SoftReference((f, inf))))
-          inf
-        }.schema
-    }
+
+  /** The LOGICAL schema of version `v` (the head's when None) in the read
+    * shape: the declared names and types, every field nullable (files
+    * written before a column was added null-fill it), no metadata — the
+    * one schema rule behind every read, the connector's `load` and the
+    * append check. A lake's first commit declares the schema of the rows
+    * it wrote, and every later version carries the last declaration
+    * forward, so this reads the log and never a data file. */
+  def schemaOf(root: String, version: Option[Long] = None): StructType =
+    readShape(schemaAt(root, version))
+
+  /** Version `v`'s declared schema (the head's when None), metadata
+    * included. A lake that predates declared schemas fails loudly. */
+  private[graft] def schemaAt(root: String, version: Option[Long] = None): StructType = {
+    val v = versionOf(root, version)
+    declaredSchema(root, Some(v)).getOrElse(throw new IllegalStateException(s"version $v " +
+      s"of $root declares no schema: the lake predates declared schemas and must be " +
+      "rewritten into a new lake"))
   }
 
-  /** An undeclared version's inferred schema, plus what inheritance needs
-    * of the listing it came from: its smallest plain (non-partitioned)
-    * path, the footer the non-merging inference read. */
-  private final case class Inferred(schema: StructType, firstPlain: Option[String])
+  /** `s` as reads see it: names and types, all nullable, no metadata. */
+  private def readShape(s: StructType): StructType =
+    StructType(s.fields.map(f => StructField(f.name, f.dataType, nullable = true)))
 
-  private def isPartitioned(rel: String): Boolean = rel.startsWith("data/commit=")
-
-  private def dirOf(rel: String): String = rel.substring(0, rel.lastIndexOf('/'))
-
-  /** Column names and types in order — what a schema check compares. */
-  private[graft] def shape(s: StructType) = s.fields.toSeq.map(f => (f.name, f.dataType))
-
-  private def cachedInference(root: String, v: Long,
-                              mergeSchema: Boolean): Option[Inferred] = {
-    val ref = schemaOfCache.get((root, v, mergeSchema))
-    if (ref != null && ref.get() == null) sweepCleared(schemaOfCache)
-    Option(ref).flatMap(r => Option(r.get())).collect {
-      case (f, inf) if versionFingerprint(root, v).contains(f) => inf
-    }
-  }
-
-  /** Version `v`'s inference from v−1's cached one, when `v`'s record
-    * only adds plain files (or only tombstones) and the grown listing
-    * provably infers the same; None ⇒ infer from the footers. */
-  private def inheritedInference(spark: SparkSession, root: String, v: Long,
-                                 mergeSchema: Boolean): Option[Inferred] =
-    for {
-      prev <- if (v > 1L) cachedInference(root, v - 1, mergeSchema) else None
-      r <- try Some(readRecord(root, v))
-           catch { case _: java.io.IOException => None }
-      if r.remove.isEmpty && r.legacyFull.isEmpty && !r.add.exists(isPartitioned)
-      first = r.add.minOption
-      firstPlain = (prev.firstPlain ++ first).minOption
-      if first.forall { f =>
-        if (!mergeSchema) prev.firstPlain.exists(_ < f)
-        else r.add.forall(dirOf(_) == dirOf(f)) &&
-          shape(readListing(spark, root, Seq(f), mergeSchema = true).schema) ==
-            shape(prev.schema)
-      }
-    } yield prev.copy(firstPlain = firstPlain)
-
-  /** Spark's inference over `files` from the fewest footers that
-    * determine it: the smallest file per leaf dir — every partition path
-    * stays represented — and, without `mergeSchema`, only the smallest
-    * plain file, the one footer Spark's non-merging inference opens. */
-  private def footerInference(spark: SparkSession, root: String,
-                              files: Seq[String],
-                              mergeSchema: Boolean): Inferred = {
-    val reps = files.groupBy(dirOf).values.map(_.min).toSeq.sorted
-    val (part, plain) = reps.partition(isPartitioned)
-    Inferred(readListing(spark, root,
-      part ++ (if (mergeSchema) plain else plain.take(1)), mergeSchema).schema,
-      plain.headOption)
-  }
-
-  // inferred-schema memo for undeclared lakes: fingerprint-validated per
-  // hit and cleared with every other (root, …) cache on lake recreation.
-  // SOFT references like resolveCache — each StructType is tiny, but the
-  // map is keyed per (root, version, mergeSchema): a time-travel-heavy
-  // long-lived session would otherwise accumulate one entry per version
-  // ever queried, unbounded.
-  private val schemaOfCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Boolean),
-    java.lang.ref.SoftReference[(VersionFp, Inferred)]]()
-
-  /** Project `df` onto a declared schema: matching columns cast to the
-    * declared type (identity for unevolved columns, a widening cast
-    * after UpdateColumnType), absent columns null-filled — the read-side
-    * half of [[evolveSchema]]'s contract. */
-  private[graft] def alignTo(df: DataFrame, decl: StructType): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val have = df.columns.toSet
-    df.select(decl.fields.toSeq.map { f =>
-      if (have(f.name)) col(f.name).cast(f.dataType).as(f.name)
-      else lit(null).cast(f.dataType).as(f.name)
-    }: _*)
-  }
-
-  private def encodeSchema(s: StructType): String =
-    java.util.Base64.getEncoder.encodeToString(
-      s.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-
-  private def decodeSchema(b64: String): StructType =
-    org.apache.spark.sql.types.DataType.fromJson(
-      new String(java.util.Base64.getDecoder.decode(b64),
-        java.nio.charset.StandardCharsets.UTF_8)).asInstanceOf[StructType]
+  /** Column names and types — what a schema check compares. Not their
+    * order: files are read by name, and the declared schema orders the
+    * columns of every read. */
+  private def shape(s: StructType): Set[(String, org.apache.spark.sql.types.DataType)] =
+    s.fields.iterator.map(f => (f.name, f.dataType)).toSet
 
   // ── column mapping (rename/drop as metadata — Delta's public design) ─
   //
@@ -730,19 +586,21 @@ object SnapshotLake extends LakeCheckpoints {
     else preds.map(p => p.copy(col = m.getOrElse(p.col, p.col)))
   }
 
-  /** The declared schema of version `v` (head when None), if any
-    * `evolve` commit at-or-below it set one. */
+  /** The declared schema of version `v` (head when None), metadata
+    * included; None when the lake has no commit yet. */
   def declaredSchema(root: String,
                      version: Option[Long] = None): Option[StructType] =
-    version.orElse(currentVersion(root))
-      .flatMap(v => resolve(root, v)._1.schemaB64).map(decodeSchema)
+    version.orElse(currentVersion(root)).flatMap(v => resolve(root, v)._1.schemaB64)
+      .map(b => org.apache.spark.sql.types.DataType.fromJson(new String(
+        java.util.Base64.getDecoder.decode(b), java.nio.charset.StandardCharsets.UTF_8))
+        .asInstanceOf[StructType])
 
   /** Commit `newSchema` as the lake's DECLARED schema — a metadata-only
     * `evolve` version (no file changes, CAS-retried like any commit):
-    * the write-side twin of the mergeSchema read contract, backing SQL
+    * the metadata-only twin of an auto-merging append, backing SQL
     * `ALTER TABLE … ADD COLUMN` through the catalog. Evolution is
-    * ADDITIVE/WIDENING only, validated against the current declared (or
-    * on-file) schema: every existing column must survive under its name
+    * ADDITIVE/WIDENING only, validated against the current declared
+    * schema: every existing column must survive under its name
     * with its type unchanged or safely widened — drops and renames are
     * rewrites, not metadata commits, and are refused here. Readers at
     * any version ≥ this commit see the declared column set (old files
@@ -765,33 +623,26 @@ object SnapshotLake extends LakeCheckpoints {
     * survives (widened where the incoming data is wider; the lake type
     * stands where the data is narrower or absent), and data-only
     * columns append as nullable. Irreconcilable types refuse. */
-  private[graft] def mergeForWrite(lake: StructType,
-                                   data: StructType): StructType = {
-    val merged = lake.fields.map { f =>
+  private def mergeForWrite(lake: StructType, data: StructType): StructType =
+    StructType(lake.fields.map { f =>
       data.fields.find(_.name == f.name) match {
-        case Some(d) if d.dataType == f.dataType => f
-        case Some(d) if Widens((f.dataType, d.dataType)) =>
-          f.copy(dataType = d.dataType)
-        case Some(d) if Widens((d.dataType, f.dataType)) => f
-        case Some(d) => throw new IllegalArgumentException(
-          s"mergeSchema cannot reconcile column '${f.name}': lake " +
-            s"${f.dataType.simpleString} vs append ${d.dataType.simpleString}")
-        case None => f // absent from the append: null-fills at write
+        case Some(d) if Widens((f.dataType, d.dataType)) => f.copy(dataType = d.dataType)
+        case Some(d) if d.dataType != f.dataType && !Widens((d.dataType, f.dataType)) =>
+          throw new IllegalArgumentException(
+            s"mergeSchema cannot reconcile column '${f.name}': lake " +
+              s"${f.dataType.simpleString} vs append ${d.dataType.simpleString}")
+        case _ => f // the same or a narrower type, or absent: null-fills at write
       }
-    } ++ data.fields.filterNot(d => lake.fieldNames.contains(d.name))
-      .map { d =>
-        val nf = d.copy(nullable = true)
-        // a mapped lake's new column gets a physical name no file has
-        // ever used — name reuse after a drop can't resurface old data
-        if (isMapped(lake)) stampFresh(nf) else nf
-      }
-    StructType(merged)
-  }
+    } ++ data.fields.filterNot(d => lake.fieldNames.contains(d.name)).map { d =>
+      val nf = d.copy(nullable = true)
+      // a mapped lake's new column gets a physical name no file has
+      // ever used — name reuse after a drop can't resurface old data
+      if (isMapped(lake)) stampFresh(nf) else nf
+    })
 
   def evolveSchema(spark: SparkSession, root: String,
                    newSchema: StructType,
                    allowMissing: Boolean = false): Long = {
-    val widens = Widens
     require(newSchema.fields.map(_.name).distinct.length ==
       newSchema.fields.length, "evolved schema repeats a logical name")
     require(newSchema.fields.map(physNameOf).distinct.length ==
@@ -799,7 +650,7 @@ object SnapshotLake extends LakeCheckpoints {
     commitLoop(root) { head =>
       val cur = head.getOrElse(throw new IllegalStateException(
         s"nothing to evolve at $root (no committed version)"))
-      val before = declaredOrInferred(spark, root, cur)
+      val before = schemaAt(root, Some(cur))
       // continuity is PHYSICAL: a renamed column survives under its
       // physical name (metadata-only), while on an unmapped schema the
       // physical name IS the logical name — the historical rule exactly
@@ -808,7 +659,7 @@ object SnapshotLake extends LakeCheckpoints {
         afterByPhys.get(physNameOf(f)) match {
           case Some(after) =>
             require(after.dataType == f.dataType ||
-              widens((f.dataType, after.dataType)),
+              Widens((f.dataType, after.dataType)),
               s"schema evolution cannot change '${f.name}' from " +
                 s"${f.dataType.simpleString} to ${after.dataType.simpleString} " +
                 "— only widening casts evolve as metadata")
@@ -836,22 +687,6 @@ object SnapshotLake extends LakeCheckpoints {
     }
   }
 
-  /** Version `v`'s declared schema, or the merged inferred one when no
-    * evolve commit has declared any — what an evolution must keep. */
-  private def declaredOrInferred(spark: SparkSession, root: String,
-                                 v: Long): StructType =
-    declaredSchema(root, Some(v)).getOrElse {
-      if (files(root, v).isEmpty) new StructType()
-      else schemaOf(spark, root, Some(v), mergeSchema = true)
-    }
-
-  /** The head's [[declaredOrInferred]] schema — the base a mapping DDL
-    * stamps. */
-  private def currentDeclaredOrInferred(spark: SparkSession,
-                                        root: String): StructType =
-    declaredOrInferred(spark, root, currentVersion(root).getOrElse(
-      throw new IllegalStateException(s"no committed version at $root — nothing to alter")))
-
   /** `ALTER TABLE … RENAME COLUMN` as a METADATA-ONLY commit (Delta's
     * column-mapping rename): enables the mapping if needed (stamping
     * every field with the physical name its files already use), changes
@@ -867,7 +702,7 @@ object SnapshotLake extends LakeCheckpoints {
       s"column mapping and the change data feed refuse each other: $root " +
         "has CDF enabled, and a rename would break the feed's frozen " +
         "per-version column names")
-    val base = stampAll(currentDeclaredOrInferred(spark, root))
+    val base = stampAll(schemaAt(root))
     require(base.fieldNames.contains(from), s"no column '$from' to rename")
     require(!base.fieldNames.contains(to),
       s"cannot rename '$from' to '$to': the name is taken")
@@ -887,7 +722,7 @@ object SnapshotLake extends LakeCheckpoints {
       s"column mapping and the change data feed refuse each other: $root " +
         "has CDF enabled, and a drop would break the feed's frozen " +
         "per-version column names")
-    val base = stampAll(currentDeclaredOrInferred(spark, root))
+    val base = stampAll(schemaAt(root))
     require(base.fieldNames.contains(name), s"no column '$name' to drop")
     require(base.fields.length > 1,
       s"cannot drop '$name': a table needs at least one column")
@@ -895,37 +730,11 @@ object SnapshotLake extends LakeCheckpoints {
       StructType(base.fields.filterNot(_.name == name)), allowMissing = true)
   }
 
-  /** Spark's parquet read of a listing, behind [[schemaOf]]'s footer
-    * inference only (rows are read by the connector). Files of
-    * partitioned commits ([[appendPartitioned]],
-    * `data/commit=<uuid>/<p=v>/...`) read through basePath-anchored
-    * partition discovery, which re-attaches the hive-encoded partition
-    * columns (plus the synthetic commit marker, dropped) from the
-    * explicit file list; plain files (`data/<uuid>/...`) read directly.
-    * A MIXED listing — a plain append into a partitioned lake, or a
-    * Z-order rewrite that stored the partition columns back as data
-    * columns — unions the two sides by name, absent columns as NULL: the
-    * same contract as mergeSchema evolution, and what keeps partition
-    * discovery from ever seeing conflicting directory structures. */
-  private def readListing(spark: SparkSession, root: String, rel: Seq[String],
-                          mergeSchema: Boolean = false): DataFrame = {
-    val (part, plain) = rel.partition(_.startsWith("data/commit="))
-    def reader = spark.read.option("mergeSchema", mergeSchema.toString)
-    val sides = Seq(
-      if (part.isEmpty) None
-      else Some(reader.option("basePath", Paths.get(root, "data").toString)
-        .parquet(part.map(f => Paths.get(root, f).toString): _*).drop("commit")),
-      if (plain.isEmpty) None
-      else Some(reader.parquet(plain.map(f => Paths.get(root, f).toString): _*))
-    ).flatten
-    sides.reduce(_.unionByName(_, allowMissingColumns = true))
-  }
-
   /** Partition columns of a partitioned listing, from its first file's
     * path segments (`data/commit=<uuid>/p1=v1/p2=v2/part-*.parquet` →
     * Seq(p1, p2)); empty for plain listings. */
   private def partColsOf(rel: Seq[String]): Seq[String] =
-    rel.find(isPartitioned).fold(Seq.empty[String])(
+    rel.find(_.startsWith("data/commit=")).fold(Seq.empty[String])(
       graft.sources.GraftLakeScan.partTupleOf(_).map(_._1))
 
   /** Merge-on-read DELETE: commit `keys` (one column, named for the
@@ -951,24 +760,6 @@ object SnapshotLake extends LakeCheckpoints {
     }
   }
 
-  /** `df` with its columns under their PHYSICAL names (one simultaneous
-    * select, so even swap-shaped mappings translate correctly) — every
-    * data write funnels through here, which is what keeps the
-    * physical-name invariant: files only ever carry physical names.
-    * Identity on an unmapped lake. Columns outside the mapping (new
-    * mergeSchema columns, whose fresh stamp rides the SAME commit's
-    * declared schema) pass through unchanged. */
-  private def toPhysical(df: DataFrame, root: String,
-                         declare: Option[StructType] = None): DataFrame = {
-    // a commit that DECLARES a schema translates by that schema's own
-    // mapping (an auto-merge's fresh column stamp rides this commit, not
-    // the head); everything else translates by the head mapping
-    val m = declare.map(mappingOf).getOrElse(columnMapping(root))
-    if (m.isEmpty) df
-    else df.select(df.columns.toSeq.map(c =>
-      org.apache.spark.sql.functions.col(c).as(m.getOrElse(c, c))): _*)
-  }
-
   /** THE data write every commit's new files come from: rows land in a
     * fresh [[newDataDir]], or — with `partCols` — hive-partitioned under
     * `data/commit=<uuid>/<p1=v1>/.../part-*.parquet`, the commit marker
@@ -977,20 +768,27 @@ object SnapshotLake extends LakeCheckpoints {
     * discovery and dropped by readers). One Spark job of the lake's file
     * writer ([[graft.sources.GraftLakeDataWriter]]) writes them, and its
     * tasks report each file with its row count and index stats, so the
-    * commit lists no directory and opens no footer. Returns the written
-    * files with their row total, not yet in any manifest. */
+    * commit lists no directory and opens no footer. Every data write
+    * funnels through here, which keeps the physical-name invariant:
+    * files only ever carry PHYSICAL column names (one simultaneous
+    * select, so even swap-shaped mappings translate correctly). An
+    * append's names come from the schema its check fixed (an
+    * auto-merge's fresh column stamps ride its own commit, not the
+    * head); every other write's from the head. Returns the written files
+    * with their row total, not yet in any manifest. */
   private def writeData(df0: DataFrame, root: String,
                         index: IndexSpec = IndexSpec.none,
-                        declare: Option[StructType] = None,
+                        admitted: Option[Admitted] = None,
                         partCols: Seq[String] = Nil): Staged = {
-    val m = declare.map(mappingOf).getOrElse(columnMapping(root))
+    val m = admitted.map(a => mappingOf(a.target)).getOrElse(columnMapping(root))
     val idx = physicalIndex(index, m)
-    val df = toPhysical(df0, root, declare)
+    val df = if (m.isEmpty) df0 else df0.select(df0.columns.toSeq.map(c =>
+      org.apache.spark.sql.functions.col(c).as(m.getOrElse(c, c))): _*)
     val sub = if (partCols.isEmpty) newDataDir() else s"data/commit=${UUID.randomUUID()}"
     val written = GraftLakeDataWriter.write(df,
       Paths.get(root).toAbsolutePath.toString, sub,
       partCols.map(c => m.getOrElse(c, c)), idx.statsCols)
-    indexAndCount(df.sparkSession, root, written, idx)
+    indexAndCount(df.sparkSession, root, written, idx).copy(admitted = admitted)
   }
 
   private val lastDataDirMillis = new java.util.concurrent.atomic.AtomicLong
@@ -999,11 +797,8 @@ object SnapshotLake extends LakeCheckpoints {
     * streaming sink's epoch — `data/t<epoch millis as 12 hex
     * digits>-<uuid>`: the names sort in write order, and after every
     * earlier form of data directory (random-UUID hex, `commit=<uuid>`,
-    * `stream-<id>-e<N>`), so the files of a solo append always sort after
-    * the footer version v−1's schema was inferred from and [[schemaOf]]
-    * inherits that inference. The millis strictly increase within the
-    * JVM, so a clock step back cannot reorder two commits of one
-    * writer. */
+    * `stream-<id>-e<N>`). The millis strictly increase within the JVM,
+    * so a clock step back cannot reorder two commits of one writer. */
   private[graft] def newDataDir(): String = {
     val t = lastDataDirMillis.updateAndGet(p => math.max(p + 1, System.currentTimeMillis()))
     f"data/t$t%012x-${UUID.randomUUID()}"
@@ -1145,15 +940,20 @@ object SnapshotLake extends LakeCheckpoints {
     * file set through the normal CAS/checkpoint path without the data
     * write — what lets a synthetic million-file
     * manifest exercise resolution/pruning/planning at a scale no local
-    * data generation could reach. Sidecars are the caller's job. */
+    * data generation could reach. Sidecars are the caller's job. With
+    * `schema`, the files hold rows of it: the lake's first commit
+    * declares it, and a later commit must match the head's. */
   private[graft] def commitSynthetic(root: String, rel: Seq[String],
-                                     rows: Long): Long =
-    publish(root, Staged(rel, rows))
+                                     rows: Long,
+                                     schema: Option[StructType] = None): Long =
+    publish(root, Staged(rel, rows, schema.map(declaring)))
 
   /** One commit's CHANGE — the content of its log record: files and
     * tombstone files added/removed against `base`, the rows it added
-    * (-1 = unknown), an optional declared schema, and its idempotence
-    * tags. Bytes are O(this change), never O(table). */
+    * (-1 = unknown), the schema it declares (a lake's first commit, an
+    * overwrite, a clone, an evolution; later versions carry the last
+    * one forward), and its idempotence tags. Bytes are O(this change),
+    * never O(table). */
   private[etl] final case class Change(op: String, base: Long,
                                        addedRows: Long = -1L,
                                        add: Seq[String] = Nil,
@@ -1221,7 +1021,8 @@ object SnapshotLake extends LakeCheckpoints {
       else ""
     val rowsField = if (c.addedRows >= 0) s""""addedRows":${c.addedRows},""" else ""
     val schemaField =
-      c.schema.map(d => s""""schemaB64":"${encodeSchema(d)}",""").getOrElse("")
+      c.schema.map(d => s""""schemaB64":"${java.util.Base64.getEncoder.encodeToString(
+        d.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))}",""").getOrElse("")
     val json =
       s"""{"version":$version,"op":"${c.op}",$tagField$rowsField$schemaField""" +
         s""""base":${c.base},"add":${arr(c.add)},"remove":${arr(c.remove)},""" +
@@ -1275,24 +1076,94 @@ object SnapshotLake extends LakeCheckpoints {
   /** Append `df` as a new snapshot version: new data files + (current
     * snapshot's files ∪ new files) manifest, CAS-retried against
     * concurrent committers. Returns the committed version. The data write
-    * happens ONCE; only the (tiny) manifest commit loops.
-    * `declareSchema` rides the SAME commit record as the files (the
-    * schemaB64 field any record may carry): an auto-evolving append
-    * (the write option `mergeSchema=true`) publishes its schema and its
-    * data in ONE atomic manifest link — a crash can never leave the
-    * lake evolved with no data landed, Delta's one-commit contract. */
+    * happens ONCE; only the (tiny) manifest commit loops. The schema
+    * follows [[admit]]'s rule: `df` must have the lake's column names and
+    * types, or with `mergeSchema` (the connector's write option —
+    * Delta's autoMerge) the lake evolves to the union, declared on the
+    * SAME commit record as the files, so a crash can never leave the lake
+    * evolved with no data landed. */
   def append(df: DataFrame, root: String,
              index: IndexSpec = IndexSpec.none,
-             declareSchema: Option[StructType] = None): Long = {
-    val w = writeData(df, root, index, declareSchema)
-    commitLoop(root)(appendOf(w, declareSchema))
+             mergeSchema: Boolean = false): Long = {
+    val (data, a) = admit(df, root, mergeSchema)
+    publish(root, writeData(data, root, index, Some(a)))
   }
 
-  /** An append's change: only this commit's files — O(change), no state
-    * resolution on the append path at all. */
-  private def appendOf(w: Staged, declare: Option[StructType] = None)(
-                       head: Option[Long]): Change =
-    Change("append", head.getOrElse(0L), w.rows, w.files, schema = declare)
+  /** An append's schema as its pre-write check fixed it: `seen`, the
+    * head's declared schema the check read (None on an empty lake), and
+    * `declare`, what its commit declares while the head still holds
+    * `seen` — the written schema on an empty lake, the union under
+    * `mergeSchema`, else nothing. */
+  private[graft] final case class Admitted(seen: Option[StructType],
+                                           declare: Option[StructType],
+                                           merge: Boolean = false) {
+    /** The schema the files are written for. */
+    def target: StructType = declare.orElse(seen).get
+  }
+
+  /** The admission of rows of `written` onto an empty lake. */
+  private def declaring(written: StructType): Admitted = Admitted(None, Some(readShape(written)))
+
+  /** THE append schema rule, run before any file is written (every append
+    * path, the group commits, the connector and its sink follow it): a
+    * lake's first commit declares the written schema, with `partCols` —
+    * a partitioned append's — after the data columns, the order partition
+    * discovery gives; a later append must have the head's column names and
+    * types, or with `mergeSchema` is aligned to the union
+    * [[mergeForWrite]] evolves the lake to. Returns the rows to write. */
+  private def admit(df: DataFrame, root: String, mergeSchema: Boolean = false,
+                    partCols: Seq[String] = Nil): (DataFrame, Admitted) = {
+    val (part, data) = df.schema.fields.partition(f => partCols.contains(f.name))
+    val a = admitted(root, StructType(data ++ partCols.flatMap(c => part.find(_.name == c))),
+      mergeSchema)
+    // absent columns null-fill and narrower ones widen to the target
+    (if (shape(df.schema) == shape(a.target)) df
+     else df.select(a.target.fields.toSeq.map(f =>
+       (if (df.columns.contains(f.name)) df(f.name) else org.apache.spark.sql.functions.lit(null))
+         .cast(f.dataType).as(f.name)): _*), a)
+  }
+
+  /** [[admit]]'s rule for rows of `written` at the current head. */
+  private[graft] def admitted(root: String, written: StructType,
+                              mergeSchema: Boolean = false): Admitted = {
+    val lake = currentVersion(root).map(v => schemaAt(root, Some(v)))
+    Admitted(lake, declareOver(root, lake, written, mergeSchema), mergeSchema)
+  }
+
+  /** What an append of rows of `written` declares over the declared
+    * schema `lake` — the rule itself. */
+  private def declareOver(root: String, lake: Option[StructType], written: StructType,
+                          merge: Boolean): Option[StructType] = lake match {
+    case None => Some(readShape(written))
+    case Some(l) if shape(l) == shape(written) => None
+    case Some(l) if merge =>
+      val to = mergeForWrite(l, written)
+      Option.when(shape(to) != shape(l))(to)
+    case _ => throw mismatch(root, written, lake)
+  }
+
+  private def mismatch(root: String, written: StructType, lake: Option[StructType]) =
+    new IllegalArgumentException(s"append schema ${readShape(written).simpleString} " +
+      s"does not match lake schema ${lake.fold("(none)")(readShape(_).simpleString)} at " +
+      s"$root — append with mergeSchema (the connector's write option mergeSchema=true) " +
+      "to evolve the lake to the union (additions/widenings only)")
+
+  /** The schema an admitted append's commit declares over `lake`, the
+    * declared schema at the head of a commit attempt. While `lake` is
+    * what the check saw, its answer stands. Once another writer has
+    * changed it, the check runs again against it, for the files as
+    * written — unless a column mapping could name their columns
+    * differently, when it refuses — and a refused attempt leaves the
+    * files orphans for [[vacuum]]. */
+  private[etl] def declareOn(root: String, lake: Option[StructType],
+                             a: Admitted): Option[StructType] =
+    if (lake == a.seen) a.declare
+    else lake match {
+      case Some(l) if mappingOf(l) != mappingOf(a.target) ||
+          (isMapped(l) || isMapped(a.target)) && shape(l) != shape(a.target) =>
+        throw mismatch(root, a.target, lake)
+      case _ => declareOver(root, lake, a.target, a.merge)
+    }
 
   /** [[append]] through the in-JVM group-commit coalescer
     * ([[GroupCommit]]): the data write is this caller's own distributed
@@ -1304,13 +1175,15 @@ object SnapshotLake extends LakeCheckpoints {
     * concurrently (parallel `foreachBatch` sinks, fan-in ETL legs) —
     * at object-store latency the manifest head serializes links at
     * ~1/(k·RTT), and coalescing is the only protocol-level lever
-    * (CommitContention phase 5). Untagged plain appends only: tagged /
-    * DML / schema-declaring commits need their per-record semantics
-    * and keep the solo CAS paths. */
+    * (CommitContention phase 5). Plain appends only: DML and
+    * auto-merging commits need their per-record semantics and keep the
+    * solo CAS paths. The schema rule is [[append]]'s without
+    * `mergeSchema`; the leader re-checks each member at its head. */
   def appendGrouped(df: DataFrame, root: String,
                     index: IndexSpec = IndexSpec.none): Long = {
-    val w = writeData(df, root, index)
-    GroupCommit.commit(root, w.files, w.rows)
+    val (data, a) = admit(df, root)
+    val w = writeData(data, root, index, Some(a))
+    GroupCommit.commit(root, w.files, w.rows, w.admitted)
   }
 
   /** [[appendOnce]] through the group-commit coalescer: exactly-once
@@ -1329,8 +1202,9 @@ object SnapshotLake extends LakeCheckpoints {
   def appendOnceGrouped(df: DataFrame, root: String, tag: String,
                         index: IndexSpec = IndexSpec.none): Long = {
     findTag(root, checkTag(tag)).getOrElse { // bad tags fail before enqueue
-      val w = writeData(df, root, index)
-      GroupCommit.commit(root, w.files, w.rows, Some(tag))
+      val (data, a) = admit(df, root)
+      val w = writeData(data, root, index, Some(a))
+      GroupCommit.commit(root, w.files, w.rows, w.admitted, Some(tag))
     }
   }
 
@@ -1338,8 +1212,9 @@ object SnapshotLake extends LakeCheckpoints {
     * [[commitSynthetic]] through the group-commit path. */
   private[graft] def commitSyntheticGrouped(root: String, rel: Seq[String],
                                             rows: Long,
-                                            tag: Option[String] = None): Long =
-    GroupCommit.commit(root, rel, rows, tag)
+                                            tag: Option[String] = None,
+                                            schema: Option[StructType] = None): Long =
+    GroupCommit.commit(root, rel, rows, schema.map(declaring), tag)
 
   /** Replace the whole table with `df` as a new snapshot version: new
     * data files, with EVERY previous live file (and live deletion
@@ -1349,14 +1224,16 @@ object SnapshotLake extends LakeCheckpoints {
     * O(previous state) by nature of the operation; the data write
     * happens once, and only the manifest commit CAS-loops (re-resolving
     * the victim set each attempt, so a racing append's files are
-    * removed too, not resurrected). */
+    * removed too, not resurrected). The commit declares `df`'s schema,
+    * whatever the lake's was: an overwrite replaces the table. */
   def overwrite(df: DataFrame, root: String,
                 index: IndexSpec = IndexSpec.none): Long = {
-    val w = writeData(df, root, index)
+    val a = declaring(df.schema)
+    val w = writeData(df, root, index, Some(a))
     commitLoop(root) { head =>
       Change("overwrite", head.getOrElse(0L), w.rows, w.files,
         remove = head.map(files(root, _)).getOrElse(Nil),
-        removeDel = head.map(deletesOf(root, _)).getOrElse(Nil))
+        removeDel = head.map(deletesOf(root, _)).getOrElse(Nil), schema = a.declare)
     }
   }
 
@@ -1372,7 +1249,10 @@ object SnapshotLake extends LakeCheckpoints {
     * compact / compactSmall) preserve the partitioning; a Z-order
     * rewrite trades it for Morton clustering, storing the partition
     * columns back as data columns. Same CAS/O(change) commit mechanics
-    * as [[append]]. Partition values are hive-encoded by the writer, and
+    * and schema rule as [[append]]; a first commit declares the
+    * partition columns after the data columns, with the types `df` gives
+    * them, and readers convert path values to those types. Partition
+    * values are hive-encoded by the writer, and
     * one that still holds a character a manifest path cannot carry (`,`,
     * which hive escaping keeps) is refused before the link, naming the
     * value — the lake stays at its prior head. */
@@ -1381,7 +1261,8 @@ object SnapshotLake extends LakeCheckpoints {
     require(partCols.nonEmpty, "appendPartitioned needs partition columns")
     require(!df.columns.contains("commit"),
       "'commit' is the reserved partition-discovery marker column")
-    publish(root, writeData(df, root, index, partCols = partCols))
+    val (data, a) = admit(df, root, partCols = partCols)
+    publish(root, writeData(data, root, index, Some(a), partCols))
   }
 
   /** Exactly-once append for REPLAYABLE writers (a streaming
@@ -1402,8 +1283,10 @@ object SnapshotLake extends LakeCheckpoints {
                  index: IndexSpec = IndexSpec.none): Long = {
     // probe BEFORE the write, so a replay writes no data; a racing
     // same-tag writer that wins meanwhile leaves our files orphans
-    findTag(root, checkTag(tag)).getOrElse(
-      publish(root, writeData(df, root, index), Some(tag)))
+    findTag(root, checkTag(tag)).getOrElse {
+      val (data, a) = admit(df, root)
+      publish(root, writeData(data, root, index, Some(a)), Some(tag))
+    }
   }
 
   /** Exactly-once commit of PRE-WRITTEN data files through the
@@ -1418,13 +1301,15 @@ object SnapshotLake extends LakeCheckpoints {
     * semantics are [[appendOnce]]'s: an existing tag wins and the
     * caller's files stay unreferenced orphans for [[vacuum]]. An empty
     * `written` commits an empty tagged version — a no-data epoch still
-    * advances exactly-once state. */
-  def commitStreamedFilesGrouped(spark: SparkSession, root: String,
-                                 written: Seq[(String, FileStats.FileMeta)], tag: String,
-                                 index: IndexSpec = IndexSpec.none): Long = {
+    * advances exactly-once state. `admitted` is the append rule's answer
+    * ([[admitted]]) the writer got before its tasks wrote a file. */
+  private[graft] def commitStreamedFilesGrouped(spark: SparkSession, root: String,
+                                                written: Seq[(String, FileStats.FileMeta)],
+                                                tag: String, admitted: Admitted,
+                                                index: IndexSpec = IndexSpec.none): Long = {
     findTag(root, checkTag(tag)).getOrElse { // bad tags fail before enqueue
       val w = indexAndCount(spark, root, written, index)
-      GroupCommit.commit(root, w.files, w.rows, Some(tag))
+      GroupCommit.commit(root, w.files, w.rows, Some(admitted), Some(tag))
     }
   }
 
@@ -1598,8 +1483,7 @@ object SnapshotLake extends LakeCheckpoints {
   def readPruned(spark: SparkSession, root: String,
                  preds0: Seq[FileStats.Range],
                  version: Option[Long] = None): PrunedScan = {
-    val v = version.orElse(currentVersion(root)).getOrElse(
-      throw new IllegalStateException(s"no committed version at $root"))
+    val v = versionOf(root, version)
     // the index speaks PHYSICAL names; the frame, LOGICAL ones
     val idx = LakeIndex.of(root, v)
     val kept = idx.prune(physPredsAt(root, Some(v), preds0))
@@ -1617,8 +1501,7 @@ object SnapshotLake extends LakeCheckpoints {
                       values: Seq[String],
                       version: Option[Long] = None): PrunedScan = {
     import org.apache.spark.sql.functions.{col, lit}
-    val v = version.orElse(currentVersion(root)).getOrElse(
-      throw new IllegalStateException(s"no committed version at $root"))
+    val v = versionOf(root, version)
     // bloom sidecar files are named for the PHYSICAL column
     val idx = LakeIndex.of(root, v)
     val kept = idx.bloomKeep(
@@ -1793,7 +1676,7 @@ object SnapshotLake extends LakeCheckpoints {
     val removed = (from -- to).toSeq.sorted
     val added = (to -- from).toSeq.sorted
     val carried = (from intersect to).toSeq.sorted
-    val schema = schemaOf(spark, root, Some(toV))
+    val schema = schemaOf(root, Some(toV))
     val cols = schema.fieldNames.toSeq
     // each side is its version's LOGICAL relation: that version's vector applies
     def side(fs: Seq[String], v: Long) =
@@ -2042,7 +1925,9 @@ object SnapshotLake extends LakeCheckpoints {
     * inherit Delta's source-retention caveat. Index sidecars
     * (`_stats.json`, `_bloom_*`, `_rows.json`) link over with their
     * commit dirs, so pruned reads and metadata-only counts work on the
-    * clone unchanged. Returns the clone's version (always 1). */
+    * clone unchanged. The clone's record declares the source version's
+    * schema, column mapping included. Returns the clone's version
+    * (always 1). */
   def cloneTo(srcRoot: String, dstRoot: String,
               version: Option[Long] = None): Long = {
     val v = version.orElse(currentVersion(srcRoot)).getOrElse(
@@ -2050,6 +1935,7 @@ object SnapshotLake extends LakeCheckpoints {
     require(currentVersion(dstRoot).isEmpty,
       s"clone target $dstRoot must have no commits")
     val st = resolve(srcRoot, v)._1
+    val schema = schemaAt(srcRoot, Some(v))
     val all = st.files ++ st.deletes
     all.foreach { rel =>
       val dst = Paths.get(dstRoot, rel)
@@ -2070,7 +1956,7 @@ object SnapshotLake extends LakeCheckpoints {
       }
     }
     if (!tryCommit(dstRoot, 1L,
-        Change("clone", 0L, add = st.files, addDel = st.deletes)))
+        Change("clone", 0L, add = st.files, addDel = st.deletes, schema = Some(schema))))
       throw new IllegalStateException(
         s"clone target $dstRoot was committed to concurrently")
     1L
@@ -2267,8 +2153,8 @@ object SnapshotLake extends LakeCheckpoints {
       when(c <=> lit(false), lit(n))
     }: _*)
     val clean = append(df.filter(not(failAny)), root, index)
-    val w = writeData(df.filter(failAny).withColumn("_violated", viol),
-      quarantineRoot)
+    val (bad, a) = admit(df.filter(failAny).withColumn("_violated", viol), quarantineRoot)
+    val w = writeData(bad, quarantineRoot, admitted = Some(a))
     Expected(clean, if (w.rows == 0L) None else Some(publish(quarantineRoot, w)))
   }
 
@@ -2277,8 +2163,10 @@ object SnapshotLake extends LakeCheckpoints {
     * but appear in NO manifest, invisible to every reader until a commit
     * links them in, plus their total row count (from the footer stats
     * the writer tasks reported — the record's `addedRows` and bloom
-    * sizing never cost a footer open). */
-  final case class Staged(files: Seq[String], rows: Long)
+    * sizing never cost a footer open). An append's handle carries its
+    * schema admission, which its commit declares or re-checks. */
+  final case class Staged(files: Seq[String], rows: Long,
+                          private[graft] val admitted: Option[Admitted] = None)
 
   /** WRITE-AUDIT-PUBLISH stage 1 (Iceberg's WAP pattern): write `df`'s
     * data files and index sidecars exactly as [[append]] would — but
@@ -2291,22 +2179,30 @@ object SnapshotLake extends LakeCheckpoints {
     * its files are unreferenced orphans [[vacuum]] reaps, the same
     * guarantee the exactly-once writers lean on). */
   def stageAppend(df: DataFrame, root: String,
-                  index: IndexSpec = IndexSpec.none): Staged =
-    writeData(df, root, index)
+                  index: IndexSpec = IndexSpec.none): Staged = {
+    val (data, a) = admit(df, root)
+    writeData(data, root, index, Some(a))
+  }
 
   /** The audit view of a staged batch: exactly its rows, read from the
-    * staged files (production readers still see nothing). Union with
-    * [[read]] for the post-publish preview. */
+    * staged files under the schema they were admitted with (production
+    * readers still see nothing). Union with [[read]] for the
+    * post-publish preview. */
   def readStaged(spark: SparkSession, root: String, staged: Staged): DataFrame =
-    readFiles(spark, root, staged.files)
+    readSubset(spark, root, currentVersion(root), staged.files, deletes = false,
+      staged.admitted.map(a => readShape(a.target)))
 
   /** Publish an audited staged batch as a normal append commit — same
     * CAS loop, O(change) record. With `tag`, publication is exactly-once
     * ([[appendOnce]]'s contract): a replayed publish of the same tag
     * returns the existing version and the duplicate staged files stay
-    * orphans for vacuum. */
+    * orphans for vacuum. The change is only this commit's files —
+    * O(change) — and the schema its admission declares at the head. */
   def publish(root: String, staged: Staged, tag: Option[String] = None): Long =
-    commitLoop(root, tag)(appendOf(staged))
+    commitLoop(root, tag) { head =>
+      Change("append", head.getOrElse(0L), staged.rows, staged.files, schema =
+        staged.admitted.flatMap(declareOn(root, head.map(v => schemaAt(root, Some(v))), _)))
+    }
 
   /** Drop a rejected staged batch: delete its files, sidecars, and
     * commit dirs. Deterministic cleanup for the audit-failed path;
@@ -2339,10 +2235,8 @@ object SnapshotLake extends LakeCheckpoints {
     * full-state manifests predate the change-record shape and are
     * rejected. */
   def commitChange(root: String, v: Long): (String, Seq[String]) = {
-    val r = readRecord(root, v)
-    require(r.legacyFull.isEmpty,
-      s"v$v is a legacy full-state manifest; the tail source needs change records")
-    (r.op, r.add)
+    val (op, add, _, _) = commitDelta(root, v)
+    (op, add)
   }
 
   /** One commit's FULL delta: (op, added files, removed files, added
@@ -2358,16 +2252,10 @@ object SnapshotLake extends LakeCheckpoints {
   /** Read an explicit set of lake files — e.g. a commit's added files
     * ([[commitChange]]) or a staged batch — with no deletion vector
     * applied. Partitioned files carry their path-encoded columns. The
-    * columns are the head's declared schema (logical names) when the
-    * lake declares one, else the files' own inference. */
+    * columns are the head's schema. */
   def readFiles(spark: SparkSession, root: String,
-                rel: Seq[String]): DataFrame = {
-    val head = currentVersion(root)
-    val schema = head.filter(v => declaredSchema(root, Some(v)).isDefined || rel.isEmpty)
-      .map(v => schemaOf(spark, root, Some(v)))
-      .getOrElse(footerInference(spark, root, rel, mergeSchema = false).schema)
-    readSubset(spark, root, head, rel, deletes = false, Some(schema))
-  }
+                rel: Seq[String]): DataFrame =
+    readSubset(spark, root, currentVersion(root), rel, deletes = false)
 
   /** Drop manifests older than the newest `keepVersions`, then delete
     * every data file under `data/` that no RETAINED manifest references

@@ -399,7 +399,8 @@ object LakeFixtures {
         col("id").as("o_custkey"),
         lit("Z").as("o_orderstatus"),
         (lit(100.0) + col("id")).as("o_totalprice"),
-        lit("2024-04-01 00:00:00").cast("timestamp").as("o_orderdate"),
+        // the lake's at-rest timestamp flavor (testdata generations vary)
+        lit("2024-04-01 00:00:00").cast(od.schema("o_orderdate").dataType).as("o_orderdate"),
         lit("CLONE").as("o_orderpriority")), dst, idx)
       SnapshotLake.deleteWhere(s, src,
         od.filter(pmod(col("o_orderkey"), lit(99)) === 0).select("o_orderkey"))
@@ -966,10 +967,12 @@ object LakeFixtures {
       // The build lands in a process-private temp dir ATOMICALLY renamed
       // into place, so two racing JVMs can never observe a half-built
       // lake — whichever rename lands second just discards its copy.
+      // The format tag names the lake layout the path holds: a lake cached
+      // before every commit declared its schema is never found again.
       val h = f"${(scala.util.hashing.MurmurHash3.stringHash(d) ^
         inputFingerprint(d)) & 0x7fffffff}%08x"
       val base = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), s"graft-fixture-bloom-$h")
+        System.getProperty("java.io.tmpdir"), s"graft-fixture-bloom-declared-$h")
       val root = base.resolve("lake").toString
       if (SnapshotLake.currentVersion(root).contains(4L)) root
       else {

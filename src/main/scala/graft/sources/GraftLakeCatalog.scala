@@ -182,7 +182,7 @@ class GraftLakeCatalog extends TableCatalog
     val schema =
       if (SnapshotLake.currentVersion(root).isEmpty)
         declaredSchema(ident).getOrElse(new StructType())
-      else SnapshotLake.schemaOf(SparkSession.active, root, v)
+      else SnapshotLake.schemaOf(root, v)
     new GraftLakeTable(root, schema, versionAsOf = v)
   }
 
@@ -231,8 +231,8 @@ class GraftLakeCatalog extends TableCatalog
         true
     }
 
-  /** SQL DDL schema evolution — the write-side twin of the mergeSchema
-    * read contract: `ALTER TABLE t ADD COLUMN(S) …` (and a widening
+  /** SQL DDL schema evolution — the metadata-only twin of an
+    * auto-merging append: `ALTER TABLE t ADD COLUMN(S) …` (and a widening
     * `ALTER COLUMN … TYPE`) maps to a metadata-only `evolve` commit
     * ([[SnapshotLake.evolveSchema]]). The new column is visible at the
     * new version before any file carries it (old files null-fill); a
@@ -274,9 +274,8 @@ class GraftLakeCatalog extends TableCatalog
       Files.write(dirOf(ident).resolve("_schema.json"),
         evolved.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     } else {
-      val cur = SnapshotLake.declaredSchema(root)
-        .getOrElse(SnapshotLake.schemaOf(spark, root))
-      SnapshotLake.evolveSchema(spark, root, applyChanges(cur, changes))
+      SnapshotLake.evolveSchema(spark, root,
+        applyChanges(SnapshotLake.schemaAt(root), changes))
     }
     load(ident, None)
   }
@@ -419,14 +418,8 @@ final class GraftLakeMetaTable(root: String, kind: String,
       val v = versionAsOf.orElse(SnapshotLake.currentVersion(root))
         .getOrElse(return Array.empty)
       val inv = inventory(v)
-      val spark = SparkSession.active
-      // an emptied version (delete-all) still has a detail row: the
-      // declared schema if one exists, else no schema to report
-      val schemaStr = SnapshotLake.declaredSchema(root, Some(v))
-        .map(_.simpleString).getOrElse {
-          if (inv.isEmpty) ""
-          else SnapshotLake.schemaOf(spark, root, Some(v)).simpleString
-        }
+      // an emptied version (delete-all) still has its declared schema
+      val schemaStr = SnapshotLake.schemaOf(root, Some(v)).simpleString
       Array(new GenericInternalRow(Array[Any](
         UTF8String.fromString(root), v, inv.size.toLong,
         inv.iterator.map(_._2).sum,

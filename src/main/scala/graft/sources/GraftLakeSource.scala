@@ -63,7 +63,7 @@ import graft.etl.{FileStats, LakeIndex, SnapshotLake}
   *     built-in parquet source — one footer open per file, no per-value
   *     boxing. Hive partition values ride as constant vectors
   *     (`initBatch`), and a column a file predates materializes as
-  *     nulls, the mergeSchema-evolution contract.
+  *     nulls, the schema-evolution contract.
   *   - **Deletion vectors**: a version with live key tombstones reads
   *     through the row-based path — each task loads the version's
   *     tombstone key set (the per-task analog of Delta's per-file DV
@@ -129,17 +129,11 @@ class GraftLakeSource extends TableProvider with DataSourceRegister {
         "readChangeFeed selects its range with startingVersion/" +
           "startingTimestamp/endingVersion — versionAsOf/timestampAsOf " +
           "pin a snapshot, not a change range")
-      return GraftLakeCdf.cdfSchema(
-        SnapshotLake.schemaOf(SparkSession.active, root))
+      return GraftLakeCdf.cdfSchema(SnapshotLake.schemaOf(root))
     }
-    // resolved from the declared schema or one footer per directory —
-    // never a DataFrame over the full listing (SnapshotLake.schemaOf:
-    // at a million files the full-listing construction IS the planning
-    // wall, the ManifestCeiling measurement's first finding)
-    SnapshotLake.schemaOf(SparkSession.active, root, versionOf(options),
-      // opt-in schema-on-read evolution, the q156 contract: the scan
-      // null-fills a column any one file predates
-      mergeSchema = options.getBoolean("mergeSchema", false))
+    // the pinned version's declared schema, read from the log — no data
+    // file is opened to plan a load
+    SnapshotLake.schemaOf(root, versionOf(options))
   }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
@@ -403,44 +397,17 @@ final class GraftLakeWriteBuilder(root: String,
       new InsertableRelation {
         override def insert(data: org.apache.spark.sql.DataFrame,
                             overwrite: Boolean): Unit = {
-          val replacing = overwriteAll || overwrite
-          val autoMerge = options.getBoolean("mergeSchema", false)
-          // schema enforcement lives HERE: supportsExternalMetadata
-          // means Spark hands the writer the query's own schema, so
-          // analysis never compares it to the table's — an append that
-          // doesn't match the lake (names AND types, Delta's contract)
-          // must fail before any file is written. Overwrite replaces
-          // the table, so any schema is legal. The write option
-          // `mergeSchema=true` (Delta's autoMerge) instead EVOLVES the
-          // lake to (lake ∪ append) — additions and widenings DECLARED
-          // ON THE APPEND COMMIT ITSELF (one atomic manifest link
-          // carrying both schemaB64 and the files), so a crash can
-          // never leave the lake evolved with no data landed and no
-          // reader can observe the schema without its commit.
-          // The lake's schema comes from metadata, the same
-          // SnapshotLake.schemaOf a `load` resolves: the declared schema,
-          // or the footer inference version v−1 cached, extended by this
-          // head's own commit — never a DataFrame over every live file,
-          // so the check costs O(change), not O(history).
-          var payload = data
-          var declare: Option[StructType] = None
-          if (!replacing)
-            SnapshotLake.currentVersion(root).foreach { v =>
-              val lake = SnapshotLake.schemaOf(data.sparkSession, root, Some(v))
-              import SnapshotLake.shape
-              if (shape(data.schema) != shape(lake)) {
-                require(autoMerge,
-                  s"append schema ${data.schema.simpleString} does not match " +
-                    s"lake schema ${lake.simpleString} at $root — write with " +
-                    ".option(\"mergeSchema\", \"true\") to evolve the lake " +
-                    "to the union (additions/widenings only)")
-                val evolved = SnapshotLake.mergeForWrite(lake, data.schema)
-                if (shape(evolved) != shape(lake)) declare = Some(evolved)
-                payload = SnapshotLake.alignTo(data, evolved)
-              }
-            }
-          if (replacing) SnapshotLake.overwrite(payload, root, idx)
-          else SnapshotLake.append(payload, root, idx, declare)
+          // supportsExternalMetadata means Spark hands the writer the
+          // query's own schema, so analysis never compares it to the
+          // table's: the lake's append rule does (SnapshotLake.append) —
+          // an append whose column names and types differ from the
+          // lake's fails before any file is written, and the write
+          // option `mergeSchema=true` (Delta's autoMerge) instead evolves
+          // the lake to the union, declared on the append commit itself.
+          // Overwrite replaces the table, its schema included.
+          if (overwriteAll || overwrite) SnapshotLake.overwrite(data, root, idx)
+          else SnapshotLake.append(data, root, idx,
+            mergeSchema = options.getBoolean("mergeSchema", false))
           ()
         }
       }
@@ -1248,9 +1215,9 @@ object GraftLakeScan {
     }
 
   /** One hive-encoded partition value as the Catalyst-internal constant
-    * the column vector carries, converted to the column's RESOLVED type
-    * (the connector's schema came from [[SnapshotLake.schemaOf]]'s
-    * footer inference, so the types are partition discovery's own). */
+    * the column vector carries, converted to the column's type in the
+    * version's declared schema ([[SnapshotLake.schemaOf]]) — the type
+    * the partitioned append wrote, or a widening of it. */
   private[sources] def catalystPartValue(raw: String, dt: DataType): Any = {
     val v = unescapePath(raw)
     if (v == NullPart) null

@@ -255,19 +255,22 @@ final class GraftLakeStreamingWrite(root: String, rootAbs: String,
   import org.apache.spark.sql.connector.write.{PhysicalWriteInfo, WriterCommitMessage}
   import org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory
 
+  // the lake's append rule, checked once at write construction, before
+  // any epoch writes a file: the stream's rows must have the lake's
+  // column names and types (an empty lake's first epoch declares them),
+  // and every epoch commit re-checks at its own head
+  private val admitted = SnapshotLake.admitted(root, schema)
   // files must land under PHYSICAL column names (the column-mapping
   // invariant every reader relies on), and their index keys physical too;
   // resolved once at write construction — the stream's analyzed schema is
   // of this moment's logical names. Identity on unmapped lakes, or before
   // the first commit.
-  private val mapping = SnapshotLake.columnMapping(root)
+  private val mapping = SnapshotLake.mappingOf(admitted.target)
   private val physSchema = org.apache.spark.sql.types.StructType(
     schema.fields.map(f => f.copy(name = mapping.getOrElse(f.name, f.name))))
   private val physIndex = SnapshotLake.physicalIndex(index, mapping)
 
-  // called once per epoch: each epoch writes a fresh time-ordered data
-  // dir, so a streamed commit sorts after every earlier commit of the lake
-  // and schemaOf inherits version v−1's inference as for a plain append
+  // called once per epoch: each epoch writes a fresh time-ordered data dir
   override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory =
     GraftLakeWriterFactory(rootAbs, SnapshotLake.newDataDir(), s"stream-$queryId-",
       physSchema, physIndex.statsCols, hconf)
@@ -282,7 +285,7 @@ final class GraftLakeStreamingWrite(root: String, rootAbs: String,
     // RTT case CommitContention phase 5 prices.
     SnapshotLake.commitStreamedFilesGrouped(
       org.apache.spark.sql.SparkSession.active, root, files,
-      s"stream-$queryId-e$epochId", physIndex)
+      s"stream-$queryId-e$epochId", admitted, physIndex)
     ()
   }
 

@@ -113,15 +113,10 @@ class ColumnMappingSpec extends AnyFunSuite {
       .columns.contains("v"), "the pinned pre-drop version still reads v")
     // auto-merge append re-introducing the NAME: fresh physical name, so
     // the old files' dropped v values must NOT resurface
-    val decl = SnapshotLake.declaredSchema(root).get
-    val evolved = SnapshotLake.mergeForWrite(decl,
-      org.apache.spark.sql.types.StructType(decl.fields :+
-        org.apache.spark.sql.types.StructField("v",
-          org.apache.spark.sql.types.LongType, nullable = true)))
     SnapshotLake.append(spark.range(2000, 2010)
       .select(col("id").as("k"), lit("new").as("tag"),
         lit(7L).as("v")).coalesce(1),
-      root, SnapshotLake.IndexSpec.none, declareSchema = Some(evolved))
+      root, SnapshotLake.IndexSpec.none, mergeSchema = true)
     val after = SnapshotLake.read(spark, root)
     assert(after.filter(col("tag") === "new").agg(sum("v")).head.getLong(0) == 70L)
     assert(after.filter(col("tag") =!= "new").filter(col("v").isNotNull).count() == 0,

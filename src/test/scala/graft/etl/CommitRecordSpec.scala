@@ -47,19 +47,22 @@ class CommitRecordSpec extends AnyFunSuite {
     val lakes = Seq("lake" -> lake, "quarantine" -> quarantine,
       "parts" -> parts, "clone" -> clone)
     val decl = StructType(Seq(StructField("k", LongType), StructField("n", LongType)))
+    // a lake's first commit declares its schema, and an auto-merging
+    // append that widens `n` declares the union
     val kIdx = SnapshotLake.IndexSpec.stats("k")
     var once, wap = -1L
     var staged: SnapshotLake.Staged = null
     def head(root: String) = SnapshotLake.currentVersion(root).getOrElse(0L)
     val steps: Seq[(String, () => Any, Seq[(String, Pin)])] = Seq(
-      ("append", () => SnapshotLake.append(kn(0, 5), lake, kIdx),
-        Seq("lake" -> Pin("append", 0, Nil, 5, 1, 0, 0, 0, false))),
-      ("append declareSchema", () =>
-        SnapshotLake.append(kn(5, 3), lake, kIdx, declareSchema = Some(decl)),
+      ("append", () => SnapshotLake.append(
+        kn(0, 5).withColumn("n", col("n").cast("int")), lake, kIdx),
+        Seq("lake" -> Pin("append", 0, Nil, 5, 1, 0, 0, 0, true))),
+      ("append mergeSchema", () =>
+        SnapshotLake.append(kn(5, 3), lake, kIdx, mergeSchema = true),
         Seq("lake" -> Pin("append", 1, Nil, 3, 1, 0, 0, 0, true))),
       ("appendPartitioned", () => SnapshotLake.appendPartitioned(
         kn(0, 6).withColumn("p", col("k") % 3), parts, Seq("p")),
-        Seq("parts" -> Pin("append", 0, Nil, 6, 3, 0, 0, 0, false))),
+        Seq("parts" -> Pin("append", 0, Nil, 6, 3, 0, 0, 0, true))),
       ("appendOnce", () => { once = SnapshotLake.appendOnce(kn(8, 2), lake, "once-1", kIdx) },
         Seq("lake" -> Pin("append", 2, Seq("once-1"), 2, 1, 0, 0, 0, false))),
       ("appendOnce replay", () =>
@@ -79,7 +82,7 @@ class CommitRecordSpec extends AnyFunSuite {
       ("appendExpect quarantine", () => SnapshotLake.appendExpect(kn(18, 4), lake,
         quarantine, Seq("k_lt_20" -> (col("k") < 20)), kIdx),
         Seq("lake" -> Pin("append", 7, Nil, 2, 1, 0, 0, 0, false),
-          "quarantine" -> Pin("append", 0, Nil, 2, 1, 0, 0, 0, false))),
+          "quarantine" -> Pin("append", 0, Nil, 2, 1, 0, 0, 0, true))),
       ("stageAppend + publish tagged", () => {
         staged = SnapshotLake.stageAppend(kn(22, 3), lake, kIdx)
         wap = SnapshotLake.publish(lake, staged, Some("wap-1"))
@@ -112,14 +115,14 @@ class CommitRecordSpec extends AnyFunSuite {
       ("compact", () => SnapshotLake.compact(spark, lake),
         Seq("lake" -> Pin("compact", 16, Nil, 0, 1, 2, 0, 0, false))),
       ("overwrite", () => SnapshotLake.overwrite(kn(50, 4), lake, kIdx),
-        Seq("lake" -> Pin("overwrite", 17, Nil, 4, 1, 1, 0, 0, false))),
+        Seq("lake" -> Pin("overwrite", 17, Nil, 4, 1, 1, 0, 0, true))),
       ("restore", () => SnapshotLake.restore(lake, 10L),
         Seq("lake" -> Pin("restore", 10, Nil, 0, 9, 1, 1, 0, false))),
       ("evolveSchema", () => SnapshotLake.evolveSchema(spark, lake,
         decl.add(StructField("w", LongType))),
         Seq("lake" -> Pin("evolve", 19, Nil, 0, 0, 0, 0, 0, true))),
       ("cloneTo", () => SnapshotLake.cloneTo(lake, clone),
-        Seq("clone" -> Pin("clone", 0, Nil, -1, 9, 0, 1, 0, false)))
+        Seq("clone" -> Pin("clone", 0, Nil, -1, 9, 0, 1, 0, true)))
     )
     val got = steps.map { case (name, run, _) =>
       val before = lakes.map { case (n, r) => n -> head(r) }.toMap
@@ -160,7 +163,8 @@ class CommitRecordSpec extends AnyFunSuite {
         "merge" -> (() => SnapshotLake.merge(spark, root, kn(1, 1), "k", tag = Some(t))),
         "mergeOnce" -> (() => SnapshotLake.mergeOnce(spark, root, kn(1, 1), "k", t)),
         "commitStreamedFilesGrouped" -> (() =>
-          SnapshotLake.commitStreamedFilesGrouped(spark, root, written, t)))
+          SnapshotLake.commitStreamedFilesGrouped(spark, root, written, t,
+            SnapshotLake.admitted(root, kn(11, 1).schema))))
       for ((name, w) <- writers) {
         intercept[IllegalArgumentException](w())
         assert(SnapshotLake.currentVersion(root).contains(1L), s"$name committed tag '$t'")

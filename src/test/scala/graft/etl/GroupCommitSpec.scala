@@ -38,6 +38,37 @@ class GroupCommitSpec extends AnyFunSuite {
     assert(SnapshotLake.read(spark, root).count() == 3L)
   }
 
+  test("grouped appends of two shapes onto an empty lake: one shape declares, the other fails") {
+    val root = newRoot()
+    val xs = Seq(1L, 2L).toDF("x")
+    val ys = Seq("a", "b").toDF("y")
+    SnapshotLake.setPublisher(root, slowPublisher(50))
+    try {
+      val start = new CountDownLatch(1)
+      val pool = Executors.newFixedThreadPool(4)
+      val results = (0 until 4).map { t =>
+        pool.submit(new java.util.concurrent.Callable[scala.util.Try[Long]] {
+          def call(): scala.util.Try[Long] = {
+            start.await()
+            scala.util.Try(SnapshotLake.appendGrouped(if (t % 2 == 0) xs else ys, root))
+          }
+        })
+      }
+      start.countDown()
+      val got = results.map(_.get(120, TimeUnit.SECONDS))
+      pool.shutdown()
+      val cols = SnapshotLake.read(spark, root).columns.toSeq
+      val won = if (cols == Seq("x")) 0 else 1
+      assert(cols == Seq("x") || cols == Seq("y"), s"one shape declares: $cols")
+      got.zipWithIndex.foreach { case (r, t) =>
+        if (t % 2 == won) assert(r.isSuccess, s"member $t: $r")
+        else assert(r.failed.toOption.exists(_.isInstanceOf[IllegalArgumentException]),
+          s"member $t of the other shape must fail: $r")
+      }
+      assert(SnapshotLake.read(spark, root).count() == 4L)
+    } finally SnapshotLake.clearPublisher(root)
+  }
+
   test("16 simultaneous synthetic commits coalesce under a slow publisher; reconcile exact") {
     val root = newRoot()
     Files.createDirectories(java.nio.file.Paths.get(root))
@@ -295,6 +326,9 @@ class GroupCommitSpec extends AnyFunSuite {
       graft.sources.GraftLakeDataWriter.write(Seq(t * 10L, t * 10L + 1).toDF("x").repartition(1),
         java.nio.file.Paths.get(root).toAbsolutePath.toString, f"data/epoch-q$t")
     }
+    // every query checked its rows against the empty lake: the first
+    // epoch to link declares their schema
+    val admitted = SnapshotLake.admitted(root, Seq(0L).toDF("x").schema)
     SnapshotLake.setPublisher(root, slowPublisher(50))
     try {
       val start = new CountDownLatch(1)
@@ -305,7 +339,7 @@ class GroupCommitSpec extends AnyFunSuite {
         pool.execute { () =>
           start.await()
           versions(t) = SnapshotLake.commitStreamedFilesGrouped(
-            spark, root, rels(t), s"q$t-b0")
+            spark, root, rels(t), s"q$t-b0", admitted)
           done.countDown()
         }
       }
@@ -322,7 +356,7 @@ class GroupCommitSpec extends AnyFunSuite {
         .map(_.getLong(0)).toSet ==
         (0 until n).flatMap(t => Seq(t * 10L, t * 10L + 1)).toSet)
       val replay = SnapshotLake.commitStreamedFilesGrouped(
-        spark, root, rels(2), "q2-b0")
+        spark, root, rels(2), "q2-b0", admitted)
       assert(replay == versions(2) &&
         SnapshotLake.currentVersion(root).contains(head),
         "a replayed epoch must ride, not re-append")

@@ -2,7 +2,7 @@ package graft.etl
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.{IntegerType, LongType, StructField}
+import org.apache.spark.sql.types.{LongType, StructField}
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
@@ -63,8 +63,7 @@ class LakeModelSpec extends AnyFunSuite {
   } yield first +: AppendPartitioned(2, nullPart = true) +: ConnectorAppend(2) +: rest
 
   /** A frame's rows as (k → id-keyed values), ids resolved through the
-    * model's names; partition values compare as longs whatever type
-    * discovery gave them. */
+    * model's names. */
   private def rowsOf(df: DataFrame, m: Model): (Set[String], Map[Long, Map[String, Long]]) = {
     val idOf = m.names.map(_.swap).toMap
     val cols = df.columns.toSeq
@@ -127,13 +126,11 @@ class LakeModelSpec extends AnyFunSuite {
     }
     def frame(rs: Seq[Map[String, Long]]): DataFrame = {
       val ids = m.names.map(_._1)
-      // `p` is written as int, the type partition discovery gives its
-      // path-encoded values, so plain and partitioned files agree on it
       spark.createDataFrame(
-        java.util.Arrays.asList(rs.map(r => Row.fromSeq(ids.map(id => r.get(id).map(x =>
-          if (id == "p") Int.box(x.toInt) else Long.box(x)).orNull))): _*),
-        org.apache.spark.sql.types.StructType(ids.map(id => StructField(m.nameOf(id),
-          if (id == "p") IntegerType else LongType, nullable = true))))
+        java.util.Arrays.asList(rs.map(r => Row.fromSeq(ids.map(id =>
+          r.get(id).map(Long.box).orNull))): _*),
+        org.apache.spark.sql.types.StructType(ids.map(id =>
+          StructField(m.nameOf(id), LongType, nullable = true))))
         .coalesce(1)
     }
     def pick(pk: Int, from: Seq[Long], n: Int): Seq[Long] =
@@ -174,8 +171,7 @@ class LakeModelSpec extends AnyFunSuite {
           SnapshotLake.compact(spark, root)
           m = m.copy(rows = m.visible, tombs = Set.empty)
         case Evolve if !m.names.exists(_._1 == "w") =>
-          val cur = SnapshotLake.declaredSchema(root)
-            .getOrElse(SnapshotLake.read(spark, root).schema)
+          val cur = SnapshotLake.declaredSchema(root).get
           SnapshotLake.evolveSchema(spark, root,
             cur.add(StructField("w", LongType, nullable = true)))
           m = m.copy(names = m.names :+ ("w" -> "w"))

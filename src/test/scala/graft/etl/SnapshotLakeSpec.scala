@@ -358,15 +358,14 @@ class SnapshotLakeSpec extends AnyFunSuite {
     SnapshotLake.append(kv(0, 10), root)
     SnapshotLake.append(
       (10L until 20L).map(k => (k, s"v$k", k * 10)).toDF("k", "v", "w")
-        .repartition(1), root)
-    val evolved = SnapshotLake.read(spark, root, mergeSchema = true)
+        .repartition(1), root, mergeSchema = true)
+    val evolved = SnapshotLake.read(spark, root)
     assert(evolved.columns.toSet == Set("k", "v", "w"))
     val wByK = evolved.select("k", "w").collect()
       .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getLong(1)))).toMap
     assert(wByK(5L).isEmpty && wByK(15L).contains(150L))
     // the pinned pre-evolution version never sees the column
-    assert(SnapshotLake.read(spark, root, Some(1L), mergeSchema = true)
-      .columns.toSet == Set("k", "v"))
+    assert(SnapshotLake.read(spark, root, Some(1L)).columns.toSet == Set("k", "v"))
   }
 
   // ── concurrent-rewrite conflict fence (round 12) ─────────────────────
@@ -838,12 +837,15 @@ class SnapshotLakeSpec extends AnyFunSuite {
       s"""{"version":1,"op":"append","base":0,"files":[${
         legacyFiles.map(f => s""""$f"""").mkString(",")}]}""")
     assert(SnapshotLake.files(root, 1L) == legacyFiles)
-    assert(SnapshotLake.read(spark, root).count() == 2L)
-    // a new delta commit lands on top of the legacy base
-    val v2 = SnapshotLake.append(Seq(3L).toDF("x"), root)
-    assert(v2 == 2L)
-    assert(rows(root) == Set(1L, 2L, 3L))
-    assert(SnapshotLake.files(root, 2L).toSet.intersect(legacyFiles.toSet) == legacyFiles.toSet)
+    // the lake predates declared schemas: a read and an append fail
+    // naming it, and the append writes nothing
+    val read = intercept[IllegalStateException](SnapshotLake.read(spark, root))
+    assert(read.getMessage.contains(root) && read.getMessage.contains("predates declared schemas"))
+    intercept[IllegalStateException](SnapshotLake.append(Seq(3L).toDF("x"), root))
+    assert(SnapshotLake.currentVersion(root).contains(1L))
+    // a record-only delta commit still lands on top of the legacy base
+    assert(SnapshotLake.commitSynthetic(root, Seq("data/new/part-0.parquet"), 1L) == 2L)
+    assert(SnapshotLake.files(root, 2L).toSet == legacyFiles.toSet + "data/new/part-0.parquet")
   }
 
   test("first checkpoint over an upgraded legacy lake keeps pre-upgrade idempotence tags") {
@@ -866,16 +868,16 @@ class SnapshotLakeSpec extends AnyFunSuite {
         s"""{"version":$v,"op":"append","tag":"lb$v","base":${v - 1},"files":[${
           listing.map(f => s""""$f"""").mkString(",")}]}""")
     }
-    // new-format commits up to the first checkpoint boundary (v10)
+    // new-format (record-only: the legacy lake declares no schema)
+    // commits up to the first checkpoint boundary (v10)
     for (i <- 4 to 10)
-      assert(SnapshotLake.appendOnce(Seq(i.toLong).toDF("x"), root, s"nb$i") == i.toLong)
+      assert(SnapshotLake.commitSynthetic(root, Seq(s"data/n$i/part-0.parquet"), 1L) == i.toLong)
     assert(Files.exists(ckptPath(root, 10L)), "checkpoint at the boundary")
     // the probe now answers from the checkpoint index — a pre-upgrade tag
-    // must still read as applied, or this replay double-appends
-    assert(SnapshotLake.appendOnce(Seq(2L).toDF("x"), root, "lb2") == 2L,
+    // must still read as applied, or its replay would double-append
+    assert(SnapshotLake.tagVersion(root, "lb2").contains(2L),
       "pre-upgrade tag must survive into the checkpoint index")
-    assert(SnapshotLake.currentVersion(root).contains(10L), "no new commit")
-    assert(SnapshotLake.read(spark, root).count() == 10L, "no duplicated batch")
+    assert(SnapshotLake.files(root, 10L).size == 10, "no duplicated batch")
   }
 
   test("vacuum prunes out-of-horizon tags even when the cutoff already has a checkpoint") {
@@ -996,8 +998,9 @@ class SnapshotLakeSpec extends AnyFunSuite {
   test("mixed plain/partitioned listings read as one relation with NULL partition columns") {
     val root = newRoot()
     SnapshotLake.appendPartitioned(pk(10, 2), root, Seq("p"))
-    // a plain append into a partitioned lake: rows carry no partition col
-    SnapshotLake.append(Seq(100L, 101L).toDF("x"), root)
+    // a plain auto-merging append into a partitioned lake: its rows
+    // carry no partition value
+    SnapshotLake.append(Seq(100L, 101L).toDF("x"), root, mergeSchema = true)
     val df = SnapshotLake.read(spark, root)
     assert(df.count() == 12L)
     assert(df.filter(col("p").isNull).select("x").collect()
@@ -1095,9 +1098,11 @@ class SnapshotLakeSpec extends AnyFunSuite {
     SnapshotLake.append(Seq((0L, "v0")).toDF("k", "v"), root) // v1
     val decl = StructType(Seq(StructField("k", LongType),
       StructField("v", StringType), StructField("tag", StringType)))
-    // four appenders race one evolver; every CAS loser retries
+    // four auto-merging appenders race one evolver; every CAS loser
+    // retries, and an append that lands after the evolve re-checks
+    // against it: its rows fit the evolved schema, `tag` null-filled
     val writers = (1 to 4).map(i => Future {
-      SnapshotLake.append(Seq((i.toLong, s"v$i")).toDF("k", "v"), root)
+      SnapshotLake.append(Seq((i.toLong, s"v$i")).toDF("k", "v"), root, mergeSchema = true)
     }) :+ Future { SnapshotLake.evolveSchema(spark, root, decl) }
     val versions = Await.result(Future.sequence(writers), 120.seconds)
     assert(versions.sorted == (2L to 6L),
@@ -1242,28 +1247,113 @@ class SnapshotLakeSpec extends AnyFunSuite {
     assert(rows(root) == Set(1L, 2L, 3L))
   }
 
-  test("inferred-schema memo: a new version misses the cache; a recreated lake serves its new schema") {
+  test("each version answers its declared schema; a recreated lake serves its new one") {
     val root = newRoot()
-    SnapshotLake.append(Seq(1L).toDF("x"), root) // v1, undeclared lake
-    val s1 = SnapshotLake.schemaOf(spark, root, Some(1L), mergeSchema = true)
-    assert(s1.fieldNames.toSeq == Seq("x"))
-    // v2 adds a column (schema-on-read evolution): the memo key is
-    // (root, version, mergeSchema), so the new version must MISS and
-    // surface the added column, while v1 keeps answering its own shape
-    SnapshotLake.append(Seq((2L, "a")).toDF("x", "s"), root) // v2
-    val s2 = SnapshotLake.schemaOf(spark, root, None, mergeSchema = true)
-    assert(s2.fieldNames.toSet == Set("x", "s"),
-      "a version committed after a memoized inference sees its new column")
-    assert(SnapshotLake.schemaOf(spark, root, Some(1L), mergeSchema = true)
-      .fieldNames.toSeq == Seq("x"),
-      "the older version still answers its own (memoized) shape")
-    // delete-and-recreate at the same root: the memo validates the same
-    // version-file fingerprint resolve does, so the recreated lake's
-    // inferred schema must be served, never the cached one
+    SnapshotLake.append(Seq(1L).toDF("x"), root) // v1 declares (x)
+    assert(SnapshotLake.schemaOf(root, Some(1L)).fieldNames.toSeq == Seq("x"))
+    // a wider append refuses without mergeSchema; with it, v2 declares the
+    // union on its own record, while v1 keeps answering its own shape
+    intercept[IllegalArgumentException](
+      SnapshotLake.append(Seq((2L, "a")).toDF("x", "s"), root))
+    SnapshotLake.append(Seq((2L, "a")).toDF("x", "s"), root, mergeSchema = true) // v2
+    assert(SnapshotLake.schemaOf(root).fieldNames.toSeq == Seq("x", "s"))
+    assert(SnapshotLake.schemaOf(root, Some(1L)).fieldNames.toSeq == Seq("x"),
+      "the older version still answers its own shape")
+    // delete-and-recreate at the same root: resolution validates the
+    // version file's fingerprint, so the recreated lake's schema must be
+    // served, never the cached one
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
     SnapshotLake.append(Seq((1L, 2L)).toDF("a", "b"), root) // new v1
-    assert(SnapshotLake.schemaOf(spark, root, Some(1L), mergeSchema = true)
-      .fieldNames.toSet == Set("a", "b"),
-      "a recreated lake's inferred schema replaces the memoized one")
+    assert(SnapshotLake.schemaOf(root, Some(1L)).fieldNames.toSeq == Seq("a", "b"),
+      "a recreated lake's schema replaces the cached one")
+  }
+
+  // ── the log holds the table schema ──────────────────────────────────
+
+  test("an overwrite declares its own schema, through the library and the connector") {
+    import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType, StructField, StructType}
+    Seq("library", "connector").foreach { via =>
+      val root = newRoot()
+      SnapshotLake.append(Seq((1L, "a")).toDF("k", "s"), root)
+      SnapshotLake.evolveSchema(spark, root, StructType(Seq(StructField("k", LongType),
+        StructField("s", StringType), StructField("extra", IntegerType))))
+      val df = Seq((7, 2.5)).toDF("x", "y")
+      if (via == "library") SnapshotLake.overwrite(df, root)
+      else df.write.format("graftlake").mode("overwrite").save(root)
+      val got = SnapshotLake.read(spark, root)
+      assert(got.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
+        Seq(("x", IntegerType), ("y", DoubleType)), via)
+      assert(got.collect().map(r => (r.getInt(0), r.getDouble(1))).toSeq == Seq((7, 2.5)), via)
+      // the new table's shape appends, the replaced one refuses, and time
+      // travel reads the replaced table under its own schema
+      SnapshotLake.append(Seq((8, 3.5)).toDF("x", "y"), root)
+      intercept[IllegalArgumentException](SnapshotLake.append(Seq((2L, "b")).toDF("k", "s"), root))
+      assert(SnapshotLake.read(spark, root, Some(2L)).columns.toSeq == Seq("k", "s", "extra"), via)
+    }
+  }
+
+  test("a clone carries the source version's declared schema, renames and drops included") {
+    def contents(root: String) = {
+      val df = SnapshotLake.read(spark, root)
+      (df.columns.toSeq, df.collect().map(_.toSeq).toSeq)
+    }
+    val src = newRoot()
+    SnapshotLake.append(Seq((1L, "a", 10L)).toDF("k", "s", "gone"), src)
+    SnapshotLake.renameColumn(spark, src, "s", "name")
+    SnapshotLake.dropColumn(spark, src, "gone")
+    assert(contents(src) == ((Seq("k", "name"), Seq(Seq(1L, "a")))))
+    val head = newRoot()
+    SnapshotLake.cloneTo(src, head)
+    assert(contents(head) == contents(src))
+    // a clone of a version pinned before the rename has the old shape
+    val pinned = newRoot()
+    SnapshotLake.cloneTo(src, pinned, Some(1L))
+    assert(contents(pinned) == ((Seq("k", "s", "gone"), Seq(Seq(1L, "a", 10L)))))
+  }
+
+  test("partition columns keep the type their append wrote; a wider plain append merges or refuses") {
+    import org.apache.spark.sql.types.LongType
+    val root = newRoot()
+    SnapshotLake.appendPartitioned(Seq((1L, "007"), (2L, "10")).toDF("x", "p"), root, Seq("p"))
+    val df = SnapshotLake.read(spark, root)
+    assert(df.schema.fields.map(f => (f.name, f.dataType.simpleString)).toSeq ==
+      Seq(("x", "bigint"), ("p", "string")))
+    assert(df.collect().map(r => r.getLong(0) -> r.getString(1)).toMap ==
+      Map(1L -> "007", 2L -> "10"))
+    // a string partition column prunes as a string: "007" ≤ "08" < "10"
+    val pruned = SnapshotLake.readPruned(spark, root, Seq(FileStats.Range("p", Some("0"), Some("08"))))
+    assert(pruned.kept == 1 && pruned.df.collect().map(_.getLong(0)).toSeq == Seq(1L))
+    // an int partition column, then a plain append carrying it as bigint:
+    // refused without mergeSchema, widened with it, and the lake reads
+    val mixed = newRoot()
+    SnapshotLake.appendPartitioned(Seq((1L, 1), (2L, 2)).toDF("x", "p"), mixed, Seq("p"))
+    val wide = Seq((3L, 3L)).toDF("x", "p")
+    intercept[IllegalArgumentException](SnapshotLake.append(wide, mixed))
+    assert(SnapshotLake.currentVersion(mixed).contains(1L))
+    SnapshotLake.append(wide, mixed, mergeSchema = true)
+    SnapshotLake.appendPartitioned(Seq((4L, 4L)).toDF("x", "p"), mixed, Seq("p"))
+    val all = SnapshotLake.read(spark, mixed)
+    assert(all.schema("p").dataType == LongType)
+    assert(all.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      Map(1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 4L))
+    // and its paths compare as numbers: p=2 and p=4 lie in [2, 4]
+    assert(SnapshotLake.readPruned(spark, mixed, Seq(FileStats.Range("p", Some("2"), Some("4"))))
+      .df.collect().map(_.getLong(0)).toSet == Set(2L, 3L, 4L))
+  }
+
+  test("an append checked against an empty lake re-checks at its link: another shape refuses") {
+    val root = newRoot()
+    // both batches pass their check on the empty lake, then another
+    // writer's first commit declares (a, b)
+    val ac = SnapshotLake.stageAppend(Seq((2L, 2.0)).toDF("a", "c"), root)
+    val ab = SnapshotLake.stageAppend(Seq((3L, "c")).toDF("a", "b"), root)
+    SnapshotLake.append(Seq((1L, "a")).toDF("a", "b"), root) // v1
+    intercept[IllegalArgumentException](SnapshotLake.publish(root, ac))
+    assert(SnapshotLake.currentVersion(root).contains(1L))
+    // the batch of the declared shape links, declaring nothing itself
+    assert(SnapshotLake.publish(root, ab) == 2L)
+    assert(SnapshotLake.declaredSchema(root, Some(2L)) == SnapshotLake.declaredSchema(root, Some(1L)))
+    assert(SnapshotLake.read(spark, root).collect().map(r => r.getLong(0) -> r.getString(1)).toMap ==
+      Map(1L -> "a", 3L -> "c"))
   }
 }

@@ -123,11 +123,11 @@ class TableOpsSpec extends AnyFunSuite {
     assert(rows(root, Some(4L)) == (0L until 40L).toSet)
   }
 
-  test("path-derived partition ranges compare as the LISTING's merged type, not per-value shape") {
+  test("path-derived partition ranges compare as the column's declared type, not per-value shape") {
     // a string-typed partition column holding one numeric-LOOKING value
-    // next to a non-numeric one: Spark's partition discovery infers
-    // StringType for the whole column, so the row-level predicate
-    // compares as string — the metadata classification must agree.
+    // next to a non-numeric one: the declared type is StringType, so
+    // the row-level predicate compares as string — the metadata
+    // classification must agree.
     // String semantics: "25" ∈ ["1","3"] (lexical), "abc" ∉.
     val root = newRoot("graft-partnum")
     val idx = SnapshotLake.IndexSpec(Seq("x"), None)
@@ -152,14 +152,14 @@ class TableOpsSpec extends AnyFunSuite {
       s"the p='25' file whole-drops by metadata: $r")
     assert(rows(root) == (10L until 20L).toSet,
       "exactly the string-matching rows are gone")
-    // an ALL-numeric partition listing still compares numerically:
+    // an integer partition column compares numerically:
     // p=9 < p=25 numerically even though '9' > '25' lexically
     val num = newRoot("graft-partnum-all")
     SnapshotLake.appendPartitioned(
-      spark.range(0, 5).select(col("id").as("x"), lit("9").as("p"))
+      spark.range(0, 5).select(col("id").as("x"), lit(9).as("p"))
         .repartition(1), num, Seq("p"), idx)
     SnapshotLake.appendPartitioned(
-      spark.range(5, 10).select(col("id").as("x"), lit("25").as("p"))
+      spark.range(5, 10).select(col("id").as("x"), lit(25).as("p"))
         .repartition(1), num, Seq("p"), idx)
     val cn = SnapshotLake.fastCountWhere(spark, num,
       Seq(FileStats.Range("p", Some("3"), Some("10")))).get

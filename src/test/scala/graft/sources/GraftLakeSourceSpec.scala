@@ -354,12 +354,12 @@ class GraftLakeSourceSpec extends AnyFunSuite {
     SnapshotLake.append(
       Seq((1L, Seq(1.0f, 2.0f)), (2L, Seq(3.0f, 4.0f))).toDF("id", "emb"),
       root)
-    // a later commit adds a column; older files surface it as NULL
-    // (mergeSchema = the native reader's opt-in evolution contract)
+    // a later auto-merging commit adds a column; older files surface it
+    // as NULL
     SnapshotLake.append(
-      Seq((3L, Seq(5.0f, 6.0f), "new")).toDF("id", "emb", "tag"), root)
-    val df = spark.read.format("graftlake")
-      .option("mergeSchema", "true").load(root)
+      Seq((3L, Seq(5.0f, 6.0f), "new")).toDF("id", "emb", "tag"), root,
+      mergeSchema = true)
+    val df = spark.read.format("graftlake").load(root)
     val rows = df.collect().map(r => (r.getAs[Long]("id"),
       r.getAs[scala.collection.Seq[Float]]("emb").toSeq,
       Option(r.getAs[String]("tag")))).toSet
@@ -412,8 +412,9 @@ class GraftLakeSourceSpec extends AnyFunSuite {
       .option("mergeSchema", "true").save(root)
     assert(SnapshotLake.currentVersion(root).contains(2L),
       "autoMerge commits schema + files as one atomic version (v2)")
-    assert(SnapshotLake.declaredSchema(root, Some(2L)).isDefined &&
-      SnapshotLake.declaredSchema(root, Some(1L)).isEmpty,
+    assert(SnapshotLake.declaredSchema(root, Some(2L)).map(_.fieldNames.toSeq)
+      .contains(Seq("k", "n", "tag")) &&
+      SnapshotLake.schemaOf(root, Some(1L)).fieldNames.toSeq == Seq("k", "n"),
       "the schema declaration rides the append commit itself")
     val df = spark.read.format("graftlake").load(root)
     assert(df.schema.fields.map(f => (f.name, f.dataType.simpleString)).toSeq ==
@@ -554,23 +555,17 @@ class GraftLakeSourceSpec extends AnyFunSuite {
     Files.list(dir).filter(_.toString.endsWith(".parquet")).findFirst().get()
   }
 
-  /** Commit a copy of the parquet file `part` as the one file of commit
-    * dir `data/<dir>`: no Spark write per commit, and a chosen dir name,
-    * so a spec controls where the commit sorts in the listing. */
-  private def commitFile(part: java.nio.file.Path, root: String,
-                         dir: String, rows: Long): Long = {
-    val rel = s"data/$dir/part-0.parquet"
-    Files.createDirectories(java.nio.file.Paths.get(root, rel).getParent)
-    Files.copy(part, java.nio.file.Paths.get(root, rel))
-    SnapshotLake.commitSynthetic(root, Seq(rel), rows)
-  }
-
-  /** A lake of `n` one-file append versions, all copies of one batch. */
+  /** A lake of `n` one-file append versions, all copies of one batch
+    * committed with no Spark write per commit. */
   private def deepLake(n: Int): String = {
     val root = newRoot()
     val part = parquetFile(tsBatch(0))
-    (1 to n).foreach(_ =>
-      commitFile(part, root, java.util.UUID.randomUUID().toString, 100L))
+    (1 to n).foreach { _ =>
+      val rel = s"data/${java.util.UUID.randomUUID()}/part-0.parquet"
+      Files.createDirectories(java.nio.file.Paths.get(root, rel).getParent)
+      Files.copy(part, java.nio.file.Paths.get(root, rel))
+      SnapshotLake.commitSynthetic(root, Seq(rel), 100L, Some(tsBatch(0).schema))
+    }
     root
   }
 
@@ -582,8 +577,8 @@ class GraftLakeSourceSpec extends AnyFunSuite {
   test("a connector append costs the same jobs and tasks at 5 and 60 versions of history") {
     val costs = Seq(5, 60).map { depth =>
       val root = deepLake(depth)
-      // cold: this JVM never inferred the lake's schema; warm: the
-      // previous append left version v−1's inference cached
+      // cold: this JVM never resolved the lake's head; warm: the
+      // previous append left it resolved
       val cold = TestSpark.jobsAndTasks(connectorAppend(tsBatch(1), root))
       val warm = TestSpark.jobsAndTasks(connectorAppend(tsBatch(2), root))
       assert(SnapshotLake.currentVersion(root).contains(depth + 2L))
@@ -617,58 +612,40 @@ class GraftLakeSourceSpec extends AnyFunSuite {
 
   test("each of 30 successive solo connector appends opens no footer when warm") {
     val root = deepLake(3)
-    // the first append infers version 3's schema from one footer, which
-    // is one Spark job; every later one must inherit version v−1's
-    // inference, so it runs exactly one job fewer
+    // the append check reads the declared schema from the log, so no
+    // append — cold or warm — runs a job to learn the lake's schema
     val jobs = (1 to 30).map(i =>
       TestSpark.jobsAndTasks(connectorAppend(tsBatch(i), root))._1)
     assert(SnapshotLake.currentVersion(root).contains(33L))
     info(s"jobs per append, cold first: $jobs")
-    assert(jobs.tail.forall(_ == jobs.head - 1), s"jobs per append, cold first: $jobs")
+    assert(jobs.forall(_ == jobs.head), s"jobs per append, cold first: $jobs")
   }
 
-  test("read, load and the append check agree on an undeclared mixed-schema lake") {
+  test("read, load and every append path agree on the declared schema") {
     def shape(s: org.apache.spark.sql.types.StructType) =
       s.fields.map(f => f.name -> f.dataType.simpleString).toSeq
     val ab = spark.range(0, 2).select(col("id").as("a"), col("id").cast("string").as("b"))
     val ac = spark.range(10, 12).select(col("id").as("a"), col("id").cast("double").as("c"))
+    val root = newRoot()
+    SnapshotLake.append(ab, root) // v1 declares (a, b)
+    val read = shape(SnapshotLake.read(spark, root).schema)
+    assert(read == shape(ab.schema))
+    assert(shape(spark.read.format("graftlake").load(root).schema) == read)
+    // the append check: the declared shape appends, the other refuses on
+    // every path, before any version is committed
+    intercept[IllegalArgumentException](ac.write.format("graftlake").mode("append").save(root))
+    intercept[IllegalArgumentException](SnapshotLake.append(ac, root))
+    intercept[IllegalArgumentException](SnapshotLake.appendOnce(ac, root, "ac-1"))
+    intercept[IllegalArgumentException](SnapshotLake.appendGrouped(ac, root))
+    intercept[IllegalArgumentException](SnapshotLake.appendPartitioned(ac, root, Seq("c")))
+    assert(SnapshotLake.currentVersion(root).contains(1L))
+    ab.write.format("graftlake").mode("append").save(root)
+    assert(SnapshotLake.currentVersion(root).contains(2L))
+    // mergeSchema evolves the lake to the union, which read and load share
+    ac.write.format("graftlake").mode("append").option("mergeSchema", "true").save(root)
     val merged = Seq("a" -> "bigint", "b" -> "string", "c" -> "double")
-    /** Version 2 adds `ac` to a lake of `ab`: in a random commit dir
-      * (two raw appends), or one sorting first or last; `warm` infers
-      * version 1 before version 2 lands, so version 2 inherits. */
-    def check(dir: Option[String], warm: Boolean): Unit = {
-      val root = newRoot()
-      SnapshotLake.append(ab, root)
-      if (warm) {
-        spark.read.format("graftlake").load(root).schema
-        spark.read.format("graftlake").option("mergeSchema", "true").load(root).schema
-      }
-      dir.fold(SnapshotLake.append(ac, root))(commitFile(parquetFile(ac), root, _, 2L))
-      // the one rule: Spark's, over the listing sorted by path — the
-      // commit whose file sorts first names the non-merging schema
-      val firstIsAb = SnapshotLake.files(root, 1L).contains(SnapshotLake.files(root, 2L).min)
-      val (want, other) = if (firstIsAb) (ab, ac) else (ac, ab)
-      val ctx = s"dir=$dir warm=$warm"
-      val read = shape(SnapshotLake.read(spark, root).schema)
-      assert(read == shape(want.schema), ctx)
-      assert(shape(spark.read.format("graftlake").load(root).schema) == read, ctx)
-      // the append check: the agreed shape appends, the other refuses
-      intercept[Exception](other.write.format("graftlake").mode("append").save(root))
-      want.write.format("graftlake").mode("append").save(root)
-      assert(SnapshotLake.currentVersion(root).contains(3L), ctx)
-      // mergeSchema unions the footers in path order
-      val m = shape(SnapshotLake.read(spark, root, mergeSchema = true).schema)
-      assert(m.toSet == merged.toSet, ctx)
-      assert(shape(spark.read.format("graftlake").option("mergeSchema", "true")
-        .load(root).schema) == m, ctx)
-    }
-    check(None, warm = false)
-    check(None, warm = true)
-    Seq("00000000-0000-0000-0000-000000000000",
-        "ffffffff-ffff-ffff-ffff-ffffffffffff").foreach { d =>
-      check(Some(d), warm = false)
-      check(Some(d), warm = true)
-    }
+    assert(shape(SnapshotLake.read(spark, root).schema) == merged)
+    assert(shape(spark.read.format("graftlake").load(root).schema) == merged)
   }
 
   /** A UTC wall-clock time as the `Timestamp` literal of that instant,

@@ -147,8 +147,9 @@ class GraftLakeWriterSpec extends AnyFunSuite {
     val sunk = newRoot()
     val written = GraftLakeDataWriter.write(batch(spark, 0, 100).repartition(3),
       Paths.get(sunk).toAbsolutePath.toString, SnapshotLake.newDataDir(), statsCols = Seq("k"))
+    val admitted = SnapshotLake.admitted(sunk, batch(spark, 0, 100).schema)
     val (commitJobs, _) = TestSpark.jobsAndTasks(SnapshotLake.commitStreamedFilesGrouped(
-      spark, sunk, written, "stream-q-e0", SnapshotLake.IndexSpec(Seq("k"), None)))
+      spark, sunk, written, "stream-q-e0", admitted, SnapshotLake.IndexSpec(Seq("k"), None)))
     assert(commitJobs == 0, s"a sink epoch's commit runs no job, got $commitJobs")
     assert(SnapshotLake.fastCount(sunk).contains(100L))
     assert(SnapshotLake.read(spark, sunk).count() == 100L)
