@@ -65,7 +65,8 @@ import graft.sources.{GraftLakeDataWriter, GraftLakeFileSet, GraftLakeSource}
   * [[merge]] (+ tag-idempotent [[mergeOnce]] for streaming CDC apply),
   * merge-on-read deletion vectors ([[deleteWhere]], materialized by
   * [[compact]]), the DV-aware [[changeFeed]], commit metadata
-  * ([[history]]), and schema-on-read evolution (`read(mergeSchema)`).
+  * ([[history]]), and schema evolution on write (`append(mergeSchema =
+  * true)`, [[evolveSchema]]): the log holds every version's schema.
   *
   * Every row this object reads — snapshot, pruned and point reads,
   * metadata counts, and the file subsets its rewrites materialize — is
@@ -236,9 +237,9 @@ object SnapshotLake extends LakeCheckpoints {
           if (r.addDel.isEmpty) s.deletes else s.deletes ++ r.addDel
         } else s.deletes.filterNot(r.removeDel.toSet) ++ r.addDel
       LakeState(files, dels,
-        // the declared schema sticks until a later evolve replaces it —
-        // RESTORE deliberately keeps the head schema (Delta restores
-        // data, evolution is forward-only here; documented contract)
+        // the declared schema sticks until a later record declares one —
+        // RESTORE keeps the head schema unless an overwrite since its
+        // target broke continuity (see [[restore]])
         r.schemaB64.orElse(s.schemaB64))
     }
 
@@ -591,9 +592,17 @@ object SnapshotLake extends LakeCheckpoints {
   def declaredSchema(root: String,
                      version: Option[Long] = None): Option[StructType] =
     version.orElse(currentVersion(root)).flatMap(v => resolve(root, v)._1.schemaB64)
-      .map(b => org.apache.spark.sql.types.DataType.fromJson(new String(
-        java.util.Base64.getDecoder.decode(b), java.nio.charset.StandardCharsets.UTF_8))
-        .asInstanceOf[StructType])
+      .map(decodeSchema)
+
+  /** A record's `schemaB64` field: base64 of the schema's JSON. */
+  private def encodeSchema(s: StructType): String =
+    java.util.Base64.getEncoder.encodeToString(
+      s.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+
+  private def decodeSchema(b64: String): StructType =
+    org.apache.spark.sql.types.DataType.fromJson(
+      new String(java.util.Base64.getDecoder.decode(b64),
+        java.nio.charset.StandardCharsets.UTF_8)).asInstanceOf[StructType]
 
   /** Commit `newSchema` as the lake's DECLARED schema — a metadata-only
     * `evolve` version (no file changes, CAS-retried like any commit):
@@ -640,6 +649,28 @@ object SnapshotLake extends LakeCheckpoints {
       if (isMapped(lake)) stampFresh(nf) else nf
     })
 
+  /** Why `after` does not evolve forward from `before` — a column whose
+    * physical name it lacks (unless `allowMissing`), or whose type it
+    * changes other than by widening — or None when it does. Continuity
+    * is PHYSICAL: a renamed column survives under its physical name
+    * (metadata-only), while on an unmapped schema the physical name IS
+    * the logical name. */
+  private def evolutionGap(before: StructType, after: StructType,
+                           allowMissing: Boolean): Option[String] = {
+    val afterByPhys = after.fields.map(f => physNameOf(f) -> f).toMap
+    before.fields.iterator.flatMap { f =>
+      afterByPhys.get(physNameOf(f)) match {
+        case Some(a) if a.dataType == f.dataType || Widens((f.dataType, a.dataType)) => None
+        case Some(a) => Some(s"schema evolution cannot change '${f.name}' from " +
+          s"${f.dataType.simpleString} to ${a.dataType.simpleString} " +
+          "— only widening casts evolve as metadata")
+        case None if allowMissing => None
+        case None => Some(s"schema evolution cannot DROP column '${f.name}' — use " +
+          "dropColumn (column mapping) for a metadata-only drop")
+      }
+    }.nextOption()
+  }
+
   def evolveSchema(spark: SparkSession, root: String,
                    newSchema: StructType,
                    allowMissing: Boolean = false): Long = {
@@ -651,23 +682,8 @@ object SnapshotLake extends LakeCheckpoints {
       val cur = head.getOrElse(throw new IllegalStateException(
         s"nothing to evolve at $root (no committed version)"))
       val before = schemaAt(root, Some(cur))
-      // continuity is PHYSICAL: a renamed column survives under its
-      // physical name (metadata-only), while on an unmapped schema the
-      // physical name IS the logical name — the historical rule exactly
-      val afterByPhys = newSchema.fields.map(f => physNameOf(f) -> f).toMap
-      before.fields.foreach { f =>
-        afterByPhys.get(physNameOf(f)) match {
-          case Some(after) =>
-            require(after.dataType == f.dataType ||
-              Widens((f.dataType, after.dataType)),
-              s"schema evolution cannot change '${f.name}' from " +
-                s"${f.dataType.simpleString} to ${after.dataType.simpleString} " +
-                "— only widening casts evolve as metadata")
-          case None => require(allowMissing,
-            s"schema evolution cannot DROP column '${f.name}' — use " +
-              "dropColumn (column mapping) for a metadata-only drop")
-        }
-      }
+      val gap = evolutionGap(before, newSchema, allowMissing)
+      require(gap.isEmpty, gap.get)
       // Fields NOT carried over from the current schema (by physical
       // name) are NEW columns, and on a mapped lake they get their fresh
       // `col-<uuid>` physical names minted HERE — a caller-stamped
@@ -1021,8 +1037,7 @@ object SnapshotLake extends LakeCheckpoints {
       else ""
     val rowsField = if (c.addedRows >= 0) s""""addedRows":${c.addedRows},""" else ""
     val schemaField =
-      c.schema.map(d => s""""schemaB64":"${java.util.Base64.getEncoder.encodeToString(
-        d.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))}",""").getOrElse("")
+      c.schema.map(d => s""""schemaB64":"${encodeSchema(d)}",""").getOrElse("")
     val json =
       s"""{"version":$version,"op":"${c.op}",$tagField$rowsField$schemaField""" +
         s""""base":${c.base},"add":${arr(c.add)},"remove":${arr(c.remove)},""" +
@@ -1560,6 +1575,9 @@ object SnapshotLake extends LakeCheckpoints {
       case None => updates
       case Some(dc) => updates.filter(not(col(dc) === lit(true))).drop(dc)
     }
+    // the append rule: update rows of another shape are refused before
+    // anything is written, whichever branch below writes them
+    val (_, a) = admit(newRows, root)
     val survivors =
       if (touched.isEmpty) newRows
       else readSubset(spark, root, Some(baseV), touched, deletes = false)
@@ -1578,8 +1596,10 @@ object SnapshotLake extends LakeCheckpoints {
       // Delta record: touched files out, rewrite in. Racing appends and
       // racing DISJOINT rewrites survive structurally (their files are
       // simply not in `remove`), and live tombstones are carried —
-      // tombstone-wins (see deleteWhere).
-      Change("merge", baseV, rewritten.rows, rewritten.files, remove = touched)
+      // tombstone-wins (see deleteWhere). A racing schema change
+      // re-runs the rule's check against the new head.
+      Change("merge", baseV, rewritten.rows, rewritten.files, remove = touched,
+        schema = declareOn(root, head.map(v => schemaAt(root, Some(v))), a))
     }
   }
 
@@ -1898,16 +1918,26 @@ object SnapshotLake extends LakeCheckpoints {
     * Delta's contract (the racing rows remain in their own version).
     * `toV` must be within vacuum retention: its manifests must resolve
     * (else NoSuchFileException) and retention guarantees its data files
-    * still exist. */
+    * still exist. The head's declared schema stays while it evolved
+    * forward from `toV`'s ([[evolveSchema]]'s continuity: renames,
+    * mapped drops, additions, widenings), so `toV`'s files read under
+    * it; when a commit in between broke that continuity (an
+    * [[overwrite]] with another shape), the restore declares `toV`'s
+    * schema, the one its files were written for. */
   def restore(root: String, toV: Long): Long = {
     val target = resolve(root, toV)._1
     commitLoop(root) { head =>
       val curSt = resolve(root, head.get)._1 // ≥ toV: toV resolved above
+      val schema = for {
+        to <- target.schemaB64.map(decodeSchema)
+        cur <- curSt.schemaB64.map(decodeSchema)
+        if evolutionGap(to, cur, allowMissing = isMapped(cur)).nonEmpty
+      } yield to
       Change("restore", toV, addedRows = 0L,
         add = target.files.filterNot(curSt.files.toSet),
         remove = curSt.files.filterNot(target.files.toSet),
         addDel = target.deletes.filterNot(curSt.deletes.toSet),
-        removeDel = curSt.deletes.filterNot(target.deletes.toSet))
+        removeDel = curSt.deletes.filterNot(target.deletes.toSet), schema = schema)
     }
   }
 

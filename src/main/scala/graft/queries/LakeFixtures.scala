@@ -120,7 +120,8 @@ object LakeFixtures {
           col("id").as("o_custkey"),
           lit("N").as("o_orderstatus"),
           (lit(1000.0) + col("id")).as("o_totalprice"),
-          lit("2024-02-01 00:00:00").cast("timestamp").as("o_orderdate"),
+          lit("2024-02-01 00:00:00").cast(od.schema("o_orderdate").dataType)
+            .as("o_orderdate"),
           lit("NEW").as("o_orderpriority"),
           lit(false).as("__del")))
       SnapshotLake.merge(s, root, updates, "o_orderkey", idx, Some("__del"))
@@ -171,7 +172,8 @@ object LakeFixtures {
           col("id").as("o_custkey"),
           lit("C").as("o_orderstatus"),
           (lit(500.0) + col("id")).as("o_totalprice"),
-          lit("2024-03-01 00:00:00").cast("timestamp").as("o_orderdate"),
+          lit("2024-03-01 00:00:00").cast(od.schema("o_orderdate").dataType)
+            .as("o_orderdate"),
           lit("CDC").as("o_orderpriority"),
           lit(false).as("__del"))
         val chunk = if (i == 1) upd.unionByName(del).unionByName(ins)

@@ -12,7 +12,8 @@ import graft.TestSpark
 /** Model-based lake test: seeded random sequences of lake operations run
   * against the lake and against an in-memory model of what each version
   * must hold. Every sequence holds a connector append and a partitioned
-  * append with a null partition value. After every operation the head version is read three ways
+  * append with a null partition value, and ends with an overwrite, a
+  * restore to a version before it and a merge. After every operation the head version is read three ways
   * — [[SnapshotLake.read]], a `versionAsOf` connector load, and a
   * [[SnapshotLake.readPruned]] key band (which re-applies its filter) —
   * and each must equal the model; after every sequence every version is
@@ -22,15 +23,20 @@ import graft.TestSpark
   * rename only changes the id's logical name, and it tracks the live
   * key tombstones apart from the stored rows: a deleted key stays hidden
   * through a later merge of it (tombstone wins) until a compaction
-  * materializes the vector. */
+  * materializes the vector. It also tracks each id's physical name, so a
+  * restore across an overwrite of another shape knows which schema the
+  * restored version declares. */
 class LakeModelSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   /** One version's expected state: stored rows by column id, the live
-    * tombstoned keys, and the logical name of each declared column id. */
+    * tombstoned keys, the logical name of each declared column id, and
+    * each id's physical name with whether the mapping is on. */
   private final case class Model(rows: Map[Long, Map[String, Long]],
                                  tombs: Set[Long],
-                                 names: Vector[(String, String)]) {
+                                 names: Vector[(String, String)],
+                                 phys: Map[String, String],
+                                 mapped: Boolean = false) {
     def visible: Map[Long, Map[String, Long]] = rows.filter { case (k, _) => !tombs(k) }
     def nameOf(id: String): String = names.find(_._1 == id).get._2
   }
@@ -45,6 +51,7 @@ class LakeModelSpec extends AnyFunSuite {
   private case object Evolve extends Op
   private case object Rename extends Op
   private final case class Restore(pick: Int) extends Op
+  private final case class Overwrite(n: Int) extends Op
 
   private val opGen: Gen[Op] = Gen.frequency(
     3 -> Gen.choose(1, 4).map(Append(_)),
@@ -55,12 +62,15 @@ class LakeModelSpec extends AnyFunSuite {
     1 -> Gen.const(Compact),
     1 -> Gen.const(Evolve),
     1 -> Gen.const(Rename),
-    1 -> Gen.choose(0, 1000).map(Restore(_)))
+    1 -> Gen.choose(0, 1000).map(Restore(_)),
+    1 -> Gen.choose(1, 4).map(Overwrite(_)))
 
   private val seqGen: Gen[Seq[Op]] = for {
     first <- Gen.oneOf(Append(3), AppendPartitioned(3))
     rest <- Gen.listOfN(6, opGen)
-  } yield first +: AppendPartitioned(2, nullPart = true) +: ConnectorAppend(2) +: rest
+    to <- Gen.choose(0, 1000)
+  } yield first +: AppendPartitioned(2, nullPart = true) +: ConnectorAppend(2) +: rest :+
+    Overwrite(2) :+ Restore(to) :+ Merge(to)
 
   /** A frame's rows as (k → id-keyed values), ids resolved through the
     * model's names. */
@@ -117,7 +127,9 @@ class LakeModelSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(seed)
     val idx = SnapshotLake.IndexSpec(Seq("k"), None)
     var nextKey = 0L
-    var m = Model(Map.empty, Set.empty, Vector("k" -> "k", "v" -> "v", "p" -> "p"))
+    val empty = Model(Map.empty, Set.empty, Vector("k" -> "k", "v" -> "v", "p" -> "p"),
+      Map("k" -> "k", "v" -> "v", "p" -> "p"))
+    var m = empty
     val byVersion = scala.collection.mutable.Map.empty[Long, Model]
     def fresh(n: Int): Seq[Map[String, Long]] = (0 until n).map { _ =>
       val k = nextKey; nextKey += 1
@@ -172,18 +184,33 @@ class LakeModelSpec extends AnyFunSuite {
           m = m.copy(rows = m.visible, tombs = Set.empty)
         case Evolve if !m.names.exists(_._1 == "w") =>
           val cur = SnapshotLake.declaredSchema(root).get
-          SnapshotLake.evolveSchema(spark, root,
+          val v = SnapshotLake.evolveSchema(spark, root,
             cur.add(StructField("w", LongType, nullable = true)))
-          m = m.copy(names = m.names :+ ("w" -> "w"))
+          // a column added to a mapped lake gets a physical name no file used
+          m = m.copy(names = m.names :+ ("w" -> "w"),
+            phys = m.phys + ("w" -> (if (m.mapped) s"w@v$v" else "w")))
         case Rename =>
           val to = m.nameOf("v") + "_r"
           SnapshotLake.renameColumn(spark, root, m.nameOf("v"), to)
-          m = m.copy(names = m.names.map { case ("v", _) => "v" -> to; case o => o })
+          // the first rename stamps every column with its current name
+          m = m.copy(names = m.names.map { case ("v", _) => "v" -> to; case o => o },
+            phys = if (m.mapped) m.phys else m.names.toMap, mapped = true)
         case Restore(pk) if byVersion.size > 1 =>
           val to = 1L + pk % (byVersion.size - 1)
           SnapshotLake.restore(root, to)
-          // files and tombstones come back; the declared schema stays
-          m = byVersion(to).copy(names = m.names)
+          // files and tombstones come back; the head's schema stays while
+          // it keeps every physical name of the target's (a mapped head may
+          // have dropped some), else the target's schema comes back too
+          val t = byVersion(to)
+          m = if (m.mapped || t.phys.values.forall(m.phys.values.toSet))
+            t.copy(names = m.names, phys = m.phys, mapped = m.mapped)
+          else t
+        case Overwrite(n) =>
+          // a new table of the first shape, unmapped
+          m = empty
+          val rs = fresh(n)
+          SnapshotLake.overwrite(frame(rs), root, idx)
+          m = m.copy(rows = rs.map(r => r("k") -> r).toMap)
         case _ => ()
       }
       val v = SnapshotLake.currentVersion(root).get

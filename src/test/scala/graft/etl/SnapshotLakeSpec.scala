@@ -1311,6 +1311,57 @@ class SnapshotLakeSpec extends AnyFunSuite {
     assert(contents(pinned) == ((Seq("k", "s", "gone"), Seq(Seq(1L, "a", 10L)))))
   }
 
+  test("a restore across an overwrite of another shape reads the target version as it was") {
+    def contents(root: String, v: Option[Long] = None) = {
+      val df = SnapshotLake.read(spark, root, v)
+      (df.schema.fields.map(f => (f.name, f.dataType)).toSeq, df.collect().map(_.toSeq).toSeq)
+    }
+    // the overwrite drops every column of v1
+    val a = newRoot()
+    SnapshotLake.append(Seq((1L, "a")).toDF("k", "s"), a)
+    SnapshotLake.overwrite(Seq((7, 2.5)).toDF("x", "y"), a)
+    assert(contents(a) != contents(a, Some(1L)))
+    SnapshotLake.restore(a, 1L)
+    assert(contents(a) == contents(a, Some(1L)))
+    SnapshotLake.append(Seq((2L, "b")).toDF("k", "s"), a)
+    // a renamed column lives under its old physical name in v2's files;
+    // the overwrite writes that name unmapped
+    val b = newRoot()
+    SnapshotLake.append(Seq((1L, "a")).toDF("k", "s"), b)
+    SnapshotLake.renameColumn(spark, b, "s", "name")
+    SnapshotLake.overwrite(Seq((3L, "c")).toDF("k", "name"), b)
+    SnapshotLake.restore(b, 2L)
+    assert(contents(b) == contents(b, Some(2L)))
+    assert(contents(b)._2 == Seq(Seq(1L, "a")))
+    // an overwrite that only adds a column keeps its schema through the restore
+    val c = newRoot()
+    SnapshotLake.append(Seq((1L, "a")).toDF("k", "s"), c)
+    SnapshotLake.overwrite(Seq((5L, "e", 9)).toDF("k", "s", "z"), c)
+    SnapshotLake.restore(c, 1L)
+    assert(SnapshotLake.read(spark, c).collect().map(_.toSeq).toSeq == Seq(Seq(1L, "a", null)))
+  }
+
+  test("a merge of another shape is refused before anything is written") {
+    import scala.jdk.CollectionConverters._
+    def dataFiles(root: String) = {
+      val w = Files.walk(java.nio.file.Paths.get(root, "data"))
+      try w.iterator().asScala.count(Files.isRegularFile(_)) finally w.close()
+    }
+    val root = newRoot()
+    SnapshotLake.append(Seq((1L, "a")).toDF("k", "v"), root, kvIdx)
+    val before = dataFiles(root)
+    // no live file can hold key 100, so the update rows are the whole write
+    intercept[IllegalArgumentException](
+      SnapshotLake.merge(spark, root, Seq((100L, 7)).toDF("k", "v"), "k", kvIdx))
+    intercept[IllegalArgumentException](
+      SnapshotLake.merge(spark, root, Seq((1L, 7)).toDF("k", "v"), "k", kvIdx))
+    assert(SnapshotLake.currentVersion(root).contains(1L))
+    assert(dataFiles(root) == before)
+    SnapshotLake.merge(spark, root, Seq((100L, "b")).toDF("k", "v"), "k", kvIdx)
+    assert(SnapshotLake.read(spark, root).as[(Long, String)].collect().toSet ==
+      Set((1L, "a"), (100L, "b")))
+  }
+
   test("partition columns keep the type their append wrote; a wider plain append merges or refuses") {
     import org.apache.spark.sql.types.LongType
     val root = newRoot()
